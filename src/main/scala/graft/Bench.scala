@@ -1233,7 +1233,7 @@ object Bench {
 
     def flush(partial: Boolean): String = {
       import graft.util.Jsons
-      val qs = best.map { case (k, v) => "\"" + k + "\":" + v }
+      val qs = best.map { case (k, v) => Jsons.str(k) + ":" + v }
         .mkString("{", ",", "}")
       val total = best.values.filter(_ >= 0).sum
       // per-row environment stamp (judge-directed r15): secs + the
@@ -1261,7 +1261,7 @@ object Bench {
       // the statistics differ
       val json = s"""{"metric":"total","value":$total,"unit":"sec",""" +
         s""""stat":"min","baseline_stat":"median","queries":$qs,""" +
-        s""""sf":"$sfDir","loadavg_start":$loadStart,"loadavg_end":${loadavg()},""" +
+        s""""sf":${Jsons.str(sfDir)},"loadavg_start":$loadStart,"loadavg_end":${loadavg()},""" +
         s""""elapsed_sec":${math.round(elapsedSec)},"budget_sec":$budgetSec,""" +
         degraded.map("\"" + _ + "\"").mkString(""""degraded":[""", ",", "],") +
         singleRep.map("\"" + _ + "\"").mkString(""""single_rep":[""", ",", "],") +
@@ -1290,8 +1290,8 @@ object Bench {
       // so a comparator sees drops-by-design, not regressions.
       s"""{"metric":"total","value":$total,"unit":"sec",""" +
         s""""stat":"min","baseline_stat":"median","queries":$qs,""" +
-        s""""sf":"$sfDir","cpus":${cpus.toIntOption.getOrElse(-1)},""" +
-        rotatedRows.toSeq.sorted.map("\"" + _ + "\"")
+        s""""sf":${Jsons.str(sfDir)},"cpus":${cpus.toIntOption.getOrElse(-1)},""" +
+        rotatedRows.toSeq.sorted.map(Jsons.str)
           .mkString(""""rotated":[""", ",", "],") +
         s""""detail":${graft.util.Jsons.str(outPath)},"partial":$partial}"""
     }

@@ -342,9 +342,10 @@ object BenchOne {
         .withColumn(Build.RowId, monotonically_increasing_id())
         .select(Build.RowId, "user_id", "label_time")
       val feat = spark.read.parquet(s"$scDir/feature_0.parquet")
-      val spec = graft.operators.AsOfJoin.Spec(
-        Seq("user_id"), Seq("user_id"), "label_time", "updated_at", Seq("val_0"))
-      println("  rows=" + graft.operators.AsOfJoin.unionAsOf(spine, feat, spec).count())
+      val spec = graft.operators.AsOfJoin.Spec(Seq("user_id"), "label_time")
+      val right = graft.operators.AsOfJoin.Right(feat, Seq("user_id"), "updated_at", Seq("val_0"))
+      println("  rows=" + graft.operators.AsOfJoin.join(spine, right, spec,
+        graft.operators.AsOfJoin.Strategy.UnionAsOf).count())
     }
     (1 to 5).foreach { i =>
       syncFs()

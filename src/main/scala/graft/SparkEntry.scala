@@ -205,41 +205,28 @@ object SparkEntry {
       stalenessDays: Int = 0): AsOfJoin.Spec =
     AsOfJoin.Spec(
       leftKeys = Seq("user_id"),
-      rightKeys = Seq("user_id"),
       leftTime = "label_time",
-      rightTime = "ts",
-      valueCols = Seq("value"),
       inclusive = inclusive,
       embargo = java.time.Duration.ofDays(embargoDays.toLong),
       maxLookback = Some(java.time.Duration.ofDays(365)),
       maxStaleness =
         if (stalenessDays > 0) Some(java.time.Duration.ofDays(stalenessDays.toLong))
-        else None,
-      tieBreakers = Seq("event_id"))
+        else None)
+
+  /** The event history as the PIT-join right side, ties broken by
+    * `event_id` like the oracle's `ORDER BY f.ts DESC, f.event_id DESC`. */
+  private def pitRight(history: DataFrame, key: String = "user_id"): AsOfJoin.Right =
+    AsOfJoin.Right(history, Seq(key), "ts", Seq("value"), tieBreakers = Seq("event_id"))
 
   private def pit(s: SparkSession, dir: String, spec: AsOfJoin.Spec,
-      strategy: AsOfJoin.Strategy): DataFrame = {
-    val strat = strategy match {
-      case AsOfJoin.Strategy.UnionAsOf =>
-        // the union path needs the tiebreaker inside the carried struct;
-        // events have unique (user_id, ts) so drop it there
-        return AsOfJoin
-          .unionAsOf(eventSpine(s, dir), events(s, dir), spec.copy(tieBreakers = Nil))
-          .select(
-            col(AsOfJoin.RowIdCol).as("label_event_id"),
-            col("user_id"), col("label_time"), col("feature_time"),
-            col("value").as("feat_value"))
-          .orderBy("label_event_id")
-      case other => other
-    }
+      strategy: AsOfJoin.Strategy): DataFrame =
     AsOfJoin
-      .join(eventSpine(s, dir), events(s, dir), spec, strat)
+      .join(eventSpine(s, dir), pitRight(events(s, dir)), spec, strategy)
       .select(
         col(AsOfJoin.RowIdCol).as("label_event_id"),
         col("user_id"), col("label_time"), col("feature_time"),
         col("value").as("feat_value"))
       .orderBy("label_event_id")
-  }
 
   /** Shared oracle shape for the PIT-join queries (DuckDB SQL). */
   private def pitOracle(upperOp: String, embargoDays: Int, stalenessDays: Int): String = {
@@ -339,8 +326,7 @@ object SparkEntry {
     "q_pit_keymap" -> ((s, dir) => {
       val feat = events(s, dir).withColumnRenamed("user_id", "uid")
       AsOfJoin
-        .join(eventSpine(s, dir), feat,
-          pitSpec().copy(rightKeys = Seq("uid")), AsOfJoin.Strategy.RowNumber)
+        .join(eventSpine(s, dir), pitRight(feat, "uid"), pitSpec(), AsOfJoin.Strategy.RowNumber)
         .select(
           col(AsOfJoin.RowIdCol).as("label_event_id"),
           col("user_id"), col("label_time"), col("feature_time"),
@@ -354,15 +340,12 @@ object SparkEntry {
         col("o_orderkey").as(AsOfJoin.RowIdCol),
         col("o_custkey"), col("o_orderstatus"),
         col("o_orderdate").as("label_time"))
-      val spec = AsOfJoin.Spec(
-        leftKeys = Seq("o_custkey", "o_orderstatus"),
-        rightKeys = Seq("o_custkey", "o_orderstatus"),
-        leftTime = "label_time",
-        rightTime = "o_orderdate",
-        valueCols = Seq("o_totalprice"),
-        maxLookback = Some(java.time.Duration.ofDays(3650)),
+      val keys = Seq("o_custkey", "o_orderstatus")
+      val spec = AsOfJoin.Spec(keys, "label_time",
+        maxLookback = Some(java.time.Duration.ofDays(3650)))
+      val right = AsOfJoin.Right(o, keys, "o_orderdate", Seq("o_totalprice"),
         tieBreakers = Seq("o_orderkey"))
-      AsOfJoin.join(spine, o, spec, AsOfJoin.Strategy.RowNumber)
+      AsOfJoin.join(spine, right, spec, AsOfJoin.Strategy.RowNumber)
         .select(col(AsOfJoin.RowIdCol).as("label_orderkey"),
           col("o_custkey"), col("o_orderstatus"), col("label_time"),
           col("feature_time"), col("o_totalprice").as("prior_totalprice"))

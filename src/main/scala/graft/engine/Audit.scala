@@ -284,19 +284,10 @@ object Audit {
         val rightKeys = keys.map(k => f.keyMapping.getOrElse(k, k))
         val valueCols = feat.df.columns.filterNot(c =>
           rightKeys.contains(c) || c == feat.timeCol).toSeq
-        val spec = graft.operators.AsOfJoin.Spec(
-          leftKeys = keys,
-          rightKeys = rightKeys,
-          leftTime = labelTime,
-          rightTime = feat.timeCol,
-          valueCols = valueCols,
-          inclusive = options.join == "inclusive",
-          embargo = f.embargo,
-          maxLookback = Some(options.maxLookback),
-          maxStaleness = f.maxStaleness,
-          rightTimeOut = Names.featureTimeCol(f.name))
+        val right = graft.operators.AsOfJoin.Right(feat.df, rightKeys, feat.timeCol,
+          valueCols, Seq(Names.featureTimeCol(f.name)))
         val rebuilt = graft.operators.AsOfJoin
-          .join(spine, feat.df, spec, options.strategy, options.autoConfig)
+          .join(spine, right, Build.joinSpec(lbl, f, options), options.strategy, options.autoConfig)
           .select(col(Build.RowId) +: col(Names.featureTimeCol(f.name)) +:
             valueCols.map(c => col(c).as(s"__rb__${Names.namespaced(f.name, c)}")): _*)
         compared = compared.join(rebuilt, Seq(Build.RowId), "left")

@@ -364,19 +364,6 @@ object Build {
     // per-feature output value-column names, in declaration order
     val valueColsOf = scala.collection.mutable.Map.empty[String, Seq[String]]
 
-    def baseSpec(f: Feature, rightKeys: Seq[String], timeCol: String,
-        valueCols: Seq[String]) = AsOfJoin.Spec(
-      leftKeys = labels.keys,
-      rightKeys = rightKeys,
-      leftTime = labels.labelTime,
-      rightTime = timeCol,
-      valueCols = valueCols,
-      inclusive = options.join == "inclusive",
-      embargo = f.embargo,
-      maxLookback = Some(options.maxLookback),
-      maxStaleness = f.maxStaleness,
-      rightTimeOut = Names.featureTimeCol(f.name))
-
     // Every group (a single feature, or same-source merged features)
     // first becomes a JoinUnit: its feature frame with value columns
     // already renamed to their namespaced OUTPUT names, plus the
@@ -441,10 +428,10 @@ object Build {
 
     // Units whose join parameters agree — embargo, staleness, and
     // unionable key/time column types — share ONE shuffle + window via
-    // unionAsOfMulti, even across DIFFERENT sources: the N-feature
+    // one AsOfJoin.carry, even across DIFFERENT sources: the N-feature
     // build costs one exchange instead of N, and those features skip
     // the rowid re-join at assembly. Segmented keeps the batching too
-    // (unionAsOfMultiSegmented); only RowNumber stays per-unit.
+    // (the carry's bucket); only RowNumber stays per-unit.
     val multiEligible = options.strategy match {
       case AsOfJoin.Strategy.Auto | AsOfJoin.Strategy.UnionAsOf |
           AsOfJoin.Strategy.UnionAsOfSegmented(_) => true
@@ -481,10 +468,11 @@ object Build {
           u.rightKeys.map(k => u.df.schema(k).dataType),
           u.df.schema(u.timeCol).dataType)).values.toSeq
         .flatMap(packByWidth)
-    // Under UnionAsOf, EVERY batch takes the multi path — a batch of
-    // one is just unionAsOf that additionally threads the label
-    // columns through its shuffle, which lets the head batch skip the
-    // assembly join (and a single-batch build skip the spine cache).
+    // Under every carry strategy, EVERY batch takes the batch path — a
+    // batch of one is the same carry with one right side, and it threads
+    // the label columns through its shuffle, which lets the head batch
+    // skip the assembly join (and a single-batch build skip the spine
+    // cache).
     val (multiBatches, singleUnits) =
       if (multiEligible) (unitBatches.sortBy(-_.size), Seq.empty[JoinUnit])
       else (Seq.empty[Seq[JoinUnit]], unitBatches.flatten)
@@ -510,36 +498,22 @@ object Build {
     val spineNarrow = spine
       .select((RowId +: labels.keys :+ labels.labelTime).map(col): _*)
 
+    def right(u: JoinUnit) =
+      AsOfJoin.Right(u.df, u.rightKeys, u.timeCol, u.nsValueCols, u.timeOuts)
     def joinSingle(u: JoinUnit): DataFrame = {
       u.featNames.foreach(n => options.progress("join", n))
-      val spec = baseSpec(u.f0, u.rightKeys, u.timeCol, u.nsValueCols)
-        .copy(rightTimeOut = "__unit_ft")
-      val j = AsOfJoin.join(spineNarrow, u.df, spec, options.strategy, options.autoConfig)
-      j.select(
-        col(RowId) +: (u.timeOuts.map(o => col("__unit_ft").as(o)) ++
-          u.nsValueCols.map(col)): _*)
+      AsOfJoin.join(spineNarrow, right(u), joinSpec(labels, u.f0, options),
+        options.strategy, options.autoConfig)
+        .select((RowId +: (u.timeOuts ++ u.nsValueCols)).map(col): _*)
     }
     def joinMulti(us: Seq[JoinUnit], labelFrame: DataFrame): DataFrame = {
       us.foreach(_.featNames.foreach(n => options.progress("join", n)))
-      val spec = baseSpec(us.head.f0, us.head.rightKeys, us.head.timeCol, Nil)
-      val rights = us.map(u => AsOfJoin.MultiRight(
-        u.df, u.rightKeys, u.timeCol, u.nsValueCols, u.timeOuts))
+      val rights = us.map(right)
       // hot-key escape on the fused path: explicit Segmented keeps its
       // bucket; Auto probes the batch's unioned key histogram (size-
       // gated — small batches skip the probe and pay nothing)
-      val segBucket = options.strategy match {
-        case AsOfJoin.Strategy.UnionAsOfSegmented(b) => Some(b)
-        case AsOfJoin.Strategy.Auto =>
-          AsOfJoin.autoStrategyMulti(rights, options.autoConfig) match {
-            case AsOfJoin.Strategy.UnionAsOfSegmented(b) => Some(b)
-            case _                                       => None
-          }
-        case _ => None
-      }
-      segBucket match {
-        case Some(b) => AsOfJoin.unionAsOfMultiSegmented(labelFrame, rights, spec, b)
-        case None    => AsOfJoin.unionAsOfMulti(labelFrame, rights, spec)
-      }
+      AsOfJoin.carry(labelFrame, rights, joinSpec(labels, us.head.f0, options),
+        AsOfJoin.carryBucket(options.strategy, rights, options.autoConfig))
     }
 
     // ---- assembly (J4) ---------------------------------------------
@@ -838,6 +812,17 @@ object Build {
     }
     gaps ++ coverage
   }
+
+  /** The as-of parameters of feature `f` against `labels` — shared by
+    * the build and the audit's rebuild, so both join the same way. */
+  def joinSpec(labels: Labels, f: Feature, options: BuildOptions): AsOfJoin.Spec =
+    AsOfJoin.Spec(
+      leftKeys = labels.keys,
+      leftTime = labels.labelTime,
+      inclusive = options.join == "inclusive",
+      embargo = f.embargo,
+      maxLookback = Some(options.maxLookback),
+      maxStaleness = f.maxStaleness)
 
   // ---- feature computation (3 modes) -------------------------------
 

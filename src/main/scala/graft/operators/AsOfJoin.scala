@@ -5,6 +5,7 @@ import java.time.Duration
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StructField, StructType}
 
 import graft.util.Durations
 
@@ -18,28 +19,34 @@ import graft.util.Durations
   *
   * Semantics follow the reference's two join strategies
   * (`/root/reference/src/timefence/engine.py:762-925`), re-expressed
-  * Spark-first:
+  * Spark-first, as two implementations:
   *
-  *  - [[Strategy.RowNumber]]: LEFT equi-join on keys with the range
-  *    bounds as residual predicates, then
+  *  - [[rowNumber]] ([[Strategy.RowNumber]]): LEFT equi-join on keys
+  *    with the range bounds as residual predicates, then
   *    `row_number() over (partition by label-rowid order by feature_time desc)`
   *    keeping rank 1 (unmatched labels survive with nulls). Exactly the
-  *    reference's universal fallback (engine.py:762-828). Catalyst plans
-  *    the equi-part as broadcast/shuffled hash or SMJ; AQE handles skew.
-  *    Cost grows with the number of in-window candidates per label.
+  *    reference's universal fallback (engine.py:762-828) and the in-tree
+  *    reference for the carry. Catalyst plans the equi-part as
+  *    broadcast/shuffled hash or SMJ; AQE handles skew. Cost grows with
+  *    the number of in-window candidates per label.
   *
-  *  - [[Strategy.UnionAsOf]]: the scale path Spark lacks natively —
-  *    union label rows (time-shifted by embargo) with feature rows, sort
-  *    once per entity key by time, carry the last whole feature row
-  *    forward as a struct, keep label rows, then null-mask values that
-  *    violate the lookback/staleness floor (the reference applies lower
-  *    bounds as post-hoc masking on its ASOF path too,
-  *    engine.py:905-917). One shuffle by entity key, no candidate
-  *    blow-up — survives labels with thousands of in-window feature
-  *    rows, which is the 100 TB failure mode of RowNumber.
+  *  - [[carry]] ([[Strategy.UnionAsOf]], and with a time bucket
+  *    [[Strategy.UnionAsOfSegmented]]): the scale path Spark lacks
+  *    natively — union label rows (time-shifted by embargo) with the
+  *    feature rows of one or more right sides, sort once per entity key
+  *    by time, carry the last whole feature row of each side forward as
+  *    a struct, keep label rows, then null-mask values that violate the
+  *    lookback/staleness floor (the reference applies lower bounds as
+  *    post-hoc masking on its ASOF path too, engine.py:905-917). One
+  *    shuffle by entity key, no candidate blow-up — survives labels with
+  *    thousands of in-window feature rows, which is the 100 TB failure
+  *    mode of RowNumber.
   *
-  * Both strategies return identical results (modulo ties on
-  * feature_time, resolved deterministically via `tieBreakers`).
+  * Every strategy returns identical results, ties included: among feature
+  * rows with equal time, the greatest [[Right.tieBreakers]] tuple wins
+  * and a null tie breaker ranks lowest (test-pinned). A right side that
+  * declares no tie breakers leaves equal-time ties to an arbitrary winner,
+  * as the reference does.
   */
 object AsOfJoin {
 
@@ -49,7 +56,7 @@ object AsOfJoin {
     case object UnionAsOf extends Strategy
     /** UnionAsOf with the per-key window split into time buckets —
       * the skew escape hatch when single entity keys hold more rows
-      * than one task should sort (see [[unionAsOfSegmented]]). */
+      * than one task should sort (see [[carry]]). */
     final case class UnionAsOfSegmented(bucket: Duration) extends Strategy
     /** UnionAsOf: benchmarked 6.7x faster at sf0.1 (dense feature
       * histories make RowNumber's candidate set explode — each label
@@ -57,8 +64,8 @@ object AsOfJoin {
       * identical results (cross-strategy equivalence is test-pinned).
       * The gap widens with history density, i.e. with scale. On a
       * large feature side, Auto additionally probes a sampled key
-      * histogram and escapes to [[unionAsOfSegmented]] when one hot
-      * key would serialize a task's sort (see [[autoStrategy]]). */
+      * histogram and escapes to the segmented carry when one hot key
+      * would serialize a task's sort (see [[autoStrategy]]). */
     case object Auto extends Strategy
   }
 
@@ -81,31 +88,38 @@ object AsOfJoin {
       targetRowsPerBucket: Long = 250000L,
       probeSeed: Long = 42L)
 
+  /** The label side and the temporal bounds every right side of one
+    * join shares. */
   final case class Spec(
       leftKeys: Seq[String],
-      rightKeys: Seq[String],
       leftTime: String,
-      rightTime: String,
-      valueCols: Seq[String],
       inclusive: Boolean = false,
       embargo: Duration = Duration.ZERO,
       maxLookback: Option[Duration] = Some(Duration.ofDays(365)),
-      maxStaleness: Option[Duration] = None,
-      /** Output name of the carried feature timestamp column. */
-      rightTimeOut: String = "feature_time",
-      /** Extra right-side columns ordered DESC after feature_time to
-        * break ties deterministically (empty = reference behavior:
-        * arbitrary tie winner). */
-      tieBreakers: Seq[String] = Nil
+      maxStaleness: Option[Duration] = None
   ) {
-    require(leftKeys.nonEmpty && leftKeys.length == rightKeys.length,
-      "as-of join needs matching non-empty key lists")
+    require(leftKeys.nonEmpty, "as-of join needs a non-empty key list")
   }
+
+  /** One feature frame joined as of the labels. `keys` pair with
+    * [[Spec.leftKeys]] by position. `timeOuts` lists the output names
+    * of the carried feature time (several when same-source features
+    * merged into one frame share one carry); value columns keep their
+    * names, so the caller namespaces them when sides could collide.
+    * `tieBreakers` are further `df` columns ordering rows of equal
+    * `time`: the greatest tuple wins, a null ranks lowest. */
+  final case class Right(
+      df: DataFrame,
+      keys: Seq[String],
+      time: String,
+      valueCols: Seq[String],
+      timeOuts: Seq[String] = Seq("feature_time"),
+      tieBreakers: Seq[String] = Nil)
 
   private def minusInterval(c: Column, d: Duration): Column =
     if (d.isZero) c else c - expr(Durations.toSqlInterval(d))
 
-  /** Bucket key for the segmented carries. `unix_micros` only accepts
+  /** Bucket key for the segmented carry. `unix_micros` only accepts
     * the tz-aware TIMESTAMP type, so naive (TIMESTAMP_NTZ — e.g.
     * DuckDB-written parquet) and DATE sort columns go through a cast
     * first. The cast interprets naive values in the session zone; the
@@ -119,21 +133,33 @@ object AsOfJoin {
   /** Internal rowid column identifying label rows across the join. */
   val RowIdCol = "__label_rowid"
 
-  def join(labels: DataFrame, features: DataFrame, spec: Spec,
+  /** One right side under any strategy. Output: all label columns, then
+    * the right's `timeOuts`, then its value columns. */
+  def join(labels: DataFrame, right: Right, spec: Spec,
       strategy: Strategy = Strategy.Auto,
       auto: AutoConfig = AutoConfig()): DataFrame =
     strategy match {
-      case Strategy.RowNumber                  => rowNumber(labels, features, spec)
-      case Strategy.UnionAsOfSegmented(bucket) => unionAsOfSegmented(labels, features, spec, bucket)
-      case Strategy.UnionAsOf                  => unionAsOf(labels, features, spec)
-      case Strategy.Auto =>
-        join(labels, features, spec, autoStrategy(features, spec, auto), auto)
+      case Strategy.RowNumber => rowNumber(labels, right, spec)
+      case s                  => carry(labels, Seq(right), spec, carryBucket(s, Seq(right), auto))
     }
 
-  /** Resolve [[Strategy.Auto]] to a concrete strategy.
+  /** The `bucket` a carry strategy runs [[carry]] with: Segmented keeps
+    * its own, Auto resolves through [[autoStrategy]], the rest is plain. */
+  def carryBucket(strategy: Strategy, rights: Seq[Right],
+      auto: AutoConfig): Option[Duration] =
+    strategy match {
+      case Strategy.UnionAsOfSegmented(b) => Some(b)
+      case Strategy.Auto                  => carryBucket(autoStrategy(rights, auto), rights, auto)
+      case _                              => None
+    }
+
+  /** Resolve [[Strategy.Auto]] to a concrete strategy for a carry over
+    * `rights`. The carry window partitions by key over the UNION of all
+    * right sides, so the size gate sums their estimates and the probe
+    * runs over their unioned (key, time) columns.
     *
     * Small feature side (optimized-plan estimate < `probeMinBytes`):
-    * plain [[unionAsOf]], no probe, no extra job. Large side: run ONE
+    * the plain carry, no probe, no extra job. Large side: run ONE
     * sampled map-side-combined aggregation for the hottest key's
     * estimated row count and time span; past `skewRowsPerKey` the
     * per-key sort would serialize a task (the 100 TB hot-entity
@@ -146,28 +172,14 @@ object AsOfJoin {
     * [[probeMemo]]): a caller looping single Auto joins over one large
     * frame — or an audit rebuilding N features from one source — pays
     * ONE sample job per distinct plan per session, not one per call. */
-  def autoStrategy(features: DataFrame, spec: Spec,
-      cfg: AutoConfig = AutoConfig()): Strategy = {
-    val sizeEst = features.queryExecution.optimizedPlan.stats.sizeInBytes
-    if (sizeEst < BigInt(cfg.probeMinBytes)) Strategy.UnionAsOf
-    else probeKeyed(
-      features.select(spec.rightKeys.map(col) :+ col(spec.rightTime).as("__pt"): _*),
-      spec.rightKeys, cfg)
-  }
-
-  /** [[autoStrategy]] for a fused [[unionAsOfMulti]] batch: the carry
-    * window partitions by key over the UNION of all right sides, so
-    * the histogram probe runs over their unioned (key, time) columns.
-    * Same size gate, summed across frames. */
-  def autoStrategyMulti(rights: Seq[MultiRight],
-      cfg: AutoConfig = AutoConfig()): Strategy = {
+  def autoStrategy(rights: Seq[Right], cfg: AutoConfig = AutoConfig()): Strategy = {
     val sizeEst = rights.map(_.df.queryExecution.optimizedPlan.stats.sizeInBytes).sum
     if (rights.isEmpty || sizeEst < BigInt(cfg.probeMinBytes)) Strategy.UnionAsOf
     else {
-      val keyCols = rights.head.rightKeys.indices.map(i => s"__pk$i")
+      val keyCols = rights.head.keys.indices.map(i => s"__pk$i")
       val keyed = rights.map { r =>
-        r.df.select(r.rightKeys.zip(keyCols).map { case (k, a) => col(k).as(a) } :+
-          col(r.rightTime).as("__pt"): _*)
+        r.df.select(r.keys.zip(keyCols).map { case (k, a) => col(k).as(a) } :+
+          col(r.time).as("__pt"): _*)
       }.reduce(_.unionByName(_))
       probeKeyed(keyed, keyCols, cfg)
     }
@@ -254,420 +266,227 @@ object AsOfJoin {
     }
   }
 
+  private val FtCol = "__ft"
+  private val TagCol = "__tag"
+  private val SortTime = "__t"
+  private val BucketCol = "__bkt"
+
+  /** Internal names both implementations may add next to the label
+    * columns; a label column named like one would be silently
+    * overwritten and dropped, so the guard fails loudly instead. */
+  private val ReservedCols =
+    Set("__rn", FtCol, TagCol, SortTime, "__c", "__c_local", "__prev", BucketCol)
+  private val ReservedPrefixes =
+    Seq("__rk", "__v_", "__tb", "__jk", "__fr", "__mc", "__pv", "__bl")
+
+  private def requireJoinable(labels: DataFrame, rights: Seq[Right], spec: Spec): Unit = {
+    val clash = labels.columns.filter(c =>
+      ReservedCols.contains(c) || ReservedPrefixes.exists(c.startsWith))
+    require(clash.isEmpty,
+      s"label columns collide with as-of internals: ${clash.mkString(", ")} — rename them")
+    require(rights.forall(_.keys.length == spec.leftKeys.length),
+      "as-of join needs matching non-empty key lists")
+  }
+
   /** LEFT join + per-label-row rank. `labels` must already carry a
     * unique [[RowIdCol]] (the engine assigns it once per build so every
     * downstream consumer shares one numbering — SURVEY §7.3).
-    * Output: all label columns + carried `rightTimeOut` + valueCols.
+    * Output: all label columns + `timeOuts` + valueCols.
     */
-  def rowNumber(labels: DataFrame, features: DataFrame, spec: Spec): DataFrame = {
-    // same loud clash guard the union strategies apply: a label column
-    // named like an internal would otherwise be silently overwritten by
-    // withColumn("__rn", ...) and then dropped — silent data loss
-    val clash = labels.columns.filter(c =>
-      c == "__rn" || c == "__ft" || c.startsWith("__rk") ||
-        c.startsWith("__v_") || c.startsWith("__tb"))
-    require(clash.isEmpty,
-      s"label columns collide with as-of internals: ${clash.mkString(", ")} — rename them")
+  def rowNumber(labels: DataFrame, right: Right, spec: Spec): DataFrame = {
+    requireJoinable(labels, Seq(right), spec)
     // Rename the right side up-front so self-joins (labels and features
     // derived from the same frame) never hit ambiguous references.
-    val keyAliases = spec.rightKeys.zipWithIndex.map { case (k, i) => (k, s"__rk$i") }
-    val tieAliases = spec.tieBreakers.zipWithIndex.map { case (c, i) => (c, s"__tb$i") }
-    val ftCol = "__ft"
-    val feat = features.select(
-      keyAliases.map { case (k, a) => col(k).as(a) } ++
-        Seq(col(spec.rightTime).as(ftCol)) ++
-        spec.valueCols.map(c => col(c).as(s"__v_$c")) ++
-        tieAliases.map { case (c, a) => col(c).as(a) }: _*
+    val keyAliases = right.keys.indices.map(i => s"__rk$i")
+    val tieAliases = right.tieBreakers.indices.map(i => s"__tb$i")
+    val feat = right.df.select(
+      right.keys.zip(keyAliases).map { case (k, a) => col(k).as(a) } ++
+        Seq(col(right.time).as(FtCol)) ++
+        right.valueCols.map(c => col(c).as(s"__v_$c")) ++
+        right.tieBreakers.zip(tieAliases).map { case (c, a) => col(c).as(a) }: _*
     )
 
     val lt = labels(spec.leftTime)
+    val ft = feat(FtCol)
     val upperRef = minusInterval(lt, spec.embargo)
-    val upper =
-      if (spec.inclusive) feat(ftCol) <= upperRef else feat(ftCol) < upperRef
-    val bounds = Seq(
-      spec.maxLookback.map(d => feat(ftCol) >= minusInterval(lt, d)),
-      spec.maxStaleness.map(d => feat(ftCol) >= minusInterval(lt, d))
-    ).flatten
-    val keyCond = keyAliases.zip(spec.leftKeys).map { case ((_, a), lk) =>
-      labels(lk) === feat(a)
-    }
+    val upper = if (spec.inclusive) ft <= upperRef else ft < upperRef
+    val bounds = (spec.maxLookback ++ spec.maxStaleness).map(d => ft >= minusInterval(lt, d))
+    val keyCond = keyAliases.zip(spec.leftKeys).map { case (a, lk) => labels(lk) === feat(a) }
     val cond = (keyCond :+ upper) ++ bounds
 
-    val order = col(ftCol).desc_nulls_last +:
-      tieAliases.map { case (_, a) => col(a).desc_nulls_last }
-    val w = Window.partitionBy(col(RowIdCol)).orderBy(order: _*)
+    val w = Window.partitionBy(col(RowIdCol))
+      .orderBy((FtCol +: tieAliases).map(col(_).desc_nulls_last): _*)
 
     labels
       .join(feat, cond.reduce(_ && _), "left")
       .withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1)
-      .drop("__rn")
-      .drop(keyAliases.map(_._2) ++ tieAliases.map(_._2): _*)
-      .withColumnRenamed(ftCol, spec.rightTimeOut)
-      .withColumnsRenamed(spec.valueCols.map(c => s"__v_$c" -> c).toMap)
+      .select(labels.columns.toSeq.map(col) ++ right.timeOuts.map(col(FtCol).as(_)) ++
+        right.valueCols.map(c => col(s"__v_$c").as(c)): _*)
   }
 
-  private val FtCol = "__ft"
-  private val TagCol = "__tag"
-  private val SortTime = "__t"
-
-  private final case class UnionParts(
-      unioned: DataFrame,
-      joinKeys: Seq[String],
-      labelTagV: Int,
-      featTagV: Int,
-      tieAliases: Seq[(String, String)],
-      labelCols: Seq[String])
-
-  /** Shared union construction for both carry-forward variants:
-    * label rows (time-shifted by embargo) and feature rows in one
-    * frame, with a `__frow` struct holding the whole feature row.
+  /** The union carry: N as-of joins that share `spec` — but may come
+    * from N DIFFERENT sources — in ONE shuffle + ONE window pass.
     *
-    * Strict: at equal sort time the label row must order BEFORE the
-    * feature row, so the carry-forward at the label row cannot see a
-    * feature with feature_time == label_time - embargo. Inclusive:
-    * the feature orders first and is visible. `last()` over
-    * (unboundedPreceding, currentRow) then implements < vs <=.
-    */
-  private val ReservedCols =
-    Set(FtCol, TagCol, SortTime, "__frow", "__c", "__c_local", "__prev", "__bkt", "__blast")
-
-  private def buildUnion(labels: DataFrame, features: DataFrame, spec: Spec): UnionParts = {
-    val clash = labels.columns.filter(c =>
-      ReservedCols.contains(c) || c.startsWith("__jk") || c.startsWith("__v_") ||
-        c.startsWith("__tb"))
-    require(clash.isEmpty,
-      s"label columns collide with as-of internals: ${clash.mkString(", ")}")
-    val joinKeys = spec.leftKeys.indices.map(i => s"__jk$i")
-    val tieAliases = spec.tieBreakers.zipWithIndex.map { case (c, i) => (c, s"__tb$i") }
-    val (labelTagV, featTagV) = if (spec.inclusive) (1, 0) else (0, 1)
-
-    val labelCols = labels.columns.toSeq
-    val lhs = labels.select(
-      spec.leftKeys.zip(joinKeys).map { case (k, a) => col(k).as(a) } ++
-        Seq(
-          minusInterval(col(spec.leftTime), spec.embargo).as(SortTime),
-          lit(labelTagV).as(TagCol),
-          lit(null).cast(features.schema(spec.rightTime).dataType).as(FtCol)
-        ) ++
-        labelCols.map(c => col(c)) ++
-        spec.valueCols.map(c => lit(null).cast(features.schema(c).dataType).as(s"__v_$c")) ++
-        tieAliases.map { case (c, a) => lit(null).cast(features.schema(c).dataType).as(a) }: _*
-    )
-    val rhs = features
-      .filter(col(spec.rightTime).isNotNull)
-      // null keys never match an equi-join (RowNumber strategy,
-      // reference SQL): drop them here so the carry partitioning
-      // cannot invent a null==null match the other strategies (and
-      // the segmented stage-3 join) would not produce
-      .filter(spec.rightKeys.map(col(_).isNotNull).reduce(_ && _))
-      .select(
-        spec.rightKeys.zip(joinKeys).map { case (k, a) => col(k).as(a) } ++
-          Seq(
-            col(spec.rightTime).as(SortTime),
-            lit(featTagV).as(TagCol),
-            col(spec.rightTime).as(FtCol)
-          ) ++
-          labelCols.map(c => lit(null).cast(labels.schema(c).dataType).as(c)) ++
-          spec.valueCols.map(c => col(c).as(s"__v_$c")) ++
-          tieAliases.map { case (c, a) => col(c).as(a) }: _*
-      )
-    val featRow = when(
-      col(TagCol) === featTagV,
-      struct(col(FtCol).as("ft") +: spec.valueCols.zipWithIndex.map {
-        case (c, i) => col(s"__v_$c").as(s"v$i")
-      }: _*)
-    )
-    UnionParts(lhs.unionByName(rhs).withColumn("__frow", featRow),
-      joinKeys, labelTagV, featTagV, tieAliases, labelCols)
-  }
-
-  /** Order: time asc, then tag (visibility at ties), then tiebreakers
-    * ASC so the deterministic winner (max tiebreaker) is carried last. */
-  private def carryOrder(parts: UnionParts): Seq[Column] =
-    col(SortTime).asc_nulls_first +: col(TagCol).asc +:
-      parts.tieAliases.map { case (_, a) => col(a).asc_nulls_first }
-
-  /** Final projection: keep label rows, mask lookback/staleness
-    * violations to null, emit carried feature_time + value columns. */
-  private def finishCarry(carried: DataFrame, parts: UnionParts, spec: Spec,
-      carriedCol: String): DataFrame = {
-    val lt = col(spec.leftTime)
-    val cft = col(carriedCol).getField("ft")
-    val floorOk = Seq(
-      spec.maxLookback.map(d => cft >= minusInterval(lt, d)),
-      spec.maxStaleness.map(d => cft >= minusInterval(lt, d))
-    ).flatten.reduceOption(_ && _).getOrElse(lit(true))
-    val valid = col(carriedCol).isNotNull && floorOk
-    carried
-      .filter(col(TagCol) === parts.labelTagV)
-      .select(
-        parts.labelCols.map(col) ++
-          Seq(when(valid, cft).as(spec.rightTimeOut)) ++
-          spec.valueCols.zipWithIndex.map { case (c, i) =>
-            when(valid, col(carriedCol).getField(s"v$i")).as(c)
-          }: _*
-      )
-  }
-
-  /** Union + sorted carry-forward. One shuffle on the entity keys; the
-    * per-key sort is what a native ASOF merge would do. The whole
-    * feature row is carried as ONE struct via `last(_, ignoreNulls)` so
-    * genuinely-null feature values are preserved (a per-column carry
-    * would wrongly skip back to an older non-null value). Lower bounds
-    * (lookback/staleness) are applied as post-pass null-masking, which
-    * is equivalent in output to having them in the join predicate.
-    */
-  def unionAsOf(labels: DataFrame, features: DataFrame, spec: Spec): DataFrame = {
-    val parts = buildUnion(labels, features, spec)
-    val w = Window
-      .partitionBy(parts.joinKeys.map(col): _*)
-      .orderBy(carryOrder(parts): _*)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val carried = parts.unioned
-      .withColumn("__c", last(col("__frow"), ignoreNulls = true).over(w))
-    finishCarry(carried, parts, spec, "__c")
-  }
-
-  /** One feature frame participating in [[unionAsOfMulti]]. Value
-    * columns are already output-named (the caller namespaces them);
-    * `rightTimeOuts` lists the carried-time aliases to emit (several
-    * when merged same-source features share one carry). */
-  final case class MultiRight(
-      df: DataFrame,
-      rightKeys: Seq[String],
-      rightTime: String,
-      valueCols: Seq[String],
-      rightTimeOuts: Seq[String])
-
-  /** N as-of joins that share (leftKeys, leftTime, inclusive, embargo,
-    * maxLookback, maxStaleness) — but may come from N DIFFERENT
-    * sources — executed in ONE shuffle + ONE window pass.
-    *
-    * Union all feature frames with the labels; each feature carries
-    * its own struct slot (null on every other frame's rows), and the
-    * single sorted window computes one `last(_, ignoreNulls)` per
-    * feature — Spark evaluates all N carries in one Window operator
-    * over one sort. Compared to N separate [[unionAsOf]] calls this
-    * removes N-1 shuffles AND the N-way rowid re-join at assembly
+    * Label rows (time-shifted by embargo) and every right's feature
+    * rows in one frame; each right carries its whole feature row as its
+    * own struct slot (null on every other row), and the single sorted
+    * window computes one `last(_, ignoreNulls)` per slot — Spark
+    * evaluates all N carries in one Window operator over one sort. A
+    * batch removes N-1 shuffles AND the N-way rowid re-join at assembly
     * (every carried value lands on the label row directly): the
-    * dominant cost of a many-feature build at any scale.
+    * dominant cost of a many-feature build at any scale. Rows of
+    * different rights interleave in the sort but only ever write their
+    * own slot, so carries cannot cross-contaminate. Carrying the whole
+    * row as ONE struct preserves genuinely-null feature values (a
+    * per-column carry would wrongly skip back to an older non-null
+    * value).
     *
-    * Equivalent to running [[unionAsOf]] per feature (test-pinned);
-    * per-feature rows interleave in the sort but only ever write
-    * their own struct slot, so carries cannot cross-contaminate.
+    * Order: time asc, then tag, then every right's tie breakers asc
+    * with nulls first — so the deterministic winner (max tie breaker)
+    * is carried last. Strict: at equal sort time the label row orders
+    * BEFORE the feature row, so the carry at the label row cannot see
+    * a feature with feature_time == label_time - embargo. Inclusive:
+    * the feature orders first and is visible. `last()` over
+    * (unboundedPreceding, currentRow) then implements < vs <=. Lower
+    * bounds (lookback/staleness) are applied as post-pass null-masking,
+    * which is equivalent in output to having them in the join
+    * predicate.
+    *
+    * `bucket` segments the per-key window into fixed time buckets so a
+    * hot entity key (one user with 100M events) spreads over many tasks
+    * instead of serializing into one sort. Three stages, all bounded:
+    *  1. carry WITHIN (key, bucket) — the big window, now partitioned
+    *     by (key, bucket) so partition size ≈ rows per key per bucket;
+    *  2. per (key, bucket): each slot's LAST feature row (an
+    *     aggregation, map-side combined), then a tiny per-key window
+    *     over BUCKETS carries the latest previous-bucket row forward
+    *     (rows per partition = number of buckets, not events);
+    *  3. each row's carry = its in-bucket carry, else the previous
+    *     buckets' carry, joined back on (key, bucket).
+    * Results are identical for every bucket (test-pinned, including a
+    * hot-key fuzz); cost is one extra small shuffle.
     */
-  private final case class MultiParts(
-      unioned: DataFrame,
-      joinKeys: Seq[String],
-      labelTagV: Int,
-      featTagV: Int,
-      labelCols: Seq[String])
-
-  private def buildMultiUnion(labels: DataFrame, rights: Seq[MultiRight],
-      spec: Spec): MultiParts = {
-    require(rights.nonEmpty, "unionAsOfMulti needs at least one right side")
-    require(spec.tieBreakers.isEmpty,
-      "tieBreakers are per-feature; use unionAsOf for tie-broken joins")
-    val clash = labels.columns.filter(c =>
-      ReservedCols.contains(c) || c.startsWith("__jk") || c.startsWith("__fr") ||
-        c.startsWith("__mc") || c.startsWith("__pv") || c.startsWith("__bl"))
-    require(clash.isEmpty,
-      s"label columns collide with as-of internals: ${clash.mkString(", ")}")
+  def carry(labels: DataFrame, rights: Seq[Right], spec: Spec,
+      bucket: Option[Duration] = None): DataFrame = {
+    require(rights.nonEmpty, "an as-of carry needs at least one right side")
+    // whole milliseconds required: toMillis truncates, so a positive
+    // sub-ms bucket would pass a zero/negative check yet divide by 0
+    // (ANSI mode throws; legacy mode nulls every bucket and collapses
+    // each key into ONE partition — the exact skew this variant exists
+    // to avoid), and 1.5ms would silently become 1ms
+    bucket.foreach(b => require(b.toMillis >= 1 && b.toNanos % 1000000L == 0,
+      s"bucket must be a positive whole number of milliseconds, got $b"))
+    requireJoinable(labels, rights, spec)
 
     val joinKeys = spec.leftKeys.indices.map(i => s"__jk$i")
     val (labelTagV, featTagV) = if (spec.inclusive) (1, 0) else (0, 1)
     val labelCols = labels.columns.toSeq
-    import org.apache.spark.sql.types.{StructField, StructType}
-    def structTypeOf(r: MultiRight): StructType = StructType(
-      StructField("ft", r.df.schema(r.rightTime).dataType) +:
+    val tieCols = rights.zipWithIndex.map { case (r, i) =>
+      r.tieBreakers.indices.map(j => s"__tb${i}_$j")
+    }
+    def slotType(r: Right): StructType = StructType(
+      StructField("ft", r.df.schema(r.time).dataType) +:
         r.valueCols.zipWithIndex.map { case (c, vi) =>
           StructField(s"v$vi", r.df.schema(c).dataType)
         })
+    // every right's slot and tie breakers: filled from right `own`'s
+    // row, typed nulls for every other right (own = -1 for label rows)
+    def slots(own: Int): Seq[Column] = rights.zipWithIndex.flatMap { case (r, j) =>
+      val ties = r.tieBreakers.zip(tieCols(j))
+      if (j == own)
+        struct(col(r.time).as("ft") +:
+          r.valueCols.zipWithIndex.map { case (c, vi) => col(c).as(s"v$vi") }: _*)
+          .as(s"__fr$j") +: ties.map { case (c, a) => col(c).as(a) }
+      else
+        lit(null).cast(slotType(r)).as(s"__fr$j") +:
+          ties.map { case (c, a) => lit(null).cast(r.df.schema(c).dataType).as(a) }
+    }
 
     val lhs = labels.select(
       spec.leftKeys.zip(joinKeys).map { case (k, a) => col(k).as(a) } ++
         Seq(
           minusInterval(col(spec.leftTime), spec.embargo).as(SortTime),
           lit(labelTagV).as(TagCol)) ++
-        labelCols.map(col) ++
-        rights.zipWithIndex.map { case (r, i) =>
-          lit(null).cast(structTypeOf(r)).as(s"__fr$i")
-        }: _*)
+        labelCols.map(col) ++ slots(-1): _*)
     val rhs = rights.zipWithIndex.map { case (r, i) =>
-      r.df.filter(col(r.rightTime).isNotNull)
-        // same null-key equi-join semantics as buildUnion above
-        .filter(r.rightKeys.map(col(_).isNotNull).reduce(_ && _))
+      r.df.filter(col(r.time).isNotNull)
+        // null keys never match an equi-join (RowNumber strategy,
+        // reference SQL): drop them here so the carry partitioning
+        // cannot invent a null==null match the other strategies (and
+        // the segmented stage-3 join) would not produce
+        .filter(r.keys.map(col(_).isNotNull).reduce(_ && _))
         .select(
-        r.rightKeys.zip(joinKeys).map { case (k, a) => col(k).as(a) } ++
-          Seq(
-            col(r.rightTime).as(SortTime),
-            lit(featTagV).as(TagCol)) ++
-          labelCols.map(c => lit(null).cast(labels.schema(c).dataType).as(c)) ++
-          rights.zipWithIndex.map { case (r2, j) =>
-            if (j == i)
-              struct(col(r.rightTime).as("ft") +:
-                r.valueCols.zipWithIndex.map { case (c, vi) => col(c).as(s"v$vi") }: _*)
-                .as(s"__fr$j")
-            else lit(null).cast(structTypeOf(r2)).as(s"__fr$j")
-          }: _*)
+          r.keys.zip(joinKeys).map { case (k, a) => col(k).as(a) } ++
+            Seq(
+              col(r.time).as(SortTime),
+              lit(featTagV).as(TagCol)) ++
+            labelCols.map(c => lit(null).cast(labels.schema(c).dataType).as(c)) ++
+            slots(i): _*)
     }
-    MultiParts((lhs +: rhs).reduce(_.unionByName(_)),
-      joinKeys, labelTagV, featTagV, labelCols)
-  }
+    val unioned = (lhs +: rhs).reduce(_.unionByName(_))
+    val framed = bucket.fold(unioned)(b => unioned.withColumn(BucketCol,
+      floor(bucketMicros(col(SortTime)) / lit(b.toMillis * 1000L))))
+    val partition = (joinKeys ++ bucket.map(_ => BucketCol)).map(col)
 
-  /** Final multi projection: keep label rows, per-slot validity mask,
-    * emit each right's carried time aliases + value columns. */
-  private def finishMulti(carried: DataFrame, parts: MultiParts,
-      rights: Seq[MultiRight], spec: Spec): DataFrame = {
+    // stage 1 (the whole carry when unbucketed): one window pass
+    // computing every slot
+    val w = Window
+      .partitionBy(partition: _*)
+      .orderBy(col(SortTime).asc_nulls_first +: col(TagCol).asc +:
+        tieCols.flatten.map(col(_).asc_nulls_first): _*)
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val local = rights.indices.foldLeft(framed) { (acc, i) =>
+      acc.withColumn(s"__mc$i", last(col(s"__fr$i"), ignoreNulls = true).over(w))
+    }
+
+    val carried = if (bucket.isEmpty) local else {
+      // stage 2: per (key, bucket) the LAST feature row of each slot
+      // by (time, tie breakers) — max_by so the carried struct never
+      // needs to be orderable (map-typed values work; max(struct(...))
+      // would fail analysis), keyed null off the slot's own rows so
+      // label rows and other rights are skipped — then a tiny per-key
+      // window over buckets carries the latest previous-bucket row
+      // forward per slot
+      val lasts = rights.indices.map { i =>
+        val ord = if (tieCols(i).isEmpty) col(SortTime)
+          else struct(col(SortTime) +: tieCols(i).map(col): _*)
+        max_by(col(s"__fr$i"), when(col(s"__fr$i").isNotNull, ord)).as(s"__bl$i")
+      }
+      val bucketLast = framed.groupBy(partition: _*).agg(lasts.head, lasts.tail: _*)
+      val wBuckets = Window
+        .partitionBy(joinKeys.map(col): _*)
+        .orderBy(col(BucketCol).asc_nulls_first)
+        .rowsBetween(Window.unboundedPreceding, -1)
+      val prevByBucket = rights.indices.foldLeft(bucketLast) { (acc, i) =>
+        acc.withColumn(s"__pv$i",
+          last(col(s"__bl$i"), ignoreNulls = true).over(wBuckets))
+      }.select(partition ++ rights.indices.map(i => col(s"__pv$i")): _*)
+
+      // stage 3: combine per slot
+      val joined = local.join(prevByBucket, joinKeys :+ BucketCol, "left")
+      rights.indices.foldLeft(joined) { (acc, i) =>
+        acc.withColumn(s"__mc$i", coalesce(col(s"__mc$i"), col(s"__pv$i")))
+      }
+    }
+
+    // keep label rows, per-slot validity mask, emit each right's
+    // carried time aliases + value columns
     val lt = col(spec.leftTime)
     carried
-      .filter(col(TagCol) === parts.labelTagV)
+      .filter(col(TagCol) === labelTagV)
       .select(
-        parts.labelCols.map(col) ++ rights.zipWithIndex.flatMap { case (r, i) =>
+        labelCols.map(col) ++ rights.zipWithIndex.flatMap { case (r, i) =>
           val c = col(s"__mc$i")
           val cft = c.getField("ft")
-          val floorOk = Seq(
-            spec.maxLookback.map(d => cft >= minusInterval(lt, d)),
-            spec.maxStaleness.map(d => cft >= minusInterval(lt, d))
-          ).flatten.reduceOption(_ && _).getOrElse(lit(true))
+          val floorOk = (spec.maxLookback ++ spec.maxStaleness)
+            .map(d => cft >= minusInterval(lt, d))
+            .reduceOption(_ && _).getOrElse(lit(true))
           val valid = c.isNotNull && floorOk
-          r.rightTimeOuts.map(o => when(valid, cft).as(o)) ++
+          r.timeOuts.map(o => when(valid, cft).as(o)) ++
             r.valueCols.zipWithIndex.map { case (vc, vi) =>
               when(valid, c.getField(s"v$vi")).as(vc)
             }
         }: _*)
-  }
-
-  def unionAsOfMulti(labels: DataFrame, rights: Seq[MultiRight], spec: Spec): DataFrame = {
-    val parts = buildMultiUnion(labels, rights, spec)
-    val w = Window
-      .partitionBy(parts.joinKeys.map(col): _*)
-      .orderBy(col(SortTime).asc_nulls_first, col(TagCol).asc)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val carried = rights.indices.foldLeft(parts.unioned) { (acc, i) =>
-      acc.withColumn(s"__mc$i", last(col(s"__fr$i"), ignoreNulls = true).over(w))
-    }
-    finishMulti(carried, parts, rights, spec)
-  }
-
-  /** Skew-resistant [[unionAsOfMulti]]: the same three-stage segmented
-    * carry as [[unionAsOfSegmented]], run once per feature slot over
-    * ONE (key, bucket)-partitioned window — a fused batch keeps its
-    * single shuffle AND no entity key serializes a task. Equivalence
-    * with the plain multi carry is test-pinned (hot-key fuzz); ties on
-    * feature_time resolve arbitrarily in both (reference behavior). */
-  def unionAsOfMultiSegmented(labels: DataFrame, rights: Seq[MultiRight],
-      spec: Spec, bucket: Duration): DataFrame = {
-    require(bucket.toMillis >= 1 && bucket.toNanos % 1000000L == 0,
-      s"bucket must be a positive whole number of milliseconds, got $bucket")
-    val parts = buildMultiUnion(labels, rights, spec)
-    val bucketCol = "__bkt"
-    val withBucket = parts.unioned.withColumn(bucketCol,
-      floor(bucketMicros(col(SortTime)) / lit(bucket.toMillis * 1000L)))
-
-    // stage 1: in-bucket carry, one window pass computing every slot
-    val wLocal = Window
-      .partitionBy((parts.joinKeys :+ bucketCol).map(col): _*)
-      .orderBy(col(SortTime).asc_nulls_first, col(TagCol).asc)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val localCarried = rights.indices.foldLeft(withBucket) { (acc, i) =>
-      acc.withColumn(s"__mcl$i", last(col(s"__fr$i"), ignoreNulls = true).over(wLocal))
-    }
-
-    // stage 2: per (key, bucket) the LAST feature row of each slot
-    // (map-side combined aggregation; max_by so the carried struct
-    // never needs to be orderable — map-typed values work), then a
-    // tiny per-key window over buckets carries the latest
-    // previous-bucket row forward per slot
-    def slotOrd(i: Int) = when(col(s"__fr$i").isNotNull, col(SortTime))
-    val bucketLast = withBucket
-      .groupBy((parts.joinKeys :+ bucketCol).map(col): _*)
-      .agg(
-        max_by(col("__fr0"), slotOrd(0)).as("__bl0"),
-        rights.indices.drop(1).map(i =>
-          max_by(col(s"__fr$i"), slotOrd(i)).as(s"__bl$i")): _*)
-    val wBuckets = Window
-      .partitionBy(parts.joinKeys.map(col): _*)
-      .orderBy(col(bucketCol).asc_nulls_first)
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val prevByBucket = rights.indices.foldLeft(bucketLast) { (acc, i) =>
-      acc.withColumn(s"__pv$i",
-        last(col(s"__bl$i"), ignoreNulls = true).over(wBuckets))
-    }.select((parts.joinKeys :+ bucketCol).map(col) ++
-      rights.indices.map(i => col(s"__pv$i")): _*)
-
-    // stage 3: combine per slot
-    val joined = localCarried.join(prevByBucket, parts.joinKeys :+ bucketCol, "left")
-    val carried = rights.indices.foldLeft(joined) { (acc, i) =>
-      acc.withColumn(s"__mc$i", coalesce(col(s"__mcl$i"), col(s"__pv$i")))
-    }
-    finishMulti(carried, parts, rights, spec)
-  }
-
-  /** Skew-resistant variant of [[unionAsOf]]: the per-key window is
-    * segmented into fixed time buckets so a hot entity key (one user
-    * with 100M events) spreads over many tasks instead of serializing
-    * into one sort.
-    *
-    * Three stages, all bounded:
-    *  1. carry WITHIN (key, bucket) — the big window, now partitioned
-    *     by (key, bucket) so partition size ≈ rows per key per bucket;
-    *  2. per (key, bucket): the bucket's LAST feature row (an
-    *     aggregation, map-side combined), then a tiny per-key window
-    *     over BUCKETS carries the latest previous-bucket feature
-    *     forward (rows per partition = number of buckets, not events);
-    *  3. each row's carry = its in-bucket carry, else the previous
-    *     buckets' carry, joined back on (key, bucket).
-    *
-    * Results are identical to [[unionAsOf]] (test-pinned, including a
-    * hot-key fuzz); cost is one extra small shuffle.
-    */
-  def unionAsOfSegmented(labels: DataFrame, features: DataFrame, spec: Spec,
-      bucket: Duration): DataFrame = {
-    // whole milliseconds required: toMillis truncates, so a positive
-    // sub-ms bucket would pass a zero/negative check yet divide by 0
-    // (ANSI mode throws; legacy mode nulls every bucket and collapses
-    // each key into ONE partition — the exact skew this variant exists
-    // to avoid), and 1.5ms would silently become 1ms
-    require(bucket.toMillis >= 1 && bucket.toNanos % 1000000L == 0,
-      s"bucket must be a positive whole number of milliseconds, got $bucket")
-    val parts = buildUnion(labels, features, spec)
-    val bucketCol = "__bkt"
-    val withBucket = parts.unioned.withColumn(bucketCol,
-      floor(bucketMicros(col(SortTime)) / lit(bucket.toMillis * 1000L)))
-
-    // stage 1: in-bucket carry
-    val wLocal = Window
-      .partitionBy((parts.joinKeys :+ bucketCol).map(col): _*)
-      .orderBy(carryOrder(parts): _*)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val localCarried = withBucket
-      .withColumn("__c_local", last(col("__frow"), ignoreNulls = true).over(wLocal))
-
-    // stage 2: last feature per (key, bucket) — max_by keeps the whole
-    // feature-row struct WITHOUT requiring it to be orderable (map-
-    // typed value columns work; max(struct(...)) would fail analysis),
-    // ordered by (time, tiebreakers) over feature rows only (label
-    // rows have a null ordering key and are skipped) — then carry
-    // across buckets
-    val ordKey = when(col(TagCol) === parts.featTagV,
-      struct(col(SortTime) +: parts.tieAliases.map { case (_, a) => col(a) }: _*))
-    val bucketLast = withBucket
-      .groupBy((parts.joinKeys :+ bucketCol).map(col): _*)
-      .agg(max_by(col("__frow"), ordKey).as("__blast"))
-    val wBuckets = Window
-      .partitionBy(parts.joinKeys.map(col): _*)
-      .orderBy(col(bucketCol).asc_nulls_first)
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val prevByBucket = bucketLast
-      .withColumn("__prev", last(col("__blast"), ignoreNulls = true).over(wBuckets))
-      .select((parts.joinKeys :+ bucketCol).map(col) :+ col("__prev"): _*)
-
-    // stage 3: combine
-    val carried = localCarried
-      .join(prevByBucket, parts.joinKeys :+ bucketCol, "left")
-      .withColumn("__c", coalesce(col("__c_local"), col("__prev")))
-    finishCarry(carried, parts, spec, "__c")
   }
 }

@@ -6,7 +6,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators.AsOfJoin
-import graft.operators.AsOfJoin.{Spec, Strategy}
+import graft.operators.AsOfJoin.{Right, Spec, Strategy}
 
 class AsOfJoinSpec extends SparkFunSuite {
   import spark.implicits._
@@ -33,11 +33,12 @@ class AsOfJoinSpec extends SparkFunSuite {
       embargo: Duration = Duration.ZERO,
       lookback: Option[Duration] = Some(Duration.ofDays(365)),
       staleness: Option[Duration] = None) =
-    Spec(Seq("user_id"), Seq("user_id"), "lt", "ft", Seq("value"),
-      inclusive, embargo, lookback, staleness)
+    Spec(Seq("user_id"), "lt", inclusive, embargo, lookback, staleness)
+
+  private def right(feats: DataFrame) = Right(feats, Seq("user_id"), "ft", Seq("value"))
 
   private def run(s: Spec, strat: Strategy): Map[Long, (Option[java.sql.Timestamp], Option[Double])] =
-    AsOfJoin.join(labels, features, s, strat)
+    AsOfJoin.join(labels, right(features), s, strat)
       .collect()
       .map { r =>
         val id = r.getLong(r.fieldIndex(AsOfJoin.RowIdCol))
@@ -98,7 +99,7 @@ class AsOfJoinSpec extends SparkFunSuite {
       // two labels same (user, time) must each get a row
       val dup = labels.union(labels.filter(col(AsOfJoin.RowIdCol) === 1L)
         .withColumn(AsOfJoin.RowIdCol, lit(99L)))
-      val out = AsOfJoin.join(dup, features, spec(), strat)
+      val out = AsOfJoin.join(dup, right(features), spec(), strat)
       assert(out.count() == 5)
     }
   }
@@ -110,7 +111,7 @@ class AsOfJoinSpec extends SparkFunSuite {
         .withColumn("lt", $"lt".cast("timestamp")))
     for (strat <- Seq(Strategy.RowNumber, Strategy.UnionAsOf,
         Strategy.UnionAsOfSegmented(Duration.ofDays(1)))) {
-      val out = AsOfJoin.join(lblWithNull, features, spec(), strat).collect()
+      val out = AsOfJoin.join(lblWithNull, right(features), spec(), strat).collect()
       assert(out.length == 5)
       val nullRow = out.find(_.getLong(0) == 50L).get
       assert(nullRow.isNullAt(nullRow.fieldIndex("feature_time")))
@@ -129,9 +130,9 @@ class AsOfJoinSpec extends SparkFunSuite {
       (col("id") % 41).as("user_id"),
       timestamp_micros(lit(1704067200000000L) + col("id") * 104729L * 1000000L).as("lt"))
     val s = spec(embargo = Duration.ofHours(12), staleness = Some(Duration.ofDays(30)))
-    val a = AsOfJoin.join(lbls, feats, s, Strategy.RowNumber)
+    val a = AsOfJoin.join(lbls, right(feats), s, Strategy.RowNumber)
       .select(AsOfJoin.RowIdCol, "feature_time", "value")
-    val b = AsOfJoin.join(lbls, feats, s, Strategy.UnionAsOf)
+    val b = AsOfJoin.join(lbls, right(feats), s, Strategy.UnionAsOf)
       .select(AsOfJoin.RowIdCol, "feature_time", "value")
     assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty)
     assert(a.count() == 300)
@@ -149,10 +150,10 @@ class AsOfJoinSpec extends SparkFunSuite {
       timestamp_micros(lit(1704067200000000L) + col("id") * 13441L * 1000000L).as("lt"))
     for (bucketHours <- Seq(1L, 24L, 24L * 365)) {
       val s = spec(embargo = Duration.ofHours(3), staleness = Some(Duration.ofDays(7)))
-      val plain = AsOfJoin.unionAsOf(lbls, feats, s)
+      val plain = AsOfJoin.join(lbls, right(feats), s, Strategy.UnionAsOf)
         .select(AsOfJoin.RowIdCol, "feature_time", "value")
-      val seg = AsOfJoin.unionAsOfSegmented(lbls, feats, s,
-        Duration.ofHours(bucketHours))
+      val seg = AsOfJoin.join(lbls, right(feats), s,
+        Strategy.UnionAsOfSegmented(Duration.ofHours(bucketHours)))
         .select(AsOfJoin.RowIdCol, "feature_time", "value")
       assert(seg.count() == 400)
       assert(plain.exceptAll(seg).isEmpty && seg.exceptAll(plain).isEmpty,
@@ -175,14 +176,13 @@ class AsOfJoinSpec extends SparkFunSuite {
       when(col("id") % 5 =!= 0, lit(1L)).otherwise(col("id") % 41 + 2).as("user_id"),
       timestamp_micros(lit(1704067200000000L) + col("id") * 13441L * 1000000L).as("lt"))
     val s = spec(embargo = Duration.ofHours(3), staleness = Some(Duration.ofDays(7)))
-      .copy(valueCols = Nil)
     val rights = Seq(
-      AsOfJoin.MultiRight(f1, Seq("user_id"), "t1", Seq("v1"), Seq("ft1")),
-      AsOfJoin.MultiRight(f2, Seq("user_id"), "t2", Seq("v2"), Seq("ft2")))
-    val plain = AsOfJoin.unionAsOfMulti(lbls, rights, s)
+      Right(f1, Seq("user_id"), "t1", Seq("v1"), Seq("ft1")),
+      Right(f2, Seq("user_id"), "t2", Seq("v2"), Seq("ft2")))
+    val plain = AsOfJoin.carry(lbls, rights, s)
     for (bucketHours <- Seq(1L, 24L, 24L * 365)) {
-      val seg = AsOfJoin.unionAsOfMultiSegmented(lbls, rights, s,
-        Duration.ofHours(bucketHours))
+      val seg = AsOfJoin.carry(lbls, rights, s,
+        Some(Duration.ofHours(bucketHours)))
       assert(seg.count() == 400)
       assert(plain.exceptAll(seg).isEmpty && seg.exceptAll(plain).isEmpty,
         s"bucket=${bucketHours}h diverged from plain multi carry")
@@ -190,12 +190,12 @@ class AsOfJoinSpec extends SparkFunSuite {
     // the multi probe sees the hot key across the unioned sides
     val probing = AsOfJoin.AutoConfig(probeMinBytes = 0L, probeFraction = 1.0,
       skewRowsPerKey = 2000L, targetRowsPerBucket = 500L)
-    AsOfJoin.autoStrategyMulti(rights, probing) match {
+    AsOfJoin.autoStrategy(rights, probing) match {
       case Strategy.UnionAsOfSegmented(_) => // expected
       case other => fail(s"expected segmented from the multi probe, got $other")
     }
     // default config: size gate skips the probe for small batches
-    assert(AsOfJoin.autoStrategyMulti(rights) == Strategy.UnionAsOf)
+    assert(AsOfJoin.autoStrategy(rights) == Strategy.UnionAsOf)
   }
 
   test("Auto probes the key histogram and escapes a hot key to segmented") {
@@ -214,7 +214,7 @@ class AsOfJoinSpec extends SparkFunSuite {
 
     // decision: hot key (18000 rows > 5000) -> segmented, bucket sized
     // from the hot key's span so ~targetRowsPerBucket rows per bucket
-    AsOfJoin.autoStrategy(feats, s, probing) match {
+    AsOfJoin.autoStrategy(Seq(right(feats)), probing) match {
       case Strategy.UnionAsOfSegmented(b) =>
         assert(b.toMillis >= 500000L && b.toMillis <= 2000000L,
           s"bucket $b not sized from the 17999s hot-key span / 18 buckets")
@@ -222,14 +222,14 @@ class AsOfJoinSpec extends SparkFunSuite {
     }
     // a uniform key histogram stays on the plain carry
     val uniform = feats.withColumn("user_id", col("value").cast("long") * 7919)
-    assert(AsOfJoin.autoStrategy(uniform, s, probing) == Strategy.UnionAsOf)
+    assert(AsOfJoin.autoStrategy(Seq(right(uniform)), probing) == Strategy.UnionAsOf)
     // default config skips the probe entirely for a small side
-    assert(AsOfJoin.autoStrategy(feats, s) == Strategy.UnionAsOf)
+    assert(AsOfJoin.autoStrategy(Seq(right(feats))) == Strategy.UnionAsOf)
 
     // end-to-end: Auto output is identical to the plain union carry
-    val auto = AsOfJoin.join(lbls, feats, s, Strategy.Auto, probing)
+    val auto = AsOfJoin.join(lbls, right(feats), s, Strategy.Auto, probing)
       .select(AsOfJoin.RowIdCol, "feature_time", "value")
-    val plain = AsOfJoin.unionAsOf(lbls, feats, s)
+    val plain = AsOfJoin.join(lbls, right(feats), s, Strategy.UnionAsOf)
       .select(AsOfJoin.RowIdCol, "feature_time", "value")
     assert(auto.count() == 300)
     assert(plain.exceptAll(auto).isEmpty && auto.exceptAll(plain).isEmpty,
@@ -268,17 +268,17 @@ class AsOfJoinSpec extends SparkFunSuite {
     }
     spark.sparkContext.addSparkListener(listener)
     try {
-      val first = AsOfJoin.autoStrategy(feats, s, probing)
+      val first = AsOfJoin.autoStrategy(Seq(right(feats)), probing)
       val afterFirst = settled()
       assert(afterFirst > 0, "probing config on a hot frame must run the probe job")
-      val repeats = (1 to 3).map(_ => AsOfJoin.autoStrategy(feats, s, probing))
+      val repeats = (1 to 3).map(_ => AsOfJoin.autoStrategy(Seq(right(feats)), probing))
       assert(settled() == afterFirst,
         s"repeated Auto resolution re-ran the probe: ${jobs.get()} jobs vs $afterFirst")
       assert(repeats.forall(_ == first), "memoized decision diverged")
       // clearProbeMemo drops the decision: the next resolution re-probes
       // (the escape hatch for sessions that rewrite a joined source)
       AsOfJoin.clearProbeMemo()
-      assert(AsOfJoin.autoStrategy(feats, s, probing) == first)
+      assert(AsOfJoin.autoStrategy(Seq(right(feats)), probing) == first)
       assert(settled() > afterFirst,
         "clearProbeMemo must force a fresh probe job on the next resolution")
     } finally spark.sparkContext.removeSparkListener(listener)
@@ -304,18 +304,77 @@ class AsOfJoinSpec extends SparkFunSuite {
     val probing = AsOfJoin.AutoConfig(probeMinBytes = 0L, probeFraction = 1.0,
       skewRowsPerKey = 5000L, targetRowsPerBucket = 1000L)
     // the probe still sees the hot key through NTZ values
-    AsOfJoin.autoStrategy(feats, s, probing) match {
+    AsOfJoin.autoStrategy(Seq(right(feats)), probing) match {
       case Strategy.UnionAsOfSegmented(_) => // expected
       case other => fail(s"expected segmented for the NTZ hot key, got $other")
     }
     // end-to-end: Auto (segmented, NTZ-bucketed) equals the plain carry
-    val auto = AsOfJoin.join(lbls, feats, s, Strategy.Auto, probing)
+    val auto = AsOfJoin.join(lbls, right(feats), s, Strategy.Auto, probing)
       .select(AsOfJoin.RowIdCol, "feature_time", "value")
-    val plain = AsOfJoin.unionAsOf(lbls, feats, s)
+    val plain = AsOfJoin.join(lbls, right(feats), s, Strategy.UnionAsOf)
       .select(AsOfJoin.RowIdCol, "feature_time", "value")
     assert(auto.count() == 300)
     assert(plain.exceptAll(auto).isEmpty && auto.exceptAll(plain).isEmpty,
       "Auto (segmented over NTZ) diverged from unionAsOf")
+  }
+
+  test("tie breakers pick the same winner under every strategy and in a multi batch") {
+    // planted duplicate (user_id, ft) groups with distinct tie breakers,
+    // one of them null: the greatest tie breaker wins, a null ranks lowest
+    val fa = Seq(
+      (1L, "2024-01-05 00:00:00", Some(3L), 1.0),
+      (1L, "2024-01-05 00:00:00", None, 2.0),
+      (1L, "2024-01-05 00:00:00", Some(7L), 3.0),
+      (1L, "2024-01-10 00:00:00", None, 4.0),
+      (1L, "2024-01-10 00:00:00", Some(2L), 5.0),
+      (1L, "2024-01-12 00:00:00", Some(5L), 6.0),
+      (1L, "2024-01-12 00:00:00", Some(1L), 7.0),
+      (2L, "2024-01-03 00:00:00", None, 8.0),
+      (2L, "2024-01-03 00:00:00", Some(4L), 9.0)
+    ).toDF("user_id", "ft", "tb", "value").withColumn("ft", $"ft".cast("timestamp"))
+    // a second right over the same rows whose own tie breaker reverses
+    // the order of the non-null ones
+    val fb = fa.select(col("user_id"), col("ft").as("t2"),
+      (lit(10L) - col("tb")).as("tb2"), col("value").as("v2"))
+    val lbls = Seq(
+      (1L, 1L, "2024-01-10 00:00:00"),
+      (2L, 1L, "2024-01-12 00:00:00"),
+      (3L, 1L, "2024-01-15 00:00:00"),
+      (4L, 2L, "2024-01-03 00:00:00"),
+      (5L, 2L, "2024-01-06 00:00:00")
+    ).toDF(AsOfJoin.RowIdCol, "user_id", "lt").withColumn("lt", $"lt".cast("timestamp"))
+    val ra = Right(fa, Seq("user_id"), "ft", Seq("value"), Seq("ft_a"), Seq("tb"))
+    val rb = Right(fb, Seq("user_id"), "t2", Seq("v2"), Seq("ft_b"), Seq("tb2"))
+    def winners(df: DataFrame, v: String): Seq[Option[Double]] =
+      df.select(col(AsOfJoin.RowIdCol), col(v)).collect()
+        .map(r => r.getLong(0) -> Option(r.get(1)).map(_.asInstanceOf[Double]))
+        .sortBy(_._1).map(_._2).toSeq
+    // expected value per label 1..5, for ra and rb, by (inclusive, embargo days)
+    val n = None
+    val expected = Map(
+      (false, 0L) -> (Seq(Some(3.0), Some(5.0), Some(6.0), n, Some(9.0)),
+        Seq(Some(1.0), Some(5.0), Some(7.0), n, Some(9.0))),
+      (true, 0L) -> (Seq(Some(5.0), Some(6.0), Some(6.0), Some(9.0), Some(9.0)),
+        Seq(Some(5.0), Some(7.0), Some(7.0), Some(9.0), Some(9.0))),
+      (false, 3L) -> (Seq(Some(3.0), Some(3.0), Some(5.0), n, n),
+        Seq(Some(1.0), Some(1.0), Some(5.0), n, n)),
+      (true, 3L) -> (Seq(Some(3.0), Some(3.0), Some(6.0), n, Some(9.0)),
+        Seq(Some(1.0), Some(1.0), Some(7.0), n, Some(9.0))))
+    val buckets = Seq(None, Some(Duration.ofHours(1)), Some(Duration.ofDays(30)))
+    for (((inclusive, embargoDays), (wantA, wantB)) <- expected) {
+      val s = spec(inclusive = inclusive, embargo = Duration.ofDays(embargoDays))
+      val ctx = s"inclusive=$inclusive embargo=${embargoDays}d"
+      for (strat <- Strategy.RowNumber +: Strategy.UnionAsOf +:
+          buckets.flatten.map(Strategy.UnionAsOfSegmented(_))) {
+        assert(winners(AsOfJoin.join(lbls, ra, s, strat), "value") == wantA, s"$strat $ctx")
+        assert(winners(AsOfJoin.join(lbls, rb, s, strat), "v2") == wantB, s"$strat $ctx")
+      }
+      for (b <- buckets) {
+        val multi = AsOfJoin.carry(lbls, Seq(ra, rb), s, b)
+        assert(winners(multi, "value") == wantA, s"multi bucket=$b $ctx")
+        assert(winners(multi, "v2") == wantB, s"multi bucket=$b $ctx")
+      }
+    }
   }
 
   test("all-null feature values are carried as null (not skipped back)") {
@@ -324,7 +383,7 @@ class AsOfJoinSpec extends SparkFunSuite {
       (1L, "2024-01-09 00:00:00", None: Option[Double])
     ).toDF("user_id", "ft", "value").withColumn("ft", $"ft".cast("timestamp"))
     for (strat <- Seq(Strategy.RowNumber, Strategy.UnionAsOf)) {
-      val out = AsOfJoin.join(labels.filter(col(AsOfJoin.RowIdCol) === 1L), f2, spec(), strat)
+      val out = AsOfJoin.join(labels.filter(col(AsOfJoin.RowIdCol) === 1L), right(f2), spec(), strat)
       val row = out.collect().head
       // latest row (01-09) wins even though its value is null
       assert(row.getAs[java.sql.Timestamp]("feature_time") == ts("2024-01-09 00:00:00"))

@@ -121,7 +121,7 @@ class BuildSpec extends SparkFunSuite {
 
   test("multi-source single-shuffle carry equals per-feature RowNumber") {
     // three DIFFERENT sources with identical join params take the
-    // unionAsOfMulti path under Auto; RowNumber joins each separately —
+    // one batched AsOfJoin.carry under Auto; RowNumber joins each separately —
     // results must match exactly (including null masking)
     val srcs = (0 until 3).map { k =>
       val df = spark.range(1, 501).select(

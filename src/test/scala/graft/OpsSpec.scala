@@ -2933,7 +2933,8 @@ class OpsSpec extends SparkFunSuite {
     val rnd = new scala.util.Random(20260817)
     val docs = (0L until 400L).map { i =>
       val base = Array.fill(8)(rnd.nextGaussian())
-      // every 7th vector duplicates its predecessor: equal codes
+      // every 7th vector (i > 0) becomes the constant vector 0.1*(i%5),
+      // so those sharing i%5 are exact duplicates: equal codes
       val v = if (i % 7 == 0 && i > 0) null else base
       (i, (if (v == null) Array.fill(8)(0.1 * (i % 5)) else v).toSeq.map(_.toFloat))
     }.toDF("vec_id", "embedding")

@@ -89,13 +89,42 @@ class PlanSpec extends SparkFunSuite {
     val spine = ev.filter(col("event_id") % 20 === 0).select(
       col("event_id").as(graft.operators.AsOfJoin.RowIdCol),
       col("user_id"), col("ts").as("label_time"))
-    val spec = graft.operators.AsOfJoin.Spec(
-      Seq("user_id"), Seq("user_id"), "label_time", "ts", Seq("value"))
-    val plan = planOf(graft.operators.AsOfJoin.unionAsOf(spine, ev, spec))
+    val spec = graft.operators.AsOfJoin.Spec(Seq("user_id"), "label_time")
+    val right = graft.operators.AsOfJoin.Right(ev, Seq("user_id"), "ts", Seq("value"))
+    val plan = planOf(graft.operators.AsOfJoin.join(spine, right, spec,
+      graft.operators.AsOfJoin.Strategy.UnionAsOf))
     assert(plan.contains("Window"), "carry-forward window missing")
     assert(!plan.contains("SortMergeJoin") && !plan.contains("BroadcastHashJoin") &&
       !plan.contains("CartesianProduct"),
       s"union as-of must not contain a join operator at all:\n$plan")
+  }
+
+  test("default build orders every carry window by (time, tag) alone") {
+    // two features, one embargoed, under Auto with no tie breakers: the
+    // carry's sort must stay exactly two keys (tie breakers add keys only
+    // when a right side declares them)
+    val ev = SparkEntry.events(spark, sf)
+    val labels = graft.model.Labels.frame(
+      ev.filter(col("event_type") === "purchase").select(
+        col("user_id"), col("ts").as("label_time"), col("value").as("label_value")),
+      Seq("user_id"), "label_time", Seq("label_value"))
+    val src = graft.model.Source.frame("events", ev, Seq("user_id"), "ts")
+    val feats = Seq(
+      graft.model.Feature("f_val", src, graft.model.ColumnsMode(Map("value" -> "value"))),
+      graft.model.Feature("f_type", src,
+        graft.model.ColumnsMode(Map("event_type" -> "event_type")),
+        embargo = java.time.Duration.ofDays(1)))
+    val df = graft.engine.Build(spark, labels, feats, graft.engine.BuildOptions(
+      checkDuplicates = false, collectStats = false, verify = false)).df
+    import org.apache.spark.sql.catalyst.expressions.aggregate.Last
+    // the analyzed plan: the build caches its assembled frame, and the
+    // optimized plan shows only the cache relation in its place
+    val carries = df.queryExecution.analyzed.collect {
+      case w: org.apache.spark.sql.catalyst.plans.logical.Window
+          if w.windowExpressions.exists(_.find(_.isInstanceOf[Last]).isDefined) => w
+    }
+    assert(carries.size == 2, s"one carry window per batch expected:\n${df.queryExecution.analyzed}")
+    carries.foreach(w => assert(w.orderSpec.size == 2, s"carry window orders by ${w.orderSpec}"))
   }
 
   test("text analysis is a single scan-side pass (no shuffles)") {

@@ -51,7 +51,7 @@ class PropertySpec extends AnyFunSuite {
         (i.toLong, k.toLong, new Timestamp(base + off * 3600 * 1000))
       }.toDF(AsOfJoin.RowIdCol, "user_id", "lt")
       val spec = AsOfJoin.Spec(
-        Seq("user_id"), Seq("user_id"), "lt", "ft", Seq("v"),
+        Seq("user_id"), "lt",
         inclusive = inclusive,
         embargo = Duration.ofHours(embargoH.toLong),
         maxLookback = Some(Duration.ofDays(365)))
@@ -61,7 +61,8 @@ class PropertySpec extends AnyFunSuite {
         if (!union) AsOfJoin.Strategy.RowNumber
         else if (embargoH % 2 == 0) AsOfJoin.Strategy.UnionAsOf
         else AsOfJoin.Strategy.UnionAsOfSegmented(Duration.ofHours(48))
-      val out = AsOfJoin.join(lblDf, featDf, spec, strat).collect()
+      val out = AsOfJoin.join(lblDf,
+        AsOfJoin.Right(featDf, Seq("user_id"), "ft", Seq("v")), spec, strat).collect()
 
       val allLabelsKept = out.length == lbls.size
       val invariantHolds = out.forall { r =>
@@ -143,21 +144,21 @@ class PropertySpec extends AnyFunSuite {
             (k.toLong, new Timestamp(base + off * 3600 * 1000),
               (k * 1000 + off).toDouble + ri)
           }.toDF("user_id", s"t$ri", s"v$ri")
-          AsOfJoin.MultiRight(df, Seq("user_id"), s"t$ri", Seq(s"v$ri"), Seq(s"ft$ri"))
+          AsOfJoin.Right(df, Seq("user_id"), s"t$ri", Seq(s"v$ri"), Seq(s"ft$ri"))
         }
         val lblDf = lbls.zipWithIndex.map { case ((off, k), i) =>
           (i.toLong, k.toLong, new Timestamp(base + off * 3600 * 1000))
         }.toDF(AsOfJoin.RowIdCol, "user_id", "lt")
         val spec = AsOfJoin.Spec(
-          Seq("user_id"), Seq("user_id"), "lt", "ft", valueCols = Nil,
+          Seq("user_id"), "lt",
           inclusive = inclusive,
           embargo = Duration.ofHours(embargoH.toLong),
           maxLookback = Some(Duration.ofDays(365)),
           maxStaleness = staleDays.map(Duration.ofDays))
-        val plain = AsOfJoin.unionAsOfMulti(lblDf, rights, spec)
+        val plain = AsOfJoin.carry(lblDf, rights, spec)
           .collect().map(_.toString).sorted.toSeq
-        val seg = AsOfJoin.unionAsOfMultiSegmented(lblDf, rights, spec,
-          Duration.ofHours(bucketH))
+        val seg = AsOfJoin.carry(lblDf, rights, spec,
+          Some(Duration.ofHours(bucketH)))
           .collect().map(_.toString).sorted.toSeq
         plain.length == lbls.size && plain == seg
     }, 15)
