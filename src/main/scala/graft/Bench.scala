@@ -123,12 +123,12 @@ object Bench {
   /** Pure per-row OUTPUTS (built parquet, curated corpora, rebuild
     * targets, stream checkpoints) — deleted after every measured row
     * so tmpfs holds only the reused scenario INPUTS between rows. */
-  private[graft] lazy val outScratch: String = s"$benchDir/out"
+  private lazy val outScratch: String = s"$benchDir/out"
 
-  private[graft] def clearOutScratch(): Unit =
+  private def clearOutScratch(): Unit =
     deleteRec(java.nio.file.Paths.get(outScratch))
 
-  private[graft] def deleteRec(p: java.nio.file.Path): Unit = {
+  private def deleteRec(p: java.nio.file.Path): Unit = {
     if (java.nio.file.Files.exists(p))
       try java.nio.file.Files.walkFileTree(p,
         new java.nio.file.SimpleFileVisitor[java.nio.file.Path] {
@@ -194,10 +194,10 @@ object Bench {
   /** A parquet dir counts as generated only when its write COMMITTED
     * (_SUCCESS marker): a bare directory can be a crashed half-commit.
     * Bench's own benchDir is a fresh temp dir per process, so this
-    * guards retries WITHIN a run there — the cross-run case it guards
-    * is BenchOne's user-supplied persistent dir (and any explicit
-    * SPARK_GRAFT_BENCH_DIR reuse). */
-  private[graft] def committed(p: String): Boolean =
+    * guards retries WITHIN a run there — the cross-run cases it guards
+    * are the persistent corpus cache and a forked child's shared
+    * SPARK_GRAFT_BENCH_DIR_EXACT. */
+  private def committed(p: String): Boolean =
     java.nio.file.Files.exists(java.nio.file.Paths.get(p, "_SUCCESS"))
 
   private def parquetScenario(spark: SparkSession, nLabels: Int, nFeatures: Int)
@@ -301,7 +301,7 @@ object Bench {
     * share while the segmented path scales with total/cores) —
     * equivalence of the two plans is pinned in AsOfJoinSpec and
     * PropertySpec. */
-  private[graft] def skewScenario(auto: Boolean)(spark: SparkSession): Long = {
+  private def skewScenario(auto: Boolean)(spark: SparkSession): Long = {
     val nLabels = 200000
     val nFeat = sys.env.get("SPARK_GRAFT_SKEW_NFEAT").map(_.toLong).getOrElse(20000000L)
     val hotPct = sys.env.get("SPARK_GRAFT_SKEW_HOTPCT").map(_.toInt).getOrElse(70)
@@ -468,9 +468,6 @@ object Bench {
     cp
   }
 
-  private[graft] def corpusForProbe(spark: SparkSession, nDocs: Long): String =
-    corpusScenario(spark, nDocs)
-
   /** The composed corpus-hygiene pass (judge-tracked `curate_1m`):
     * parquet in → C4 + Gopher + repetition + quality + language scan →
     * URL dedup → exact dedup → CCNet unigram buckets → MinHash/LSH
@@ -481,7 +478,7 @@ object Bench {
     * track the end-to-end pipeline cost round over round. xxhash64
     * signatures are the production hasher (md5 is only for DuckDB
     * oracle portability). */
-  private[graft] def curateScenario(nDocs: Long)(spark: SparkSession): Long = {
+  private def curateScenario(nDocs: Long)(spark: SparkSession): Long = {
     val cp = corpusScenario(spark, nDocs)
     spark.catalog.clearCache()
     val r = graft.ops.Curation.curate(spark.read.parquet(cp),
@@ -508,20 +505,21 @@ object Bench {
     * removal path does real work. Cold per rep (clearCache first).
     *
     * Context note (r11): this row measures ~25s inside the full bench
-    * but ~6s via `BenchOne exactsubstr 300000` in a fresh JVM — a
-    * session-state effect of the 20-minute bench (heap occupancy
-    * around the 25M-row winner aggregation), consistent across rounds
-    * and therefore still comparable round-over-round. Use BenchOne for
-    * the operator's true cost.
+    * but ~6s isolated in a fresh JVM (`graft.Probe row
+    * exactsubstr_300k`) — a session-state effect of the 20-minute
+    * bench (heap occupancy around the 25M-row winner aggregation),
+    * consistent across rounds and therefore still comparable
+    * round-over-round. Use the isolated probe for the operator's true
+    * cost.
     *
     * Adjudicated (r11, late): an 83s full-bench sample against the
     * 24.9s prior is HOST VARIANCE, not the count-first rewrite — a
-    * same-day BenchOne A/B of the pre- and post-rewrite binaries
+    * same-day isolated A/B of the pre- and post-rewrite binaries
     * measured 14.8-22.5s vs 12.5-25s isolated (statistically
     * identical; GC 0.2-3.1s per rep dominates the spread). This row
     * has the widest noise envelope in the suite; re-adjudicate the
     * same way before reading any single sample as a regression. */
-  private[graft] def exactSubstrScenario(nDocs: Long)(spark: SparkSession): Long = {
+  private def exactSubstrScenario(nDocs: Long)(spark: SparkSession): Long = {
     val cp = corpusScenario(spark, nDocs)
     spark.catalog.clearCache()
     val out = graft.ops.Dedup.exactSubstrDedup(
@@ -535,7 +533,7 @@ object Bench {
     * corpus: assignment window, within-pack offsets, chunk slicing
     * with doc-boundary bookkeeping, chunks written out — the
     * training-prep tail a curated corpus feeds. */
-  private[graft] def chunkScenario(nDocs: Long)(spark: SparkSession): Long = {
+  private def chunkScenario(nDocs: Long)(spark: SparkSession): Long = {
     val cp = corpusScenario(spark, nDocs)
     spark.catalog.clearCache()
     val assigned = graft.ops.Sampling.packSequences(
@@ -551,7 +549,7 @@ object Bench {
     * rides ONE range exchange, the checkpointed layout feeds the
     * two-job zipWithIndex shape, ordered output written back — the
     * last pipeline step before a trainer streams the corpus. */
-  private[graft] def shuffleScenario(nDocs: Long)(spark: SparkSession): Long = {
+  private def shuffleScenario(nDocs: Long)(spark: SparkSession): Long = {
     val cp = corpusScenario(spark, nDocs)
     spark.catalog.clearCache()
     graft.ops.Sampling.globalOrderIndex(
@@ -566,7 +564,7 @@ object Bench {
     * through the codegen'd kernel — the train + budget pass of
     * token-exact packing. Aggregated output so the row measures
     * compute, not parquet writing. */
-  private[graft] def bpeScenario(nDocs: Long)(spark: SparkSession): Long = {
+  private def bpeScenario(nDocs: Long)(spark: SparkSession): Long = {
     val cp = corpusScenario(spark, nDocs)
     spark.catalog.clearCache()
     val df = spark.read.parquet(cp)
@@ -583,7 +581,7 @@ object Bench {
     * 2048-id sequences, write the id parquet — everything between a
     * curated corpus and the training loop in one row. Write included
     * deliberately: the id arrays ARE the deliverable here. */
-  private[graft] def sequencesScenario(nDocs: Long)(spark: SparkSession): Long = {
+  private def sequencesScenario(nDocs: Long)(spark: SparkSession): Long = {
     val cp = corpusScenario(spark, nDocs)
     spark.catalog.clearCache()
     val df = spark.read.parquet(cp).select("doc_id", "text")
@@ -602,7 +600,7 @@ object Bench {
     * aggregations (target = the %97 slice, ~1%), scan-side λ-literal
     * scoring with the rolling-kernel buckets, Gumbel top-k selection
     * of 5% written out. Cold per rep. */
-  private[graft] def dsirScenario(nDocs: Long)(spark: SparkSession): Long = {
+  private def dsirScenario(nDocs: Long)(spark: SparkSession): Long = {
     val cp = corpusScenario(spark, nDocs)
     spark.catalog.clearCache()
     val docs = spark.read.parquet(cp)
@@ -621,7 +619,7 @@ object Bench {
     * (every distinct 3-gram through a distinct + a full-outer join —
     * the cost the sketch removes). Snapshots are the 0-9M and 1-10M
     * doc slices (80% overlap — a realistic refresh). */
-  private[graft] def noveltyScenario(approx: Boolean)(spark: SparkSession): Long = {
+  private def noveltyScenario(approx: Boolean)(spark: SparkSession): Long = {
     val nDocs = sys.env.get("SPARK_GRAFT_NOVELTY_DOCS").map(_.toLong)
       .getOrElse(10000000L)
     val cp = corpusScenario(spark, nDocs)
@@ -643,7 +641,7 @@ object Bench {
     * driver-coordinated iterative stage in the suite, split into its
     * own row so convergence-time drift is visible without the scorer
     * diluting it. Runs under the pinned maxIter/tol/regParam. */
-  private[graft] def classifierFitScenario(spark: SparkSession, sfDir: String): Long = {
+  private def classifierFitScenario(spark: SparkSession, sfDir: String): Long = {
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
     val m = graft.ops.QualityClassifier.train(
       docs.filter(col("source") === "src0"),
@@ -654,7 +652,7 @@ object Bench {
 
   /** The classifier's scan-side scorer in isolation: fixed
     * deterministic weights (no fit), one kernel pass over the corpus. */
-  private[graft] def classifierScoreScenario(spark: SparkSession, sfDir: String): Long = {
+  private def classifierScoreScenario(spark: SparkSession, sfDir: String): Long = {
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
     val weights = Array.tabulate(2048)(i =>
       ((i * 2654435761L % 1000L) / 1000.0 - 0.5) / 10.0)
@@ -680,7 +678,7 @@ object Bench {
     * search (100 queries against the PERSISTED codes: per-query LUT +
     * m lookups per pair, the compressed-domain scan whose whole point
     * is reading 4 ints per vector instead of 16 floats). */
-  private[graft] def pqEncodeScenario(spark: SparkSession): Long = {
+  private def pqEncodeScenario(spark: SparkSession): Long = {
     val corpus = spark.read.parquet(embCorpusPath(spark, 1100000L))
       .filter(col("vec_id") < 1000000L)
     val model = graft.ops.Similarity.trainPq(corpus, "vec_id", "embedding",
@@ -691,7 +689,7 @@ object Bench {
     -1L
   }
 
-  private[graft] def pqSearchScenario(spark: SparkSession): Long = {
+  private def pqSearchScenario(spark: SparkSession): Long = {
     val corpus = spark.read.parquet(embCorpusPath(spark, 1100000L))
       .filter(col("vec_id") < 1000000L)
     val codesPath = s"$benchDir/pq_codes_1m.parquet"
@@ -711,7 +709,7 @@ object Bench {
     * 4-int codes — the probed-bytes floor of the ANN family; compare
     * against ivf_search (pruned but full vectors) and pq_search_1m
     * (codes but full corpus scan)). */
-  private[graft] def ivfPqBuildScenario(spark: SparkSession): Long = {
+  private def ivfPqBuildScenario(spark: SparkSession): Long = {
     val corpus = spark.read.parquet(embCorpusPath(spark, 1100000L))
       .filter(col("vec_id") < 1000000L)
     graft.ops.Similarity.saveIvfPqIndex(
@@ -721,7 +719,7 @@ object Bench {
     -1L
   }
 
-  private[graft] def ivfPqSearchScenario(spark: SparkSession): Long = {
+  private def ivfPqSearchScenario(spark: SparkSession): Long = {
     val path = s"$benchDir/ivfpq_idx_1m"
     if (!committed(s"$path/codes.parquet")) ivfPqBuildScenario(spark)
     val queries = spark.read.parquet(embCorpusPath(spark, 1100000L))
@@ -759,7 +757,7 @@ object Bench {
     * text payload riding the window) the pair records what that
     * pushdown is worth against the same query with the optimization
     * disabled (the true one-task funnel). Same exact answer. */
-  private[graft] def domainCapScenario(noGroupLimit: Boolean)(spark: SparkSession): Long = {
+  private def domainCapScenario(noGroupLimit: Boolean)(spark: SparkSession): Long = {
     val df = spark.read.parquet(domainCorpusPath(spark, 10000000L))
     val key = "spark.sql.optimizer.windowGroupLimitThreshold"
     val prior = spark.conf.getOption(key)
@@ -776,7 +774,7 @@ object Bench {
     * centroid selection + assignment scan the WHOLE corpus and the
     * whole index is rewritten (what a production rebuild does; the
     * append row writes only its 100K batch). */
-  private[graft] def ivfBuildScenario(spark: SparkSession): Long = {
+  private def ivfBuildScenario(spark: SparkSession): Long = {
     val corpus = spark.read.parquet(embCorpusPath(spark, 1100000L))
       .filter(col("vec_id") < 1000000L)
     graft.ops.Similarity.saveIvfIndex(
@@ -792,7 +790,7 @@ object Bench {
     * re-clustering cost the append path saves on every drop. The base
     * index is built and saved once (warmup rep), outside the steady-
     * state reps. */
-  private[graft] def ivfAppendScenario(spark: SparkSession): Long = {
+  private def ivfAppendScenario(spark: SparkSession): Long = {
     val all = spark.read.parquet(embCorpusPath(spark, 1100000L))
     val idxPath = s"$benchDir/ivf_idx_1m"
     if (!committed(s"$idxPath/centroids.parquet")) {
@@ -843,7 +841,7 @@ object Bench {
     * over every refresh of the store's lifetime). Read together, the
     * delta is what the scan-side membership proof saves over
     * hash-partitioning the store every refresh. */
-  private[graft] def incDedupScenario(bloom: Boolean)(spark: SparkSession): Long = {
+  private def incDedupScenario(bloom: Boolean)(spark: SparkSession): Long = {
     val (store, batch) = incDedupInputs(spark)
     spark.catalog.clearCache()
     val out =
@@ -859,7 +857,7 @@ object Bench {
     * rules over the cleaned text in ONE filter — the "runs at
     * parquet-scan speed" claim (QualityFilters.scala header) recorded
     * as a number instead of asserted. */
-  private[graft] def scanFilterScenario(nDocs: Long)(spark: SparkSession): Long = {
+  private def scanFilterScenario(nDocs: Long)(spark: SparkSession): Long = {
     import graft.ops.QualityFilters
     val cp = corpusScenario(spark, nDocs)
     // the one-pass verdict kernel — the same production path
@@ -889,7 +887,7 @@ object Bench {
     * non-engine noise; production checkpoints live on fast stores), so
     * every batch is processed cold — the five streaming operators
     * previously had no tracked perf number at all. */
-  private[graft] def streamingGateScenario(nDocs: Long)(spark: SparkSession): Long = {
+  private def streamingGateScenario(nDocs: Long)(spark: SparkSession): Long = {
     val cp = corpusScenario(spark, nDocs)
     spark.catalog.clearCache()
     val schema = spark.read.parquet(cp).schema
@@ -935,32 +933,19 @@ object Bench {
       approxMedian = true).totalRows
   }
 
-  def main(args: Array[String]): Unit = {
-    // --rows a,b,c => CHILD mode: run only those rows in THIS fresh
-    // JVM (sharing the parent's scenario inputs via
-    // SPARK_GRAFT_BENCH_DIR_EXACT) and flush per-row JSON for the
-    // parent to collect. The r14 postmortem showed in-suite rows
-    // reading up to 5x their fresh-JVM cost (ivfpq_build_1m 37.8s
-    // mid-suite vs 6.2-8.3s isolated on the same binary) — heavy
-    // families now run the isolated path BY DESIGN, so the recorded
-    // number IS the isolated number.
-    val childRows: Option[Seq[String]] = {
-      val i = args.indexOf("--rows")
-      if (i >= 0 && i + 1 < args.length)
-        Some(args(i + 1).split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-      else None
-    }
-    val isChild = childRows.isDefined
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+  /** The one session Bench, Verify and Probe run on:
+    * `local[SPARK_GRAFT_CPUS]` (default 4) with as many shuffle
+    * partitions, UTC, AQE on, and shuffle scratch on RAM-backed storage
+    * (production: NVMe local disks) — same rationale as benchDir above.
+    * The CLI keeps its own session: it honours SPARK_MASTER and never
+    * puts a user's shuffle scratch on /dev/shm. */
+  private[graft] def session(): SparkSession = {
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.ui.enabled", "false")
-      // shuffle scratch on RAM-backed storage (production: NVMe local
-      // disks) — same rationale as benchDir above
       .config("spark.local.dir",
         sys.env.getOrElse("SPARK_GRAFT_LOCAL_DIR",
           if (java.nio.file.Files.isDirectory(java.nio.file.Paths.get("/dev/shm")))
@@ -968,38 +953,44 @@ object Bench {
           else System.getProperty("java.io.tmpdir") + "/graft-shuffle"))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
 
-    def timed(body: => Unit): Double = {
-      val t0 = System.nanoTime()
-      body
-      (System.nanoTime() - t0) / 1e9
+  private def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+
+  /** Flush dirty pages OUTSIDE the timed region: the write-heavy
+    * scenarios buffer hundreds of MB to the OS cache, and on a
+    * throttled VM block device the kernel's deferred writeback lands
+    * mid-way through whatever runs NEXT. The reference's numbers ran
+    * each scenario in a fresh short-lived process and never carried
+    * another run's writeback debt; syncing between reps restores that
+    * condition without timing fsync itself (neither engine fsyncs). */
+  private[graft] def syncFs(): Unit =
+    try { new ProcessBuilder("sync").start().waitFor(); () }
+    catch { case _: Exception => () }
+
+  /** State reset after a heavy row's warm-up: the warm-in's debt
+    * (cache, outputs on tmpfs, garbage, dirty pages) is not the row's
+    * cost, so rep 1 starts in the same state every later rep does.
+    * A no-op for the q_* micro rows, whose reps reuse what the warm-up
+    * left resident exactly as a production session would. */
+  private[graft] def settle(spark: SparkSession, row: String): Unit =
+    if (!row.startsWith("q_")) {
+      spark.catalog.clearCache()
+      clearOutScratch()
+      System.gc()
+      syncFs()
     }
 
-    // Flush dirty pages OUTSIDE the timed region: the write-heavy
-    // scenarios buffer hundreds of MB to the OS cache, and on a
-    // throttled VM block device the kernel's deferred writeback lands
-    // mid-way through whatever runs NEXT. The reference's numbers ran
-    // each scenario in a fresh short-lived process and never carried
-    // another run's writeback debt; syncing between reps restores that
-    // condition without timing fsync itself (neither engine fsyncs).
-    def syncFs(): Unit =
-      try { new ProcessBuilder("sync").start().waitFor(); () }
-      catch { case _: Exception => () }
-
-    def loadavg(): Double =
-      try java.nio.file.Files.readString(java.nio.file.Paths.get("/proc/loadavg"))
-        .split(" ")(0).toDouble
-      catch { case _: Exception => -1.0 }
-    val loadStart = loadavg()
-    if (!isChild && loadStart > 4.0)
-      System.err.println(f"[bench] WARNING: loadavg $loadStart%.2f at start — " +
-        "numbers from this run are likely contended; prefer a quiet window")
-
-    val operatorQueries: Seq[(String, () => Unit)] =
-      SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-        name -> (() => { fn(spark, sfDir).count(); () })
-      }
-    val scenarios: Seq[(String, () => Unit)] = Seq(
+  /** Every bench row in suite order: the SparkEntry contract queries
+    * (sorted by name), then the scenarios. Bench measures these and
+    * Probe runs them by name, so a probe row and a bench row are the
+    * same code. Rotated rows are included — rotation is Bench's
+    * filter, not the table's. */
+  private[graft] def rows(spark: SparkSession, sfDir: String): Seq[(String, () => Unit)] =
+    SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+      name -> (() => { fn(spark, sfDir).count(); () })
+    } ++ Seq(
       "build_100k_x1" -> (() => { buildScenario(100000, 1)(spark); () }),
       "build_100k_x10" -> (() => { buildScenario(100000, 10)(spark); () }),
       "build_1m_x1" -> (() => { buildScenario(1000000, 1)(spark); () }),
@@ -1069,6 +1060,41 @@ object Bench {
       "novelty_10m_approx" -> (() => { noveltyScenario(approx = true)(spark); () }),
       "novelty_10m_exact" -> (() => { noveltyScenario(approx = false)(spark); () })
     )
+
+  def main(args: Array[String]): Unit = {
+    // --rows a,b,c => CHILD mode: run only those rows in THIS fresh
+    // JVM (sharing the parent's scenario inputs via
+    // SPARK_GRAFT_BENCH_DIR_EXACT) and flush per-row JSON for the
+    // parent to collect. The r14 postmortem showed in-suite rows
+    // reading up to 5x their fresh-JVM cost (ivfpq_build_1m 37.8s
+    // mid-suite vs 6.2-8.3s isolated on the same binary) — heavy
+    // families now run the isolated path BY DESIGN, so the recorded
+    // number IS the isolated number.
+    val childRows: Option[Seq[String]] = {
+      val i = args.indexOf("--rows")
+      if (i >= 0 && i + 1 < args.length)
+        Some(args(i + 1).split(",").map(_.trim).filter(_.nonEmpty).toSeq)
+      else None
+    }
+    val isChild = childRows.isDefined
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val spark = session()
+
+    def timed(body: => Unit): Double = {
+      val t0 = System.nanoTime()
+      body
+      (System.nanoTime() - t0) / 1e9
+    }
+
+    def loadavg(): Double =
+      try java.nio.file.Files.readString(java.nio.file.Paths.get("/proc/loadavg"))
+        .split(" ")(0).toDouble
+      catch { case _: Exception => -1.0 }
+    val loadStart = loadavg()
+    if (!isChild && loadStart > 4.0)
+      System.err.println(f"[bench] WARNING: loadavg $loadStart%.2f at start — " +
+        "numbers from this run are likely contended; prefer a quiet window")
+
     // harness debugging: SPARK_GRAFT_BENCH_FILTER=<regex> trims the
     // row set (parent, its forked groups, and child mode) so the
     // orchestration can be exercised without a full 20-minute run.
@@ -1093,7 +1119,7 @@ object Bench {
         case Some(re) => re.findFirstIn(n).isDefined
         case None     => !rotatedRows(n)
       }
-    val entries = (operatorQueries ++ scenarios).filter(e => keepRow(e._1))
+    val entries = rows(spark, sfDir).filter(e => keepRow(e._1))
     val entryMap = entries.toMap
 
     def median(xs: Seq[Double]): Double = {
@@ -1263,8 +1289,8 @@ object Bench {
         s""""stat":"min","baseline_stat":"median","queries":$qs,""" +
         s""""sf":${Jsons.str(sfDir)},"loadavg_start":$loadStart,"loadavg_end":${loadavg()},""" +
         s""""elapsed_sec":${math.round(elapsedSec)},"budget_sec":$budgetSec,""" +
-        degraded.map("\"" + _ + "\"").mkString(""""degraded":[""", ",", "],") +
-        singleRep.map("\"" + _ + "\"").mkString(""""single_rep":[""", ",", "],") +
+        s""""degraded":${Jsons.arr(degraded.toSeq)},""" +
+        s""""single_rep":${Jsons.arr(singleRep.toSeq)},""" +
         phases.map { case (k, v) => graft.util.Jsons.str(k) + ":" + v }
           .mkString(""""phases":{""", ",", "},") +
         s""""isolation_check":$iso,"rows":$rowsJson,"partial":$partial}"""
@@ -1315,15 +1341,8 @@ object Bench {
             // corpus (shuffle_10m: 10M docs), and the first timed rep
             // right after that datagen carried ~9s of GC + dirty
             // pages — 64.9s recorded vs the 11s steady state (r16
-            // cold-shm A/B vs BenchOne isolation). Reset exactly like
-            // the per-row finally does, so rep 1 starts in the same
-            // state every later rep does.
-            if (!name.startsWith("q_")) {
-              spark.catalog.clearCache()
-              clearOutScratch()
-              System.gc()
-              syncFs()
-            }
+            // cold-shm A/B vs an isolated run). See settle.
+            settle(spark, name)
           }
           else degraded += name // first timed rep pays the warm-in
           warmed += name

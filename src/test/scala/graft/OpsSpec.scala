@@ -56,7 +56,22 @@ class OpsSpec extends SparkFunSuite {
       15 -> ("tr", "Çocuklar parkta oynuyor ve bugün hava çok güzel ama eve gitmemiz gerekiyor"),
       16 -> ("pl", "Dzieci bawią się w parku a pogoda jest dziś bardzo ładna ale musimy wracać do domu"),
       17 -> ("fi", "Lapset leikkivät puistossa ja sää on tänään erittäin kaunis mutta meidän täytyy mennä kotiin"),
-      18 -> ("nl", "De kinderen spelen in het park en het weer is vandaag erg mooi maar we moeten naar huis gaan"))
+      18 -> ("nl", "De kinderen spelen in het park en het weer is vandaag erg mooi maar we moeten naar huis gaan"),
+      // close neighbours of the languages above (Cyrillic, Iberian,
+      // Nordic, Latin-script Slavic / Finno-Ugric / Romance) and
+      // scripts no other case covers
+      19 -> ("uk", "Діти граються в парку і погода сьогодні дуже гарна але ми повинні йти додому"),
+      20 -> ("bg", "Децата играят в парка и времето днес е много хубаво но трябва да се приберем"),
+      21 -> ("sr", "Деца се играју у парку а време је данас веома лепо али морамо кући"),
+      22 -> ("pt", "As crianças brincam no parque e o tempo está muito bom hoje mas temos que voltar para casa"),
+      23 -> ("sv", "Barnen leker i parken och vädret är mycket fint idag men vi måste gå hem nu"),
+      24 -> ("da", "Børnene leger i parken og vejret er meget fint i dag men vi skal hjem nu"),
+      25 -> ("vi", "Trẻ em chơi trong công viên và thời tiết hôm nay rất đẹp nhưng chúng ta phải về nhà"),
+      26 -> ("id", "Anak anak bermain di taman dan cuaca hari ini sangat bagus tetapi kita harus pulang"),
+      27 -> ("fa", "بچه ها در پارک بازی می کنند و هوا امروز بسیار خوب است اما باید به خانه برویم"),
+      28 -> ("cs", "Děti si hrají v parku a počasí je dnes velmi pěkné ale musíme jít domů"),
+      29 -> ("hu", "A gyerekek a parkban játszanak és az idő ma nagyon szép de haza kell mennünk"),
+      30 -> ("ro", "Copiii se joacă în parc și vremea este foarte frumoasă astăzi dar trebuie să mergem acasă"))
     val got = planted.map { case (id, (_, text)) => (id, text) }
       .toDF("id", "text")
       .select(col("id"), TextAnalysis.langIdProfiles(col("text")).as("lang"))
