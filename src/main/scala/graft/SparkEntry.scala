@@ -221,7 +221,7 @@ object SparkEntry {
   private def pit(s: SparkSession, dir: String, spec: AsOfJoin.Spec,
       strategy: AsOfJoin.Strategy): DataFrame =
     AsOfJoin
-      .join(eventSpine(s, dir), pitRight(events(s, dir)), spec, strategy)
+      .join(eventSpine(s, dir), Seq(pitRight(events(s, dir))), spec, strategy)
       .select(
         col(AsOfJoin.RowIdCol).as("label_event_id"),
         col("user_id"), col("label_time"), col("feature_time"),
@@ -326,7 +326,7 @@ object SparkEntry {
     "q_pit_keymap" -> ((s, dir) => {
       val feat = events(s, dir).withColumnRenamed("user_id", "uid")
       AsOfJoin
-        .join(eventSpine(s, dir), pitRight(feat, "uid"), pitSpec(), AsOfJoin.Strategy.RowNumber)
+        .join(eventSpine(s, dir), Seq(pitRight(feat, "uid")), pitSpec(), AsOfJoin.Strategy.RowNumber)
         .select(
           col(AsOfJoin.RowIdCol).as("label_event_id"),
           col("user_id"), col("label_time"), col("feature_time"),
@@ -345,7 +345,7 @@ object SparkEntry {
         maxLookback = Some(java.time.Duration.ofDays(3650)))
       val right = AsOfJoin.Right(o, keys, "o_orderdate", Seq("o_totalprice"),
         tieBreakers = Seq("o_orderkey"))
-      AsOfJoin.join(spine, right, spec, AsOfJoin.Strategy.RowNumber)
+      AsOfJoin.join(spine, Seq(right), spec, AsOfJoin.Strategy.RowNumber)
         .select(col(AsOfJoin.RowIdCol).as("label_orderkey"),
           col("o_custkey"), col("o_orderstatus"), col("label_time"),
           col("feature_time"), col("o_totalprice").as("prior_totalprice"))

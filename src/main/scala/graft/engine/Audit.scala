@@ -2,12 +2,12 @@ package graft.engine
 
 import java.time.Duration
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.errors.LeakageError
 import graft.model._
-import graft.util.Names
+import graft.util.{Jsons, Names}
 
 /** Temporal-leakage audit over an existing training dataset.
   * Two modes, mirroring `/root/reference/src/timefence/engine.py:1508-1872`:
@@ -68,16 +68,18 @@ object Audit {
             (if (d.mismatches.nonEmpty) s", mismatches=${d.mismatches}" else ""))
         throw new LeakageError("Temporal leakage detected — " + bad.mkString("; "))
       }
-    def toJson: String = {
-      def detail(d: FeatureAuditDetail): String =
-        s"""{"feature":${q(d.feature)},"leaky_rows":${d.leakyRows},"total_rows":${d.totalRows},""" +
-          s""""leak_pct":${d.leakPct},"severity":${q(d.severity)},""" +
-          s""""max_leak_seconds":${d.maxLeak.map(_.getSeconds).getOrElse(0L)},""" +
-          s""""median_leak_seconds":${d.medianLeak.map(_.getSeconds).getOrElse(0L)},""" +
-          s""""null_rows":${d.nullRows}}"""
-      s"""{"total_rows":$totalRows,"passed":$passed,"features":[${details.map(detail).mkString(",")}]}"""
-    }
-    private def q(s: String): String = "\"" + s.replace("\"", "\\\"") + "\""
+    def toJson: String =
+      Jsons.obj("total_rows" -> totalRows, "passed" -> passed,
+        "features" -> details.map(d => Jsons.Raw(Jsons.obj(
+          "feature" -> d.feature,
+          "leaky_rows" -> d.leakyRows,
+          "total_rows" -> d.totalRows,
+          "leak_pct" -> d.leakPct,
+          "severity" -> d.severity,
+          "max_leak_seconds" -> d.maxLeak.map(_.getSeconds).getOrElse(0L),
+          "median_leak_seconds" -> d.medianLeak.map(_.getSeconds).getOrElse(0L),
+          "null_rows" -> d.nullRows,
+          "mismatches" -> Jsons.Raw(Jsons.obj(d.mismatches.toSeq.sortBy(_._1): _*))))))
 
     /** Write the JSON report to a file (reference `to_json(path)`,
       * engine.py:190-215). */
@@ -184,22 +186,45 @@ object Audit {
   ): DataFrame = {
     requireConsistentTimestamps(data, labelTime, featureTimeColumns)
     val lt = tsNorm(col(labelTime))
-    val feats = featureTimeColumns.toSeq.sortBy(_._1)
-    val aggs: Seq[Column] = feats.flatMap { case (name, ftCol) =>
-      val ft = tsNorm(col(ftCol))
-      val leaky = ft.isNotNull && ft >= lt
-      val leakUs = when(leaky, unix_micros(ft) - unix_micros(lt))
-      Seq(
-        sum(when(leaky, 1L).otherwise(0L)).as(s"${name}__leaky_rows"),
-        max(leakUs).as(s"${name}__max_leak_us"),
-        // exact interpolated median matches DuckDB MEDIAN; the approx
-        // variant is the memory-bounded choice at cluster scale
-        (if (approxMedian) percentile_approx(leakUs, lit(0.5), lit(10000)).cast("double")
-         else percentile(leakUs, lit(0.5))).as(s"${name}__median_leak_us"),
-        sum(when(ft.isNull, 1L).otherwise(0L)).as(s"${name}__null_rows")
-      )
+    val aggs = featureTimeColumns.toSeq.sortBy(_._1).flatMap { case (name, ftCol) =>
+      leakAggs(name, col(ftCol), lt, approxMedian)
     }
     data.agg(count(lit(1)).as("total_rows"), aggs: _*)
+  }
+
+  /** The four per-feature leak aggregates over feature time `ft` and the
+    * normalized label time `lt`: leaky rows (`ft >= lt`), max and median
+    * leak in microseconds, null feature times. [[leakDetail]] decodes
+    * them. */
+  private def leakAggs(name: String, ft: Column, lt: Column,
+      approxMedian: Boolean): Seq[Column] = {
+    val t = tsNorm(ft)
+    val leaky = leaks(ft, lt)
+    val leakUs = when(leaky, unix_micros(t) - unix_micros(lt))
+    Seq(
+      sum(when(leaky, 1L).otherwise(0L)).as(s"${name}__leaky_rows"),
+      max(leakUs).as(s"${name}__max_leak_us"),
+      // exact interpolated median matches DuckDB MEDIAN; the approx
+      // variant is the memory-bounded choice at cluster scale
+      (if (approxMedian) percentile_approx(leakUs, lit(0.5), lit(10000)).cast("double")
+       else percentile(leakUs, lit(0.5))).as(s"${name}__median_leak_us"),
+      sum(when(t.isNull, 1L).otherwise(0L)).as(s"${name}__null_rows"))
+  }
+
+  /** A leak: feature time `ft` at or after the normalized label time. */
+  private def leaks(ft: Column, lt: Column): Column = tsNorm(ft).isNotNull && tsNorm(ft) >= lt
+
+  /** The [[leakAggs]] of feature `name` read back from `row` at `base`. */
+  private def leakDetail(name: String, row: Row, base: Int, total: Long,
+      mismatches: Map[String, Long] = Map.empty): FeatureAuditDetail = {
+    def lng(i: Int): Long = if (row.isNullAt(i)) 0L else row.getLong(i)
+    val maxL =
+      if (row.isNullAt(base + 1)) None
+      else Some(Duration.ofSeconds(row.getLong(base + 1) / 1000000L))
+    val medL =
+      if (row.isNullAt(base + 2)) None
+      else Some(Duration.ofSeconds((anyToDouble(row.get(base + 2)) / 1e6).toLong))
+    FeatureAuditDetail(name, lng(base), total, maxL, medL, lng(base + 3), mismatches)
   }
 
   /** Mode A: pure temporal check. One aggregation job for all mapped
@@ -217,22 +242,11 @@ object Audit {
     val row = temporalStats(data, labelTime, featureTimeColumns, approxMedian).head()
     val total = row.getLong(0)
     val details = feats.zipWithIndex.map { case ((fname, _), i) =>
-      val base = 1 + 4 * i
-      val leaky = if (row.isNullAt(base)) 0L else row.getLong(base)
-      val maxL =
-        if (row.isNullAt(base + 1)) None
-        else Some(Duration.ofSeconds(row.getLong(base + 1) / 1000000L))
-      val medL =
-        if (row.isNullAt(base + 2)) None
-        else Some(Duration.ofSeconds((anyToDouble(row.get(base + 2)) / 1e6).toLong))
-      val nulls = if (row.isNullAt(base + 3)) 0L else row.getLong(base + 3)
-      FeatureAuditDetail(fname, leaky, total, maxL, medL, nulls)
+      leakDetail(fname, row, 1 + 4 * i, total)
     }
     val sample =
       if (details.exists(_.leakyRows > 0)) {
-        val anyLeak = feats.map { case (_, ftCol) =>
-          col(ftCol).isNotNull && tsNorm(col(ftCol)) >= lt
-        }.reduce(_ || _)
+        val anyLeak = feats.map { case (_, ftCol) => leaks(col(ftCol), lt) }.reduce(_ || _)
         Some(data.filter(anyLeak).limit(sampleLimit))
       } else None
     AuditReport(total, details, sample)
@@ -246,9 +260,14 @@ object Audit {
     case other                => other.toString.toDouble
   }
 
-  /** Mode B: rebuild-and-compare. The spine is extracted from the
-    * dataset itself with a one-shot rowid shared by both the rebuilt
-    * and stored frames (positional-identity pitfall — SURVEY §7.3).
+  /** Mode B: rebuild-and-compare. Every feature is recomputed from its
+    * source through the build's own phases — [[Build.units]],
+    * [[Build.batches]], [[Build.assemble]] — on a spine extracted from
+    * the dataset with a one-shot rowid shared by the rebuilt and stored
+    * frames (positional-identity pitfall — SURVEY §7.3), and the rebuilt
+    * frame joins the stored one once, on that rowid. Build-only checks
+    * (timestamp types, duplicate keys) and the store's feature cache stay
+    * out: a rebuild reads sources.
     */
   def rebuild(
       spark: SparkSession,
@@ -261,6 +280,7 @@ object Audit {
       rtol: Double = DefaultRtol,
       sampleLimit: Int = 1000
   ): AuditReport = {
+    Build.validateFeatures(features, options)
     // One rowid assigned ONCE on the loaded dataset; both the spine
     // and the stored-value comparison frame derive from this.
     val numbered = data.withColumn(Build.RowId, monotonically_increasing_id()).cache()
@@ -270,115 +290,69 @@ object Audit {
     // this call's caches: a long-lived session audits many datasets
     // and leaked InMemoryRelations accumulate.
     try {
-      val spine = numbered.select((Build.RowId +: keys :+ labelTime).map(col): _*)
-
-      // Rebuild each feature joined to the spine.
-      val sourceCacheM = scala.collection.mutable.Map.empty[String, DataFrame]
-      val lbl = Labels.frame(
-        spine.withColumn("__dummy_target", lit(1)),
-        keys, labelTime, Seq("__dummy_target"))
-
-      var compared = numbered
-      val detailsB = features.map { f =>
-        val feat = Build.computeFeature(spark, f, lbl, sourceCacheM)
-        val rightKeys = keys.map(k => f.keyMapping.getOrElse(k, k))
-        val valueCols = feat.df.columns.filterNot(c =>
-          rightKeys.contains(c) || c == feat.timeCol).toSeq
-        val right = graft.operators.AsOfJoin.Right(feat.df, rightKeys, feat.timeCol,
-          valueCols, Seq(Names.featureTimeCol(f.name)))
-        val rebuilt = graft.operators.AsOfJoin
-          .join(spine, right, Build.joinSpec(lbl, f, options), options.strategy, options.autoConfig)
-          .select(col(Build.RowId) +: col(Names.featureTimeCol(f.name)) +:
-            valueCols.map(c => col(c).as(s"__rb__${Names.namespaced(f.name, c)}")): _*)
-        compared = compared.join(rebuilt, Seq(Build.RowId), "left")
-        f -> valueCols
-      }
-
-      val cmp = compared.cache()
+      val units = Build.units(spark, keys, features, options.copy(store = None))
+      val rebuilt = Build.assemble(
+        numbered.select((Build.RowId +: keys :+ labelTime).map(col): _*),
+        Build.batches(units, options), keys, labelTime, options)
+      val valueColsOf = Build.JoinUnit.outputColumns(units)
+      val cmp = numbered.join(
+        rebuilt.select(col(Build.RowId) +: features.flatMap(f =>
+          col(Names.featureTimeCol(f.name)) +:
+            valueColsOf(f.name).map(c => col(c).as(s"__rb__$c"))): _*),
+        Seq(Build.RowId), "left").cache()
       cmpCached = Some(cmp)
       // same normalization + guard temporal mode applies: a DuckDB-written
       // dataset carries TIMESTAMP_NTZ label times, which unix_micros
       // rejects raw; and mixed/NTZ columns under a non-UTC (or DST)
       // session must fail loudly, not silently skew leak durations
       requireConsistentTimestamps(cmp, labelTime,
-        detailsB.map { case (f, _) => f.name -> Names.featureTimeCol(f.name) }.toMap)
+        features.map(f => f.name -> Names.featureTimeCol(f.name)).toMap)
       val lt = tsNorm(col(labelTime))
-      // Stored column matching: namespaced `{f}__{col}` preferred, bare
-      // `{col}` fallback (engine.py:1757-1771).
+      // per feature: (stored column, rebuilt column) pairs. Stored column
+      // matching: namespaced `{f}__{col}` preferred, bare `{col}` fallback
+      // (engine.py:1757-1771).
       val dataCols = data.columns.toSet
-      val aggs = scala.collection.mutable.ArrayBuffer.empty[Column]
-      val aggMeta = scala.collection.mutable.ArrayBuffer.empty[(String, String)] // feature, kind
-      // predicates collected for the capped offending-row sample
-      // (reference captures <=1000 mismatching rows in rebuild mode too,
-      // engine.py:1800-1815)
-      val offending = scala.collection.mutable.ArrayBuffer.empty[Column]
-      detailsB.foreach { case (f, valueCols) =>
-        val ft = tsNorm(col(Names.featureTimeCol(f.name)))
-        val leaky = ft.isNotNull && ft >= lt
-        offending += leaky
-        val leakUs = when(leaky, unix_micros(ft) - unix_micros(lt))
-        aggs += sum(when(leaky, 1L).otherwise(0L)); aggMeta += ((f.name, "leaky"))
-        aggs += max(leakUs); aggMeta += ((f.name, "max"))
-        aggs += percentile(leakUs, lit(0.5)); aggMeta += ((f.name, "med"))
-        aggs += sum(when(ft.isNull, 1L).otherwise(0L)); aggMeta += ((f.name, "null"))
-        valueCols.foreach { c =>
-          val storedName =
-            if (dataCols.contains(Names.namespaced(f.name, c))) Some(Names.namespaced(f.name, c))
-            else if (dataCols.contains(c)) Some(c)
-            else None
-          storedName.foreach { sn =>
-            val stored = col(sn)
-            val rb = col(s"__rb__${Names.namespaced(f.name, c)}")
-            val numeric = cmp.schema(sn).dataType.isInstanceOf[org.apache.spark.sql.types.NumericType]
-            val differs =
-              if (numeric)
-                abs(stored.cast("double") - rb.cast("double")) >
-                  lit(atol) + lit(rtol) * abs(rb.cast("double"))
-              else stored.cast("string") =!= rb.cast("string")
-            val mismatch = (stored.isNull =!= rb.isNull) || (stored.isNotNull && rb.isNotNull && differs)
-            offending += mismatch
-            aggs += sum(when(mismatch, 1L).otherwise(0L)); aggMeta += ((f.name, s"mm:$sn"))
-          }
+      val compared = features.map { f =>
+        f -> valueColsOf(f.name).flatMap { c =>
+          Seq(c, c.stripPrefix(s"${f.name}__")).find(dataCols).map(_ -> s"__rb__$c")
         }
       }
-      val row = cmp.agg(count(lit(1)), aggs.toSeq: _*).head()
+      def mismatch(storedName: String, rebuiltName: String): Column = {
+        val (stored, rb) = (col(storedName), col(rebuiltName))
+        val differs =
+          if (cmp.schema(storedName).dataType.isInstanceOf[org.apache.spark.sql.types.NumericType])
+            abs(stored.cast("double") - rb.cast("double")) >
+              lit(atol) + lit(rtol) * abs(rb.cast("double"))
+          else stored.cast("string") =!= rb.cast("string")
+        (stored.isNull =!= rb.isNull) || (stored.isNotNull && rb.isNotNull && differs)
+      }
+      // per feature: its leak aggregates, then one mismatch count per pair
+      val aggs = compared.flatMap { case (f, pairs) =>
+        leakAggs(f.name, col(Names.featureTimeCol(f.name)), lt, approxMedian = false) ++
+          pairs.map { case (sn, rb) => sum(when(mismatch(sn, rb), 1L).otherwise(0L)) }
+      }
+      val row = cmp.agg(count(lit(1)), aggs: _*).head()
       val total = row.getLong(0)
-      def lngAt(i: Int): Long = if (row.isNullAt(i + 1)) 0L else row.getLong(i + 1)
-      val byFeature = aggMeta.zipWithIndex.groupBy(_._1._1)
-      val details = detailsB.map { case (f, _) =>
-        val entries = byFeature(f.name)
-        var leaky = 0L; var maxL: Option[Duration] = None; var nulls = 0L
-        var medL: Option[Duration] = None
-        val mms = scala.collection.mutable.Map.empty[String, Long]
-        entries.foreach { case ((_, kind), i) =>
-          kind match {
-            case "leaky" => leaky = lngAt(i)
-            case "max" =>
-              if (!row.isNullAt(i + 1)) maxL = Some(Duration.ofSeconds(row.getLong(i + 1) / 1000000L))
-            case "med" =>
-              if (!row.isNullAt(i + 1))
-                medL = Some(Duration.ofSeconds((anyToDouble(row.get(i + 1)) / 1e6).toLong))
-            case "null" => nulls = lngAt(i)
-            case mm if mm.startsWith("mm:") => mms(mm.drop(3)) = lngAt(i)
-          }
-        }
-        FeatureAuditDetail(f.name, leaky, total, maxL, medL, nulls, mms.toMap)
+      val bases = compared.scanLeft(1) { case (b, (_, pairs)) => b + 4 + pairs.size }
+      val details = compared.zip(bases).map { case ((f, pairs), b) =>
+        leakDetail(f.name, row, b, total, pairs.zipWithIndex.map { case ((sn, _), j) =>
+          sn -> (if (row.isNullAt(b + 4 + j)) 0L else row.getLong(b + 4 + j))
+        }.toMap)
       }
-      // capped sample of offending rows (leaks OR value mismatches):
-      // EAGERLY materialized as a local checkpoint (<= sampleLimit rows)
-      // off the still-resident `cmp` cache. Handing out the lazy frame
-      // instead would break on the unpersists below — Spark's
-      // non-cascading uncache REBUILDS dependent cache entries, so the
-      // caller's first read of a lazy sample would re-execute the whole
-      // rebuild-compare from scratch.
+      // capped sample of offending rows (leaks OR value mismatches; the
+      // reference captures <=1000 mismatching rows in rebuild mode too,
+      // engine.py:1800-1815), collected off the still-resident `cmp`
+      // cache into a local frame: a lazy sample would re-run the whole
+      // rebuild-compare after the unpersists below, and a checkpointed
+      // one would stay persisted for the life of the session
       val sample =
-        if (offending.nonEmpty &&
-            details.exists(d => d.leakyRows > 0 || d.mismatches.values.exists(_ > 0)))
-          Some(cmp.filter(offending.reduce(_ || _)).limit(sampleLimit).localCheckpoint())
-        else None
-      // nothing reads cmp/numbered again (the sample is RDD-backed):
-      // release them, or every rebuild-audit in a long-lived session
-      // leaks one InMemoryRelation
+        if (details.exists(d => d.leakyRows > 0 || d.mismatches.values.exists(_ > 0))) {
+          val offending = compared.flatMap { case (f, pairs) =>
+            leaks(col(Names.featureTimeCol(f.name)), lt) +: pairs.map((mismatch _).tupled)
+          }.reduce(_ || _)
+          val rows = cmp.filter(offending).limit(sampleLimit).collect()
+          Some(spark.createDataFrame(java.util.Arrays.asList(rows: _*), cmp.schema))
+        } else None
       cmp.unpersist()
       numbered.unpersist()
       AuditReport(total, details, sample)

@@ -160,7 +160,10 @@ object Build {
     * inspect.getsource — SURVEY §7.3). */
   def featureDefinition(f: Feature): String = {
     val mode = f.mode match {
-      case ColumnsMode(cols) => s"columns:${cols.toSeq.sorted.mkString(",")}"
+      // `columns-ns`: the cached projection carries namespaced output
+      // names (`{feature}__{col}`); the tag keeps a store from serving an
+      // entry written in the older bare-name layout
+      case ColumnsMode(cols) => s"columns-ns:${cols.toSeq.sorted.mkString(",")}"
       case SqlMode(sql)      => s"sql:$sql"
       case TransformMode(_, v) => s"transform:v$v"
     }
@@ -213,6 +216,10 @@ object Build {
     }
   }
 
+  /** Build a point-in-time training set, in phases: validate → build
+    * cache probe → label spine → [[units]] → [[batches]] → [[assemble]]
+    * → stats + write → manifest. [[Audit.rebuild]] runs the units,
+    * batches and assemble phases too, on its dataset's spine. */
   def apply(
       spark: SparkSession,
       labels: Labels,
@@ -221,10 +228,87 @@ object Build {
   ): BuildResult = {
     val startedAt = System.nanoTime()
     validateFeatures(features, options)
-
-    // ---- build-level cache probe (engine.py:1017-1057) -------------
     val cacheKey = options.store.flatMap(st =>
       buildCacheKey(st, labels, features, options))
+    cachedBuild(spark, features, options, cacheKey).getOrElse {
+      // ---- label spine ---------------------------------------------
+      options.progress("load", "")
+      val rawLabels = labels.resolve(spark)
+      requireColumns("Labels", rawLabels, labels.keys ++ (labels.labelTime +: labels.target))
+      validateSplits(options.splits)
+      // The rowid is assigned ONCE; every downstream consumer (join,
+      // verify) shares this numbering. Uniqueness is the only property
+      // consumed (SURVEY §7.3) so the non-contiguous but shuffle-free
+      // monotonically_increasing_id beats a global ROW_NUMBER() OVER ()
+      // (a single-partition sort at scale).
+      val spineBase = rawLabels
+        .select(labels.keys.map(col) ++ Seq(col(labels.labelTime)) ++
+          labels.target.map(col): _*)
+        .withColumn(RowId, monotonically_increasing_id())
+
+      val us = units(spark, labels.keys, features, options)
+      us.foreach { u =>
+        checkTimezone(labels, rawLabels, u.features.head, u.df)
+        if (options.checkDuplicates && u.features.head.onDuplicate == OnDuplicate.Error)
+          checkDuplicates(u.features.head, u.df, u.keys)
+      }
+      val bs = batches(us, options)
+      // One batch reads the spine in exactly ONE linear subtree, where the
+      // id assignment cannot diverge and materialization would be pure
+      // overhead. Two or more branches → cache, so the ids are physically
+      // assigned once even for order-unstable label inputs. cacheOnce: a
+      // no-output build leaves this resident (see the release below), so
+      // a repeated identical build reuses the live entry. OWNERSHIP: if
+      // the entry was already resident — a previous no-output build of
+      // the same config still backs ITS returned frame with it — this
+      // build must not unpersist it on the way out (Spark's non-cascading
+      // uncache would rebuild/discard the other result's dependent caches).
+      val spineShared = bs.size > 1
+      val spineWasResident = spineShared &&
+        spineBase.storageLevel != org.apache.spark.storage.StorageLevel.NONE
+      val spine = if (spineShared) graft.util.Caching.cacheOnce(spineBase) else spineBase
+      val assembled = assemble(spine, bs, labels.keys, labels.labelTime, options)
+
+      val outputCols = JoinUnit.outputColumns(us)
+      val w = statsAndWrite(spark, labels, features, options, assembled,
+        features.flatMap(f => outputCols(f.name)))
+      // split gap / coverage warnings (engine.py:654-673)
+      val warnings = splitWarnings(options.splits, w.labelRange)
+      warnings.foreach(m => log.warn(m))
+      val passed = w.stats.forall(_.violations == 0)
+
+      for { st <- options.store; key <- cacheKey }
+        saveManifest(spark, st, key, labels, features, options, w, passed, outputCols,
+          us.filter(_.cached).flatMap(_.features.map(_.name)).toSet, startedAt)
+
+      // When an output was written, the returned frame is the RE-READ
+      // parquet (the reference's BuildResult points at the written output
+      // the same way): lineage-free, nothing was ever cached. Without an
+      // output the cache must stay resident — the returned df's
+      // rowid-aligned lineage reads it (a recompute would re-derive
+      // monotonically_increasing_id per branch).
+      val finalDf = options.output match {
+        case Some(out) => graft.sources.SchemaCache.parquet(spark, out)
+        case None      => w.df
+      }
+      // release the spine cache only when the returned frame is the
+      // lineage-free parquet re-read: in the no-output case the result's
+      // resident cache DEPENDS on the spine plan, and Spark's
+      // non-cascading uncache would rebuild that dependent entry —
+      // discarding its materialized data, so the caller's first action
+      // would re-run the whole build
+      if (spineShared && options.output.isDefined && !spineWasResident)
+        spine.unpersist()
+      BuildResult(finalDf, w.rows, w.df.columns.toSeq, w.stats, passed, warnings,
+        (System.nanoTime() - startedAt) / 1000000L)
+    }
+  }
+
+  /** The build-level cache probe (engine.py:1017-1057): the manifest's
+    * result when the store holds this exact build and its output is
+    * still on disk unchanged. */
+  private def cachedBuild(spark: SparkSession, features: Seq[Feature],
+      options: BuildOptions, cacheKey: Option[String]): Option[BuildResult] =
     for {
       st <- options.store
       key <- cacheKey
@@ -262,198 +346,119 @@ object Build {
       // would otherwise "succeed" without being regenerated
       if options.splits.forall(s =>
         st.exists(s"${out.stripSuffix(".parquet")}_${s.name}.parquet"))
-    } {
+    } yield {
       val df = graft.sources.SchemaCache.parquet(spark, out)
       val rows = graft.util.Jsons.at(manifest, "rows")
         .collect { case n: Long => n }.getOrElse(df.count())
       val passed = graft.util.Jsons.at(manifest, "audit_passed").contains(true)
-      return BuildResult(df, rows, df.columns.toSeq,
+      BuildResult(df, rows, df.columns.toSeq,
         features.map(f => FeatureStats(f.name, -1, -1, if (passed) 0 else -1)), passed)
     }
 
-    // ---- label spine -----------------------------------------------
-    options.progress("load", "")
-    val rawLabels = labels.resolve(spark)
-    requireColumns("Labels", rawLabels, labels.keys ++ (labels.labelTime +: labels.target))
-    validateSplits(options.splits)
-    // The rowid is assigned ONCE; every downstream consumer (join,
-    // verify, audit-rebuild) shares this numbering. Uniqueness is the
-    // only property consumed (SURVEY §7.3) so the non-contiguous but
-    // shuffle-free monotonically_increasing_id beats a global
-    // ROW_NUMBER() OVER () (a single-partition sort at scale).
-    // Whether the spine must be CACHED depends on how many plan
-    // branches read it — decided below, after join batching: a build
-    // whose features all ride one multi-carry consumes the spine in
-    // exactly ONE linear subtree, where the id assignment cannot
-    // diverge and materialization would be pure overhead. Two or more
-    // branches → cache, so the ids are physically assigned once even
-    // for order-unstable label inputs (mirrors Audit.rebuild).
-    val spineBase = rawLabels
-      .select(labels.keys.map(col) ++ Seq(col(labels.labelTime)) ++
-        labels.target.map(col): _*)
-      .withColumn(RowId, monotonically_increasing_id())
+  private val FeatureTime = "feature_time"
 
-    // ---- per-feature compute + PIT join ----------------------------
-    val sourceCache = scala.collection.mutable.Map.empty[String, DataFrame]
+  /** One right side of an as-of batch: a group of one or more features
+    * on one source with the same join parameters, projected to its join
+    * `keys`, `feature_time` and every feature's namespaced value columns
+    * (`valueCols`, one list per feature). `cached` marks a frame served
+    * from the store's feature cache. */
+  private[engine] final case class JoinUnit(features: Seq[Feature], df: DataFrame,
+      keys: Seq[String], valueCols: Seq[Seq[String]], cached: Boolean) {
+    def right: AsOfJoin.Right = AsOfJoin.Right(df, keys, FeatureTime, valueCols.flatten,
+      features.map(f => Names.featureTimeCol(f.name)))
+  }
 
-    // feature-level cache: path-backed sources only (content hash needs
-    // a file); a hit reloads the materialized parquet, which also
-    // truncates the lineage exactly like the reference's temp-table
-    // materialization did
-    def featureCacheKeyOf(f: Feature): Option[(graft.store.Store, String)] =
-      options.store.flatMap { st =>
-        f.source match {
-          case s: Source if s.path.isDefined =>
-            Some((st, st.featureCacheKey(featureDefinition(f),
-              st.contentHash(s.path.get), f.embargo.getSeconds)))
-          case _ => None
-        }
-      }
+  private[engine] object JoinUnit {
+    /** Feature name → its namespaced output columns, over all units. */
+    def outputColumns(units: Seq[JoinUnit]): Map[String, Seq[String]] =
+      units.flatMap(u => u.features.map(_.name).zip(u.valueCols)).toMap
+  }
 
-    val featureCacheHit = scala.collection.mutable.Map.empty[String, Boolean]
-
-    def computeOrLoadFeature(f: Feature): ComputedFeature =
-      featureCacheKeyOf(f) match {
-        case Some((st, key)) =>
-          st.loadFeatureCache(spark, key) match {
-            case Some(df) =>
-              featureCacheHit(f.name) = true
-              ComputedFeature(df, "feature_time")
-            case None =>
-              val computed = computeFeature(spark, f, labels, sourceCache)
-              st.saveFeatureCache(computed.df, key)
-              ComputedFeature(
-                graft.sources.SchemaCache.parquet(spark, st.featureCachePath(key)),
-                computed.timeCol)
-          }
-        case None => computeFeature(spark, f, labels, sourceCache)
-      }
-
-    // Merge-compatible features — ColumnsMode on the same source with
-    // identical join parameters — share ONE as-of carry pass: the "N
-    // features from one wide history table" pattern costs one shuffle
-    // instead of N (and no extra assembly joins, since merged features
-    // land on the same row). Disabled when a store is configured (the
-    // per-feature cache is keyed per feature).
+  /** The units phase: every feature lands in exactly one [[JoinUnit]].
+    * ColumnsMode features on the same source with the same join
+    * parameters merge into one unit — ONE projection of the source, so
+    * "N features from one wide history table" cost one carry slot and
+    * land on the same row. SQL and transform features are one unit each.
+    * With a store nothing merges (its feature cache is keyed per
+    * feature), and a path-backed feature's frame is served from or saved
+    * to that cache. */
+  private[engine] def units(spark: SparkSession, labelKeys: Seq[String],
+      features: Seq[Feature], options: BuildOptions): Seq[JoinUnit] = {
+    val sources = scala.collection.mutable.Map.empty[String, DataFrame]
     def mergeKey(f: Feature): Option[Any] = f.mode match {
       case _: ColumnsMode if options.store.isEmpty =>
         Some((f.source.name, f.keyMapping, f.embargo.getSeconds,
           f.maxStaleness.map(_.getSeconds).getOrElse(-1L), f.onDuplicate))
       case _ => None
     }
-    val groups: Seq[Seq[Feature]] = {
-      val buf = scala.collection.mutable.ArrayBuffer.empty[Seq[Feature]]
-      val byKey = scala.collection.mutable.Map.empty[Any, Int]
-      features.foreach { f =>
-        mergeKey(f) match {
-          case Some(k) if byKey.contains(k) =>
-            val i = byKey(k); buf(i) = buf(i) :+ f
-          case Some(k) =>
-            byKey(k) = buf.length; buf += Seq(f)
-          case None => buf += Seq(f)
-        }
+    val groups = features.zipWithIndex
+      .groupBy { case (f, i) => mergeKey(f).getOrElse(i) }
+      .values.toSeq.sortBy(_.head._2).map(_.map(_._1))
+    groups.map { grp =>
+      val f0 = grp.head
+      grp.foreach(f => options.progress("compute", f.name))
+      val keys = labelKeys.map(k => f0.keyMapping.getOrElse(k, k))
+      val (frame, cached) = viaFeatureCache(spark, options, f0)(computeFeature(spark, grp,
+        sources.getOrElseUpdate(f0.source.name, f0.source.resolve(spark))))
+      requireColumns(s"Feature '${grp.map(_.name).mkString("+")}'", frame, keys :+ FeatureTime)
+      // per feature: (column in `frame`, namespaced output name)
+      val values: Seq[Seq[(String, String)]] = f0.mode match {
+        case _: ColumnsMode =>
+          grp.map(f => sortedCols(f).map(c => Names.namespaced(f.name, c._1)).map(n => n -> n))
+        case _ =>
+          Seq(frame.columns.toSeq.filterNot(c => keys.contains(c) || c == FeatureTime)
+            .map(c => c -> Names.namespaced(f0.name, c)))
       }
-      buf.toSeq
+      JoinUnit(grp,
+        frame.select(keys.map(col) ++ Seq(col(FeatureTime)) ++
+          values.flatten.map { case (in, out) => col(in).as(out) }: _*),
+        keys, values.map(_.map(_._2)), cached)
     }
+  }
 
-    def sortedCols(f: Feature): Seq[(String, String)] = f.mode match {
-      case ColumnsMode(cols) => cols.toSeq.sortBy(_._1)
-      case _                 => Nil
-    }
-
-    // per-feature output value-column names, in declaration order
-    val valueColsOf = scala.collection.mutable.Map.empty[String, Seq[String]]
-
-    // Every group (a single feature, or same-source merged features)
-    // first becomes a JoinUnit: its feature frame with value columns
-    // already renamed to their namespaced OUTPUT names, plus the
-    // carried-time aliases it must emit.
-    case class JoinUnit(f0: Feature, df: DataFrame, rightKeys: Seq[String],
-        timeCol: String, nsValueCols: Seq[String], timeOuts: Seq[String],
-        featNames: Seq[String])
-
-    val units: Seq[JoinUnit] = groups.map {
-      case Seq(f) =>
-        options.progress("compute", f.name)
-        val feat = computeOrLoadFeature(f)
-        val rightKeys = labels.keys.map(k => f.keyMapping.getOrElse(k, k))
-        requireColumns(s"Feature '${f.name}'", feat.df, rightKeys :+ feat.timeCol)
-        checkTimezone(labels, rawLabels, f, feat)
-        if (options.checkDuplicates && f.onDuplicate == OnDuplicate.Error)
-          checkDuplicates(f, feat.df, rightKeys, feat.timeCol)
-        val valueCols = feat.df.columns.filterNot(c =>
-          rightKeys.contains(c) || c == feat.timeCol).toSeq
-        valueColsOf(f.name) = valueCols
-        val ns = feat.df.select(
-          rightKeys.map(col) ++ Seq(col(feat.timeCol)) ++
-            valueCols.map(c => col(c).as(Names.namespaced(f.name, c))): _*)
-        JoinUnit(f, ns, rightKeys, feat.timeCol,
-          valueCols.map(Names.namespaced(f.name, _)),
-          Seq(Names.featureTimeCol(f.name)), Seq(f.name))
-
-      case grp =>
-        val f0 = grp.head
-        grp.foreach(f => options.progress("compute", f.name))
-        val src = sourceCache.getOrElseUpdate(f0.source.name, f0.source.resolve(spark))
-        val rightKeys = labels.keys.map(k => f0.keyMapping.getOrElse(k, k))
-        grp.foreach { f =>
-          requireColumns(s"Source '${f.source.name}'", src,
-            f.source.keys ++ (f.source.timestamp +: sortedCols(f).map(_._2)))
-          valueColsOf(f.name) = sortedCols(f).map(_._1)
+  /** The store's per-feature cache: path-backed sources only (the key
+    * needs a content hash). A hit reloads the materialized parquet, which
+    * also truncates the lineage exactly like the reference's temp-table
+    * materialization did; a miss saves `compute` first. */
+  private def viaFeatureCache(spark: SparkSession, options: BuildOptions, f: Feature)(
+      compute: => DataFrame): (DataFrame, Boolean) =
+    (options.store, f.source) match {
+      case (Some(st), s: Source) if s.path.isDefined =>
+        val key = st.featureCacheKey(featureDefinition(f), st.contentHash(s.path.get),
+          f.embargo.getSeconds)
+        st.loadFeatureCache(spark, key) match {
+          case Some(df) => (df, true)
+          case None =>
+            st.saveFeatureCache(compute, key)
+            (graft.sources.SchemaCache.parquet(spark, st.featureCachePath(key)), false)
         }
-        // the keyMapping-translated keys must exist BEFORE the select
-        // resolves them, or a mapping typo surfaces as a raw Spark
-        // AnalysisException instead of the SchemaError + suggestion the
-        // single-feature path produces
-        requireColumns(s"Source '${f0.source.name}' (via key_mapping)", src, rightKeys)
-        // one combined frame: keys + feature_time + every feature's
-        // columns already namespaced (names are unique across features)
-        val combined = src.select(
-          rightKeys.map(col) ++
-            Seq(col(f0.source.timestamp).as("feature_time")) ++
-            grp.flatMap(f => sortedCols(f).map { case (out, in) =>
-              col(in).as(Names.namespaced(f.name, out))
-            }): _*)
-        requireColumns(s"Feature group '${grp.map(_.name).mkString("+")}'",
-          combined, rightKeys :+ "feature_time")
-        checkTimezone(labels, rawLabels, f0, ComputedFeature(combined, "feature_time"))
-        if (options.checkDuplicates && f0.onDuplicate == OnDuplicate.Error)
-          checkDuplicates(f0, combined, rightKeys, "feature_time")
-        val nsCols = grp.flatMap(f => valueColsOf(f.name).map(Names.namespaced(f.name, _)))
-        // each merged feature gets its own {f}__feature_time alias —
-        // identical values by construction (same embargo → same row)
-        JoinUnit(f0, combined, rightKeys, "feature_time", nsCols,
-          grp.map(f => Names.featureTimeCol(f.name)), grp.map(_.name))
+      case _ => (compute, false)
     }
 
-    // Units whose join parameters agree — embargo, staleness, and
-    // unionable key/time column types — share ONE shuffle + window via
-    // one AsOfJoin.carry, even across DIFFERENT sources: the N-feature
-    // build costs one exchange instead of N, and those features skip
-    // the rowid re-join at assembly. Segmented keeps the batching too
-    // (the carry's bucket); only RowNumber stays per-unit.
-    val multiEligible = options.strategy match {
-      case AsOfJoin.Strategy.Auto | AsOfJoin.Strategy.UnionAsOf |
-          AsOfJoin.Strategy.UnionAsOfSegmented(_) => true
-      case _                                      => false
-    }
-    // Width cap: the unioned frame pads every row to the batch's FULL
-    // value-column set (UnsafeRow spends 8 bytes per slot, null or
-    // not), and the carry window runs one aggregate per column over
-    // every unioned row — so shuffle bytes and window CPU both grow as
-    // rows x batch-width. Unbounded batching made a 1M x 50-feature
-    // build ~20x slower than 1M x 10 (measured 70-280s vs 4s): 101M
-    // rows x 50 padded slots. Greedily packing units into batches of
-    // at most maxCarryColumns value columns keeps each shuffle narrow
-    // while preserving the few-shuffles win at small feature counts.
-    // A single unit wider than the cap (merged same-source group,
-    // which pads nothing) stays intact.
+  /** The batch plan: units whose join parameters agree — embargo,
+    * staleness, and unionable key/time column types — share ONE
+    * [[AsOfJoin.join]], even across different sources: under a carry
+    * strategy the N-feature build costs one exchange instead of N, and
+    * the batch's features skip the rowid re-join at assembly.
+    *
+    * Width cap: the carry's unioned frame pads every row to the batch's
+    * FULL value-column set (UnsafeRow spends 8 bytes per slot, null or
+    * not), and the carry window runs one aggregate per column over every
+    * unioned row — so shuffle bytes and window CPU both grow as rows x
+    * batch-width. Unbounded batching made a 1M x 50-feature build ~20x
+    * slower than 1M x 10 (measured 70-280s vs 4s): 101M rows x 50 padded
+    * slots. Greedily packing units into batches of at most
+    * maxCarryColumns value columns keeps each shuffle narrow while
+    * preserving the few-shuffles win at small feature counts. A single
+    * unit wider than the cap (merged same-source group, which pads
+    * nothing) stays intact. Largest batch first. */
+  private[engine] def batches(units: Seq[JoinUnit], options: BuildOptions): Seq[Seq[JoinUnit]] = {
     def packByWidth(us: Seq[JoinUnit]): Seq[Seq[JoinUnit]] = {
       val out = scala.collection.mutable.ArrayBuffer.empty[Seq[JoinUnit]]
       var cur = Seq.empty[JoinUnit]
       var width = 0
       us.foreach { u =>
-        val w = u.nsValueCols.size
+        val w = u.valueCols.flatten.size
         if (cur.nonEmpty && width + w > options.maxCarryColumns) {
           out += cur; cur = Seq(u); width = w
         } else { cur = cur :+ u; width += w }
@@ -461,86 +466,48 @@ object Build {
       if (cur.nonEmpty) out += cur
       out.toSeq
     }
-    val unitBatches: Seq[Seq[JoinUnit]] =
-      if (!multiEligible) units.map(Seq(_))
-      else units.groupBy(u =>
-        (u.f0.embargo, u.f0.maxStaleness,
-          u.rightKeys.map(k => u.df.schema(k).dataType),
-          u.df.schema(u.timeCol).dataType)).values.toSeq
-        .flatMap(packByWidth)
-    // Under every carry strategy, EVERY batch takes the batch path — a
-    // batch of one is the same carry with one right side, and it threads
-    // the label columns through its shuffle, which lets the head batch
-    // skip the assembly join (and a single-batch build skip the spine
-    // cache).
-    val (multiBatches, singleUnits) =
-      if (multiEligible) (unitBatches.sortBy(-_.size), Seq.empty[JoinUnit])
-      else (Seq.empty[Seq[JoinUnit]], unitBatches.flatten)
+    units.groupBy { u =>
+      val f0 = u.features.head
+      (f0.embargo, f0.maxStaleness, u.keys.map(k => u.df.schema(k).dataType),
+        u.df.schema(FeatureTime).dataType)
+    }.values.toSeq.flatMap(packByWidth).sortBy(-_.size)
+  }
 
-    // spine branch count: the first multi batch reads the full spine;
-    // every other batch/unit reads spineNarrow (one branch each)
-    val spineBranches =
-      (if (multiBatches.nonEmpty) 1 else 0) +
-        (multiBatches.drop(1).size + singleUnits.size)
-    val spineConsumedOnce = multiBatches.nonEmpty && spineBranches == 1
-    // cacheOnce: no-output builds leave this resident (see the release
-    // note at the bottom), so a repeated identical build must reuse the
-    // live entry instead of re-issuing cache() against the same plan.
-    // OWNERSHIP: if the entry was already resident — a previous
-    // no-output build of the same config still backs ITS returned
-    // frame with it — this build must not unpersist it on the way out
-    // (Spark's non-cascading uncache would rebuild/discard the other
-    // result's dependent caches).
-    val spineWasResident = !spineConsumedOnce &&
-      spineBase.storageLevel != org.apache.spark.storage.StorageLevel.NONE
-    val spine = if (spineConsumedOnce) spineBase
-      else graft.util.Caching.cacheOnce(spineBase)
-    val spineNarrow = spine
-      .select((RowId +: labels.keys :+ labels.labelTime).map(col): _*)
-
-    def right(u: JoinUnit) =
-      AsOfJoin.Right(u.df, u.rightKeys, u.timeCol, u.nsValueCols, u.timeOuts)
-    def joinSingle(u: JoinUnit): DataFrame = {
-      u.featNames.foreach(n => options.progress("join", n))
-      AsOfJoin.join(spineNarrow, right(u), joinSpec(labels, u.f0, options),
+  /** The assemble phase (J4): each batch joins as of `spine` — its
+    * rowid, label keys and label time, plus whatever else the caller
+    * carries. The first (largest) batch threads the FULL spine through
+    * its join, so its features need no rowid re-join at all; every other
+    * batch joins the narrow spine and left-joins back on the rowid. The
+    * caller makes sure a spine read by two or more batches is
+    * materialized once. */
+  private[engine] def assemble(spine: DataFrame, batches: Seq[Seq[JoinUnit]],
+      labelKeys: Seq[String], labelTime: String, options: BuildOptions): DataFrame = {
+    val narrow = spine.select((RowId +: labelKeys :+ labelTime).map(col): _*)
+    def join(us: Seq[JoinUnit], left: DataFrame): DataFrame = {
+      us.foreach(_.features.foreach(f => options.progress("join", f.name)))
+      // Auto probes the batch's unioned key histogram for a hot key
+      // (size-gated — small batches skip the probe and pay nothing)
+      AsOfJoin.join(left, us.map(_.right),
+        joinSpec(labelKeys, labelTime, us.head.features.head, options),
         options.strategy, options.autoConfig)
-        .select((RowId +: (u.timeOuts ++ u.nsValueCols)).map(col): _*)
     }
-    def joinMulti(us: Seq[JoinUnit], labelFrame: DataFrame): DataFrame = {
-      us.foreach(_.featNames.foreach(n => options.progress("join", n)))
-      val rights = us.map(right)
-      // hot-key escape on the fused path: explicit Segmented keeps its
-      // bucket; Auto probes the batch's unioned key histogram (size-
-      // gated — small batches skip the probe and pay nothing)
-      AsOfJoin.carry(labelFrame, rights, joinSpec(labels, us.head.f0, options),
-        AsOfJoin.carryBucket(options.strategy, rights, options.autoConfig))
+    batches.tail.foldLeft(join(batches.head, spine)) { (acc, us) =>
+      val outs = us.map(_.right).flatMap(r => r.timeOuts ++ r.valueCols)
+      acc.join(join(us, narrow).select((RowId +: outs).map(col): _*), Seq(RowId), "left")
     }
+  }
 
-    // ---- assembly (J4) ---------------------------------------------
-    // The LARGEST multi batch carries the FULL spine through its union
-    // (label columns ride along the one shuffle), so its features need
-    // no rowid re-join at all; every other batch/unit left-joins on
-    // the rowid as before.
-    val assembled = multiBatches match {
-      case head +: tail =>
-        val first = joinMulti(head, spine)
-        (tail.map(us => joinMulti(us, spineNarrow)
-          .select(col(RowId) +:
-            us.flatMap(u => u.timeOuts.map(col) ++ u.nsValueCols.map(col)): _*)) ++
-          singleUnits.map(joinSingle))
-          .foldLeft(first) { case (acc, ns) => acc.join(ns, Seq(RowId), "left") }
-      case _ =>
-        singleUnits.map(joinSingle).foldLeft(spine) { case (acc, ns) =>
-          acc.join(ns, Seq(RowId), "left")
-        }
-    }
+  /** What the stats + write phase hands the manifest and the result. */
+  private final case class Written(df: DataFrame, rows: Long, stats: Seq[FeatureStats],
+      labelRange: Option[(java.sql.Timestamp, java.sql.Timestamp)])
 
-    val nsValueCols: Seq[String] = features.flatMap(f =>
-      valueColsOf(f.name).map(c => Names.namespaced(f.name, c)))
-
+  /** The stats + write phase: the final projection and (optional) write,
+    * with all per-feature stats and invariant checks in ONE aggregation. */
+  private def statsAndWrite(spark: SparkSession, labels: Labels, features: Seq[Feature],
+      options: BuildOptions, assembled: DataFrame, valueCols: Seq[String]): Written = {
     val skipped =
-      if (options.onMissing == "skip" && nsValueCols.nonEmpty)
-        assembled.na.drop("any", nsValueCols)
+      if (options.onMissing == "skip" && valueCols.nonEmpty)
+        assembled.na.drop("any", valueCols)
       else assembled
 
     // ---- single-pass stats + invariant verification ----------------
@@ -568,8 +535,7 @@ object Build {
       case d: java.time.LocalDateTime => java.sql.Timestamp.valueOf(d)
       case other => java.sql.Timestamp.valueOf(other.toString.replace("T", " "))
     }
-    def decodeStats(m: Map[String, Any])
-        : (Long, Seq[FeatureStats], Option[(java.sql.Timestamp, java.sql.Timestamp)]) = {
+    def decodeStats(df: DataFrame, m: Map[String, Any]): Written = {
       def lng(k: String): Long =
         m.get(k).flatMap(Option(_)).map(_.asInstanceOf[Number].longValue).getOrElse(0L)
       val n = lng("__n")
@@ -582,11 +548,11 @@ object Build {
         lo <- m.get("__lo").flatMap(Option(_))
         hi <- m.get("__hi").flatMap(Option(_))
       } yield (toTs(lo), toTs(hi))
-      (n, st, range)
+      Written(df, n, st, range)
     }
 
     // ---- final projection ------------------------------------------
-    val outCols = labels.keys ++ Seq(labels.labelTime) ++ labels.target ++ nsValueCols
+    val outCols = labels.keys ++ Seq(labels.labelTime) ++ labels.target ++ valueCols
     def finishFrame(base: DataFrame): DataFrame = {
       val projected = base.select(outCols.map(col): _*)
       val sorted =
@@ -612,13 +578,11 @@ object Build {
     // cache instead of recomputing every join) and aggregated
     // separately — as is the no-output path, whose returned df's
     // lineage must read the materialized rowids anyway.
-    def aggViaCache(frame: DataFrame)
-        : (Long, Seq[FeatureStats], Option[(java.sql.Timestamp, java.sql.Timestamp)]) = {
+    def aggViaCache(frame: DataFrame, result: DataFrame): Written = {
       val row = frame.agg(aggCols.head, aggCols.tail: _*).head()
-      val m = row.schema.fieldNames.zipWithIndex.map { case (f, i) =>
+      decodeStats(result, row.schema.fieldNames.zipWithIndex.map { case (f, i) =>
         f -> (if (row.isNullAt(i)) null else row.get(i))
-      }.toMap[String, Any]
-      decodeStats(m)
+      }.toMap[String, Any])
     }
     def writeSplits(out: String): Unit = {
       if (options.splits.isEmpty) return
@@ -631,7 +595,7 @@ object Build {
         part.write.mode("overwrite").parquet(s"${stem}_${s.name}.parquet")
       }
     }
-    val (result, total, stats, labelRange) = options.output match {
+    options.output match {
       case Some(out) if !options.sortResult =>
         val obs = org.apache.spark.sql.Observation()
         val fused = finishFrame(skipped.observe(obs, aggCols.head, aggCols.tail: _*))
@@ -639,20 +603,20 @@ object Build {
         fused.write.mode("overwrite").parquet(out)
         graft.sources.SchemaCache.put(out, fused.schema)
         options.progress("verify", "") // the stats/invariant agg rode the write
-        val (n, st, range) = decodeStats(obs.get)
+        val w = decodeStats(fused, obs.get)
         writeSplits(out)
-        (fused, n, st, range)
+        w
       case Some(out) =>
         val cached = skipped.cache()
         options.progress("verify", "")
-        val (n, st, range) = aggViaCache(cached)
         val sorted = finishFrame(cached)
+        val w = aggViaCache(cached, sorted)
         options.progress("write", "")
         sorted.write.mode("overwrite").parquet(out)
         graft.sources.SchemaCache.put(out, sorted.schema)
         writeSplits(out)
         cached.unpersist()
-        (sorted, n, st, range)
+        w
       case None =>
         // cacheOnce: this cache backs the returned frame and stays
         // resident past the build, so re-running an identical
@@ -660,127 +624,102 @@ object Build {
         // reuse the live entry instead of re-issuing cache()
         val cached = graft.util.Caching.cacheOnce(skipped)
         options.progress("verify", "")
-        val (n, st, range) = aggViaCache(cached)
-        (finishFrame(cached), n, st, range)
+        aggViaCache(cached, finishFrame(cached))
     }
+  }
 
-    // split gap / coverage warnings (engine.py:654-673)
-    val warnings = splitWarnings(options.splits, labelRange)
-
-    val passed = stats.forall(_.violations == 0)
-    warnings.foreach(w => log.warn(w))
-
-    // ---- manifest (full parity with engine.py:1422-1489) -----------
-    for { st <- options.store; key <- cacheKey } {
-      import graft.util.Jsons
-      import graft.util.Jsons.Raw
-      val nowMs = System.currentTimeMillis()
-      val createdAt = java.time.Instant.ofEpochMilli(nowMs).toString
-      val buildId = java.time.format.DateTimeFormatter
-        .ofPattern("yyyyMMdd'T'HHmmss'Z'").withZone(java.time.ZoneOffset.UTC)
-        .format(java.time.Instant.ofEpochMilli(nowMs))
-      def pathSize(dir: String): Long = {
-        if (dir.contains("://"))
-          return try {
-            val hp = new org.apache.hadoop.fs.Path(dir)
-            hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-              .getContentSummary(hp).getLength
-          } catch { case _: Exception => -1L }
-        val p = java.nio.file.Paths.get(dir)
-        if (!java.nio.file.Files.exists(p)) -1L
-        else {
-          import scala.jdk.CollectionConverters._
-          val s = java.nio.file.Files.walk(p)
-          try s.iterator().asScala
-            .filter(java.nio.file.Files.isRegularFile(_))
-            .map(java.nio.file.Files.size(_)).sum
-          finally s.close()
-        }
+  /** The manifest phase (full parity with engine.py:1422-1489). */
+  private def saveManifest(spark: SparkSession, st: graft.store.Store, key: String,
+      labels: Labels, features: Seq[Feature], options: BuildOptions, w: Written,
+      passed: Boolean, outputCols: Map[String, Seq[String]], cachedFeatures: Set[String],
+      startedAt: Long): Unit = {
+    import graft.util.Jsons
+    import graft.util.Jsons.Raw
+    val nowMs = System.currentTimeMillis()
+    val createdAt = java.time.Instant.ofEpochMilli(nowMs).toString
+    val buildId = java.time.format.DateTimeFormatter
+      .ofPattern("yyyyMMdd'T'HHmmss'Z'").withZone(java.time.ZoneOffset.UTC)
+      .format(java.time.Instant.ofEpochMilli(nowMs))
+    def pathSize(dir: String): Long = {
+      if (dir.contains("://"))
+        return try {
+          val hp = new org.apache.hadoop.fs.Path(dir)
+          hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
+            .getContentSummary(hp).getLength
+        } catch { case _: Exception => -1L }
+      val p = java.nio.file.Paths.get(dir)
+      if (!java.nio.file.Files.exists(p)) -1L
+      else {
+        import scala.jdk.CollectionConverters._
+        val s = java.nio.file.Files.walk(p)
+        try s.iterator().asScala
+          .filter(java.nio.file.Files.isRegularFile(_))
+          .map(java.nio.file.Files.size(_)).sum
+        finally s.close()
       }
-      val statsByName = stats.map(s => s.name -> s).toMap
-      val featuresJson = Raw(features.map { f =>
-        val srcHash = f.source match {
-          case s: Source => s.path.map(st.contentHash)
-          case _         => None
-        }
-        val fs = statsByName(f.name)
-        Jsons.str(f.name) + ":" + Jsons.obj(
-          "definition_hash" -> st.hashString(featureDefinition(f)),
-          "source_content_hash" -> srcHash,
-          "embargo_s" -> f.embargo.getSeconds,
-          "matched_rows" -> fs.matched,
-          "missing_rows" -> fs.missing,
-          "violations" -> fs.violations,
-          "output_columns" -> valueColsOf(f.name).map(Names.namespaced(f.name, _)),
-          "cached" -> featureCacheHit.getOrElse(f.name, false))
-      }.mkString("{", ",", "}"))
-      val invariantOp = if (options.join == "strict") "<" else "<="
-      st.saveManifest(s"build_$key", Jsons.obj(
-        "graft_version" -> graft.Graft.Version,
-        "build_id" -> buildId,
-        "created_at" -> createdAt,
-        "duration_seconds" -> (System.nanoTime() - startedAt) / 1e9,
-        "build_key" -> key,
-        "rows" -> total,
-        "audit_passed" -> passed,
-        // audit_passed above is only meaningful when the verification
-        // pass actually ran — record which it was
-        "verified" -> options.verify,
-        "labels" -> Raw(Jsons.obj(
-          "path" -> labels.path,
-          "content_hash" -> labels.path.map(st.contentHash),
-          "row_count" -> total,
-          "time_range" -> labelRange.map { case (lo, hi) =>
-            Seq(lo.toString, hi.toString) },
-          "keys" -> labels.keys,
-          "label_time_column" -> labels.labelTime,
-          "target_columns" -> labels.target)),
-        "features" -> featuresJson,
-        "parameters" -> Raw(Jsons.obj(
-          "max_lookback" -> Durations.format(options.maxLookback),
-          "join" -> options.join,
-          "on_missing" -> options.onMissing,
-          "flatten_columns" -> options.flattenColumns,
-          "sort_result" -> options.sortResult,
-          "splits" -> options.splits.map(s => Raw(Jsons.obj(
-            "name" -> s.name, "start" -> s.start, "end" -> s.end))))),
-        "output" -> Raw(Jsons.obj(
-          "output_path" -> options.output,
-          "output_content_hash" -> options.output.map(st.contentHash),
-          "row_count" -> total,
-          "column_count" -> result.columns.size,
-          "file_size_bytes" -> options.output.map(pathSize))),
-        "audit" -> Raw(Jsons.obj(
-          "passed" -> passed,
-          "invariant" -> s"feature_time $invariantOp label_time - embargo",
-          "rows_checked" -> total)),
-        "columns" -> result.columns.toSeq,
-        "environment" -> Raw(Jsons.obj(
-          "spark_version" -> spark.version,
-          "scala_version" -> scala.util.Properties.versionNumberString,
-          "os" -> s"${sys.props.getOrElse("os.name", "?")} ${sys.props.getOrElse("os.arch", "")}"))))
     }
-
-    // When an output was written, the returned frame is the RE-READ
-    // parquet (the reference's BuildResult points at the written output
-    // the same way): lineage-free, nothing was ever cached. Without an
-    // output the cache must stay resident — the returned df's
-    // rowid-aligned lineage reads it (a recompute would re-derive
-    // monotonically_increasing_id per branch).
-    val finalDf = options.output match {
-      case Some(out) => graft.sources.SchemaCache.parquet(spark, out)
-      case None      => result
-    }
-    // release the spine cache only when the returned frame is the
-    // lineage-free parquet re-read: in the no-output case the result's
-    // resident cache DEPENDS on the spine plan, and Spark's
-    // non-cascading uncache would rebuild that dependent entry —
-    // discarding its materialized data, so the caller's first action
-    // would re-run the whole build
-    if (!spineConsumedOnce && options.output.isDefined && !spineWasResident)
-      spine.unpersist()
-    BuildResult(finalDf, total, result.columns.toSeq, stats, passed, warnings,
-      (System.nanoTime() - startedAt) / 1000000L)
+    val statsByName = w.stats.map(s => s.name -> s).toMap
+    val featuresJson = Raw(features.map { f =>
+      val srcHash = f.source match {
+        case s: Source => s.path.map(st.contentHash)
+        case _         => None
+      }
+      val fs = statsByName(f.name)
+      Jsons.str(f.name) + ":" + Jsons.obj(
+        "definition_hash" -> st.hashString(featureDefinition(f)),
+        "source_content_hash" -> srcHash,
+        "embargo_s" -> f.embargo.getSeconds,
+        "matched_rows" -> fs.matched,
+        "missing_rows" -> fs.missing,
+        "violations" -> fs.violations,
+        "output_columns" -> outputCols(f.name),
+        "cached" -> cachedFeatures.contains(f.name))
+    }.mkString("{", ",", "}"))
+    val invariantOp = if (options.join == "strict") "<" else "<="
+    st.saveManifest(s"build_$key", Jsons.obj(
+      "graft_version" -> graft.Graft.Version,
+      "build_id" -> buildId,
+      "created_at" -> createdAt,
+      "duration_seconds" -> (System.nanoTime() - startedAt) / 1e9,
+      "build_key" -> key,
+      "rows" -> w.rows,
+      "audit_passed" -> passed,
+      // audit_passed above is only meaningful when the verification
+      // pass actually ran — record which it was
+      "verified" -> options.verify,
+      "labels" -> Raw(Jsons.obj(
+        "path" -> labels.path,
+        "content_hash" -> labels.path.map(st.contentHash),
+        "row_count" -> w.rows,
+        "time_range" -> w.labelRange.map { case (lo, hi) =>
+          Seq(lo.toString, hi.toString) },
+        "keys" -> labels.keys,
+        "label_time_column" -> labels.labelTime,
+        "target_columns" -> labels.target)),
+      "features" -> featuresJson,
+      "parameters" -> Raw(Jsons.obj(
+        "max_lookback" -> Durations.format(options.maxLookback),
+        "join" -> options.join,
+        "on_missing" -> options.onMissing,
+        "flatten_columns" -> options.flattenColumns,
+        "sort_result" -> options.sortResult,
+        "splits" -> options.splits.map(s => Raw(Jsons.obj(
+          "name" -> s.name, "start" -> s.start, "end" -> s.end))))),
+      "output" -> Raw(Jsons.obj(
+        "output_path" -> options.output,
+        "output_content_hash" -> options.output.map(st.contentHash),
+        "row_count" -> w.rows,
+        "column_count" -> w.df.columns.size,
+        "file_size_bytes" -> options.output.map(pathSize))),
+      "audit" -> Raw(Jsons.obj(
+        "passed" -> passed,
+        "invariant" -> s"feature_time $invariantOp label_time - embargo",
+        "rows_checked" -> w.rows)),
+      "columns" -> w.df.columns.toSeq,
+      "environment" -> Raw(Jsons.obj(
+        "spark_version" -> spark.version,
+        "scala_version" -> scala.util.Properties.versionNumberString,
+        "os" -> s"${sys.props.getOrElse("os.name", "?")} ${sys.props.getOrElse("os.arch", "")}"))))
   }
 
   private lazy val log = org.apache.log4j.Logger.getLogger(getClass)
@@ -813,12 +752,13 @@ object Build {
     gaps ++ coverage
   }
 
-  /** The as-of parameters of feature `f` against `labels` — shared by
-    * the build and the audit's rebuild, so both join the same way. */
-  def joinSpec(labels: Labels, f: Feature, options: BuildOptions): AsOfJoin.Spec =
+  /** The as-of parameters of feature `f` against labels keyed by
+    * `labelKeys` at `labelTime`. */
+  private def joinSpec(labelKeys: Seq[String], labelTime: String, f: Feature,
+      options: BuildOptions): AsOfJoin.Spec =
     AsOfJoin.Spec(
-      leftKeys = labels.keys,
-      leftTime = labels.labelTime,
+      leftKeys = labelKeys,
+      leftTime = labelTime,
       inclusive = options.join == "inclusive",
       embargo = f.embargo,
       maxLookback = Some(options.maxLookback),
@@ -826,46 +766,41 @@ object Build {
 
   // ---- feature computation (3 modes) -------------------------------
 
-  final case class ComputedFeature(df: DataFrame, timeCol: String)
+  private def sortedCols(f: Feature): Seq[(String, String)] = f.mode match {
+    case ColumnsMode(cols) => cols.toSeq.sortBy(_._1)
+    case _                 => Nil
+  }
 
-  def computeFeature(
-      spark: SparkSession,
-      f: Feature,
-      labels: Labels,
-      sourceCache: scala.collection.mutable.Map[String, DataFrame]
-  ): ComputedFeature = {
-    val src = sourceCache.getOrElseUpdate(f.source.name, f.source.resolve(spark))
-    f.mode match {
-      case ColumnsMode(cols) =>
-        requireColumns(s"Source '${f.source.name}'", src,
-          f.source.keys ++ (f.source.timestamp +: cols.values.toSeq))
-        // an output name equal to a key or the time column would
-        // project two same-named columns and every later reference
-        // would die with an ambiguous-reference AnalysisException
-        val reserved = f.source.keys.toSet + "feature_time"
-        cols.keys.filter(reserved).foreach(c =>
-          throw Errors.config(
-            s"Feature '${f.name}' output column '$c' collides with a join key " +
-              "or 'feature_time'.",
-            "Rename the output column in the columns mapping."))
-        val proj = src.select(
-          f.source.keys.map(col) ++
-            Seq(col(f.source.timestamp).as("feature_time")) ++
-            cols.toSeq.sortBy(_._1).map { case (out, in) => col(in).as(out) }: _*)
-        ComputedFeature(proj, "feature_time")
+  /** A unit's frame over source `src`, with a `feature_time` column. A
+    * ColumnsMode group is ONE projection: the source keys, then every
+    * feature's declared columns under their namespaced output names
+    * (unique across features) — label-independent, so the store can
+    * cache it. A SQL or transform feature (always a group of one)
+    * computes its own frame. */
+  private def computeFeature(spark: SparkSession, grp: Seq[Feature],
+      src: DataFrame): DataFrame = {
+    val f0 = grp.head
+    f0.mode match {
+      case _: ColumnsMode =>
+        grp.foreach(f => requireColumns(s"Source '${f.source.name}'", src,
+          f.source.keys ++ (f.source.timestamp +: sortedCols(f).map(_._2))))
+        src.select(f0.source.keys.map(col) ++
+          Seq(col(f0.source.timestamp).as(FeatureTime)) ++
+          grp.flatMap(f => sortedCols(f).map { case (out, in) =>
+            col(in).as(Names.namespaced(f.name, out))
+          }): _*)
       case SqlMode(sql) =>
-        val view = s"__src_${f.safeName}"
+        val view = s"__src_${f0.safeName}"
         src.createOrReplaceTempView(view)
-        val out = spark.sql(sql.replace("{source}", view))
-        ComputedFeature(out, "feature_time")
+        spark.sql(sql.replace("{source}", view))
       case TransformMode(fn, _) =>
-        ComputedFeature(fn(src), "feature_time")
+        fn(src)
     }
   }
 
   // ---- validation helpers ------------------------------------------
 
-  private def validateFeatures(features: Seq[Feature], options: BuildOptions): Unit = {
+  private[engine] def validateFeatures(features: Seq[Feature], options: BuildOptions): Unit = {
     if (features.isEmpty)
       throw Errors.config("No features given.", "Pass at least one Feature.")
     val dup = features.groupBy(_.name).collect { case (n, fs) if fs.size > 1 => n }
@@ -897,6 +832,20 @@ object Build {
           throw Errors.config(
             s"Feature '${f.name}': max_staleness ${Durations.format(st)} must be > embargo ${Durations.format(f.embargo)}.",
             "The staleness floor must leave a non-empty availability window.")
+      }
+      // an output named like a source key or the time column would
+      // project two same-named columns (or shadow the carried
+      // {f}__feature_time) and every later reference would die with an
+      // ambiguous-reference AnalysisException
+      f.mode match {
+        case ColumnsMode(cols) =>
+          val reserved = f.source.keys.toSet + FeatureTime
+          cols.keys.filter(reserved).foreach(c =>
+            throw Errors.config(
+              s"Feature '${f.name}' output column '$c' collides with a join key " +
+                "or 'feature_time'.",
+              "Rename the output column in the columns mapping."))
+        case _ => ()
       }
     }
   }
@@ -962,9 +911,9 @@ object Build {
   }
 
   private def checkTimezone(labels: Labels, rawLabels: DataFrame, f: Feature,
-      feat: ComputedFeature): Unit = {
+      feat: DataFrame): Unit = {
     val lt = rawLabels.schema(labels.labelTime).dataType
-    val ft = feat.df.schema(feat.timeCol).dataType
+    val ft = feat.schema(FeatureTime).dataType
     val mismatch = (lt, ft) match {
       case (TimestampType, TimestampNTZType) => true
       case (TimestampNTZType, TimestampType) => true
@@ -976,9 +925,8 @@ object Build {
           "  Fix: make both tz-aware (TIMESTAMP) or both naive (TIMESTAMP_NTZ).")
   }
 
-  private def checkDuplicates(f: Feature, df: DataFrame, keys: Seq[String],
-      timeCol: String): Unit = {
-    val dups = df.groupBy((keys :+ timeCol).map(col): _*).count()
+  private def checkDuplicates(f: Feature, df: DataFrame, keys: Seq[String]): Unit = {
+    val dups = df.groupBy((keys :+ FeatureTime).map(col): _*).count()
       .filter(col("count") > 1)
     val top = dups.orderBy(col("count").desc).limit(3).collect()
     if (top.nonEmpty) {

@@ -133,24 +133,19 @@ object AsOfJoin {
   /** Internal rowid column identifying label rows across the join. */
   val RowIdCol = "__label_rowid"
 
-  /** One right side under any strategy. Output: all label columns, then
-    * the right's `timeOuts`, then its value columns. */
-  def join(labels: DataFrame, right: Right, spec: Spec,
+  /** Every right side as of the labels under one strategy: RowNumber
+    * joins the rights one after another, the carry strategies run one
+    * [[carry]] over all of them (Auto resolves its bucket through
+    * [[autoStrategy]]). Output: all label columns, then per right its
+    * `timeOuts` and value columns. */
+  def join(labels: DataFrame, rights: Seq[Right], spec: Spec,
       strategy: Strategy = Strategy.Auto,
       auto: AutoConfig = AutoConfig()): DataFrame =
     strategy match {
-      case Strategy.RowNumber => rowNumber(labels, right, spec)
-      case s                  => carry(labels, Seq(right), spec, carryBucket(s, Seq(right), auto))
-    }
-
-  /** The `bucket` a carry strategy runs [[carry]] with: Segmented keeps
-    * its own, Auto resolves through [[autoStrategy]], the rest is plain. */
-  def carryBucket(strategy: Strategy, rights: Seq[Right],
-      auto: AutoConfig): Option[Duration] =
-    strategy match {
-      case Strategy.UnionAsOfSegmented(b) => Some(b)
-      case Strategy.Auto                  => carryBucket(autoStrategy(rights, auto), rights, auto)
-      case _                              => None
+      case Strategy.RowNumber             => rights.foldLeft(labels)(rowNumber(_, _, spec))
+      case Strategy.UnionAsOf             => carry(labels, rights, spec)
+      case Strategy.UnionAsOfSegmented(b) => carry(labels, rights, spec, Some(b))
+      case Strategy.Auto                  => join(labels, rights, spec, autoStrategy(rights, auto))
     }
 
   /** Resolve [[Strategy.Auto]] to a concrete strategy for a carry over
@@ -293,7 +288,7 @@ object AsOfJoin {
     * downstream consumer shares one numbering — SURVEY §7.3).
     * Output: all label columns + `timeOuts` + valueCols.
     */
-  def rowNumber(labels: DataFrame, right: Right, spec: Spec): DataFrame = {
+  private def rowNumber(labels: DataFrame, right: Right, spec: Spec): DataFrame = {
     requireJoinable(labels, Seq(right), spec)
     // Rename the right side up-front so self-joins (labels and features
     // derived from the same frame) never hit ambiguous references.
@@ -367,7 +362,7 @@ object AsOfJoin {
     * Results are identical for every bucket (test-pinned, including a
     * hot-key fuzz); cost is one extra small shuffle.
     */
-  def carry(labels: DataFrame, rights: Seq[Right], spec: Spec,
+  private def carry(labels: DataFrame, rights: Seq[Right], spec: Spec,
       bucket: Option[Duration] = None): DataFrame = {
     require(rights.nonEmpty, "an as-of carry needs at least one right side")
     // whole milliseconds required: toMillis truncates, so a positive
@@ -430,15 +425,14 @@ object AsOfJoin {
     val partition = (joinKeys ++ bucket.map(_ => BucketCol)).map(col)
 
     // stage 1 (the whole carry when unbucketed): one window pass
-    // computing every slot
+    // computing every slot, planned as ONE Window operator
     val w = Window
       .partitionBy(partition: _*)
       .orderBy(col(SortTime).asc_nulls_first +: col(TagCol).asc +:
         tieCols.flatten.map(col(_).asc_nulls_first): _*)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val local = rights.indices.foldLeft(framed) { (acc, i) =>
-      acc.withColumn(s"__mc$i", last(col(s"__fr$i"), ignoreNulls = true).over(w))
-    }
+    val local = framed.select(col("*") +: rights.indices.map(i =>
+      last(col(s"__fr$i"), ignoreNulls = true).over(w).as(s"__mc$i")): _*)
 
     val carried = if (bucket.isEmpty) local else {
       // stage 2: per (key, bucket) the LAST feature row of each slot

@@ -38,7 +38,7 @@ class AsOfJoinSpec extends SparkFunSuite {
   private def right(feats: DataFrame) = Right(feats, Seq("user_id"), "ft", Seq("value"))
 
   private def run(s: Spec, strat: Strategy): Map[Long, (Option[java.sql.Timestamp], Option[Double])] =
-    AsOfJoin.join(labels, right(features), s, strat)
+    AsOfJoin.join(labels, Seq(right(features)), s, strat)
       .collect()
       .map { r =>
         val id = r.getLong(r.fieldIndex(AsOfJoin.RowIdCol))
@@ -99,7 +99,7 @@ class AsOfJoinSpec extends SparkFunSuite {
       // two labels same (user, time) must each get a row
       val dup = labels.union(labels.filter(col(AsOfJoin.RowIdCol) === 1L)
         .withColumn(AsOfJoin.RowIdCol, lit(99L)))
-      val out = AsOfJoin.join(dup, right(features), spec(), strat)
+      val out = AsOfJoin.join(dup, Seq(right(features)), spec(), strat)
       assert(out.count() == 5)
     }
   }
@@ -111,7 +111,7 @@ class AsOfJoinSpec extends SparkFunSuite {
         .withColumn("lt", $"lt".cast("timestamp")))
     for (strat <- Seq(Strategy.RowNumber, Strategy.UnionAsOf,
         Strategy.UnionAsOfSegmented(Duration.ofDays(1)))) {
-      val out = AsOfJoin.join(lblWithNull, right(features), spec(), strat).collect()
+      val out = AsOfJoin.join(lblWithNull, Seq(right(features)), spec(), strat).collect()
       assert(out.length == 5)
       val nullRow = out.find(_.getLong(0) == 50L).get
       assert(nullRow.isNullAt(nullRow.fieldIndex("feature_time")))
@@ -130,9 +130,9 @@ class AsOfJoinSpec extends SparkFunSuite {
       (col("id") % 41).as("user_id"),
       timestamp_micros(lit(1704067200000000L) + col("id") * 104729L * 1000000L).as("lt"))
     val s = spec(embargo = Duration.ofHours(12), staleness = Some(Duration.ofDays(30)))
-    val a = AsOfJoin.join(lbls, right(feats), s, Strategy.RowNumber)
+    val a = AsOfJoin.join(lbls, Seq(right(feats)), s, Strategy.RowNumber)
       .select(AsOfJoin.RowIdCol, "feature_time", "value")
-    val b = AsOfJoin.join(lbls, right(feats), s, Strategy.UnionAsOf)
+    val b = AsOfJoin.join(lbls, Seq(right(feats)), s, Strategy.UnionAsOf)
       .select(AsOfJoin.RowIdCol, "feature_time", "value")
     assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty)
     assert(a.count() == 300)
@@ -150,9 +150,9 @@ class AsOfJoinSpec extends SparkFunSuite {
       timestamp_micros(lit(1704067200000000L) + col("id") * 13441L * 1000000L).as("lt"))
     for (bucketHours <- Seq(1L, 24L, 24L * 365)) {
       val s = spec(embargo = Duration.ofHours(3), staleness = Some(Duration.ofDays(7)))
-      val plain = AsOfJoin.join(lbls, right(feats), s, Strategy.UnionAsOf)
+      val plain = AsOfJoin.join(lbls, Seq(right(feats)), s, Strategy.UnionAsOf)
         .select(AsOfJoin.RowIdCol, "feature_time", "value")
-      val seg = AsOfJoin.join(lbls, right(feats), s,
+      val seg = AsOfJoin.join(lbls, Seq(right(feats)), s,
         Strategy.UnionAsOfSegmented(Duration.ofHours(bucketHours)))
         .select(AsOfJoin.RowIdCol, "feature_time", "value")
       assert(seg.count() == 400)
@@ -179,10 +179,10 @@ class AsOfJoinSpec extends SparkFunSuite {
     val rights = Seq(
       Right(f1, Seq("user_id"), "t1", Seq("v1"), Seq("ft1")),
       Right(f2, Seq("user_id"), "t2", Seq("v2"), Seq("ft2")))
-    val plain = AsOfJoin.carry(lbls, rights, s)
+    val plain = AsOfJoin.join(lbls, rights, s, Strategy.UnionAsOf)
     for (bucketHours <- Seq(1L, 24L, 24L * 365)) {
-      val seg = AsOfJoin.carry(lbls, rights, s,
-        Some(Duration.ofHours(bucketHours)))
+      val seg = AsOfJoin.join(lbls, rights, s,
+        Strategy.UnionAsOfSegmented(Duration.ofHours(bucketHours)))
       assert(seg.count() == 400)
       assert(plain.exceptAll(seg).isEmpty && seg.exceptAll(plain).isEmpty,
         s"bucket=${bucketHours}h diverged from plain multi carry")
@@ -227,9 +227,9 @@ class AsOfJoinSpec extends SparkFunSuite {
     assert(AsOfJoin.autoStrategy(Seq(right(feats))) == Strategy.UnionAsOf)
 
     // end-to-end: Auto output is identical to the plain union carry
-    val auto = AsOfJoin.join(lbls, right(feats), s, Strategy.Auto, probing)
+    val auto = AsOfJoin.join(lbls, Seq(right(feats)), s, Strategy.Auto, probing)
       .select(AsOfJoin.RowIdCol, "feature_time", "value")
-    val plain = AsOfJoin.join(lbls, right(feats), s, Strategy.UnionAsOf)
+    val plain = AsOfJoin.join(lbls, Seq(right(feats)), s, Strategy.UnionAsOf)
       .select(AsOfJoin.RowIdCol, "feature_time", "value")
     assert(auto.count() == 300)
     assert(plain.exceptAll(auto).isEmpty && auto.exceptAll(plain).isEmpty,
@@ -309,9 +309,9 @@ class AsOfJoinSpec extends SparkFunSuite {
       case other => fail(s"expected segmented for the NTZ hot key, got $other")
     }
     // end-to-end: Auto (segmented, NTZ-bucketed) equals the plain carry
-    val auto = AsOfJoin.join(lbls, right(feats), s, Strategy.Auto, probing)
+    val auto = AsOfJoin.join(lbls, Seq(right(feats)), s, Strategy.Auto, probing)
       .select(AsOfJoin.RowIdCol, "feature_time", "value")
-    val plain = AsOfJoin.join(lbls, right(feats), s, Strategy.UnionAsOf)
+    val plain = AsOfJoin.join(lbls, Seq(right(feats)), s, Strategy.UnionAsOf)
       .select(AsOfJoin.RowIdCol, "feature_time", "value")
     assert(auto.count() == 300)
     assert(plain.exceptAll(auto).isEmpty && auto.exceptAll(plain).isEmpty,
@@ -360,19 +360,17 @@ class AsOfJoinSpec extends SparkFunSuite {
         Seq(Some(1.0), Some(1.0), Some(5.0), n, n)),
       (true, 3L) -> (Seq(Some(3.0), Some(3.0), Some(6.0), n, Some(9.0)),
         Seq(Some(1.0), Some(1.0), Some(7.0), n, Some(9.0))))
-    val buckets = Seq(None, Some(Duration.ofHours(1)), Some(Duration.ofDays(30)))
+    val buckets = Seq(Duration.ofHours(1), Duration.ofDays(30))
     for (((inclusive, embargoDays), (wantA, wantB)) <- expected) {
       val s = spec(inclusive = inclusive, embargo = Duration.ofDays(embargoDays))
       val ctx = s"inclusive=$inclusive embargo=${embargoDays}d"
       for (strat <- Strategy.RowNumber +: Strategy.UnionAsOf +:
-          buckets.flatten.map(Strategy.UnionAsOfSegmented(_))) {
-        assert(winners(AsOfJoin.join(lbls, ra, s, strat), "value") == wantA, s"$strat $ctx")
-        assert(winners(AsOfJoin.join(lbls, rb, s, strat), "v2") == wantB, s"$strat $ctx")
-      }
-      for (b <- buckets) {
-        val multi = AsOfJoin.carry(lbls, Seq(ra, rb), s, b)
-        assert(winners(multi, "value") == wantA, s"multi bucket=$b $ctx")
-        assert(winners(multi, "v2") == wantB, s"multi bucket=$b $ctx")
+          buckets.map(Strategy.UnionAsOfSegmented(_))) {
+        assert(winners(AsOfJoin.join(lbls, Seq(ra), s, strat), "value") == wantA, s"$strat $ctx")
+        assert(winners(AsOfJoin.join(lbls, Seq(rb), s, strat), "v2") == wantB, s"$strat $ctx")
+        val multi = AsOfJoin.join(lbls, Seq(ra, rb), s, strat)
+        assert(winners(multi, "value") == wantA, s"multi $strat $ctx")
+        assert(winners(multi, "v2") == wantB, s"multi $strat $ctx")
       }
     }
   }
@@ -383,7 +381,7 @@ class AsOfJoinSpec extends SparkFunSuite {
       (1L, "2024-01-09 00:00:00", None: Option[Double])
     ).toDF("user_id", "ft", "value").withColumn("ft", $"ft".cast("timestamp"))
     for (strat <- Seq(Strategy.RowNumber, Strategy.UnionAsOf)) {
-      val out = AsOfJoin.join(labels.filter(col(AsOfJoin.RowIdCol) === 1L), right(f2), spec(), strat)
+      val out = AsOfJoin.join(labels.filter(col(AsOfJoin.RowIdCol) === 1L), Seq(right(f2)), spec(), strat)
       val row = out.collect().head
       // latest row (01-09) wins even though its value is null
       assert(row.getAs[java.sql.Timestamp]("feature_time") == ts("2024-01-09 00:00:00"))

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.engine.{Audit, Build, BuildOptions, Diff, Explain}
 import graft.errors.LeakageError
 import graft.model._
+import graft.operators.AsOfJoin
 
 class AuditDiffSpec extends SparkFunSuite {
   import spark.implicits._
@@ -167,6 +168,69 @@ class AuditDiffSpec extends SparkFunSuite {
     assert(sample.head.getAs[Double]("score__score") == 999.0)
     // clean audit produces no sample
     assert(cleanR.leakySample.isEmpty)
+  }
+
+  test("rebuild audit: multi-feature rebuild through build's batches, Auto and RowNumber") {
+    // two same-source ColumnsMode features (one merged unit) plus a
+    // key-mapped SQL feature with a 1-day embargo on a second source
+    val users = spark.range(1, 30).select(
+      col("id").as("user_id"),
+      (lit(ts("2023-06-01 00:00:00")) + make_dt_interval(col("id"))).as("updated_at"),
+      (col("id") * 2.0).as("score"),
+      concat(lit("T"), col("id") % 3).as("tier"))
+    val txns = spark.range(1, 200).select(
+      (col("id") % 29 + 1).as("uid"),
+      (lit(ts("2023-06-20 00:00:00")) + make_dt_interval(col("id") % 20, col("id") % 24))
+        .as("created_at"),
+      (col("id") % 17).cast("double").as("amount"))
+    val labelsDf = spark.range(1, 30).select(
+      col("id").as("user_id"),
+      (lit(ts("2023-07-01 00:00:00")) + make_dt_interval(col("id") % 5)).as("label_time"),
+      (col("id") % 2 === 0).as("y"))
+    val usersSrc = Source.frame("users", users, Seq("user_id"), "updated_at")
+    val feats = Seq(
+      Feature("fa", usersSrc, ColumnsMode(Map("score" -> "score"))),
+      Feature("fb", usersSrc, ColumnsMode(Map("tier" -> "tier"))),
+      Feature("spend", Source.frame("txns", txns, Seq("uid"), "created_at"),
+        SqlMode("SELECT uid, created_at AS feature_time, amount * 2 AS amt2 FROM {source}"),
+        embargo = java.time.Duration.ofDays(1), keyMapping = Map("user_id" -> "uid")))
+    val lbl = Labels.frame(labelsDf, Seq("user_id"), "label_time", Seq("y"))
+    Seq(AsOfJoin.Strategy.Auto, AsOfJoin.Strategy.RowNumber).foreach { strat =>
+      val opts = BuildOptions(strategy = strat)
+      val built = Build(spark, lbl, feats, opts).df
+      assert(built.filter(col("spend__amt2").isNotNull).count() > 0, s"$strat")
+      val cachedBefore = spark.sparkContext.getPersistentRDDs.size
+      val cleanR = Audit.rebuild(spark, built, feats, Seq("user_id"), "label_time", opts)
+      assert(cleanR.passed, s"$strat ${cleanR.details}")
+      assert(cleanR.details.map(_.feature) == Seq("fa", "fb", "spend"))
+      assert(cleanR.details.map(_.mismatches.keySet) ==
+        Seq(Set("fa__score"), Set("fb__tier"), Set("spend__amt2")), s"$strat")
+      assert(cleanR.leakySample.isEmpty)
+      assert(spark.sparkContext.getPersistentRDDs.size == cachedBefore, s"$strat clean")
+
+      val tampered = built.withColumn("fb__tier",
+        when(col("user_id") === 7, lit("ZZ")).otherwise(col("fb__tier")))
+      val badR = Audit.rebuild(spark, tampered, feats, Seq("user_id"), "label_time", opts)
+      assert(!badR.passed)
+      assert(badR.details.flatMap(_.mismatches).filter(_._2 > 0) == Seq("fb__tier" -> 1L),
+        s"$strat ${badR.details}")
+      assert(badR.details.forall(_.leakyRows == 0))
+      val sample = badR.leakySample.get.collect()
+      assert(sample.map(_.getAs[Long]("user_id")).toSeq == Seq(7L), s"$strat")
+      assert(sample.head.getAs[String]("fb__tier") == "ZZ")
+      assert(spark.sparkContext.getPersistentRDDs.size == cachedBefore, s"$strat tampered")
+    }
+  }
+
+  test("audit json round-trips escaped names and rebuild mismatches") {
+    val name = "a\\b\n\"c"
+    val r = Audit.AuditReport(10L, Seq(Audit.FeatureAuditDetail(name, 0L, 10L, None, None, 0L,
+      Map(s"${name}__v" -> 3L))), None)
+    val parsed = graft.util.Jsons.parseObject(r.toJson).get
+    assert(parsed("passed") == false && parsed("total_rows") == 10L)
+    val f = parsed("features").asInstanceOf[Seq[Map[String, Any]]].head
+    assert(f("feature") == name)
+    assert(f("mismatches") == Map(s"${name}__v" -> 3L))
   }
 
   test("diff: identical frames") {

@@ -34,13 +34,13 @@ class BucketingSpec extends SparkFunSuite {
     val spec = AsOfJoin.Spec(Seq("user_id"), "label_time")
     def right(df: org.apache.spark.sql.DataFrame) =
       AsOfJoin.Right(df, Seq("user_id"), "ts", Seq("value"))
-    val out = AsOfJoin.join(spine, right(bucketed), spec, AsOfJoin.Strategy.UnionAsOf)
+    val out = AsOfJoin.join(spine, Seq(right(bucketed)), spec, AsOfJoin.Strategy.UnionAsOf)
     // correctness against the unbucketed path
     val plain = AsOfJoin.join(
       ev.filter(col("event_id") % 20 === 0).select(
         col("event_id").as(AsOfJoin.RowIdCol),
         col("user_id"), col("ts").as("label_time")),
-      right(ev), spec, AsOfJoin.Strategy.UnionAsOf)
+      Seq(right(ev)), spec, AsOfJoin.Strategy.UnionAsOf)
     assert(out.exceptAll(plain).isEmpty && plain.exceptAll(out).isEmpty)
 
     val exchanges = out.queryExecution.executedPlan.toString

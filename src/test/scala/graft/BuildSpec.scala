@@ -410,6 +410,53 @@ class BuildSpec extends SparkFunSuite {
     assert(merged.auditPassed)
   }
 
+  test("a ColumnsMode feature outputs exactly its declared columns, alone or merged") {
+    // source keys (user_id, region) vs label keys (user_id): the unmapped
+    // source key is a key, never a value column
+    val regional = users.withColumn("region", col("country"))
+      .withColumn("score", col("user_id") * 2.0)
+    val src = Source.frame("regional", regional, Seq("user_id", "region"), "updated_at")
+    val a = Feature("a", src, ColumnsMode(Map("score" -> "score")))
+    val b = Feature("b", src, ColumnsMode(Map("tier" -> "country")))
+    val opts = BuildOptions(maxLookback = java.time.Duration.ofDays(3650))
+    def aCols(r: graft.engine.BuildResult) = r.columns.filter(_.startsWith("a__"))
+    val alone = Build(spark, labels, Seq(a), opts)
+    val merged = Build(spark, labels, Seq(a, b), opts)
+    assert(aCols(alone) == Seq("a__score"))
+    assert(aCols(merged) == Seq("a__score"))
+    assert(alone.df.select("user_id", "a__score").exceptAll(
+      merged.df.select("user_id", "a__score")).isEmpty)
+
+    // the manifest records the same output columns
+    val dir = java.nio.file.Files.createTempDirectory("graft_outcols")
+    labelsDf.write.parquet(s"$dir/labels.parquet")
+    regional.write.parquet(s"$dir/regional.parquet")
+    val store = new graft.store.Store(s"$dir/.graft").init()
+    val psrc = Source.parquet("regional", s"$dir/regional.parquet",
+      Seq("user_id", "region"), "updated_at")
+    Build(spark, Labels.parquet(s"$dir/labels.parquet", Seq("user_id"), "label_time",
+      Seq("churned")), Seq(a.copy(source = psrc), b.copy(source = psrc)),
+      opts.copy(output = Some(s"$dir/out.parquet"), store = Some(store)))
+    val manifest = graft.util.Jsons.parseObject(store.listManifests()
+      .filter(_.startsWith("build_")).flatMap(store.loadManifest).head).get
+    assert(graft.util.Jsons.at(manifest, "features", "a", "output_columns") ==
+      Some(Vector("a__score")))
+    assert(graft.util.Jsons.at(manifest, "features", "b", "output_columns") ==
+      Some(Vector("b__tier")))
+  }
+
+  test("reserved output names raise ConfigError alone and merged") {
+    val src = Source.frame("users", users, Seq("user_id"), "updated_at")
+    val other = Feature("other", src, ColumnsMode(Map("country" -> "country")))
+    Seq("feature_time", "user_id").foreach { reserved =>
+      val bad = Feature("a", src, ColumnsMode(Map(reserved -> "country")))
+      val alone = intercept[ConfigError](Build(spark, labels, Seq(bad)))
+      assert(alone.getMessage.contains(s"'$reserved'"))
+      val merged = intercept[ConfigError](Build(spark, labels, Seq(bad, other)))
+      assert(merged.getMessage.contains(s"'$reserved'"))
+    }
+  }
+
   test("observe-fused unsorted write matches the sorted cache path") {
     // regression: the Observation that fuses stats into the write job
     // must count rows exactly once — a global orderBy re-executes its
@@ -469,6 +516,34 @@ class BuildSpec extends SparkFunSuite {
         "users", s"$dir/users.parquet", Seq("user_id"), "updated_at"))))
     val r4 = Build(spark, lbl, Seq(retimed), opts)
     assert(r4.features.head.matched >= 0) // not served from the old cache
+  }
+
+  test("store: a feature-cache entry in the bare-name layout is not served") {
+    // stores filled before ColumnsMode projections were namespaced hold
+    // (source keys, feature_time, bare output names) under the key of the
+    // `columns:` definition; a build must miss that entry, not select
+    // `user_country__country` from it
+    val dir = java.nio.file.Files.createTempDirectory("graft_cache_layout")
+    labelsDf.write.parquet(s"$dir/labels.parquet")
+    users.write.parquet(s"$dir/users.parquet")
+    val store = new graft.store.Store(s"$dir/.graft").init()
+    val lbl = Labels.parquet(s"$dir/labels.parquet", Seq("user_id"), "label_time", Seq("churned"))
+    val feat = Feature("user_country",
+      Source.parquet("users", s"$dir/users.parquet", Seq("user_id"), "updated_at"),
+      ColumnsMode(Map("country" -> "country")))
+    val bareKey = store.featureCacheKey(
+      Build.featureDefinition(feat).replace("columns-ns:", "columns:"),
+      store.contentHash(s"$dir/users.parquet"), feat.embargo.getSeconds)
+    store.saveFeatureCache(users.select(col("user_id"), col("updated_at").as("feature_time"),
+      lit("stale").as("country")), bareKey)
+
+    val opts = BuildOptions(maxLookback = java.time.Duration.ofDays(3650))
+    val viaStore = Build(spark, lbl, Seq(feat),
+      opts.copy(output = Some(s"$dir/out.parquet"), store = Some(store)))
+    val fresh = Build(spark, lbl, Seq(feat), opts)
+    assert(viaStore.columns == fresh.columns)
+    assert(viaStore.df.exceptAll(fresh.df).isEmpty && fresh.df.exceptAll(viaStore.df).isEmpty)
+    assert(viaStore.df.filter(col("user_country__country") === "stale").isEmpty)
   }
 
   test("store: probe validates output on disk; splits/sort participate in the key") {

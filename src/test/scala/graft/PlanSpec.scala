@@ -91,7 +91,7 @@ class PlanSpec extends SparkFunSuite {
       col("user_id"), col("ts").as("label_time"))
     val spec = graft.operators.AsOfJoin.Spec(Seq("user_id"), "label_time")
     val right = graft.operators.AsOfJoin.Right(ev, Seq("user_id"), "ts", Seq("value"))
-    val plan = planOf(graft.operators.AsOfJoin.join(spine, right, spec,
+    val plan = planOf(graft.operators.AsOfJoin.join(spine, Seq(right), spec,
       graft.operators.AsOfJoin.Strategy.UnionAsOf))
     assert(plan.contains("Window"), "carry-forward window missing")
     assert(!plan.contains("SortMergeJoin") && !plan.contains("BroadcastHashJoin") &&
@@ -125,6 +125,52 @@ class PlanSpec extends SparkFunSuite {
     }
     assert(carries.size == 2, s"one carry window per batch expected:\n${df.queryExecution.analyzed}")
     carries.foreach(w => assert(w.orderSpec.size == 2, s"carry window orders by ${w.orderSpec}"))
+  }
+
+  test("rebuild audit of two join-compatible features plans one carry window") {
+    // two sources, same join parameters: the rebuild joins them as ONE
+    // batch, exactly like the build, so the aggregation query's plan holds
+    // a single carry Window (one per feature when rebuild joined alone)
+    val ev = SparkEntry.events(spark, sf)
+    val labelsDf = ev.filter(col("event_type") === "purchase").select(
+      col("user_id"), col("ts").as("label_time"), col("value").as("label_value"))
+    val feats = Seq(
+      graft.model.Feature("f_val",
+        graft.model.Source.frame("ev_a", ev, Seq("user_id"), "ts"),
+        graft.model.ColumnsMode(Map("value" -> "value")), onDuplicate = graft.model.OnDuplicate.KeepAny),
+      graft.model.Feature("f_type",
+        graft.model.Source.frame("ev_b", ev, Seq("user_id"), "ts"),
+        graft.model.ColumnsMode(Map("event_type" -> "event_type")),
+        onDuplicate = graft.model.OnDuplicate.KeepAny))
+    val opts = graft.engine.BuildOptions(collectStats = false, verify = false)
+    // audit the written parquet: the dataset's own lineage adds no window
+    val out = java.nio.file.Files.createTempDirectory("graft_rebuild_plan").toString + "/t.parquet"
+    graft.engine.Build(spark, graft.model.Labels.frame(labelsDf,
+      Seq("user_id"), "label_time", Seq("label_value")), feats, opts.copy(output = Some(out)))
+    val built = spark.read.parquet(out)
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[
+      org.apache.spark.sql.catalyst.plans.logical.LogicalPlan]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(funcName: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          durationNs: Long): Unit = plans.add(qe.analyzed)
+      def onFailure(funcName: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      graft.engine.Audit.rebuild(spark, built, feats, Seq("user_id"), "label_time", opts)
+      org.apache.spark.sql.graft.ListenerBridge.drain(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.catalyst.expressions.aggregate.Last
+    val aggQueries = plans.asScala.toSeq.filter(_.find(
+      _.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.Aggregate]).isDefined)
+    assert(aggQueries.size == 1, s"one aggregation query expected, got ${aggQueries.size}")
+    val carries = aggQueries.head.collect {
+      case w: org.apache.spark.sql.catalyst.plans.logical.Window
+          if w.windowExpressions.exists(_.find(_.isInstanceOf[Last]).isDefined) => w
+    }
+    assert(carries.size == 1, s"one carry window expected:\n${aggQueries.head}")
   }
 
   test("text analysis is a single scan-side pass (no shuffles)") {

@@ -62,7 +62,7 @@ class PropertySpec extends AnyFunSuite {
         else if (embargoH % 2 == 0) AsOfJoin.Strategy.UnionAsOf
         else AsOfJoin.Strategy.UnionAsOfSegmented(Duration.ofHours(48))
       val out = AsOfJoin.join(lblDf,
-        AsOfJoin.Right(featDf, Seq("user_id"), "ft", Seq("v")), spec, strat).collect()
+        Seq(AsOfJoin.Right(featDf, Seq("user_id"), "ft", Seq("v"))), spec, strat).collect()
 
       val allLabelsKept = out.length == lbls.size
       val invariantHolds = out.forall { r =>
@@ -155,10 +155,10 @@ class PropertySpec extends AnyFunSuite {
           embargo = Duration.ofHours(embargoH.toLong),
           maxLookback = Some(Duration.ofDays(365)),
           maxStaleness = staleDays.map(Duration.ofDays))
-        val plain = AsOfJoin.carry(lblDf, rights, spec)
+        val plain = AsOfJoin.join(lblDf, rights, spec, AsOfJoin.Strategy.UnionAsOf)
           .collect().map(_.toString).sorted.toSeq
-        val seg = AsOfJoin.carry(lblDf, rights, spec,
-          Some(Duration.ofHours(bucketH)))
+        val seg = AsOfJoin.join(lblDf, rights, spec,
+          AsOfJoin.Strategy.UnionAsOfSegmented(Duration.ofHours(bucketH)))
           .collect().map(_.toString).sorted.toSeq
         plain.length == lbls.size && plain == seg
     }, 15)
