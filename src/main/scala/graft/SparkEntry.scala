@@ -199,29 +199,29 @@ object SparkEntry {
         col("user_id"),
         col("ts").as("label_time"))
 
-  private def pitSpec(
-      inclusive: Boolean = false,
-      embargoDays: Int = 0,
-      stalenessDays: Int = 0): AsOfJoin.Spec =
+  private def pitSpec(inclusive: Boolean = false): AsOfJoin.Spec =
     AsOfJoin.Spec(
       leftKeys = Seq("user_id"),
       leftTime = "label_time",
       inclusive = inclusive,
+      maxLookback = Some(java.time.Duration.ofDays(365)))
+
+  /** The event history as the PIT-join right side, ties broken by
+    * `event_id` like the oracle's `ORDER BY f.ts DESC, f.event_id DESC`. */
+  private def pitRight(history: DataFrame, key: String = "user_id",
+      embargoDays: Int = 0, stalenessDays: Int = 0): AsOfJoin.Right =
+    AsOfJoin.Right(history, Seq(key), "ts", Seq("value"), tieBreakers = Seq("event_id"),
       embargo = java.time.Duration.ofDays(embargoDays.toLong),
-      maxLookback = Some(java.time.Duration.ofDays(365)),
       maxStaleness =
         if (stalenessDays > 0) Some(java.time.Duration.ofDays(stalenessDays.toLong))
         else None)
 
-  /** The event history as the PIT-join right side, ties broken by
-    * `event_id` like the oracle's `ORDER BY f.ts DESC, f.event_id DESC`. */
-  private def pitRight(history: DataFrame, key: String = "user_id"): AsOfJoin.Right =
-    AsOfJoin.Right(history, Seq(key), "ts", Seq("value"), tieBreakers = Seq("event_id"))
-
   private def pit(s: SparkSession, dir: String, spec: AsOfJoin.Spec,
-      strategy: AsOfJoin.Strategy): DataFrame =
+      strategy: AsOfJoin.Strategy, embargoDays: Int = 0, stalenessDays: Int = 0): DataFrame =
     AsOfJoin
-      .join(eventSpine(s, dir), Seq(pitRight(events(s, dir))), spec, strategy)
+      .join(eventSpine(s, dir),
+        Seq(pitRight(events(s, dir), embargoDays = embargoDays, stalenessDays = stalenessDays)),
+        spec, strategy)
       .select(
         col(AsOfJoin.RowIdCol).as("label_event_id"),
         col("user_id"), col("label_time"), col("feature_time"),
@@ -268,13 +268,13 @@ object SparkEntry {
       pit(s, dir, pitSpec(), AsOfJoin.Strategy.RowNumber)),
     // J2 + P5 embargo: upper bound shifted by 3 days
     "q_pit_embargo" -> ((s, dir) =>
-      pit(s, dir, pitSpec(embargoDays = 3), AsOfJoin.Strategy.RowNumber)),
+      pit(s, dir, pitSpec(), AsOfJoin.Strategy.RowNumber, embargoDays = 3)),
     // J2 inclusive mode (<=)
     "q_pit_inclusive" -> ((s, dir) =>
       pit(s, dir, pitSpec(inclusive = true), AsOfJoin.Strategy.RowNumber)),
     // J2 + P7 max_staleness floor
     "q_pit_staleness" -> ((s, dir) =>
-      pit(s, dir, pitSpec(stalenessDays = 7), AsOfJoin.Strategy.RowNumber)),
+      pit(s, dir, pitSpec(), AsOfJoin.Strategy.RowNumber, stalenessDays = 7)),
     // J1 analog: union + carry-forward strategy — same oracle as strict
     "q_pit_union" -> ((s, dir) =>
       pit(s, dir, pitSpec(), AsOfJoin.Strategy.UnionAsOf)),

@@ -27,7 +27,8 @@ final case class BuildOptions(
     /** Eager duplicate (key,ts) detection per feature (engine.py:586-627).
       * An extra job per distinct source; disable for trusted inputs. */
     checkDuplicates: Boolean = true,
-    /** Collect matched/missing per-feature stats (one extra agg job). */
+    /** Collect matched/missing per-feature stats. With an output they
+      * ride the write job; with no output they cost one extra agg job. */
     collectStats: Boolean = true,
     /** Deterministic full sort of the result (reference O1). At cluster
       * scale flip off: a total sort is a range-shuffle you rarely want. */
@@ -361,11 +362,13 @@ object Build {
     * on one source with the same join parameters, projected to its join
     * `keys`, `feature_time` and every feature's namespaced value columns
     * (`valueCols`, one list per feature). `cached` marks a frame served
-    * from the store's feature cache. */
+    * from the store's feature cache. The group's embargo and staleness
+    * travel with its right side. */
   private[engine] final case class JoinUnit(features: Seq[Feature], df: DataFrame,
       keys: Seq[String], valueCols: Seq[Seq[String]], cached: Boolean) {
     def right: AsOfJoin.Right = AsOfJoin.Right(df, keys, FeatureTime, valueCols.flatten,
-      features.map(f => Names.featureTimeCol(f.name)))
+      features.map(f => Names.featureTimeCol(f.name)),
+      embargo = features.head.embargo, maxStaleness = features.head.maxStaleness)
   }
 
   private[engine] object JoinUnit {
@@ -435,11 +438,12 @@ object Build {
       case _ => (compute, false)
     }
 
-  /** The batch plan: units whose join parameters agree — embargo,
-    * staleness, and unionable key/time column types — share ONE
-    * [[AsOfJoin.join]], even across different sources: under a carry
-    * strategy the N-feature build costs one exchange instead of N, and
-    * the batch's features skip the rowid re-join at assembly.
+  /** The batch plan: units whose key and feature-time column types
+    * agree share ONE [[AsOfJoin.join]], even across different sources
+    * and under different embargoes and staleness limits (each right side
+    * carries its own): under a carry strategy the N-feature build costs
+    * one exchange instead of N, and the batch's features skip the rowid
+    * re-join at assembly.
     *
     * Width cap: the carry's unioned frame pads every row to the batch's
     * FULL value-column set (UnsafeRow spends 8 bytes per slot, null or
@@ -466,11 +470,9 @@ object Build {
       if (cur.nonEmpty) out += cur
       out.toSeq
     }
-    units.groupBy { u =>
-      val f0 = u.features.head
-      (f0.embargo, f0.maxStaleness, u.keys.map(k => u.df.schema(k).dataType),
-        u.df.schema(FeatureTime).dataType)
-    }.values.toSeq.flatMap(packByWidth).sortBy(-_.size)
+    units.groupBy(u => (u.keys.map(k => u.df.schema(k).dataType),
+      u.df.schema(FeatureTime).dataType))
+      .values.toSeq.flatMap(packByWidth).sortBy(-_.size)
   }
 
   /** The assemble phase (J4): each batch joins as of `spine` — its
@@ -487,8 +489,7 @@ object Build {
       us.foreach(_.features.foreach(f => options.progress("join", f.name)))
       // Auto probes the batch's unioned key histogram for a hot key
       // (size-gated — small batches skip the probe and pay nothing)
-      AsOfJoin.join(left, us.map(_.right),
-        joinSpec(labelKeys, labelTime, us.head.features.head, options),
+      AsOfJoin.join(left, us.map(_.right), joinSpec(labelKeys, labelTime, options),
         options.strategy, options.autoConfig)
     }
     batches.tail.foldLeft(join(batches.head, spine)) { (acc, us) =>
@@ -502,7 +503,8 @@ object Build {
       labelRange: Option[(java.sql.Timestamp, java.sql.Timestamp)])
 
   /** The stats + write phase: the final projection and (optional) write,
-    * with all per-feature stats and invariant checks in ONE aggregation. */
+    * with all per-feature stats and invariant checks in ONE aggregation,
+    * which rides the write whenever there is an output. */
   private def statsAndWrite(spark: SparkSession, labels: Labels, features: Seq[Feature],
       options: BuildOptions, assembled: DataFrame, valueCols: Seq[String]): Written = {
     val skipped =
@@ -515,9 +517,10 @@ object Build {
     val needStats = options.collectStats || options.verify || options.splits.nonEmpty
     val statAggs: Seq[Column] = features.flatMap { f =>
       val ft = col(Names.featureTimeCol(f.name))
-      val upperRef =
-        if (f.embargo.isZero) lt
-        else lt - expr(Durations.toSqlInterval(f.embargo))
+      val ltType = assembled.schema(labels.labelTime).dataType
+      val upperRef = AsOfJoin.labelMinus(lt, ltType,
+        AsOfJoin.timeType(ltType, assembled.schema(Names.featureTimeCol(f.name)).dataType),
+        f.embargo)
       val violation =
         if (options.join == "inclusive") ft > upperRef else ft >= upperRef
       Seq(
@@ -552,38 +555,37 @@ object Build {
     }
 
     // ---- final projection ------------------------------------------
+    // the columns the output and the stats read: the rowid and anything
+    // else the assembly carried stop here, before any cache or sort
     val outCols = labels.keys ++ Seq(labels.labelTime) ++ labels.target ++ valueCols
+    val framed = skipped.select(
+      (outCols ++ features.map(f => Names.featureTimeCol(f.name))).distinct.map(col): _*)
+    def ordered(base: DataFrame): DataFrame =
+      if (options.sortResult) base.orderBy((labels.keys :+ labels.labelTime).map(col): _*)
+      else base
     def finishFrame(base: DataFrame): DataFrame = {
       val projected = base.select(outCols.map(col): _*)
-      val sorted =
-        if (options.sortResult)
-          projected.orderBy((labels.keys :+ labels.labelTime).map(col): _*)
-        else projected
-      if (options.flattenColumns) flatten(sorted)
-      else sorted
+      if (options.flattenColumns) flatten(projected) else projected
     }
 
     // ---- write + stats in ONE pass ---------------------------------
-    // With an unsorted output, the stats/invariant aggregation rides
-    // the write job as an Observation (CollectMetrics): the assembled
-    // frame is computed exactly once, never cached, and the reference's
-    // "3 queries per feature" collapse to zero extra jobs. Splits then
-    // filter the WRITTEN parquet (label_time predicate pushdown) rather
-    // than recomputing the join per split.
+    // With an output, the stats/invariant aggregation rides the write
+    // job as an Observation (CollectMetrics): the reference's "3 queries
+    // per feature" collapse to zero extra jobs. Splits then filter the
+    // WRITTEN parquet (label_time predicate pushdown) rather than
+    // recomputing the join per split.
     //
-    // A SORTED output cannot take this path: a global orderBy samples
-    // its child to build range boundaries, so the observed subtree
-    // executes twice per action and CollectMetrics double-counts.
-    // There the frame is cached (the sampling pass then reads the
-    // cache instead of recomputing every join) and aggregated
-    // separately — as is the no-output path, whose returned df's
-    // lineage must read the materialized rowids anyway.
-    def aggViaCache(frame: DataFrame, result: DataFrame): Written = {
-      val row = frame.agg(aggCols.head, aggCols.tail: _*).head()
-      decodeStats(result, row.schema.fieldNames.zipWithIndex.map { case (f, i) =>
-        f -> (if (row.isNullAt(i)) null else row.get(i))
-      }.toMap[String, Any])
-    }
+    // A global orderBy samples its child to build range boundaries, so
+    // everything below the sort executes twice per action. The
+    // observation therefore sits ABOVE the sort (cached -> orderBy ->
+    // observe -> project -> flatten -> write): the sampling pass never
+    // reaches it and each row is counted once. A sorted output is cached
+    // so that the sampling pass reads the cache instead of recomputing
+    // every join; an unsorted one is computed exactly once, never cached.
+    //
+    // With no output, the returned df's lineage must read the
+    // materialized rowids anyway: the frame is cached and aggregated
+    // separately.
     def writeSplits(out: String): Unit = {
       if (options.splits.isEmpty) return
       // schema recorded at write time — re-open without an inference job
@@ -596,35 +598,27 @@ object Build {
       }
     }
     options.output match {
-      case Some(out) if !options.sortResult =>
+      case Some(out) =>
+        val base = if (options.sortResult) framed.cache() else framed
         val obs = org.apache.spark.sql.Observation()
-        val fused = finishFrame(skipped.observe(obs, aggCols.head, aggCols.tail: _*))
+        val fused = finishFrame(ordered(base).observe(obs, aggCols.head, aggCols.tail: _*))
         options.progress("write", "")
         fused.write.mode("overwrite").parquet(out)
         graft.sources.SchemaCache.put(out, fused.schema)
         options.progress("verify", "") // the stats/invariant agg rode the write
         val w = decodeStats(fused, obs.get)
         writeSplits(out)
-        w
-      case Some(out) =>
-        val cached = skipped.cache()
-        options.progress("verify", "")
-        val sorted = finishFrame(cached)
-        val w = aggViaCache(cached, sorted)
-        options.progress("write", "")
-        sorted.write.mode("overwrite").parquet(out)
-        graft.sources.SchemaCache.put(out, sorted.schema)
-        writeSplits(out)
-        cached.unpersist()
+        if (options.sortResult) base.unpersist()
         w
       case None =>
         // cacheOnce: this cache backs the returned frame and stays
         // resident past the build, so re-running an identical
         // no-output build (bench reps) re-derives this exact plan —
         // reuse the live entry instead of re-issuing cache()
-        val cached = graft.util.Caching.cacheOnce(skipped)
+        val cached = graft.util.Caching.cacheOnce(framed)
         options.progress("verify", "")
-        aggViaCache(cached, finishFrame(cached))
+        val row = cached.agg(aggCols.head, aggCols.tail: _*).head()
+        decodeStats(finishFrame(ordered(cached)), row.getValuesMap[Any](row.schema.fieldNames.toSeq))
     }
   }
 
@@ -752,17 +746,15 @@ object Build {
     gaps ++ coverage
   }
 
-  /** The as-of parameters of feature `f` against labels keyed by
+  /** The as-of parameters every feature shares, against labels keyed by
     * `labelKeys` at `labelTime`. */
-  private def joinSpec(labelKeys: Seq[String], labelTime: String, f: Feature,
+  private def joinSpec(labelKeys: Seq[String], labelTime: String,
       options: BuildOptions): AsOfJoin.Spec =
     AsOfJoin.Spec(
       leftKeys = labelKeys,
       leftTime = labelTime,
       inclusive = options.join == "inclusive",
-      embargo = f.embargo,
-      maxLookback = Some(options.maxLookback),
-      maxStaleness = f.maxStaleness)
+      maxLookback = Some(options.maxLookback))
 
   // ---- feature computation (3 modes) -------------------------------
 

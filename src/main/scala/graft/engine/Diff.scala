@@ -1,6 +1,6 @@
 package graft.engine
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.NumericType
 
@@ -9,7 +9,8 @@ import org.apache.spark.sql.types.NumericType
   * changes under numeric tolerance.
   * Mirrors `/root/reference/src/timefence/engine.py:1972-2089`, but
   * folds the reference's per-column COUNT queries into one aggregation
-  * pass over a single inner join.
+  * pass over a single inner join, whose inputs also count their own rows
+  * (one action per diff).
   */
 object Diff {
 
@@ -107,7 +108,17 @@ object Diff {
     val removed = (oldCols -- newCols).toSeq.sorted
     val common = commonColumns(oldDf, newDf, joinCols)
 
-    val row = comparisonFrame(oldDf, newDf, keys, labelTime, atol, rtol).head()
+    // each input counts its rows as it streams into the join: two
+    // Observations on the one action instead of two more count() jobs
+    val oldObs = Observation()
+    val newObs = Observation()
+    def observed(df: DataFrame, obs: Observation) = df.observe(obs, count(lit(1)).as("rows"))
+    val row = comparisonFrame(observed(oldDf, oldObs), observed(newDf, newObs),
+      keys, labelTime, atol, rtol).head()
+    // an input the plan never ran (the join was proven empty without it)
+    // reports no metrics: count that side directly
+    def rows(obs: Observation, df: DataFrame): Long =
+      obs.get.get("rows").map(_.asInstanceOf[Long]).getOrElse(df.count())
     val commonRows = row.getLong(0)
     val colDiffs = common.zipWithIndex.map { case (c, i) =>
       val base = 1 + 4 * i
@@ -117,6 +128,6 @@ object Diff {
       ColumnDiff(c, lng(base), lng(base + 1), dbl(base + 2), dbl(base + 3))
     }
 
-    DiffResult(oldDf.count(), newDf.count(), commonRows, added, removed, colDiffs)
+    DiffResult(rows(oldObs, oldDf), rows(newObs, newDf), commonRows, added, removed, colDiffs)
   }
 }

@@ -5,7 +5,8 @@ import java.time.Duration
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{StructField, StructType}
+import org.apache.spark.sql.types.{DataType, DateType, StructField, StructType, TimestampNTZType,
+  TimestampType}
 
 import graft.util.Durations
 
@@ -16,6 +17,10 @@ import graft.util.Durations
   *   feature_time <= label_time - embargo      (inclusive)
   *   feature_time >= label_time - maxLookback  (lower bound)
   *   feature_time >= label_time - maxStaleness (optional, tighter floor)
+  *
+  * `embargo` and `maxStaleness` belong to each right side ([[Right]]);
+  * the strictness and the lookback are shared by the whole join
+  * ([[Spec]]), so one join can serve rights with different bounds.
   *
   * Semantics follow the reference's two join strategies
   * (`/root/reference/src/timefence/engine.py:762-925`), re-expressed
@@ -32,10 +37,11 @@ import graft.util.Durations
   *
   *  - [[carry]] ([[Strategy.UnionAsOf]], and with a time bucket
   *    [[Strategy.UnionAsOfSegmented]]): the scale path Spark lacks
-  *    natively — union label rows (time-shifted by embargo) with the
-  *    feature rows of one or more right sides, sort once per entity key
-  *    by time, carry the last whole feature row of each side forward as
-  *    a struct, keep label rows, then null-mask values that violate the
+  *    natively — union label rows with the feature rows of one or more
+  *    right sides (each feature row time-shifted forward by its own
+  *    right's embargo), sort once per entity key by time, carry the last
+  *    whole feature row of each side forward as a struct, keep label
+  *    rows, then null-mask values that violate each side's
   *    lookback/staleness floor (the reference applies lower bounds as
   *    post-hoc masking on its ASOF path too, engine.py:905-917). One
   *    shuffle by entity key, no candidate blow-up — survives labels with
@@ -88,15 +94,14 @@ object AsOfJoin {
       targetRowsPerBucket: Long = 250000L,
       probeSeed: Long = 42L)
 
-  /** The label side and the temporal bounds every right side of one
-    * join shares. */
+  /** The label side and what every right side of one join shares: the
+    * strictness of the upper bound and the lookback floor. Embargo and
+    * staleness are per side ([[Right]]). */
   final case class Spec(
       leftKeys: Seq[String],
       leftTime: String,
       inclusive: Boolean = false,
-      embargo: Duration = Duration.ZERO,
-      maxLookback: Option[Duration] = Some(Duration.ofDays(365)),
-      maxStaleness: Option[Duration] = None
+      maxLookback: Option[Duration] = Some(Duration.ofDays(365))
   ) {
     require(leftKeys.nonEmpty, "as-of join needs a non-empty key list")
   }
@@ -107,17 +112,39 @@ object AsOfJoin {
     * merged into one frame share one carry); value columns keep their
     * names, so the caller namespaces them when sides could collide.
     * `tieBreakers` are further `df` columns ordering rows of equal
-    * `time`: the greatest tuple wins, a null ranks lowest. */
+    * `time`: the greatest tuple wins, a null ranks lowest. `embargo`
+    * moves this side's upper bound to `label_time - embargo`;
+    * `maxStaleness` floors it at `label_time - maxStaleness`, on top of
+    * the shared [[Spec.maxLookback]]. */
   final case class Right(
       df: DataFrame,
       keys: Seq[String],
       time: String,
       valueCols: Seq[String],
       timeOuts: Seq[String] = Seq("feature_time"),
-      tieBreakers: Seq[String] = Nil)
+      tieBreakers: Seq[String] = Nil,
+      embargo: Duration = Duration.ZERO,
+      maxStaleness: Option[Duration] = None) {
+    /** The lower bounds of this side: the shared lookback, then its own
+      * staleness. */
+    private[operators] def floors(spec: Spec): Seq[Duration] =
+      (spec.maxLookback ++ maxStaleness).toSeq
+  }
 
-  private def minusInterval(c: Column, d: Duration): Column =
-    if (d.isZero) c else c - expr(Durations.toSqlInterval(d))
+  /** `c` (of type `t`) moved by the exact duration `d`, back when `d`
+    * is negative. Spark's day-time interval arithmetic on TIMESTAMP adds
+    * calendar days in the session zone — 23 or 25 hours across a DST
+    * transition — so a TIMESTAMP moves by microseconds instead.
+    * TIMESTAMP_NTZ arithmetic is wall-clock and already exact; a DATE
+    * moves by whole days. Exact moves are invertible, which the carry's
+    * shifted sort relies on. */
+  private def shift(c: Column, t: DataType, d: Duration): Column =
+    if (d.isZero) c
+    else if (t == TimestampType)
+      timestamp_micros(unix_micros(c) + lit(Math.multiplyExact(d.getSeconds, 1000000L) +
+        d.getNano / 1000))
+    else if (d.isNegative) c - expr(Durations.toSqlInterval(d.negated))
+    else c + expr(Durations.toSqlInterval(d))
 
   /** Bucket key for the segmented carry. `unix_micros` only accepts
     * the tz-aware TIMESTAMP type, so naive (TIMESTAMP_NTZ — e.g.
@@ -129,6 +156,34 @@ object AsOfJoin {
     * are identical for any bucketing — so the cast is safe here even
     * where value-preserving audits (Audit.tsNorm) must guard DST. */
   private def bucketMicros(c: Column): Column = unix_micros(c.cast("timestamp"))
+
+  private val DatetimeTypes: Set[DataType] = Set(DateType, TimestampType, TimestampNTZType)
+
+  /** The type label and feature times of different types compare in,
+    * the one Spark's union widens them to: a DATE meets a timestamp as
+    * that timestamp type, and naive meets aware as aware. Any other mix
+    * keeps the first type; only datetimes are ever cast to it. */
+  def timeType(types: DataType*): DataType = types.reduce { (a, b) =>
+    if (a == b || !DatetimeTypes(a) || !DatetimeTypes(b)) a
+    else if (a == DateType) b
+    else if (b == DateType) a
+    else TimestampType
+  }
+
+  private def asTime(c: Column, t: DataType, s: DataType): Column =
+    if (t == s || !DatetimeTypes(t)) c else c.cast(s)
+
+  /** `label_time - d` (`lt` of type `ltType`) computed in the
+    * comparison type `s` ([[timeType]]): a DATE label meets a timestamp
+    * feature at its midnight before `d` moves it, the placement the
+    * carry's sort uses. Every bound (embargo, lookback, staleness) and
+    * the build's invariant check go through here, which keeps every
+    * strategy on one answer. */
+  def labelMinus(lt: Column, ltType: DataType, s: DataType, d: Duration): Column =
+    shift(asTime(lt, ltType, s), s, d.negated)
+
+  private def joinTimeType(labels: DataFrame, rights: Seq[Right], spec: Spec): DataType =
+    timeType(labels.schema(spec.leftTime).dataType +: rights.map(r => r.df.schema(r.time).dataType): _*)
 
   /** Internal rowid column identifying label rows across the join. */
   val RowIdCol = "__label_rowid"
@@ -142,7 +197,9 @@ object AsOfJoin {
       strategy: Strategy = Strategy.Auto,
       auto: AutoConfig = AutoConfig()): DataFrame =
     strategy match {
-      case Strategy.RowNumber             => rights.foldLeft(labels)(rowNumber(_, _, spec))
+      case Strategy.RowNumber             =>
+        val s = joinTimeType(labels, rights, spec)
+        rights.foldLeft(labels)(rowNumber(_, _, spec, s))
       case Strategy.UnionAsOf             => carry(labels, rights, spec)
       case Strategy.UnionAsOfSegmented(b) => carry(labels, rights, spec, Some(b))
       case Strategy.Auto                  => join(labels, rights, spec, autoStrategy(rights, auto))
@@ -288,7 +345,8 @@ object AsOfJoin {
     * downstream consumer shares one numbering — SURVEY §7.3).
     * Output: all label columns + `timeOuts` + valueCols.
     */
-  private def rowNumber(labels: DataFrame, right: Right, spec: Spec): DataFrame = {
+  private def rowNumber(labels: DataFrame, right: Right, spec: Spec,
+      timeT: DataType): DataFrame = {
     requireJoinable(labels, Seq(right), spec)
     // Rename the right side up-front so self-joins (labels and features
     // derived from the same frame) never hit ambiguous references.
@@ -302,10 +360,11 @@ object AsOfJoin {
     )
 
     val lt = labels(spec.leftTime)
+    val ltType = labels.schema(spec.leftTime).dataType
     val ft = feat(FtCol)
-    val upperRef = minusInterval(lt, spec.embargo)
+    val upperRef = labelMinus(lt, ltType, timeT, right.embargo)
     val upper = if (spec.inclusive) ft <= upperRef else ft < upperRef
-    val bounds = (spec.maxLookback ++ spec.maxStaleness).map(d => ft >= minusInterval(lt, d))
+    val bounds = right.floors(spec).map(d => ft >= labelMinus(lt, ltType, timeT, d))
     val keyCond = keyAliases.zip(spec.leftKeys).map { case (a, lk) => labels(lk) === feat(a) }
     val cond = (keyCond :+ upper) ++ bounds
 
@@ -321,10 +380,15 @@ object AsOfJoin {
   }
 
   /** The union carry: N as-of joins that share `spec` — but may come
-    * from N DIFFERENT sources — in ONE shuffle + ONE window pass.
+    * from N DIFFERENT sources, under N different embargoes and
+    * staleness limits — in ONE shuffle + ONE window pass.
     *
-    * Label rows (time-shifted by embargo) and every right's feature
-    * rows in one frame; each right carries its whole feature row as its
+    * Label rows at their own time and every right's feature rows in one
+    * frame, each feature row sorted at its time plus its own right's
+    * embargo: `ft + e < lt` ⇔ `ft < lt - e`. Every bound moves times by
+    * an exact duration ([[shift]]) in one comparison type ([[timeType]]),
+    * so the two forms agree under any session zone, DST included. Each right
+    * carries its whole feature row as its
     * own struct slot (null on every other row), and the single sorted
     * window computes one `last(_, ignoreNulls)` per slot — Spark
     * evaluates all N carries in one Window operator over one sort. A
@@ -341,12 +405,12 @@ object AsOfJoin {
     * with nulls first — so the deterministic winner (max tie breaker)
     * is carried last. Strict: at equal sort time the label row orders
     * BEFORE the feature row, so the carry at the label row cannot see
-    * a feature with feature_time == label_time - embargo. Inclusive:
+    * a feature with feature_time + embargo == label_time. Inclusive:
     * the feature orders first and is visible. `last()` over
     * (unboundedPreceding, currentRow) then implements < vs <=. Lower
-    * bounds (lookback/staleness) are applied as post-pass null-masking,
-    * which is equivalent in output to having them in the join
-    * predicate.
+    * bounds (the shared lookback, each slot's own staleness) are applied
+    * as post-pass null-masking per slot, which is equivalent in output
+    * to having them in the join predicate.
     *
     * `bucket` segments the per-key window into fixed time buckets so a
     * hot entity key (one user with 100M events) spreads over many tasks
@@ -377,6 +441,10 @@ object AsOfJoin {
     val joinKeys = spec.leftKeys.indices.map(i => s"__jk$i")
     val (labelTagV, featTagV) = if (spec.inclusive) (1, 0) else (0, 1)
     val labelCols = labels.columns.toSeq
+    // label and feature times meet in one sort column of the join's
+    // comparison type, where each feature time moves by its embargo
+    val sortType = joinTimeType(labels, rights, spec)
+    def sortTime(c: Column, t: DataType): Column = asTime(c, t, sortType)
     val tieCols = rights.zipWithIndex.map { case (r, i) =>
       r.tieBreakers.indices.map(j => s"__tb${i}_$j")
     }
@@ -401,7 +469,7 @@ object AsOfJoin {
     val lhs = labels.select(
       spec.leftKeys.zip(joinKeys).map { case (k, a) => col(k).as(a) } ++
         Seq(
-          minusInterval(col(spec.leftTime), spec.embargo).as(SortTime),
+          sortTime(col(spec.leftTime), labels.schema(spec.leftTime).dataType).as(SortTime),
           lit(labelTagV).as(TagCol)) ++
         labelCols.map(col) ++ slots(-1): _*)
     val rhs = rights.zipWithIndex.map { case (r, i) =>
@@ -414,7 +482,8 @@ object AsOfJoin {
         .select(
           r.keys.zip(joinKeys).map { case (k, a) => col(k).as(a) } ++
             Seq(
-              col(r.time).as(SortTime),
+              shift(sortTime(col(r.time), r.df.schema(r.time).dataType), sortType, r.embargo)
+                .as(SortTime),
               lit(featTagV).as(TagCol)) ++
             labelCols.map(c => lit(null).cast(labels.schema(c).dataType).as(c)) ++
             slots(i): _*)
@@ -467,14 +536,15 @@ object AsOfJoin {
     // keep label rows, per-slot validity mask, emit each right's
     // carried time aliases + value columns
     val lt = col(spec.leftTime)
+    val ltType = labels.schema(spec.leftTime).dataType
     carried
       .filter(col(TagCol) === labelTagV)
       .select(
         labelCols.map(col) ++ rights.zipWithIndex.flatMap { case (r, i) =>
           val c = col(s"__mc$i")
           val cft = c.getField("ft")
-          val floorOk = (spec.maxLookback ++ spec.maxStaleness)
-            .map(d => cft >= minusInterval(lt, d))
+          val floorOk = r.floors(spec)
+            .map(d => cft >= labelMinus(lt, ltType, sortType, d))
             .reduceOption(_ && _).getOrElse(lit(true))
           val valid = c.isNotNull && floorOk
           r.timeOuts.map(o => when(valid, cft).as(o)) ++

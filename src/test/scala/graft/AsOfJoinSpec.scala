@@ -30,15 +30,16 @@ class AsOfJoinSpec extends SparkFunSuite {
 
   private def spec(
       inclusive: Boolean = false,
-      embargo: Duration = Duration.ZERO,
-      lookback: Option[Duration] = Some(Duration.ofDays(365)),
+      lookback: Option[Duration] = Some(Duration.ofDays(365))) =
+    Spec(Seq("user_id"), "lt", inclusive, lookback)
+
+  private def right(feats: DataFrame, embargo: Duration = Duration.ZERO,
       staleness: Option[Duration] = None) =
-    Spec(Seq("user_id"), "lt", inclusive, embargo, lookback, staleness)
+    Right(feats, Seq("user_id"), "ft", Seq("value"), embargo = embargo, maxStaleness = staleness)
 
-  private def right(feats: DataFrame) = Right(feats, Seq("user_id"), "ft", Seq("value"))
-
-  private def run(s: Spec, strat: Strategy): Map[Long, (Option[java.sql.Timestamp], Option[Double])] =
-    AsOfJoin.join(labels, Seq(right(features)), s, strat)
+  private def run(s: Spec, strat: Strategy, embargo: Duration = Duration.ZERO,
+      staleness: Option[Duration] = None): Map[Long, (Option[java.sql.Timestamp], Option[Double])] =
+    AsOfJoin.join(labels, Seq(right(features, embargo, staleness)), s, strat)
       .collect()
       .map { r =>
         val id = r.getLong(r.fieldIndex(AsOfJoin.RowIdCol))
@@ -66,7 +67,7 @@ class AsOfJoinSpec extends SparkFunSuite {
     }
 
     test(s"$n: embargo shifts the upper bound") {
-      val r = run(spec(embargo = Duration.ofDays(6)), strat)
+      val r = run(spec(), strat, embargo = Duration.ofDays(6))
       // label 2 at 01-20, embargo 6d -> bound 01-14 -> latest is 01-10
       assert(r(2L) == (Some(ts("2024-01-10 00:00:00")), Some(20.0)))
     }
@@ -90,7 +91,7 @@ class AsOfJoinSpec extends SparkFunSuite {
     }
 
     test(s"$n: staleness floors tighter than lookback") {
-      val r = run(spec(staleness = Some(Duration.ofDays(3))), strat)
+      val r = run(spec(), strat, staleness = Some(Duration.ofDays(3)))
       // label 2 at 01-20 with 3d staleness: latest feature 01-15 is too old
       assert(r(2L) == (None, None))
     }
@@ -129,10 +130,11 @@ class AsOfJoinSpec extends SparkFunSuite {
       col("id").as(AsOfJoin.RowIdCol),
       (col("id") % 41).as("user_id"),
       timestamp_micros(lit(1704067200000000L) + col("id") * 104729L * 1000000L).as("lt"))
-    val s = spec(embargo = Duration.ofHours(12), staleness = Some(Duration.ofDays(30)))
-    val a = AsOfJoin.join(lbls, Seq(right(feats)), s, Strategy.RowNumber)
+    val s = spec()
+    val r = right(feats, Duration.ofHours(12), Some(Duration.ofDays(30)))
+    val a = AsOfJoin.join(lbls, Seq(r), s, Strategy.RowNumber)
       .select(AsOfJoin.RowIdCol, "feature_time", "value")
-    val b = AsOfJoin.join(lbls, Seq(right(feats)), s, Strategy.UnionAsOf)
+    val b = AsOfJoin.join(lbls, Seq(r), s, Strategy.UnionAsOf)
       .select(AsOfJoin.RowIdCol, "feature_time", "value")
     assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty)
     assert(a.count() == 300)
@@ -149,10 +151,11 @@ class AsOfJoinSpec extends SparkFunSuite {
       when(col("id") % 5 =!= 0, lit(1L)).otherwise(col("id") % 41 + 2).as("user_id"),
       timestamp_micros(lit(1704067200000000L) + col("id") * 13441L * 1000000L).as("lt"))
     for (bucketHours <- Seq(1L, 24L, 24L * 365)) {
-      val s = spec(embargo = Duration.ofHours(3), staleness = Some(Duration.ofDays(7)))
-      val plain = AsOfJoin.join(lbls, Seq(right(feats)), s, Strategy.UnionAsOf)
+      val s = spec()
+      val r = right(feats, Duration.ofHours(3), Some(Duration.ofDays(7)))
+      val plain = AsOfJoin.join(lbls, Seq(r), s, Strategy.UnionAsOf)
         .select(AsOfJoin.RowIdCol, "feature_time", "value")
-      val seg = AsOfJoin.join(lbls, Seq(right(feats)), s,
+      val seg = AsOfJoin.join(lbls, Seq(r), s,
         Strategy.UnionAsOfSegmented(Duration.ofHours(bucketHours)))
         .select(AsOfJoin.RowIdCol, "feature_time", "value")
       assert(seg.count() == 400)
@@ -175,10 +178,12 @@ class AsOfJoinSpec extends SparkFunSuite {
       col("id").as(AsOfJoin.RowIdCol),
       when(col("id") % 5 =!= 0, lit(1L)).otherwise(col("id") % 41 + 2).as("user_id"),
       timestamp_micros(lit(1704067200000000L) + col("id") * 13441L * 1000000L).as("lt"))
-    val s = spec(embargo = Duration.ofHours(3), staleness = Some(Duration.ofDays(7)))
+    val s = spec()
     val rights = Seq(
-      Right(f1, Seq("user_id"), "t1", Seq("v1"), Seq("ft1")),
-      Right(f2, Seq("user_id"), "t2", Seq("v2"), Seq("ft2")))
+      Right(f1, Seq("user_id"), "t1", Seq("v1"), Seq("ft1"),
+        embargo = Duration.ofHours(3), maxStaleness = Some(Duration.ofDays(7))),
+      Right(f2, Seq("user_id"), "t2", Seq("v2"), Seq("ft2"),
+        embargo = Duration.ofHours(3), maxStaleness = Some(Duration.ofDays(7))))
     val plain = AsOfJoin.join(lbls, rights, s, Strategy.UnionAsOf)
     for (bucketHours <- Seq(1L, 24L, 24L * 365)) {
       val seg = AsOfJoin.join(lbls, rights, s,
@@ -208,7 +213,8 @@ class AsOfJoinSpec extends SparkFunSuite {
       col("id").as(AsOfJoin.RowIdCol),
       when(col("id") % 2 === 0, lit(7L)).otherwise(col("id") % 50 + 100).as("user_id"),
       timestamp_micros(lit(1704067200000000L) + col("id") * 67L * 1000000L).as("lt"))
-    val s = spec(staleness = Some(Duration.ofDays(7)))
+    val s = spec()
+    val stale = Some(Duration.ofDays(7))
     val probing = AsOfJoin.AutoConfig(probeMinBytes = 0L, probeFraction = 1.0,
       skewRowsPerKey = 5000L, targetRowsPerBucket = 1000L)
 
@@ -227,9 +233,9 @@ class AsOfJoinSpec extends SparkFunSuite {
     assert(AsOfJoin.autoStrategy(Seq(right(feats))) == Strategy.UnionAsOf)
 
     // end-to-end: Auto output is identical to the plain union carry
-    val auto = AsOfJoin.join(lbls, Seq(right(feats)), s, Strategy.Auto, probing)
+    val auto = AsOfJoin.join(lbls, Seq(right(feats, staleness = stale)), s, Strategy.Auto, probing)
       .select(AsOfJoin.RowIdCol, "feature_time", "value")
-    val plain = AsOfJoin.join(lbls, Seq(right(feats)), s, Strategy.UnionAsOf)
+    val plain = AsOfJoin.join(lbls, Seq(right(feats, staleness = stale)), s, Strategy.UnionAsOf)
       .select(AsOfJoin.RowIdCol, "feature_time", "value")
     assert(auto.count() == 300)
     assert(plain.exceptAll(auto).isEmpty && auto.exceptAll(plain).isEmpty,
@@ -244,7 +250,6 @@ class AsOfJoinSpec extends SparkFunSuite {
       when(col("id") < 27000, lit(7L)).otherwise(col("id") % 50 + 100).as("user_id"),
       timestamp_micros(lit(1704067200000000L) + col("id") * 990000L).as("ft"),
       (col("id") % 101).cast("double").as("value"))
-    val s = spec(staleness = Some(Duration.ofDays(7)))
     // distinct config (seed) so earlier suites' memo entries can't alias
     val probing = AsOfJoin.AutoConfig(probeMinBytes = 0L, probeFraction = 1.0,
       skewRowsPerKey = 5000L, targetRowsPerBucket = 1000L, probeSeed = 0xC0FFEE)
@@ -300,7 +305,8 @@ class AsOfJoinSpec extends SparkFunSuite {
       when(col("id") % 2 === 0, lit(7L)).otherwise(col("id") % 50 + 100).as("user_id"),
       timestamp_micros(lit(1704067200000000L) + col("id") * 67L * 1000000L)
         .cast("timestamp_ntz").as("lt"))
-    val s = spec(staleness = Some(Duration.ofDays(7)))
+    val s = spec()
+    val stale = Some(Duration.ofDays(7))
     val probing = AsOfJoin.AutoConfig(probeMinBytes = 0L, probeFraction = 1.0,
       skewRowsPerKey = 5000L, targetRowsPerBucket = 1000L)
     // the probe still sees the hot key through NTZ values
@@ -309,9 +315,9 @@ class AsOfJoinSpec extends SparkFunSuite {
       case other => fail(s"expected segmented for the NTZ hot key, got $other")
     }
     // end-to-end: Auto (segmented, NTZ-bucketed) equals the plain carry
-    val auto = AsOfJoin.join(lbls, Seq(right(feats)), s, Strategy.Auto, probing)
+    val auto = AsOfJoin.join(lbls, Seq(right(feats, staleness = stale)), s, Strategy.Auto, probing)
       .select(AsOfJoin.RowIdCol, "feature_time", "value")
-    val plain = AsOfJoin.join(lbls, Seq(right(feats)), s, Strategy.UnionAsOf)
+    val plain = AsOfJoin.join(lbls, Seq(right(feats, staleness = stale)), s, Strategy.UnionAsOf)
       .select(AsOfJoin.RowIdCol, "feature_time", "value")
     assert(auto.count() == 300)
     assert(plain.exceptAll(auto).isEmpty && auto.exceptAll(plain).isEmpty,
@@ -343,8 +349,8 @@ class AsOfJoinSpec extends SparkFunSuite {
       (4L, 2L, "2024-01-03 00:00:00"),
       (5L, 2L, "2024-01-06 00:00:00")
     ).toDF(AsOfJoin.RowIdCol, "user_id", "lt").withColumn("lt", $"lt".cast("timestamp"))
-    val ra = Right(fa, Seq("user_id"), "ft", Seq("value"), Seq("ft_a"), Seq("tb"))
-    val rb = Right(fb, Seq("user_id"), "t2", Seq("v2"), Seq("ft_b"), Seq("tb2"))
+    val ra0 = Right(fa, Seq("user_id"), "ft", Seq("value"), Seq("ft_a"), Seq("tb"))
+    val rb0 = Right(fb, Seq("user_id"), "t2", Seq("v2"), Seq("ft_b"), Seq("tb2"))
     def winners(df: DataFrame, v: String): Seq[Option[Double]] =
       df.select(col(AsOfJoin.RowIdCol), col(v)).collect()
         .map(r => r.getLong(0) -> Option(r.get(1)).map(_.asInstanceOf[Double]))
@@ -362,7 +368,9 @@ class AsOfJoinSpec extends SparkFunSuite {
         Seq(Some(1.0), Some(1.0), Some(7.0), n, Some(9.0))))
     val buckets = Seq(Duration.ofHours(1), Duration.ofDays(30))
     for (((inclusive, embargoDays), (wantA, wantB)) <- expected) {
-      val s = spec(inclusive = inclusive, embargo = Duration.ofDays(embargoDays))
+      val s = spec(inclusive = inclusive)
+      val ra = ra0.copy(embargo = Duration.ofDays(embargoDays))
+      val rb = rb0.copy(embargo = Duration.ofDays(embargoDays))
       val ctx = s"inclusive=$inclusive embargo=${embargoDays}d"
       for (strat <- Strategy.RowNumber +: Strategy.UnionAsOf +:
           buckets.map(Strategy.UnionAsOfSegmented(_))) {
@@ -373,6 +381,166 @@ class AsOfJoinSpec extends SparkFunSuite {
         assert(winners(multi, "v2") == wantB, s"multi $strat $ctx")
       }
     }
+  }
+
+  // ---- per-right bounds: brute-force references -------------------
+  private val H = 3600L * 1000000L
+  private val D = 24 * H
+
+  /** A time value as micros: the instant of a TIMESTAMP, the wall clock
+    * (read as UTC) of a TIMESTAMP_NTZ. */
+  private def micros(v: Any): Long = v match {
+    case t: java.sql.Timestamp => Math.floorDiv(t.getTime, 1000L) * 1000000L + t.getNanos / 1000
+    case l: java.time.LocalDateTime =>
+      l.toEpochSecond(java.time.ZoneOffset.UTC) * 1000000L + l.getNano / 1000
+  }
+
+  /** One right for the references: rows `(key, time micros, value)`, its
+    * embargo and staleness in micros. */
+  private final case class RefRight(rows: Seq[(Long, Long, Double)], embargo: Long,
+      staleness: Option[Long])
+
+  /** The latest row of `key` with `t < lt - embargo` (`<=` inclusive)
+    * and `t` at or above every floor, by a scan of every row. */
+  private def bruteAsOf(r: RefRight, key: Long, lt: Long, inclusive: Boolean,
+      lookback: Long): Option[(Long, Double)] = {
+    val upper = lt - r.embargo
+    r.rows.filter { case (k, t, _) =>
+      k == key && (if (inclusive) t <= upper else t < upper) &&
+        (lookback +: r.staleness.toSeq).forall(f => t >= lt - f)
+    }.sortBy(_._2).lastOption.map { case (_, t, v) => (t, v) }
+  }
+
+  /** Per label rowid, each right's `(feature time, value)` from a join
+    * whose right `j` emits `ft$j` and `v$j`. */
+  private def answers(df: DataFrame, nRights: Int): Map[Long, Seq[Option[(Long, Double)]]] =
+    df.collect().map { r =>
+      r.getLong(r.fieldIndex(AsOfJoin.RowIdCol)) -> (0 until nRights).map { j =>
+        Option(r.get(r.fieldIndex(s"ft$j"))).map(t => (micros(t), r.getDouble(r.fieldIndex(s"v$j"))))
+      }
+    }.toMap
+
+  private val allStrategies: Seq[(Strategy, AsOfJoin.AutoConfig)] = Seq(
+    Strategy.RowNumber, Strategy.UnionAsOf,
+    Strategy.UnionAsOfSegmented(Duration.ofHours(1)),
+    Strategy.UnionAsOfSegmented(Duration.ofDays(30)),
+    Strategy.Auto).map(_ -> AsOfJoin.AutoConfig()) :+
+    // Auto with a probe that escapes the hot-ish keys to the segmented carry
+    (Strategy.Auto -> AsOfJoin.AutoConfig(probeMinBytes = 0L, probeFraction = 1.0,
+      skewRowsPerKey = 50L, targetRowsPerBucket = 20L, probeSeed = 7L))
+
+  test("one batch mixing per-right embargo and staleness matches a brute-force scan, every strategy") {
+    val base = 1704067200000000L // 2024-01-01 00:00 UTC
+    val lookbackDays = 50L
+    // embargo 0 / 1d / 3d crossed with staleness none / 30d: six rights
+    val bounds = for (e <- Seq(0L, 1L, 3L); st <- Seq(Option.empty[Long], Some(30L)))
+      yield (e, st)
+    val labelRows = (0 until 80).map { i =>
+      (i.toLong, (i % 6 + 1).toLong, base + 60 * D + (i * 7919L % (40 * 24)) * H)
+    }
+    val refs = bounds.zipWithIndex.map { case ((e, st), j) =>
+      val spread = (0 until 150).map(i =>
+        ((i % 6 + 1).toLong, base + ((i * 104729L + j * 17L) % (100 * 24)) * H))
+      // rows exactly on some labels' embargo edge and staleness edge
+      val planted = labelRows.filter(_._1 % 3 == j % 3).flatMap { case (_, k, lt) =>
+        (k, lt - e * D) +: st.toSeq.map(s => (k, lt - s * D))
+      }
+      RefRight((spread ++ planted).distinct.map { case (k, t) =>
+        (k, t, ((t - base) / H).toDouble + k * 1e6 + j / 8.0)
+      }, e * D, st.map(_ * D))
+    }
+    val lbls = labelRows.toDF(AsOfJoin.RowIdCol, "user_id", "lt_us")
+      .select(col(AsOfJoin.RowIdCol), col("user_id"), timestamp_micros(col("lt_us")).as("lt"))
+    val rights = refs.zipWithIndex.map { case (r, j) =>
+      Right(r.rows.toDF("user_id", "t_us", s"v$j")
+          .select(col("user_id"), timestamp_micros(col("t_us")).as(s"t$j"), col(s"v$j")),
+        Seq("user_id"), s"t$j", Seq(s"v$j"), Seq(s"ft$j"),
+        embargo = Duration.ofDays(bounds(j)._1), maxStaleness = bounds(j)._2.map(Duration.ofDays))
+    }
+    for (inclusive <- Seq(false, true)) {
+      val want = labelRows.map { case (id, k, lt) =>
+        id -> refs.map(bruteAsOf(_, k, lt, inclusive, lookbackDays * D))
+      }.toMap
+      // the planted edges are live: some label's answer sits exactly on one
+      assert(refs.zipWithIndex.exists { case (r, j) =>
+        labelRows.exists { case (id, _, lt) => want(id)(j).exists(_._1 == lt - r.embargo) }
+      } == inclusive)
+      val s = Spec(Seq("user_id"), "lt", inclusive, Some(Duration.ofDays(lookbackDays)))
+      for ((strat, cfg) <- allStrategies) {
+        val got = answers(AsOfJoin.join(lbls, rights, s, strat, cfg), rights.size)
+        assert(got == want, s"$strat $cfg inclusive=$inclusive")
+      }
+    }
+  }
+
+  test("1-day embargo across DST transitions in a DST session zone: TIMESTAMP, TIMESTAMP_NTZ, DATE labels") {
+    // one day of embargo is 24 hours of the time line: around New York's
+    // 2024 transitions a calendar day is 23 or 25 hours, so rows planted
+    // at lt - 25h .. lt - 23h tell exact arithmetic from calendar days
+    val prevTz = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "America/New_York")
+    try {
+      val ny = java.time.ZoneId.of("America/New_York")
+      val labelTimes = Seq(
+        "2024-03-10T12:00", "2024-03-11T01:30", "2024-03-11T02:30", "2024-03-10T01:30",
+        "2024-11-03T12:00", "2024-11-04T01:30", "2024-11-03T01:30", "2024-11-02T23:00"
+      ).map(java.time.LocalDateTime.parse)
+      val offsets = Seq(-25L * H, -24L * H - 1, -24L * H, -24L * H + 1, -23L * H)
+      for (variant <- Seq("timestamp", "timestamp_ntz", "date labels")) {
+        val ntz = variant == "timestamp_ntz"
+        val dates = variant == "date labels"
+        // micros on each type's own scale: the instant (TIMESTAMP, and a
+        // DATE label's midnight in the session zone) or the wall clock read
+        // as UTC (TIMESTAMP_NTZ)
+        val labelDays = labelTimes.map(_.toLocalDate).distinct
+        val lts =
+          if (dates) labelDays.map(d => micros(java.sql.Timestamp.from(d.atStartOfDay(ny).toInstant)))
+          else labelTimes.map(l =>
+            if (ntz) micros(l) else micros(java.sql.Timestamp.from(l.atZone(ny).toInstant)))
+        // column values of micros `us`, encoded without the session zone
+        def ldt(us: Long) = java.time.LocalDateTime.ofEpochSecond(Math.floorDiv(us, 1000000L),
+          (Math.floorMod(us, 1000000L) * 1000L).toInt, java.time.ZoneOffset.UTC)
+        def inst(us: Long) = java.time.Instant.ofEpochSecond(Math.floorDiv(us, 1000000L),
+          Math.floorMod(us, 1000000L) * 1000L)
+        val labelRows = lts.zipWithIndex.map { case (lt, i) => (i.toLong, i.toLong + 1, lt) }
+        // right 0: 1-day embargo. Right 1: no embargo, a 1-day staleness
+        // floor, with rows only at or below it (the floor row itself on
+        // even keys), so a 23- or 25-hour floor changes the answer
+        val refs = Seq(
+          RefRight(labelRows.flatMap { case (_, k, lt) =>
+            offsets.map(o => (k, lt + o, (o + 26 * H).toDouble)) }, D, None),
+          RefRight(labelRows.flatMap { case (_, k, lt) =>
+            offsets.filter(o => o < -24 * H || (o == -24 * H && k % 2 == 0))
+              .map(o => (k, lt + o, (o + 50 * H).toDouble)) }, 0L, Some(D)))
+        val lbls =
+          if (dates) labelRows.zip(labelDays).map { case ((id, k, _), d) => (id, k, d) }
+            .toDF(AsOfJoin.RowIdCol, "user_id", "lt")
+          else if (ntz) labelRows.map { case (id, k, lt) => (id, k, ldt(lt)) }
+            .toDF(AsOfJoin.RowIdCol, "user_id", "lt")
+          else labelRows.map { case (id, k, lt) => (id, k, inst(lt)) }
+            .toDF(AsOfJoin.RowIdCol, "user_id", "lt")
+        val rights = refs.zipWithIndex.map { case (r, j) =>
+          val df =
+            if (ntz) r.rows.map { case (k, t, v) => (k, ldt(t), v) }.toDF("user_id", s"t$j", s"v$j")
+            else r.rows.map { case (k, t, v) => (k, inst(t), v) }.toDF("user_id", s"t$j", s"v$j")
+          Right(df, Seq("user_id"), s"t$j", Seq(s"v$j"), Seq(s"ft$j"),
+            embargo = Duration.ofNanos(r.embargo * 1000L),
+            maxStaleness = r.staleness.map(st => Duration.ofNanos(st * 1000L)))
+        }
+        assert(lbls.schema("lt").dataType.typeName ==
+          (if (dates) "date" else if (ntz) "timestamp_ntz" else "timestamp"))
+        for (inclusive <- Seq(false, true)) {
+          val want = labelRows.map { case (id, k, lt) =>
+            id -> refs.map(bruteAsOf(_, k, lt, inclusive, 365L * D))
+          }.toMap
+          val s = Spec(Seq("user_id"), "lt", inclusive)
+          for ((strat, cfg) <- allStrategies) {
+            val got = answers(AsOfJoin.join(lbls, rights, s, strat, cfg), rights.size)
+            assert(got == want, s"$strat $variant inclusive=$inclusive")
+          }
+        }
+      }
+    } finally spark.conf.set("spark.sql.session.timeZone", prevTz)
   }
 
   test("all-null feature values are carried as null (not skipped back)") {

@@ -261,6 +261,38 @@ class AuditDiffSpec extends SparkFunSuite {
     assert(r.columns.find(_.column == "f__v").get.changed == 0)
   }
 
+  test("diff counts both sides in its one action: duplicates, one-sided rows, empty sides") {
+    val t = (d: Int) => ts(s"2024-01-${10 + d} 00:00:00")
+    val old = Seq(
+      (1L, t(1), 1.0), (1L, t(1), 1.5), // duplicate key
+      (2L, t(2), 2.0),
+      (3L, t(3), 3.0) // old only
+    ).toDF("user_id", "label_time", "f__v")
+    val neu = Seq(
+      (1L, t(1), 1.0),
+      (2L, t(2), 2.5),
+      (4L, t(4), 4.0), (4L, t(4), 4.0) // new only, duplicated
+    ).toDF("user_id", "label_time", "f__v")
+    val emptyRuntime = old.filter(col("f__v") < 0) // empty only once it runs
+    val emptyStatic = old.limit(0) // empty by plan
+    val pairs = Seq("old/new" -> (old, neu), "new/old" -> (neu, old),
+      "old/empty" -> (old, emptyRuntime), "empty/new" -> (emptyRuntime, neu),
+      "static empty/new" -> (emptyStatic, neu), "empty/empty" -> (emptyRuntime, emptyStatic))
+    for ((name, (o, n)) <- pairs) {
+      val emptySide = o.isEmpty || n.isEmpty
+      val (r, queries) = queriesOf(Diff(o, n, Seq("user_id"), "label_time"))
+      // an empty side lets adaptive execution replace the whole join by an
+      // empty relation, observations included: those sides are counted
+      // by count() on their own
+      assert(if (emptySide) queries.size <= 3 else queries.size == 1,
+        s"$name: one query per diff, got ${queries.size}")
+      assert(r.oldRows == o.count() && r.newRows == n.count(), s"$name: $r")
+      assert(r.commonRows == o.join(n.select("user_id", "label_time"),
+        Seq("user_id", "label_time")).count(), s"$name: $r")
+      assert(r.identical == (name == "empty/empty"), s"$name: $r")
+    }
+  }
+
   test("explain renders without executing joins") {
     val labelsDf = Seq((1L, ts("2024-01-01 00:00:00"), true))
       .toDF("user_id", "label_time", "y")

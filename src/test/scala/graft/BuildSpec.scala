@@ -461,7 +461,8 @@ class BuildSpec extends SparkFunSuite {
     // regression: the Observation that fuses stats into the write job
     // must count rows exactly once — a global orderBy re-executes its
     // child for range sampling, which double-counted when the observe
-    // sat below the sort (hence sorted outputs take the cache path)
+    // sat below the sort (hence a sorted output observes ABOVE its sort,
+    // over the cached frame the sampling pass reads)
     val dir = java.nio.file.Files.createTempDirectory("graft_obs")
     val fused = Build(spark, labels, Seq(userCountry),
       BuildOptions(output = Some(s"$dir/fused.parquet"), sortResult = false,
@@ -474,6 +475,41 @@ class BuildSpec extends SparkFunSuite {
       sortedR.features.map(f => (f.name, f.matched, f.missing, f.violations)))
     assert(fused.df.exceptAll(sortedR.df).isEmpty &&
       sortedR.df.exceptAll(fused.df).isEmpty)
+
+    // sorted outputs with splits, flattened names, skipped misses and zero
+    // labels: every stat, the label range (through the split warnings)
+    // included, equals a count over the written parquet. The feature
+    // exposes its own time as `seen`, so violations can be counted there.
+    // (users 1-10 fall inside the staleness limit, the rest miss)
+    val seenFeat = Feature("uc", Source.frame("users", users, Seq("user_id"), "updated_at"),
+      ColumnsMode(Map("country" -> "country", "seen" -> "updated_at")),
+      embargo = java.time.Duration.ofDays(1), maxStaleness = Some(java.time.Duration.ofDays(400)))
+    // labels start before the first split and end after the last
+    val splits = Seq(Split("train", "2024-02-01", "2024-04-01"),
+      Split("test", "2024-04-01", "2024-06-01"))
+    for ((skip, flat, zero) <- Seq((false, false, false), (true, true, false),
+        (false, true, true), (true, false, true))) {
+      val ctx = s"skip=$skip flatten=$flat zero=$zero"
+      val out = s"$dir/sorted_${skip}_${flat}_$zero.parquet"
+      val lbl = Labels.frame(if (zero) labelsDf.filter(col("user_id") < 0) else labelsDf,
+        Seq("user_id"), "label_time", Seq("churned"))
+      val r = Build(spark, lbl, Seq(seenFeat), BuildOptions(output = Some(out), splits = splits,
+        flattenColumns = flat, onMissing = if (skip) "skip" else "null",
+        maxLookback = java.time.Duration.ofDays(3650)))
+      val seen = col(if (flat) "seen" else "uc__seen")
+      val row = spark.read.parquet(out).agg(count(lit(1)), count(seen),
+        count(when(seen >= col("label_time") - expr("INTERVAL 1 DAY"), 1)),
+        min("label_time"), max("label_time")).head()
+      val (n, matched) = (row.getLong(0), row.getLong(1))
+      assert(r.rows == n, ctx)
+      val f = r.features.head
+      assert((f.matched, f.missing, f.violations) == ((matched, n - matched, row.getLong(2))), ctx)
+      val range = if (row.isNullAt(3)) None else Some((row.getTimestamp(3), row.getTimestamp(4)))
+      assert(r.warnings == Build.splitWarnings(splits, range), ctx)
+      // the cases are live: rows, misses and range warnings where expected
+      assert((n == 0) == zero && (n - matched > 0) == (!skip && !zero), s"$ctx: $n/$matched")
+      assert(r.warnings.nonEmpty == !zero, s"$ctx: ${r.warnings}")
+    }
   }
 
   test("store: feature + build caches populate and hit; content change invalidates") {

@@ -197,10 +197,10 @@ class CliSpec extends SparkFunSuite {
     Seq("[build 1/5] load", "compute user_country", "join user_country",
       "write", "verify").foreach(step =>
       assert(printed.contains(step), s"missing '$step' in:\n$printed"))
-    // the default sorted path verifies over the cache BEFORE the
-    // sorted write — the emission order reflects the real execution
-    // order (the fused unsorted path is asserted in BuildSpec)
-    assert(printed.indexOf("verify") < printed.indexOf("write"), printed)
+    // the default sorted path's stats ride the sorted write, so verify
+    // is reported AFTER it — the emission order reflects the real
+    // execution order (the unsorted path is asserted in BuildSpec)
+    assert(printed.indexOf("write") < printed.indexOf("verify"), printed)
 
     // global verbosity flags (reference cli.py:189-208): -v => INFO,
     // --debug => DEBUG, absent => WARN; position-independent, parsed

@@ -100,9 +100,10 @@ class PlanSpec extends SparkFunSuite {
   }
 
   test("default build orders every carry window by (time, tag) alone") {
-    // two features, one embargoed, under Auto with no tie breakers: the
-    // carry's sort must stay exactly two keys (tie breakers add keys only
-    // when a right side declares them)
+    // two features, one embargoed, under Auto with no tie breakers: they
+    // differ only in embargo, so they share ONE carry, and its sort must
+    // stay exactly two keys (tie breakers add keys only when a right side
+    // declares them)
     val ev = SparkEntry.events(spark, sf)
     val labels = graft.model.Labels.frame(
       ev.filter(col("event_type") === "purchase").select(
@@ -123,8 +124,57 @@ class PlanSpec extends SparkFunSuite {
       case w: org.apache.spark.sql.catalyst.plans.logical.Window
           if w.windowExpressions.exists(_.find(_.isInstanceOf[Last]).isDefined) => w
     }
-    assert(carries.size == 2, s"one carry window per batch expected:\n${df.queryExecution.analyzed}")
+    assert(carries.size == 1, s"one carry window expected:\n${df.queryExecution.analyzed}")
     carries.foreach(w => assert(w.orderSpec.size == 2, s"carry window orders by ${w.orderSpec}"))
+  }
+
+  test("a two-source build with mixed embargo and staleness plans one carry and no rowid join") {
+    // different sources, bounds and embargoes: one batch, so the write
+    // query holds one carry Window and no join back on the label rowid;
+    // the sorted output's stats ride that write, so no other query runs
+    val ev = SparkEntry.events(spark, sf)
+    val labelsDf = ev.filter(col("event_type") === "purchase").select(
+      col("user_id"), col("ts").as("label_time"), col("value").as("label_value"))
+    val feats = Seq(
+      graft.model.Feature("f_val",
+        graft.model.Source.frame("ev_a", ev, Seq("user_id"), "ts"),
+        graft.model.ColumnsMode(Map("value" -> "value"))),
+      graft.model.Feature("f_type",
+        graft.model.Source.frame("ev_b", ev, Seq("user_id"), "ts"),
+        graft.model.ColumnsMode(Map("event_type" -> "event_type")),
+        embargo = java.time.Duration.ofDays(1),
+        maxStaleness = Some(java.time.Duration.ofDays(30))))
+    val out = java.nio.file.Files.createTempDirectory("graft_one_carry").toString + "/t.parquet"
+    val (r, queries) = queriesOf(graft.engine.Build(spark, graft.model.Labels.frame(labelsDf,
+      Seq("user_id"), "label_time", Seq("label_value")), feats,
+      graft.engine.BuildOptions(checkDuplicates = false, output = Some(out))))
+    assert(r.auditPassed && r.features.forall(_.matched > 0))
+    import org.apache.spark.sql.catalyst.plans.logical
+    val aggQueries = queries.filter(_.analyzed.find(_.isInstanceOf[logical.Aggregate]).isDefined)
+    assert(aggQueries.isEmpty, s"no aggregation query expected:\n${aggQueries.map(_.analyzed)}")
+    assert(queries.size == 1, s"the write alone expected, got ${queries.map(_.analyzed)}")
+    val write = queries.head
+    import org.apache.spark.sql.catalyst.expressions.aggregate.Last
+    val carries = write.analyzed.collect {
+      case w: logical.Window if w.windowExpressions.exists(_.find(_.isInstanceOf[Last]).isDefined) => w
+    }
+    assert(carries.size == 1, s"one carry window expected:\n${write.analyzed}")
+    import org.apache.spark.sql.execution._
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec        => nodes(q.plan)
+      case m: InMemoryTableScanExec => m +: nodes(m.relation.cachedPlan)
+      case other                    => other +: other.children.flatMap(nodes)
+    }
+    val physical = nodes(write.executedPlan)
+    assert(physical.exists(_.isInstanceOf[window.WindowExec]), physical.mkString("\n"))
+    val rowidJoins = physical.collect {
+      case j: joins.SortMergeJoinExec
+          if j.leftKeys.exists(_.references.exists(_.name == graft.operators.AsOfJoin.RowIdCol)) => j
+    }
+    assert(rowidJoins.isEmpty, s"rowid re-join planned:\n${write.executedPlan}")
   }
 
   test("rebuild audit of two join-compatible features plans one carry window") {
@@ -148,22 +198,10 @@ class PlanSpec extends SparkFunSuite {
     graft.engine.Build(spark, graft.model.Labels.frame(labelsDf,
       Seq("user_id"), "label_time", Seq("label_value")), feats, opts.copy(output = Some(out)))
     val built = spark.read.parquet(out)
-    val plans = new java.util.concurrent.ConcurrentLinkedQueue[
-      org.apache.spark.sql.catalyst.plans.logical.LogicalPlan]()
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      def onSuccess(funcName: String, qe: org.apache.spark.sql.execution.QueryExecution,
-          durationNs: Long): Unit = plans.add(qe.analyzed)
-      def onFailure(funcName: String, qe: org.apache.spark.sql.execution.QueryExecution,
-          exception: Exception): Unit = ()
-    }
-    spark.listenerManager.register(listener)
-    try {
-      graft.engine.Audit.rebuild(spark, built, feats, Seq("user_id"), "label_time", opts)
-      org.apache.spark.sql.graft.ListenerBridge.drain(spark.sparkContext)
-    } finally spark.listenerManager.unregister(listener)
-    import scala.jdk.CollectionConverters._
+    val (_, queries) = queriesOf(
+      graft.engine.Audit.rebuild(spark, built, feats, Seq("user_id"), "label_time", opts))
     import org.apache.spark.sql.catalyst.expressions.aggregate.Last
-    val aggQueries = plans.asScala.toSeq.filter(_.find(
+    val aggQueries = queries.map(_.analyzed).filter(_.find(
       _.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.Aggregate]).isDefined)
     assert(aggQueries.size == 1, s"one aggregation query expected, got ${aggQueries.size}")
     val carries = aggQueries.head.collect {

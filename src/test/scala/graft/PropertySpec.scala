@@ -53,7 +53,6 @@ class PropertySpec extends AnyFunSuite {
       val spec = AsOfJoin.Spec(
         Seq("user_id"), "lt",
         inclusive = inclusive,
-        embargo = Duration.ofHours(embargoH.toLong),
         maxLookback = Some(Duration.ofDays(365)))
       // exercise all three strategies: embargoH parity picks between
       // union and segmented so the fuzz covers the skew path too
@@ -62,7 +61,8 @@ class PropertySpec extends AnyFunSuite {
         else if (embargoH % 2 == 0) AsOfJoin.Strategy.UnionAsOf
         else AsOfJoin.Strategy.UnionAsOfSegmented(Duration.ofHours(48))
       val out = AsOfJoin.join(lblDf,
-        Seq(AsOfJoin.Right(featDf, Seq("user_id"), "ft", Seq("v"))), spec, strat).collect()
+        Seq(AsOfJoin.Right(featDf, Seq("user_id"), "ft", Seq("v"),
+          embargo = Duration.ofHours(embargoH.toLong))), spec, strat).collect()
 
       val allLabelsKept = out.length == lbls.size
       val invariantHolds = out.forall { r =>
@@ -144,7 +144,9 @@ class PropertySpec extends AnyFunSuite {
             (k.toLong, new Timestamp(base + off * 3600 * 1000),
               (k * 1000 + off).toDouble + ri)
           }.toDF("user_id", s"t$ri", s"v$ri")
-          AsOfJoin.Right(df, Seq("user_id"), s"t$ri", Seq(s"v$ri"), Seq(s"ft$ri"))
+          AsOfJoin.Right(df, Seq("user_id"), s"t$ri", Seq(s"v$ri"), Seq(s"ft$ri"),
+            embargo = Duration.ofHours(embargoH.toLong),
+            maxStaleness = staleDays.map(Duration.ofDays))
         }
         val lblDf = lbls.zipWithIndex.map { case ((off, k), i) =>
           (i.toLong, k.toLong, new Timestamp(base + off * 3600 * 1000))
@@ -152,9 +154,7 @@ class PropertySpec extends AnyFunSuite {
         val spec = AsOfJoin.Spec(
           Seq("user_id"), "lt",
           inclusive = inclusive,
-          embargo = Duration.ofHours(embargoH.toLong),
-          maxLookback = Some(Duration.ofDays(365)),
-          maxStaleness = staleDays.map(Duration.ofDays))
+          maxLookback = Some(Duration.ofDays(365)))
         val plain = AsOfJoin.join(lblDf, rights, spec, AsOfJoin.Strategy.UnionAsOf)
           .collect().map(_.toString).sorted.toSeq
         val seg = AsOfJoin.join(lblDf, rights, spec,
