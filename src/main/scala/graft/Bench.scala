@@ -997,7 +997,7 @@ object Bench {
       "build_1m_x10" -> (() => { buildScenario(1000000, 10)(spark); () }),
       // 50-feature row from the reference's extended matrix
       // (bench.py:217-236, unpublished): 50 features ride
-      // ceil(50/maxCarryColumns) width-capped union-as-of shuffles
+      // ceil(50/12) width-capped union-as-of shuffles
       "build_100k_x50" -> (() => { buildScenario(100000, 50)(spark); () }),
       // 10 features from ONE wide source: the merged-carry fast path
       "build_1m_x10_widesource" -> (() => { wideSourceScenario(1000000, 10)(spark); () }),

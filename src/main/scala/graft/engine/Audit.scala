@@ -293,7 +293,7 @@ object Audit {
       val units = Build.units(spark, keys, features, options.copy(store = None))
       val rebuilt = Build.assemble(
         numbered.select((Build.RowId +: keys :+ labelTime).map(col): _*),
-        Build.batches(units, options), keys, labelTime, options)
+        Build.batches(units), keys, labelTime, options)
       val valueColsOf = Build.JoinUnit.outputColumns(units)
       val cmp = numbered.join(
         rebuilt.select(col(Build.RowId) +: features.flatMap(f =>

@@ -22,14 +22,9 @@ final case class BuildOptions(
     splits: Seq[Split] = Nil,
     output: Option[String] = None,
     strategy: AsOfJoin.Strategy = AsOfJoin.Strategy.Auto,
-    /** Run the post-build invariant verification pass (engine.py:1342-1384). */
-    verify: Boolean = true,
     /** Eager duplicate (key,ts) detection per feature (engine.py:586-627).
       * An extra job per distinct source; disable for trusted inputs. */
     checkDuplicates: Boolean = true,
-    /** Collect matched/missing per-feature stats. With an output they
-      * ride the write job; with no output they cost one extra agg job. */
-    collectStats: Boolean = true,
     /** Deterministic full sort of the result (reference O1). At cluster
       * scale flip off: a total sort is a range-shuffle you rarely want. */
     sortResult: Boolean = true,
@@ -37,13 +32,6 @@ final case class BuildOptions(
       * path-backed sources and a build-level cache keyed on content
       * hashes + parameters (reference store.py:113-161). */
     store: Option[graft.store.Store] = None,
-    /** Max value columns per union-as-of carry batch. The unioned
-      * frame pads every shuffled row to the batch's full column set
-      * and the carry window runs one aggregate per column over every
-      * row, so batch width multiplies both shuffle bytes and window
-      * CPU; this cap bounds that while keeping few-shuffle batching
-      * for typical feature counts. */
-    maxCarryColumns: Int = 12,
     /** Tuning for Strategy.Auto's hot-key skew probe (see
       * [[AsOfJoin.autoStrategy]]); defaults skip the probe entirely on
       * small feature sides. */
@@ -209,11 +197,7 @@ object Build {
           // adds splits must NOT hit the cache of one that didn't (the
           // split files were never written)
           s"${options.splits.map(s => s"${s.name}:${s.start}:${s.end}").mkString(";")}|" +
-          // verify participates: an unverified build's manifest records
-          // audit_passed from fabricated zero-violation stats — a later
-          // build WITH verify=true must not cache-hit it and report
-          // auditPassed without any check having run
-          s"${options.sortResult}|${options.verify}")
+          s"${options.sortResult}")
     }
   }
 
@@ -253,7 +237,7 @@ object Build {
         if (options.checkDuplicates && u.features.head.onDuplicate == OnDuplicate.Error)
           checkDuplicates(u.features.head, u.df, u.keys)
       }
-      val bs = batches(us, options)
+      val bs = batches(us)
       // One batch reads the spine in exactly ONE linear subtree, where the
       // id assignment cannot diverge and materialization would be pure
       // overhead. Two or more branches → cache, so the ids are physically
@@ -438,6 +422,9 @@ object Build {
       case _ => (compute, false)
     }
 
+  /** Max value columns per carry batch (see [[batches]]). */
+  private val MaxCarryColumns = 12
+
   /** The batch plan: units whose key and feature-time column types
     * agree share ONE [[AsOfJoin.join]], even across different sources
     * and under different embargoes and staleness limits (each right side
@@ -452,18 +439,18 @@ object Build {
     * batch-width. Unbounded batching made a 1M x 50-feature build ~20x
     * slower than 1M x 10 (measured 70-280s vs 4s): 101M rows x 50 padded
     * slots. Greedily packing units into batches of at most
-    * maxCarryColumns value columns keeps each shuffle narrow while
+    * [[MaxCarryColumns]] value columns keeps each shuffle narrow while
     * preserving the few-shuffles win at small feature counts. A single
     * unit wider than the cap (merged same-source group, which pads
     * nothing) stays intact. Largest batch first. */
-  private[engine] def batches(units: Seq[JoinUnit], options: BuildOptions): Seq[Seq[JoinUnit]] = {
+  private[engine] def batches(units: Seq[JoinUnit]): Seq[Seq[JoinUnit]] = {
     def packByWidth(us: Seq[JoinUnit]): Seq[Seq[JoinUnit]] = {
       val out = scala.collection.mutable.ArrayBuffer.empty[Seq[JoinUnit]]
       var cur = Seq.empty[JoinUnit]
       var width = 0
       us.foreach { u =>
         val w = u.valueCols.flatten.size
-        if (cur.nonEmpty && width + w > options.maxCarryColumns) {
+        if (cur.nonEmpty && width + w > MaxCarryColumns) {
           out += cur; cur = Seq(u); width = w
         } else { cur = cur :+ u; width += w }
       }
@@ -514,7 +501,6 @@ object Build {
 
     // ---- single-pass stats + invariant verification ----------------
     val lt = col(labels.labelTime)
-    val needStats = options.collectStats || options.verify || options.splits.nonEmpty
     val statAggs: Seq[Column] = features.flatMap { f =>
       val ft = col(Names.featureTimeCol(f.name))
       val ltType = assembled.schema(labels.labelTime).dataType
@@ -530,8 +516,7 @@ object Build {
       )
     }
     val aggCols: Seq[Column] = count(lit(1)).as("__n") +:
-      (if (needStats) statAggs ++ Seq(min(lt).as("__lo"), max(lt).as("__hi"))
-       else Seq.empty[Column])
+      (statAggs ++ Seq(min(lt).as("__lo"), max(lt).as("__hi")))
     def toTs(v: Any): java.sql.Timestamp = v match {
       case t: java.sql.Timestamp  => t
       case i: java.time.Instant   => java.sql.Timestamp.from(i)
@@ -542,11 +527,10 @@ object Build {
       def lng(k: String): Long =
         m.get(k).flatMap(Option(_)).map(_.asInstanceOf[Number].longValue).getOrElse(0L)
       val n = lng("__n")
-      val st =
-        if (needStats) features.map { f =>
-          val matched = lng(s"__m_${f.safeName}")
-          FeatureStats(f.name, matched, n - matched, lng(s"__x_${f.safeName}"))
-        } else features.map(f => FeatureStats(f.name, -1, -1, 0))
+      val st = features.map { f =>
+        val matched = lng(s"__m_${f.safeName}")
+        FeatureStats(f.name, matched, n - matched, lng(s"__x_${f.safeName}"))
+      }
       val range = for {
         lo <- m.get("__lo").flatMap(Option(_))
         hi <- m.get("__hi").flatMap(Option(_))
@@ -678,9 +662,6 @@ object Build {
       "build_key" -> key,
       "rows" -> w.rows,
       "audit_passed" -> passed,
-      // audit_passed above is only meaningful when the verification
-      // pass actually ran — record which it was
-      "verified" -> options.verify,
       "labels" -> Raw(Jsons.obj(
         "path" -> labels.path,
         "content_hash" -> labels.path.map(st.contentHash),

@@ -116,9 +116,12 @@ object Diff {
     val row = comparisonFrame(observed(oldDf, oldObs), observed(newDf, newObs),
       keys, labelTime, atol, rtol).head()
     // an input the plan never ran (the join was proven empty without it)
-    // reports no metrics: count that side directly
-    def rows(obs: Observation, df: DataFrame): Long =
-      obs.get.get("rows").map(_.asInstanceOf[Long]).getOrElse(df.count())
+    // reports no metrics: every such side is counted in ONE more query
+    val seen = Seq(oldObs, newObs).map(_.get.get("rows").map(_.asInstanceOf[Long]))
+    val unseen = Seq(oldDf, newDf).zip(seen).collect { case (df, None) => df.agg(count(lit(1))) }
+    val counted = unseen.reduceOption(_ crossJoin _)
+      .fold(Iterator.empty[Long])(_.head().toSeq.iterator.map(_.asInstanceOf[Long]))
+    val Seq(oldRows, newRows) = seen.map(_.getOrElse(counted.next()))
     val commonRows = row.getLong(0)
     val colDiffs = common.zipWithIndex.map { case (c, i) =>
       val base = 1 + 4 * i
@@ -128,6 +131,6 @@ object Diff {
       ColumnDiff(c, lng(base), lng(base + 1), dbl(base + 2), dbl(base + 3))
     }
 
-    DiffResult(rows(oldObs, oldDf), rows(newObs, newDf), commonRows, added, removed, colDiffs)
+    DiffResult(oldRows, newRows, commonRows, added, removed, colDiffs)
   }
 }

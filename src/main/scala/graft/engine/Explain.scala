@@ -71,6 +71,11 @@ object Explain {
       val cmpOp = if (options.join == "inclusive") "<=" else "<"
       val embargoStr = Durations.format(f.embargo)
       val lookbackStr = Durations.format(options.maxLookback)
+      // the build floors feature_time at BOTH label_time - lookback and
+      // label_time - max_staleness; the window shows the tighter one
+      val staleStr = f.maxStaleness.map(Durations.format)
+      val floorStr = f.maxStaleness.filter(_.compareTo(options.maxLookback) < 0)
+        .fold(lookbackStr)(Durations.format)
       val joinCond =
         if (f.embargo.isZero) s"feature_time $cmpOp label_time"
         else s"feature_time $cmpOp label_time - INTERVAL '$embargoStr'"
@@ -87,12 +92,14 @@ object Explain {
         .map { case (k, i) => s"$k = {K${i + 1}}" }.mkString(" AND ")
       val embargoClause =
         if (f.embargo.isZero) "" else s" - INTERVAL '$embargoStr'"
-      def lookupTail(tsCol: String) =
+      def lookupTail(tsCol: String) = {
+        val staleFloor = staleStr.fold("")(st => s"\n  AND $tsCol >= {T} - INTERVAL '$st'")
         s"""WHERE $keyPreds
            |  AND $tsCol $cmpOp {T}$embargoClause
-           |  AND $tsCol >= {T} - INTERVAL '$lookbackStr'
+           |  AND $tsCol >= {T} - INTERVAL '$lookbackStr'$staleFloor
            |ORDER BY $tsCol DESC
            |LIMIT 1""".stripMargin
+      }
       val exampleSql = f.mode match {
         case ColumnsMode(cols) =>
           s"""SELECT ${keyCols.mkString(", ")}, $ts AS feature_time, ${cols.values.toSeq.sorted.mkString(", ")}
@@ -172,9 +179,9 @@ object Explain {
         f.source.name,
         modeStr,
         strat,
-        s"[label_time - $lookbackStr, label_time - $embargoStr$op",
+        s"[label_time - $floorStr, label_time - $embargoStr$op",
         embargoStr,
-        f.maxStaleness.map(Durations.format),
+        staleStr,
         joinCond,
         exampleSql
       )

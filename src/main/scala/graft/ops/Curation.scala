@@ -340,13 +340,24 @@ object Curation {
         graft.util.Jsons.obj(counts.map { case (k, v) => k -> (v: Any) }: _*))
   }
 
+
+  /** One enabled stage of [[curate]]'s table. `key` names the stage's
+    * ledger row and its resume dir, `desc` its Spark job description,
+    * `pin` its entry in the resume params pin. `body` maps the previous
+    * stage's survivors to this stage's; a resumed stage never calls it
+    * (fits, model training and iterative loops run eagerly inside). */
+  private final case class Stage(key: String, desc: String, pin: String,
+      body: DataFrame => DataFrame)
+
   /** Run the pipeline. `hasher` (used by the MinHash/LSH near-dup
     * stage) hits the codegen'd signature kernel only when it IS
     * `Dedup.md5Hash` or `Dedup.xxHash` by reference — pass the `val`s
     * themselves, not a wrapping lambda (see [[Dedup.signatures]]).
     * `resume` names a stage-checkpoint directory (see [[StageStore]]):
     * completed stages are read back instead of recomputed, making the
-    * composed pipeline restartable after driver loss. */
+    * composed pipeline restartable after driver loss. A resumed MinHash
+    * near-dup stage must use one of the two built-in hashers: a custom
+    * function has no identity the params pin could compare. */
   def curate(
       docs: DataFrame,
       idCol: String = "doc_id",
@@ -366,6 +377,17 @@ object Curation {
         * keep-min-id (whatever was ingested first). */
       nearDupKeepCol: Option[String] = None
   ): CurationResult = {
+    val hasherPin = nearDup match {
+      case NearDup.NgramExact => "none" // shingle Jaccard never hashes
+      case _ if hasher eq Dedup.md5Hash => "md5"
+      case _ if hasher eq Dedup.xxHash => "xx"
+      case _ if resume.isEmpty => "custom"
+      case _ => throw graft.errors.Errors.config(
+        "a custom near-dup hasher cannot be pinned in a resume dir: a function " +
+          "has no identity a later run could compare, so a checkpoint written " +
+          "under one hasher would be served under another.",
+        "pass Dedup.md5Hash or Dedup.xxHash with resume, or run without resume")
+    }
     // Mojibake repair is a pre-transform of the corpus itself: the
     // verdict kernel, the hash dedups, and every rewrite see the
     // REPAIRED text, so a corrupted twin re-joins its clean
@@ -414,7 +436,6 @@ object Curation {
     // CurationResult.release() owns the full cache set, not just the
     // frames this function registered directly.
     graft.util.Caching.tracking(tracked += _) {
-    def cacheTracked(df: DataFrame): DataFrame = Dedup.cacheOnce(df)
     // Stage-boundary lineage truncation. Every stage output is
     // materialized anyway (its ledger count); a lazy localCheckpoint
     // makes that materialization ALSO cut the logical plan to a flat
@@ -436,75 +457,151 @@ object Curation {
       sc.setJobDescription(s"graft curate: $name")
       try body finally sc.setJobDescription(null)
     }
+    // text rewrites can leave a document blank; `drop` removes those
+    def dropBlank(drop: Boolean)(df: DataFrame): DataFrame =
+      if (drop) df.filter(length(trim(col(textCol))) > 0) else df
+    // the LM bucketing tail shared by the unigram and bigram stages:
+    // keep the `in` rows whose score lands in the best `keep` buckets.
+    // `scored` is cached: qualityBucketsApprox's approxQuantile is an
+    // eager action over it and the bucket filter consumes it AGAIN —
+    // without the cache the corpus-scale LM scoring plan runs twice
+    def keepBestBuckets(in: DataFrame, scored: DataFrame, buckets: Int, keep: Int,
+        relErr: Double): DataFrame = {
+      val bucketed = QualityFilters.qualityBucketsApprox(
+        Dedup.cacheOnce(scored), buckets = buckets, relErr = relErr)
+      in.join(bucketed.filter(col("quality_bucket") <= keep).select(col(idCol)),
+        Seq(idCol), "left_semi")
+    }
+
+    // ---- the stage table: every enabled stage after the scan, in
+    // pipeline order. Cheapest first: the soft filter before any dedup
+    // pays for its drops; cheap keys (URL, image hash) before text
+    // hashes; boilerplate strip before exact dedup (mirror pages that
+    // differ only in nav menus become byte-identical); the span and
+    // passage rewrites after exact dedup and before LM scoring (scores
+    // describe the surviving text); the statistical quality stages
+    // post-dedup (duplicates cannot skew a fit); the decontamination
+    // anti-join shrinks the input to the pair-generating stages, which
+    // run over the smallest frame; the domain cap after every dedup and
+    // before DSIR, which selects from exactly the surviving corpus. ----
+    val h = hygiene
+    val table: Seq[Stage] = Seq(
+      h.softQuality.map(sq => Stage("soft_quality", "soft quality", sq.toString,
+        in => Sampling.softSample(in, idCol, TextAnalysis.qualityScore(col(textCol)),
+          sq.pivot, sq.sharpness, sq.seed).drop("keep_prob"))),
+      h.urlCol.map(u => Stage("url_dup", "url dedup", u, { in =>
+        // rows with no usable URL (null or empty after
+        // canonicalization) pass through untouched: grouping them
+        // would collapse every URL-less document into ONE group and
+        // silently delete all but one unrelated page
+        val usable = col(u).isNotNull && length(QualityFilters.canonicalizeUrl(col(u))) > 0
+        val keepers = QualityFilters.dedupByUrl(in.filter(usable), u, idCol)
+          .select(col("keep_id").as(idCol))
+        in.filter(!usable).unionByName(in.filter(usable).join(keepers, Seq(idCol), "left_semi"))
+      })),
+      // hashless rows pass through exactly like URL-less rows above
+      h.imageDup.map(ic => Stage("image_dup", "image dedup", ic.toString, { in =>
+        val withHash = in.filter(col(ic.hashCol).isNotNull)
+        val pairs = Dedup.hammingPairs64(withHash.select(col(idCol), col(ic.hashCol)),
+          idCol, ic.hashCol, ic.maxHamming, ic.bands, ic.maxBucket)
+        in.filter(col(ic.hashCol).isNull).unionByName(Dedup.dedupByPairs(withHash, idCol, pairs))
+      })),
+      h.boilerplate.map(bc => Stage("boilerplate", "boilerplate strip", bc.toString,
+        in => dropBlank(bc.dropEmptied)(
+          Dedup.stripBoilerplate(in, idCol, textCol, bc.maxDocFreq)))),
+      Some(Stage("exact_dup", "exact dedup", "", Dedup.exactDedup(_, textCol, idCol))),
+      h.spanDedup.map(sp => Stage("span_dup", "span dedup", sp.toString,
+        in => dropBlank(sp.dropEmptied)(Dedup.spanDedup(in, idCol, textCol, sp.span)))),
+      h.exactSubstr.map(es => Stage("exact_substr", "exactsubstr dedup", es.toString,
+        in => dropBlank(es.dropEmptied)(Dedup.exactSubstrDedup(in, idCol, textCol, es.k)))),
+      h.unigram.map(u => Stage("unigram", "unigram buckets",
+        s"${u.buckets}:${u.keepBuckets}:${u.model.isDefined}:${u.relErr}",
+        in => keepBestBuckets(in, QualityFilters.unigramLogProbs(in, idCol, textCol, u.model),
+          u.buckets, u.keepBuckets, u.relErr))),
+      h.bigram.map(b => Stage("bigram", "bigram buckets",
+        s"${b.buckets}:${b.keepBuckets}:${b.model.isDefined}:${b.alpha}:${b.minCount}:${b.relErr}",
+        { in =>
+          val model = b.model.getOrElse(QualityFilters.bigramModel(in, textCol, b.minCount))
+          keepBestBuckets(in, QualityFilters.bigramLogProbs(in, idCol, textCol, Some(model), b.alpha),
+            b.buckets, b.keepBuckets, b.relErr)
+        })),
+      // train on bounded frames, score the survivors scan-side through
+      // the bucket kernel
+      h.classifier.map(cc => Stage("classifier", "classifier filter",
+        s"${cc.minProb}:${cc.negativeRate}:${cc.buckets}:${cc.model.isDefined}", { in =>
+          val model = cc.model.getOrElse {
+            val negatives = Sampling.hashSample(in, idCol, cc.negativeRate)
+            staged("classifier fit")(QualityClassifier.train(
+              cc.positives.get, negatives, textCol, cc.buckets))
+          }
+          QualityClassifier.filterByQuality(in, model, cc.minProb, textCol)
+        })),
+      // bloom is deliberately NOT part of the pin: it changes the plan,
+      // never the rows (train shingles filter scan-side, only suspects
+      // join), so a resume may switch it freely
+      h.decontaminate.map(dc => Stage("contaminated", "decontaminate",
+        s"${dc.n}:${dc.broadcastEval}", in =>
+          if (dc.bloom) Dedup.decontaminateBloom(in, dc.eval, idCol, textCol, dc.n)
+          else Dedup.decontaminate(in, dc.eval, idCol, textCol, dc.n, dc.broadcastEval))),
+      Some(Stage("near_dup", "near-dup dedup",
+        s"$nearDup:$nearDupThreshold:$shingleSize:$hasherPin:${nearDupKeepCol.mkString}", { in =>
+          val pairs = nearDup match {
+            case NearDup.NgramExact =>
+              Dedup.ngramJaccardPairs(in, idCol, textCol, shingleSize, nearDupThreshold)
+            case NearDup.MinhashLsh =>
+              val (k, bands) = Dedup.lshParamsFor(nearDupThreshold)
+              Dedup.minhashJaccardPairs(in, idCol, textCol, k = k, bands = bands,
+                n = shingleSize, threshold = nearDupThreshold, hasher = hasher)
+          }
+          nearDupKeepCol match {
+            case Some(kc) => Dedup.dedupByPairsBest(in, idCol, pairs, col(kc))
+            case None     => Dedup.dedupByPairs(in, idCol, pairs)
+          }
+        })),
+      // paraphrase-level dedup over the embedding column: it sees only
+      // what every lexical stage kept
+      h.semDedup.map(sd => Stage("semantic_dup", "semantic dedup", sd.toString,
+        Similarity.semDedup(_, idCol, sd.vecCol, sd.threshold, sd.nlist, sd.refineIters,
+          sd.keepFarthestFromCentroid, sd.maxCluster))),
+      h.domainCap.map(cap => Stage("domain_capped", "domain cap", cap.toString,
+        Sampling.bestKPerStratum(_, cap.stratumCol, cap.orderCol, cap.k, idCol))),
+      h.dsir.map(dc => Stage("dsir_selected", "dsir selection",
+        s"${dc.k}:${dc.buckets}:${dc.alpha}:${dc.temperature}:${dc.seed}", { in =>
+          val scored = staged("dsir fit")(Dsir.importanceWeights(
+            in, dc.target, textCol, dc.buckets, dc.alpha))
+          Dsir.resampleTopK(scored, dc.k, idCol, seed = dc.seed, temperature = dc.temperature)
+            .drop("dsir_logw", "dsir_key")
+        }))
+    ).flatten
 
     // ---- opt-in stage resume (see StageStore). The params pin covers
-    // every SCALAR knob; DataFrame-valued config (decontaminate eval,
-    // classifier positives, DSIR target) and the input corpus itself
-    // are deliberately outside it — checkpoint-dir semantics.
+    // every SCALAR knob: the column names, the scan settings, and each
+    // table entry's pin under its key. DataFrame-valued config
+    // (decontaminate eval, classifier positives, DSIR target) and the
+    // input corpus itself are deliberately outside it — checkpoint-dir
+    // semantics. Completed stages must form a prefix of the table.
+    import graft.util.Jsons
     val store = resume.map { dir =>
-      val h = hygiene
-      val hasherName =
-        if (hasher eq Dedup.md5Hash) "md5"
-        else if (hasher eq Dedup.xxHash) "xx"
-        else "custom"
-      new StageStore(dir, graft.util.Jsons.obj(
-        "id" -> idCol, "text" -> textCol, "minQuality" -> minQuality,
-        "languages" -> languages, "nearDupThreshold" -> nearDupThreshold,
-        "nearDupKeepCol" -> nearDupKeepCol,
-        "shingleSize" -> shingleSize, "nearDup" -> nearDup.toString,
-        "hasher" -> hasherName,
-        "c4" -> h.c4.map(_.toString), "gopher" -> h.gopher.map(_.toString),
-        "repetition" -> h.repetition.map(_.toString),
-        "lineDedup" -> h.lineDedup,
-        "mojibakePasses" -> h.mojibakePasses,
-        "blocklist" -> h.blocklist.map(_.mkString(",")),
-        "urlCol" -> h.urlCol,
-        "imageDup" -> h.imageDup.map(_.toString),
-        "boilerplate" -> h.boilerplate.map(_.toString),
-        "spanDedup" -> h.spanDedup.map(_.toString),
-        "exactSubstr" -> h.exactSubstr.map(_.toString),
-        "unigram" -> h.unigram.map(u =>
-          s"${u.buckets}:${u.keepBuckets}:${u.model.isDefined}:${u.relErr}"),
-        "bigram" -> h.bigram.map(b =>
-          s"${b.buckets}:${b.keepBuckets}:${b.model.isDefined}:${b.alpha}:${b.minCount}:${b.relErr}"),
-        "classifier" -> h.classifier.map(c =>
-          s"${c.minProb}:${c.negativeRate}:${c.buckets}:${c.model.isDefined}"),
-        // bloom is deliberately NOT part of the pin: it changes the
-        // plan, never the rows, so a resume may switch it freely
-        "decontaminate" -> h.decontaminate.map(d => s"${d.n}:${d.broadcastEval}"),
-        "semDedup" -> h.semDedup.map(_.toString),
-        "domainCap" -> h.domainCap.map(_.toString),
-        "dsir" -> h.dsir.map(d =>
-          s"${d.k}:${d.buckets}:${d.alpha}:${d.temperature}:${d.seed}"),
-        "softQuality" -> h.softQuality.map(c =>
-          s"${c.pivot}:${c.sharpness}:${c.seed}")))
+      val st = new StageStore(dir, Jsons.obj(
+        "id" -> idCol, "text" -> textCol,
+        "scan" -> Jsons.Raw(Jsons.obj(
+          "minQuality" -> minQuality, "languages" -> languages,
+          "c4" -> h.c4.map(_.toString), "gopher" -> h.gopher.map(_.toString),
+          "repetition" -> h.repetition.map(_.toString),
+          "lineDedup" -> h.lineDedup, "mojibakePasses" -> h.mojibakePasses,
+          "blocklist" -> h.blocklist.map(_.mkString(",")))),
+        "stages" -> Jsons.Raw(Jsons.obj(table.map(s => s.key -> s.pin): _*))))
+      st.validatePrefix("scan" +: table.map(_.key))
+      st
     }
-    // enabled stage keys in pipeline order, for the prefix check (the
-    // names must match the stageOut keys below)
-    store.foreach(_.validatePrefix(Seq("scan") ++
-      hygiene.softQuality.map(_ => "soft_quality") ++
-      hygiene.urlCol.map(_ => "url_dup") ++
-      hygiene.imageDup.map(_ => "image_dup") ++
-      hygiene.boilerplate.map(_ => "boilerplate") ++
-      Seq("exact_dup") ++
-      hygiene.spanDedup.map(_ => "span_dup") ++
-      hygiene.exactSubstr.map(_ => "exact_substr") ++
-      hygiene.unigram.map(_ => "unigram") ++
-      hygiene.bigram.map(_ => "bigram") ++
-      hygiene.classifier.map(_ => "classifier") ++
-      hygiene.decontaminate.map(_ => "contaminated") ++
-      Seq("near_dup") ++
-      hygiene.semDedup.map(_ => "semantic_dup") ++
-      hygiene.domainCap.map(_ => "domain_capped") ++
-      hygiene.dsir.map(_ => "dsir_selected")))
     // One stage boundary: under resume, a completed stage's frame is
     // READ BACK (the thunk is never forced — no refit, no reshuffles);
     // an incomplete stage computes, persists atomically and reads
     // back, so the surviving lineage is a flat parquet scan either
-    // way. Without resume, the lazy localCheckpoint keeps the historic
-    // behavior byte-for-byte. The returned count doubles as the ledger
+    // way. Without resume, the lazy localCheckpoint cuts the lineage
+    // unless `cut` is off. The returned count doubles as the ledger
     // row (parquet counts are metadata-cheap on the resumed path).
-    def stageOut(key: String, desc: String)(compute: => DataFrame): (DataFrame, Long) =
+    def stageOut(key: String, desc: String, cut: Boolean)(compute: => DataFrame): (DataFrame, Long) =
       store match {
         case Some(st) if st.isDone(key) =>
           val df = st.read(docs.sparkSession, key)
@@ -513,7 +610,7 @@ object Curation {
           val df = staged(desc)(st.write(key, compute))
           (df, staged(desc)(df.count()))
         case None =>
-          val df = stageCp(compute)
+          val df = if (cut) stageCp(compute) else compute
           (df, staged(desc)(df.count()))
       }
 
@@ -528,10 +625,11 @@ object Curation {
         Seq("quality" -> graft.functions.Hygiene.QualityStage,
           "language" -> graft.functions.Hygiene.LanguageStage)
 
-    // the scan stage resumes as a unit: its per-rule ledger comes from
-    // the verdict AGGREGATE over the raw input (a full corpus read),
-    // so the counts ride a side JSON next to the persisted frame —
-    // resuming must skip the aggregate too, not just the filter
+    // ---- the scan prologue resumes as a unit: its per-rule ledger
+    // comes from the verdict AGGREGATE over the raw input (a full
+    // corpus read), so the counts ride a side JSON next to the
+    // persisted frame — resuming must skip the aggregate too, not just
+    // the filter
     val (scanKept, input, scanCounts): (DataFrame, Long, Seq[(String, Long)]) =
       store match {
         case Some(st) if st.isDone("scan") =>
@@ -545,17 +643,13 @@ object Curation {
           val inputN = vCounts.values.sum
           val counts = stageIdx.map { case (name, idx) =>
             name -> vCounts.collect { case (v, n) if v == 0 || v > idx => n }.sum }
-          // cacheOnce: the scan-filtered frame feeds the URL-dedup
-          // self-join AND the downstream dedup chain — cache it once
-          // here so a repeated identical curate call (bench reps)
-          // reuses the live entry instead of re-issuing cache()
-          // against the same plan. The blocklist filter (when enabled)
-          // fuses into the SAME whole-stage-codegen scan as the
-          // verdict filter — no extra corpus read — and evaluates the
-          // CLEANED text like every other post-C4 rule. The line-dedup
-          // kernel composes INSIDE the same codegen span as the
-          // verdict filter and C4 rewrite — one corpus read, cleanText
-          // evaluated once per document as the kernel's child.
+          // The blocklist filter (when enabled) fuses into the SAME
+          // whole-stage-codegen scan as the verdict filter — no extra
+          // corpus read — and evaluates the CLEANED text like every
+          // other post-C4 rule. The line-dedup kernel composes INSIDE
+          // the same codegen span as the verdict filter and C4 rewrite
+          // — one corpus read, cleanText evaluated once per document as
+          // the kernel's child.
           val scanFiltered =
             corpus.filter(verdict === graft.functions.Hygiene.PassVerdict)
               .withColumn(textCol,
@@ -579,284 +673,19 @@ object Curation {
           }
           (df, inputN, counts)
       }
+    val scanLedger = scanCounts.toVector ++
+      hygiene.blocklist.map(_ => "blocklist" -> staged("blocklist")(scanKept.count()))
 
-    var ledger = Vector.newBuilder[(String, Long)]
-    ledger ++= scanCounts
-    hygiene.blocklist.foreach { _ =>
-      ledger += ("blocklist" -> staged("blocklist")(scanKept.count()))
-    }
-
-    // ---- soft quality: score-proportional keep, the probabilistic
-    // alternative to the verdict kernel's hard minQuality floor —
-    // placed FIRST so no dedup stage pays for documents the soft
-    // filter was going to drop anyway ---------------------------------
-    val softKept = hygiene.softQuality match {
-      case Some(sq) =>
-        val (kept, n) = stageOut("soft_quality", "soft quality") {
-          Sampling.softSample(scanKept, idCol,
-            TextAnalysis.qualityScore(col(textCol)),
-            sq.pivot, sq.sharpness, sq.seed).drop("keep_prob")
-        }
-        ledger += ("soft_quality" -> n)
-        kept
-      case None => scanKept
-    }
-
-    // ---- URL dedup: one map-side-combined group + a semi join --------
-    val urlKept = hygiene.urlCol match {
-      case Some(u) =>
-        // checkpointed (stageOut): the next stage (exactDedup) consumes
-        // its input TWICE (fingerprint groupBy + the keeper semi join),
-        // and this frame carries a union, a join and the URL-
-        // canonicalization regex chain — without materialization all
-        // of it executes twice
-        val (kept, n) = stageOut("url_dup", "url dedup") {
-          // rows with no usable URL (null or empty after
-          // canonicalization) pass through untouched: grouping them
-          // would collapse every URL-less document into ONE group and
-          // silently delete all but one unrelated page
-          val canon = QualityFilters.canonicalizeUrl(col(u))
-          val usable = col(u).isNotNull && length(canon) > 0
-          val keepers = QualityFilters.dedupByUrl(softKept.filter(usable), u, idCol)
-            .select(col("keep_id").as(idCol))
-          softKept.filter(!usable)
-            .unionByName(softKept.filter(usable).join(keepers, Seq(idCol), "left_semi"))
-        }
-        ledger += ("url_dup" -> n)
-        kept
-      case None => softKept
-    }
-
-    // ---- image near-dup dedup: 8-byte perceptual-hash key, the
-    // multimodal sibling of URL dedup (cheap key first — a mirror
-    // page re-serving the same hero image dies here before the text
-    // machinery pays for it); hashless rows pass through exactly like
-    // URL-less rows above ------------------------------------------------
-    val imgKept = hygiene.imageDup match {
-      case Some(ic) =>
-        val (kept, n) = stageOut("image_dup", "image dedup") {
-          val withHash = urlKept.filter(col(ic.hashCol).isNotNull)
-          val pairs = Dedup.hammingPairs64(
-            withHash.select(col(idCol), col(ic.hashCol)), idCol, ic.hashCol,
-            ic.maxHamming, ic.bands, ic.maxBucket)
-          urlKept.filter(col(ic.hashCol).isNull)
-            .unionByName(Dedup.dedupByPairs(withHash, idCol, pairs))
-        }
-        ledger += ("image_dup" -> n)
-        kept
-      case None => urlKept
-    }
-
-    // ---- corpus-level boilerplate line removal -----------------------
-    // BEFORE exact dedup: two mirror pages differing only in their nav
-    // menus become byte-identical once the menus are stripped, so the
-    // cheap hash dedup catches them. stripBoilerplate caches its own
-    // (id, pos, fingerprint) frame internally (tracked); the rewritten
-    // corpus is cached here because exact dedup consumes it twice.
-    val boilKept = hygiene.boilerplate match {
-      case Some(bc) =>
-        val (kept, n) = stageOut("boilerplate", "boilerplate strip") {
-          val stripped = Dedup.stripBoilerplate(imgKept, idCol, textCol, bc.maxDocFreq)
-          if (bc.dropEmptied) stripped.filter(length(trim(col(textCol))) > 0)
-          else stripped
-        }
-        ledger += ("boilerplate" -> n)
-        kept
-      case None => imgKept
-    }
-
-    // ---- exact content dedup -----------------------------------------
-    val (exactKept, afterExact) = stageOut("exact_dup", "exact dedup")(
-      Dedup.exactDedup(boilKept, textCol, idCol))
-    ledger += ("exact_dup" -> afterExact)
-
-    // ---- C4 cross-document span dedup --------------------------------
-    // AFTER exact dedup (whole-document duplicates are gone for one
-    // cheap shuffle; the span machinery then only pays for partial
-    // overlaps). Rewrites text, so it must precede the LM scoring
-    // stages — scores should describe the text that survives.
-    val spanKept = hygiene.spanDedup match {
-      case Some(sp) =>
-        val (kept, n) = stageOut("span_dup", "span dedup") {
-          val deduped = Dedup.spanDedup(exactKept, idCol, textCol, sp.span)
-          if (sp.dropEmptied) deduped.filter(length(trim(col(textCol))) > 0)
-          else deduped
-        }
-        ledger += ("span_dup" -> n)
-        kept
-      case None => exactKept
-    }
-
-    // ---- ExactSubstr duplicate-passage removal -----------------------
-    // the token-window complement of span dedup, same position in the
-    // pipeline for the same reasons (post exact dedup, pre LM scoring)
-    val substrKept = hygiene.exactSubstr match {
-      case Some(es) =>
-        val (kept, n) = stageOut("exact_substr", "exactsubstr dedup") {
-          val deduped = Dedup.exactSubstrDedup(spanKept, idCol, textCol, es.k)
-          if (es.dropEmptied) deduped.filter(length(trim(col(textCol))) > 0)
-          else deduped
-        }
-        ledger += ("exact_substr" -> n)
-        kept
-      case None => spanKept
-    }
-
-    // ---- CCNet unigram bucketing (post-dedup, approx scale path) -----
-    val uniKept = hygiene.unigram match {
-      case Some(u) =>
-        val (kept, n) = stageOut("unigram", "unigram buckets") {
-          // cached: qualityBucketsApprox's approxQuantile is an eager
-          // action over the scored frame, and the bucket filter below
-          // consumes it AGAIN — without the cache the corpus-scale LM
-          // scoring plan executes twice per stage
-          val scored = cacheTracked(
-            QualityFilters.unigramLogProbs(substrKept, idCol, textCol, u.model))
-          val bucketed = QualityFilters.qualityBucketsApprox(
-            scored, buckets = u.buckets, relErr = u.relErr)
-          val keepIds = bucketed.filter(col("quality_bucket") <= u.keepBuckets)
-            .select(col(idCol))
-          substrKept.join(keepIds, Seq(idCol), "left_semi")
-        }
-        ledger += ("unigram" -> n)
-        kept
-      case None => substrKept
-    }
-
-    // ---- bigram LM perplexity bucketing (the CCNet scoring model
-    // proper; also post-dedup) ------------------------------------------
-    val lmKept = hygiene.bigram match {
-      case Some(b) =>
-        val (kept, n) = stageOut("bigram", "bigram buckets") {
-          val model = b.model.getOrElse(
-            QualityFilters.bigramModel(uniKept, textCol, b.minCount))
-          // same double-execution guard as the unigram stage above
-          val scored = cacheTracked(QualityFilters.bigramLogProbs(
-            uniKept, idCol, textCol, Some(model), b.alpha))
-          val bucketed = QualityFilters.qualityBucketsApprox(
-            scored, buckets = b.buckets, relErr = b.relErr)
-          val keepIds = bucketed.filter(col("quality_bucket") <= b.keepBuckets)
-            .select(col(idCol))
-          uniKept.join(keepIds, Seq(idCol), "left_semi")
-        }
-        ledger += ("bigram" -> n)
-        kept
-      case None => uniKept
-    }
-
-    // ---- classifier quality stage (post-dedup, with the other
-    // statistical quality stages): train on bounded frames, score the
-    // survivors scan-side through the bucket kernel ------------------
-    val clsKept = hygiene.classifier match {
-      case Some(cc) =>
-        val (kept, n) = stageOut("classifier", "classifier filter") {
-          val model = cc.model.getOrElse {
-            val negatives = Sampling.hashSample(lmKept, idCol, cc.negativeRate)
-            staged("classifier fit")(QualityClassifier.train(
-              cc.positives.get, negatives, textCol, cc.buckets))
-          }
-          QualityClassifier.filterByQuality(lmKept, model, cc.minProb, textCol)
-        }
-        ledger += ("classifier" -> n)
-        kept
-      case None => lmKept
-    }
-
-    // ---- benchmark decontamination ------------------------------------
-    // a cheap broadcast anti-join (train side never shuffles) that
-    // shrinks the input to the expensive pair-generating stages below
-    val decontKept = hygiene.decontaminate match {
-      case Some(dc) =>
-        val (kept, n) = stageOut("contaminated", "decontaminate")(
-          // bloom: the eval-set-past-broadcast-size path — train
-          // shingles filter scan-side, only suspects join (results
-          // bit-identical either way)
-          if (dc.bloom)
-            Dedup.decontaminateBloom(clsKept, dc.eval, idCol, textCol, dc.n)
-          else Dedup.decontaminate(
-            clsKept, dc.eval, idCol, textCol, dc.n, dc.broadcastEval))
-        ledger += ("contaminated" -> n)
-        kept
-      case None => clsKept
-    }
-
-    // ---- near-dup dedup: the expensive stage runs over the smallest
-    // surviving frame ---------------------------------------------------
-    def nearDeduped: DataFrame = {
-      val pairs = nearDup match {
-        case NearDup.NgramExact =>
-          Dedup.ngramJaccardPairs(decontKept, idCol, textCol,
-            shingleSize, nearDupThreshold)
-        case NearDup.MinhashLsh =>
-          val (k, bands) = Dedup.lshParamsFor(nearDupThreshold)
-          Dedup.minhashJaccardPairs(decontKept, idCol, textCol,
-            k = k, bands = bands, n = shingleSize, threshold = nearDupThreshold,
-            hasher = hasher)
-      }
-      nearDupKeepCol match {
-        case Some(sc) => Dedup.dedupByPairsBest(decontKept, idCol, pairs, col(sc))
-        case None     => Dedup.dedupByPairs(decontKept, idCol, pairs)
-      }
-    }
-
-    // ---- SemDeDup: paraphrase-level dedup over the embedding column —
-    // it sees only what every lexical stage kept ------------------------
-    val preSelect = hygiene.semDedup match {
-      case Some(sd) =>
-        // the near-dup survivors feed clustering, the pair join AND the
-        // final dedup — checkpoint them (the None branch keeps the
-        // historic count-then-return shape instead: one extra tail
-        // execution, no corpus-scale materialization — unless DSIR
-        // follows, whose fit + scoring re-read the frame)
-        val (nd, nN) = stageOut("near_dup", "near-dup dedup")(nearDeduped)
-        ledger += ("near_dup" -> nN)
-        val (kept, n) = stageOut("semantic_dup", "semantic dedup")(
-          Similarity.semDedup(nd, idCol, sd.vecCol,
-            sd.threshold, sd.nlist, sd.refineIters,
-            sd.keepFarthestFromCentroid, sd.maxCluster))
-        ledger += ("semantic_dup" -> n)
-        kept
-      case None =>
-        store match {
-          case Some(_) =>
-            val (nd, nN) = stageOut("near_dup", "near-dup dedup")(nearDeduped)
-            ledger += ("near_dup" -> nN)
-            nd
-          case None =>
-            val nd =
-              if (hygiene.dsir.isDefined) stageCp(nearDeduped) else nearDeduped
-            ledger += ("near_dup" -> staged("near-dup dedup")(nd.count()))
-            nd
-        }
-    }
-
-    // ---- Per-domain quota: cap each domain at its k best survivors —
-    // after every dedup (capacity is not spent on duplicates), before
-    // DSIR selection (the target draw sees the capped mixture) --------
-    val preDsir = hygiene.domainCap match {
-      case Some(cap) =>
-        val (kept, n) = stageOut("domain_capped", "domain cap")(
-          Sampling.bestKPerStratum(preSelect, cap.stratumCol,
-            cap.orderCol, cap.k, idCol))
-        ledger += ("domain_capped" -> n)
-        kept
-      case None => preSelect
-    }
-
-    // ---- DSIR target selection: last of all — the distributions fit
-    // on (and the draw selects from) exactly the surviving corpus -----
-    val curated = hygiene.dsir match {
-      case Some(dc) =>
-        val (kept, n) = stageOut("dsir_selected", "dsir selection") {
-          val scored = staged("dsir fit")(Dsir.importanceWeights(
-            preDsir, dc.target, textCol, dc.buckets, dc.alpha))
-          Dsir.resampleTopK(scored, dc.k, idCol,
-              seed = dc.seed, temperature = dc.temperature)
-            .drop("dsir_logw", "dsir_key")
-        }
-        ledger += ("dsir_selected" -> n)
-        kept
-      case None => preDsir
+    // ---- the fold: each table entry runs through stageOut and leaves
+    // its (key, survivors) ledger row. Without a resume store, a
+    // near-dup stage that ends the pipeline is counted and returned
+    // uncut: one extra tail execution when the caller consumes df,
+    // instead of a corpus-scale materialization.
+    val (curated, ledger) = table.foldLeft((scanKept, scanLedger)) {
+      case ((in, rows), s) =>
+        val cut = s.key != "near_dup" || (s ne table.last)
+        val (kept, n) = stageOut(s.key, s.desc, cut)(s.body(in))
+        (kept, rows :+ (s.key -> n))
     }
 
     // the tracked caches deliberately stay resident: unpersisting any
@@ -864,8 +693,7 @@ object Curation {
     // entries mid-pipeline. The caller releases them AFTER consuming
     // df, via CurationResult.release(); the stage checkpoints are
     // GC-reclaimed (see CurationResult doc).
-    CurationResult(curated, CurationStats(input, ledger.result()),
-      tracked.result())
+    CurationResult(curated, CurationStats(input, ledger), tracked.result())
     }
   }
 }

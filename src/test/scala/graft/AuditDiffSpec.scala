@@ -283,8 +283,8 @@ class AuditDiffSpec extends SparkFunSuite {
       val (r, queries) = queriesOf(Diff(o, n, Seq("user_id"), "label_time"))
       // an empty side lets adaptive execution replace the whole join by an
       // empty relation, observations included: those sides are counted
-      // by count() on their own
-      assert(if (emptySide) queries.size <= 3 else queries.size == 1,
+      // together in one more query
+      assert(if (emptySide) queries.size <= 2 else queries.size == 1,
         s"$name: one query per diff, got ${queries.size}")
       assert(r.oldRows == o.count() && r.newRows == n.count(), s"$name: $r")
       assert(r.commonRows == o.join(n.select("user_id", "label_time"),
@@ -311,6 +311,22 @@ class AuditDiffSpec extends SparkFunSuite {
     assert(sql.contains("ORDER BY t DESC") && sql.contains("LIMIT 1"))
     assert(sql.contains("- INTERVAL '2d'"))
     assert(r.render.contains("LIMIT 1"))
+    // a staleness limit floors feature_time like the build does: the
+    // lookup carries it next to the lookback, the window shows the
+    // tighter of the two
+    val src = f.source
+    val stale = Feature("g", src, ColumnsMode(Map("v" -> "v")),
+      maxStaleness = Some(java.time.Duration.ofDays(30)))
+    val loose = Feature("h", src, ColumnsMode(Map("v" -> "v")),
+      maxStaleness = Some(java.time.Duration.ofDays(400)))
+    val lbl = Labels.frame(labelsDf, Seq("user_id"), "label_time", Seq("y"))
+    val Seq(g, h) = Explain(spark, lbl, Seq(stale, loose)).plans
+    assert(g.window == "[label_time - 30d, label_time - 0d)", g.window)
+    assert(g.staleness.contains("30d"))
+    assert(g.exampleSql.contains("AND t >= {T} - INTERVAL '30d'") &&
+      g.exampleSql.contains("AND t >= {T} - INTERVAL '365d'"), g.exampleSql)
+    assert(h.window.startsWith("[label_time - 365d,"), h.window)
+    assert(h.exampleSql.contains("AND t >= {T} - INTERVAL '400d'"), h.exampleSql)
   }
 
   test("explain renders sql-mode features in full: body + per-label lookup") {

@@ -149,12 +149,29 @@ class BuildSpec extends SparkFunSuite {
     val m2 = Build(spark, labels, mixed, BuildOptions(strategy = AsOfJoin.Strategy.Auto))
     val p2 = Build(spark, labels, mixed, BuildOptions(strategy = AsOfJoin.Strategy.RowNumber))
     assert(m2.df.exceptAll(p2.df).isEmpty && p2.df.exceptAll(m2.df).isEmpty)
-    // width-capped batching (here: forced 2 batches of at most 2 value
-    // columns) must produce the identical frame to one unbounded batch
-    val capped = Build(spark, labels, srcs,
-      BuildOptions(strategy = AsOfJoin.Strategy.Auto, maxCarryColumns = 2))
-    assert(capped.df.exceptAll(multi.df).isEmpty &&
-      multi.df.exceptAll(capped.df).isEmpty)
+    // width-capped batching: three 5-column features exceed the
+    // 12-column carry cap, so the build runs a 2-feature batch and joins
+    // a 1-feature batch back on the label rowid; each batch's columns
+    // must match a build of its features alone (one batch, no re-join)
+    val wide = (0 until 3).map { k =>
+      val vs = (0 until 5).map(j => s"w${k}_$j")
+      val df = spark.range(1, 501).select(Seq(
+        (col("id") % 60 + 1).as("user_id"),
+        (lit(ts("2023-06-01 00:00:00")) +
+          make_dt_interval(col("id") * (k + 3) % 200, col("id") % 24,
+            (col("id") / 100).cast("int") % 60, lit(0))).as("t")) ++
+        vs.zipWithIndex.map { case (v, j) => (col("id") * (k + 1) + j).cast("double").as(v) }: _*)
+      Feature(s"g$k", Source.frame(s"w$k", df, Seq("user_id"), "t"),
+        ColumnsMode(vs.map(v => v -> v).toMap))
+    }
+    val auto = BuildOptions(strategy = AsOfJoin.Strategy.Auto)
+    val capped = Build(spark, labels, wide, auto)
+    Seq(wide.take(2), wide.drop(2)).foreach { fs =>
+      val alone = Build(spark, labels, fs, auto).df
+      val got = capped.df.select(alone.columns.map(col).toSeq: _*)
+      assert(got.exceptAll(alone).isEmpty && alone.exceptAll(got).isEmpty,
+        s"capped batch of ${fs.map(_.name)} differs from its features built alone")
+    }
   }
 
   test("rowid stability: order-unstable labels frame still aligns features") {

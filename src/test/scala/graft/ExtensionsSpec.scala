@@ -362,6 +362,67 @@ class ExtensionsSpec extends SparkFunSuite {
       "stale non-prefix near_dup checkpoint must be invalidated and recomputed")
   }
 
+  test("curation resume: the ledger, the stage dirs and the params pin follow one stage table") {
+    import graft.ops.Curation
+    import java.nio.file.{Files, Paths}
+    val dir = Files.createTempDirectory("graft_resume_table").toString
+    val page = (i: Int) => "Welcome to the harbor site.\n" +
+      s"The quiet harbor town wakes early with boat $i. The market opens " +
+      s"with fresh catch today for visitor $i. Evening brings music to pier $i."
+    val docs = ((1 to 7).map(i => (i.toLong, s"https://example.com/p$i", page(i))) :+
+      ((8L, "https://example.com/p1", page(8)))).toDF("doc_id", "url", "text")
+    val hygiene = Curation.HygieneConfig(urlCol = Some("url"),
+      boilerplate = Some(Curation.BoilerplateConfig(maxDocFreq = 3)),
+      spanDedup = Some(Curation.SpanDedupConfig()))
+    def run(h: Curation.HygieneConfig = hygiene, shingleSize: Int = 3,
+        nearDup: Curation.NearDup = Curation.NearDup.NgramExact) =
+      Curation.curate(docs, minQuality = 0.0, languages = Nil, nearDupThreshold = 0.99,
+        shingleSize = shingleSize, nearDup = nearDup, hygiene = h, resume = Some(dir))
+    val r = run()
+    val stages = r.stats.stages.map(_._1)
+    assert(stages.take(2) == Vector("quality", "language"), stages) // the scan's rows
+    assert(stages.drop(2) == Vector("url_dup", "boilerplate", "exact_dup", "span_dup",
+      "near_dup"), stages)
+    // committed stage dirs, ordered by when each committed
+    val committed = new java.io.File(dir).listFiles().toVector
+      .map(d => Paths.get(d.getPath, "_SUCCESS")).filter(Files.exists(_))
+      .sortBy(Files.getLastModifiedTime(_).toInstant).map(_.getParent.getFileName.toString)
+    assert(committed == "scan" +: stages.drop(2), committed)
+
+    // drift in a stage scalar, in the shingle size or in the near-dup
+    // strategy changes the pin and is refused
+    val drifts = Seq(
+      "boilerplate maxDocFreq" -> (() => run(h = hygiene.copy(
+        boilerplate = Some(Curation.BoilerplateConfig(maxDocFreq = 4))))),
+      "shingleSize" -> (() => run(shingleSize = 4)),
+      "near-dup strategy" -> (() => run(nearDup = Curation.NearDup.MinhashLsh)))
+    drifts.foreach { case (what, f) =>
+      val err = intercept[graft.errors.ConfigError](f())
+      assert(err.getMessage.contains("different curation parameters"), s"$what: ${err.getMessage}")
+    }
+    // the unchanged config still resumes
+    assert(run().stats.stages == r.stats.stages)
+  }
+
+  test("curation resume refuses a custom MinHash hasher: a function cannot be pinned") {
+    import graft.ops.Curation
+    import java.nio.file.{Files, Paths}
+    val dir = Files.createTempDirectory("graft_resume_hasher").toString
+    val docs = (1 to 4).map(i => (i.toLong, s"the harbor market opens early today number $i"))
+      .toDF("doc_id", "text")
+    val custom: (org.apache.spark.sql.Column, Int) => org.apache.spark.sql.Column =
+      (c, seed) => Dedup.xxHash(c, seed)
+    def run(nearDup: Curation.NearDup, resume: Option[String]) =
+      Curation.curate(docs, minQuality = 0.0, languages = Nil, nearDupThreshold = 0.99,
+        nearDup = nearDup, hasher = custom, resume = resume)
+    val err = intercept[graft.errors.ConfigError](run(Curation.NearDup.MinhashLsh, Some(dir)))
+    assert(err.getMessage.contains("cannot be pinned"), err.getMessage)
+    assert(!Files.exists(Paths.get(dir, "_params.json")), "refused before anything was written")
+    // nothing to pin without resume; shingle Jaccard never calls the hasher
+    assert(run(Curation.NearDup.MinhashLsh, None).stats.output == 4)
+    assert(run(Curation.NearDup.NgramExact, Some(dir)).stats.output == 4)
+  }
+
   test("curation image near-dup stage dedups by perceptual hash, hashless rows pass") {
     import graft.ops.Curation
     // hashes: doc 2 within hamming 2 of doc 1 (bits 0-1 flipped), doc 3

@@ -116,7 +116,7 @@ class PlanSpec extends SparkFunSuite {
         graft.model.ColumnsMode(Map("event_type" -> "event_type")),
         embargo = java.time.Duration.ofDays(1)))
     val df = graft.engine.Build(spark, labels, feats, graft.engine.BuildOptions(
-      checkDuplicates = false, collectStats = false, verify = false)).df
+      checkDuplicates = false)).df
     import org.apache.spark.sql.catalyst.expressions.aggregate.Last
     // the analyzed plan: the build caches its assembled frame, and the
     // optimized plan shows only the cache relation in its place
@@ -192,7 +192,7 @@ class PlanSpec extends SparkFunSuite {
         graft.model.Source.frame("ev_b", ev, Seq("user_id"), "ts"),
         graft.model.ColumnsMode(Map("event_type" -> "event_type")),
         onDuplicate = graft.model.OnDuplicate.KeepAny))
-    val opts = graft.engine.BuildOptions(collectStats = false, verify = false)
+    val opts = graft.engine.BuildOptions()
     // audit the written parquet: the dataset's own lineage adds no window
     val out = java.nio.file.Files.createTempDirectory("graft_rebuild_plan").toString + "/t.parquet"
     graft.engine.Build(spark, graft.model.Labels.frame(labelsDf,
