@@ -712,7 +712,7 @@ object Bench {
   private def ivfPqBuildScenario(spark: SparkSession): Long = {
     val corpus = spark.read.parquet(embCorpusPath(spark, 1100000L))
       .filter(col("vec_id") < 1000000L)
-    graft.ops.Similarity.saveIvfPqIndex(
+    graft.ops.Similarity.saveIvfIndex(
       graft.ops.Similarity.buildIvfPqIndex(corpus, "vec_id", "embedding",
         nlist = 64, m = 4, codebookSize = 16),
       s"$benchDir/ivfpq_idx_1m")
@@ -724,8 +724,8 @@ object Bench {
     if (!committed(s"$path/codes.parquet")) ivfPqBuildScenario(spark)
     val queries = spark.read.parquet(embCorpusPath(spark, 1100000L))
       .filter(col("vec_id") < 1000000L && col("vec_id") % 10000 === 0)
-    graft.ops.Similarity.ivfPqTopK(queries,
-      graft.ops.Similarity.loadIvfPqIndex(spark, path),
+    graft.ops.Similarity.ivfTopKIndexed(queries,
+      graft.ops.Similarity.loadIvfIndex(spark, path),
       "vec_id", "embedding", k = 10, nprobe = 8).count()
   }
 

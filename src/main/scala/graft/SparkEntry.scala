@@ -891,10 +891,10 @@ object SparkEntry {
       val path = s"${System.getProperty("java.io.tmpdir")}/graft_ivfpq_idx_${
         java.lang.Integer.toHexString(new java.io.File(dir).getAbsolutePath.hashCode)}_${
         ProcessHandle.current().pid()}"
-      graft.ops.Similarity.saveIvfPqIndex(idx, path)
-      graft.ops.Similarity.ivfPqTopK(
+      graft.ops.Similarity.saveIvfIndex(idx, path)
+      graft.ops.Similarity.ivfTopKIndexed(
         e.filter(col("vec_id") % 50 === 0),
-        graft.ops.Similarity.loadIvfPqIndex(s, path),
+        graft.ops.Similarity.loadIvfIndex(s, path),
         "vec_id", "embedding", k = 5, nprobe = 3)
         .select(col("query_id"), col("neighbor_id"),
           round(col("sim"), 6).as("sim"), col("rank").cast("long").as("rank"))

@@ -1437,20 +1437,29 @@ object Main {
     * (scan-side kernel; `--count-only` stamps exact token counts
     * without materializing the id arrays). */
   /** `graft index`: the ANN index family from the command line —
-    * build/append/search a persisted IVF (vectors) or IVF-PQ (residual
-    * codes) index. The two layouts share the partitionBy(list_id)
-    * probe-pruning design; `--pq M,K` at build time picks IVF-PQ, and
-    * append/search auto-detect which layout a directory holds. */
+    * build/append/search a persisted IVF index whose lists hold
+    * vectors, or (`--pq M,K` at build time) residual PQ codes. Every
+    * mode after the build reads the layout from the directory; only
+    * PQ rebuilds, PQ exact baselines and `--refine` need the true
+    * vectors from `--corpus`. */
   private[graft] def cmdIndex(args: Array[String]): Int = {
     val (f, _) = flags(args)
     val spark = session()
     import graft.ops.Similarity
     val idCol = f.getOrElse("id-col", "vec_id")
     val vecCol = f.getOrElse("vec-col", "embedding")
-    // layout auto-detect through the Hadoop FileSystem of the path's
-    // scheme (Similarity.indexIsPq) — a java.nio probe would silently
-    // answer false for every hdfs:// index and misroute IVF-PQ loads
-    def isPq(dir: String): Boolean = Similarity.indexIsPq(spark, dir)
+    // `--pq M,K` (subspaces, codebook size), parsed in one place
+    def pqShape(hint: String): Option[(Int, Int)] = f.get("pq").map { mk =>
+      val parts = mk.split(",").map(_.trim)
+      if (parts.length != 2 || parts.exists(p => scala.util.Try(p.toInt).isFailure))
+        throw Errors.config(
+          s"--pq wants M,K (subspaces, codebook size), got '$mk'.", hint)
+      (parts(0).toInt, parts(1).toInt)
+    }
+    def kind(pq: Boolean): String = if (pq) "ivfpq" else "ivf"
+    // " m=… codebook=…" for a PQ shape, nothing for a vector index
+    def pqDesc(pq: Option[(Int, Int)]): String =
+      pq.fold("") { case (m, k) => s" m=$m codebook=$k" }
     val modes = Seq("build", "append", "search", "describe", "compact", "rebuild")
       .filter(f.contains)
     if (modes.size != 1) throw graft.errors.Errors.config(
@@ -1458,30 +1467,21 @@ object Main {
         s"--compact/--rebuild" +
         (if (modes.isEmpty) "." else s", got --${modes.mkString(" --")}."),
       "pick one mode")
+    lazy val nlist = f.getOrElse("nlist", "64").toInt
+    lazy val refine = f.getOrElse("refine-iters", "0").toInt
+    def build(corpus: org.apache.spark.sql.DataFrame, pq: Option[(Int, Int)]) =
+      pq.fold(Similarity.buildIvfIndex(corpus, idCol, vecCol, nlist, refine)) {
+        case (m, k) => Similarity.buildIvfPqIndex(corpus, idCol, vecCol, nlist, m, k,
+          refine, f.getOrElse("pq-refine-iters", "0").toInt)
+      }
     modes.head match {
       case "build" =>
         val input = req(f, "input", "index --build needs --input PATH (an embedding corpus)")
         val out = req(f, "output", "index --build needs --output DIR")
         val df = readCorpus(spark, input, f.get("input-format"))
-        val nlist = f.getOrElse("nlist", "64").toInt
-        val refine = f.getOrElse("refine-iters", "0").toInt
-        f.get("pq") match {
-          case Some(mk) =>
-            val parts = mk.split(",").map(_.trim)
-            if (parts.length != 2 || parts.exists(p => scala.util.Try(p.toInt).isFailure))
-              throw graft.errors.Errors.config(
-                s"--pq wants M,K (subspaces, codebook size), got '$mk'.",
-                "e.g. --pq 8,256")
-            val (m, k) = (parts(0).toInt, parts(1).toInt)
-            Similarity.saveIvfPqIndex(Similarity.buildIvfPqIndex(
-              df, idCol, vecCol, nlist, m, k, refine,
-              f.getOrElse("pq-refine-iters", "0").toInt), out)
-            println(s"index=ivfpq nlist=$nlist m=$m codebook=$k written=$out")
-          case None =>
-            Similarity.saveIvfIndex(Similarity.buildIvfIndex(
-              df, idCol, vecCol, nlist, refine), out)
-            println(s"index=ivf nlist=$nlist written=$out")
-        }
+        val pq = pqShape("e.g. --pq 8,256")
+        Similarity.saveIvfIndex(build(df, pq), out)
+        println(s"index=${kind(pq.isDefined)} nlist=$nlist${pqDesc(pq)} written=$out")
       case "compact" =>
         val idxDir = req(f, "index", "index --compact needs --index DIR")
         Similarity.compactIndex(spark, idxDir)
@@ -1496,63 +1496,39 @@ object Main {
         val idxDir = req(f, "index", "index --rebuild needs --index DIR")
         val newDir = req(f, "output",
           "index --rebuild needs --output NEWDIR (readers cut over after)")
-        val nlist = f.getOrElse("nlist", "64").toInt
-        val refine = f.getOrElse("refine-iters", "0").toInt
-        if (isPq(idxDir)) {
-          // codes carry no vectors (the whole point of PQ) — a rebuild
-          // re-encodes from the true vectors
-          val corpus = readCorpus(spark, req(f, "corpus",
-            "--rebuild of an IVF-PQ index needs --corpus PATH (codes carry " +
-              "no vectors to re-cluster from)"), f.get("aux-format"))
-          val prior = Similarity.loadIvfPqIndex(spark, idxDir)
-          val (m, cbk) = f.get("pq") match {
-            case Some(mk) =>
-              val parts = mk.split(",").map(_.trim)
-              if (parts.length != 2 ||
-                  parts.exists(p => scala.util.Try(p.toInt).isFailure))
-                throw Errors.config(
-                  s"--pq wants M,K (subspaces, codebook size), got '$mk'.",
-                  "e.g. --pq 8,256 (defaults to the existing index's shape)")
-              (parts(0).toInt, parts(1).toInt)
-            case None => (prior.pq.m, prior.pq.codebookSize)
-          }
-          Similarity.saveIvfPqIndex(Similarity.buildIvfPqIndex(
-            corpus, idCol, vecCol, nlist, m, cbk, refine,
-            f.getOrElse("pq-refine-iters", "0").toInt), newDir)
-          println(s"rebuilt=ivfpq nlist=$nlist m=$m codebook=$cbk " +
-            s"from=$idxDir written=$newDir")
-        } else {
-          // a plain IVF index holds its true vectors — rebuild directly
-          // from the lists, no corpus read needed
-          val prior = Similarity.loadIvfIndex(spark, idxDir)
-          val vectors = prior.lists
-            .select(col("neighbor_id").as(idCol), col("vec").as(vecCol))
-          Similarity.saveIvfIndex(Similarity.buildIvfIndex(
-            vectors, idCol, vecCol, nlist, refine), newDir)
-          println(s"rebuilt=ivf nlist=$nlist from=$idxDir written=$newDir")
+        val prior = Similarity.loadIvfIndex(spark, idxDir)
+        val (vectors, pq) = prior.pq match {
+          case Some(p) =>
+            // codes carry no vectors (the whole point of PQ) — a rebuild
+            // re-encodes from the true vectors, at the prior shape unless
+            // --pq says otherwise
+            (readCorpus(spark, req(f, "corpus",
+              "--rebuild of an IVF-PQ index needs --corpus PATH (codes carry " +
+                "no vectors to re-cluster from)"), f.get("aux-format")),
+              Some(pqShape("e.g. --pq 8,256 (defaults to the existing index's shape)")
+                .getOrElse((p.m, p.codebookSize))))
+          case None =>
+            // a vector index holds its true vectors — rebuild directly
+            // from the lists, no corpus read needed
+            (prior.lists.select(col("neighbor_id").as(idCol), col("vec").as(vecCol)), None)
         }
+        Similarity.saveIvfIndex(build(vectors, pq), newDir)
+        println(s"rebuilt=${kind(pq.isDefined)} nlist=$nlist${pqDesc(pq)} " +
+          s"from=$idxDir written=$newDir")
       case "describe" =>
         // ops-facing health view: layout kind, parameters, and the
         // per-list row distribution (list SKEW is what tells an
         // operator an index needs a rebuild — appends assign to
         // stale centroids and the hot lists grow)
         val idxDir = req(f, "index", "index --describe needs --index DIR")
-        val (kind, rows) =
-          if (isPq(idxDir)) {
-            val idx = Similarity.loadIvfPqIndex(spark, idxDir)
-            println(s"index=ivfpq m=${idx.pq.m} dsub=${idx.pq.dsub} " +
-              s"codebook=${idx.pq.codebookSize}")
-            ("ivfpq", idx.codes.groupBy("list_id").count())
-          } else {
-            val idx = Similarity.loadIvfIndex(spark, idxDir)
-            println(s"index=ivf")
-            ("ivf", idx.lists.groupBy("list_id").count())
-          }
-        val counts = rows.orderBy("list_id").collect()
+        val idx = Similarity.loadIvfIndex(spark, idxDir)
+        println(idx.pq.fold("index=ivf")(p =>
+          s"index=ivfpq m=${p.m} dsub=${p.dsub} codebook=${p.codebookSize}"))
+        val counts = idx.lists.groupBy("list_id").count().orderBy("list_id").collect()
           .map(r => r.get(0) -> r.getLong(1))
         val ns = counts.map(_._2)
         val total = ns.sum
-        println(s"kind=$kind lists=${counts.length} rows=$total " +
+        println(s"kind=${kind(idx.pq.isDefined)} lists=${counts.length} rows=$total " +
           s"min_list=${if (ns.isEmpty) 0 else ns.min} " +
           s"max_list=${if (ns.isEmpty) 0 else ns.max} " +
           s"avg_list=${if (ns.isEmpty) 0 else total / ns.length}")
@@ -1561,61 +1537,49 @@ object Main {
         val input = req(f, "input", "index --append needs --input PATH (the new vector batch)")
         val idxDir = req(f, "index", "index --append needs --index DIR")
         val df = readCorpus(spark, input, f.get("input-format"))
-        val kind =
-          if (isPq(idxDir)) {
-            Similarity.appendIvfPqIndex(spark, idxDir, df, idCol, vecCol); "ivfpq"
-          } else {
-            Similarity.appendIvfIndex(spark, idxDir, df, idCol, vecCol); "ivf"
-          }
-        println(s"index=$kind appended_from=$input index_dir=$idxDir")
+        val idx = Similarity.appendIvfIndex(spark, idxDir, df, idCol, vecCol)
+        println(s"index=${kind(idx.pq.isDefined)} appended_from=$input index_dir=$idxDir")
       case _ =>
         val qPath = req(f, "queries", "index --search needs --queries PATH")
         val idxDir = req(f, "index", "index --search needs --index DIR")
         val out = req(f, "output", "index --search needs --output PATH")
         val queries = readCorpus(spark, qPath, f.get("input-format"))
         val k = f.getOrElse("k", "10").toInt
-        val pqIdx = isPq(idxDir)
-        // a plain IVF index holds the true vectors and ranks exact
+        val idx = Similarity.loadIvfIndex(spark, idxDir)
+        // a vector index holds the true vectors and ranks exact
         // cosines already — silently ignoring --refine would let a
         // user believe a rerank ran (same fail-fast rule the
         // export format check follows)
-        if (!pqIdx) f.get("refine").foreach(_ => throw Errors.config(
+        if (idx.pq.isEmpty) f.get("refine").foreach(_ => throw Errors.config(
           "--refine applies to IVF-PQ indexes (ADC shortlist + exact rerank); " +
             s"$idxDir is a plain IVF index whose probe scores exact cosines.",
           "drop --refine (or rebuild the index with --pq M,K)"))
-        val pqLoaded = if (pqIdx) Some(Similarity.loadIvfPqIndex(spark, idxDir)) else None
-        val ivfLoaded = if (pqIdx) None else Some(Similarity.loadIvfIndex(spark, idxDir))
         def corpusFor(why: String) =
           readCorpus(spark, req(f, "corpus", why), f.get("aux-format"))
         // the ONE search the command runs — tuning and the final write
         // go through the same path, so what gets measured is what ships
         def runSearch(q: org.apache.spark.sql.DataFrame, np: Int) =
-          pqLoaded match {
-            case Some(loaded) => f.get("refine") match {
-              case Some(cand) =>
-                // exact rerank needs the true vectors — the codes
-                // deliberately don't carry them
-                Similarity.ivfPqTopKRefined(q, corpusFor(
-                    "--refine needs --corpus PATH (the true vectors to rerank with)"),
-                  loaded, idCol, idCol, vecCol, k, np,
-                  if (cand == "true") 0 else cand.toInt)
-              case None =>
-                Similarity.ivfPqTopK(q, loaded, idCol, vecCol, k, np)
-            }
+          f.get("refine") match {
+            case Some(cand) =>
+              // exact rerank needs the true vectors — the codes
+              // deliberately don't carry them
+              Similarity.ivfPqTopKRefined(q, corpusFor(
+                  "--refine needs --corpus PATH (the true vectors to rerank with)"),
+                idx, idCol, idCol, vecCol, k, np,
+                if (cand == "true") 0 else cand.toInt)
             case None =>
-              Similarity.ivfTopKIndexed(q, ivfLoaded.get, idCol, vecCol, k, np)
+              Similarity.ivfTopKIndexed(q, idx, idCol, vecCol, k, np)
           }
         // deterministic md5-ordered sample — replayable across runs, so
         // recall numbers stay comparable as the search parameters move
         def sampleIdsOf(n: Int) = queries.select(col(idCol))
           .orderBy(md5(col(idCol).cast("string")), col(idCol)).limit(n)
-        // exact baseline over the TRUE vectors: a plain IVF index
-        // carries them in its lists; IVF-PQ codes deliberately don't,
-        // so the rerank corpus supplies them
+        // exact baseline over the TRUE vectors: a vector index carries
+        // them in its lists; IVF-PQ codes deliberately don't, so the
+        // rerank corpus supplies them
         def truthCorpus(why: String) =
-          if (pqIdx) corpusFor(why)
-          else ivfLoaded.get.lists
-            .select(col("neighbor_id").as(idCol), col("vec").as(vecCol))
+          if (idx.pq.isDefined) corpusFor(why)
+          else idx.lists.select(col("neighbor_id").as(idCol), col("vec").as(vecCol))
         // --target-recall T: autotune nprobe BEFORE the full search —
         // doubling sweep over the sampled queries against the exact
         // baseline, stopping at the first nprobe whose mean recall@k
@@ -1659,8 +1623,7 @@ object Main {
                 "--target-recall on an IVF-PQ index needs --corpus PATH " +
                   "(the true vectors for the exact baseline)"),
               idCol, idCol, vecCol, k).cache()
-            val nlist = pqLoaded.map(_.centroids).getOrElse(ivfLoaded.get.centroids)
-              .count().toInt
+            val nLists = idx.centroids.count().toInt
             var np = nprobeFlag().getOrElse(1)
             var chosen = np
             var done = false
@@ -1671,12 +1634,12 @@ object Main {
               println(f"tune nprobe=$np mean_recall=$mean%.4f")
               chosen = np
               if (mean >= target) done = true
-              else if (np >= nlist) {
+              else if (np >= nLists) {
                 println(f"target_recall=$target%.4f unreachable at " +
-                  s"nprobe=nlist=$nlist — residual loss is quantization " +
+                  s"nprobe=nlist=$nLists — residual loss is quantization " +
                   "distortion; add --refine (IVF-PQ) or rebuild with more lists")
                 done = true
-              } else np = math.min(nlist, np * 2)
+              } else np = math.min(nLists, np * 2)
             }
             exact.unpersist()
             // persist the tuning so the NEXT --search of this index

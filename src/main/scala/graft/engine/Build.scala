@@ -121,9 +121,11 @@ final case class BuildResult(
     }.mkString
     val auditStatus = if (auditPassed) "PASSED" else "FAILED"
     val auditColor = if (auditPassed) "#2ecc71" else "#e74c3c"
+    // a build-cache hit carries no timing (durationMs = -1), as in render
+    val time = if (durationMs >= 0) s" in ${durationMs / 1000.0}s" else ""
     s"<div style='font-family:monospace;max-width:700px'>" +
       s"<h3>Graft Build Result</h3>" +
-      s"<p>$rows rows, ${columns.size} columns in ${durationMs / 1000.0}s</p>" +
+      s"<p>$rows rows, ${columns.size} columns$time</p>" +
       s"<p>Audit: <span style='color:$auditColor;font-weight:bold'>$auditStatus</span></p>" +
       s"<table style='border-collapse:collapse;width:100%'>" +
       s"<tr style='background:#f5f5f5'><th>Status</th><th>Feature</th><th>Matched</th><th>Missing</th></tr>" +

@@ -17,9 +17,9 @@ import org.apache.spark.sql.functions._
   * mel-filterbank MFCC over Hann-windowed FFT frames. VIDEO frame
   * extraction is REAL for MJPEG-in-AVI (a hand-rolled RIFF container
   * parse + per-frame `javax.imageio` JPEG decode — the one mainstream
-  * video format expressible in the pure JDK); other codecs fall back
-  * to a deterministic STUB (clearly marked below): swapping in ffmpeg
-  * bindings changes only the function body, not the pipeline.
+  * video format expressible in the pure JDK). Payloads in codecs the
+  * JDK cannot decode are skipped, never fabricated: swapping in ffmpeg
+  * bindings changes only the decode functions, not the pipeline.
   */
 object Multimodal {
 
@@ -623,43 +623,11 @@ object Multimodal {
     }))
   }
 
-  // ==== STUB DECODERS (image/audio/video fallbacks) =================
-  // For payloads in codecs the JDK cannot decode, a real deployment
-  // swaps these bodies for ffmpeg bindings. Everything else — schema,
-  // batching, partitioning — stays as-is.
-
-  /** STUB image decode — retained as the deterministic fallback for
-    * payloads [[decodeImage]] cannot parse (corrupt files, formats
-    * without a registered reader): dimensions + embedding derived from
-    * a rolling hash of the payload. Deterministic in content. */
-  def decodeImageStub(content: Array[Byte], dim: Int = 16): (Int, Int, Array[Float]) = {
-    var h = 1125899906842597L
-    var i = 0
-    while (i < content.length) { h = 31 * h + content(i); i += 1 }
-    val w = 64 + math.abs(h % 1024).toInt
-    val ht = 64 + math.abs((h >> 10) % 1024).toInt
-    val emb = Array.tabulate(dim) { j =>
-      val hj = h * (j + 2654435761L)
-      ((hj >>> 16) % 1000).toFloat / 1000f
-    }
-    (w, ht, emb)
-  }
-
-  /** STUB audio decode — retained as the deterministic fallback for
-    * payloads [[decodeAudio]] cannot parse (corrupt files, compressed
-    * codecs without a registered reader). Deterministic in content. */
-  def decodeAudioStub(content: Array[Byte], coeffs: Int = 13): (Int, Long, Array[Float]) = {
-    val h = content.foldLeft(17L)((a, b) => a * 31 + b)
-    (44100, math.abs(h % 300000), Array.tabulate(coeffs)(j => ((h >> j) % 97).toFloat / 97f))
-  }
-
-  /** STUB video frame hash. */
-  def frameHashStub(content: Array[Byte], frame: Int): Long =
-    content.foldLeft(frame.toLong * 1099511628211L)((a, b) => a * 31 + b)
-
   // ==== pipeline operators ==========================================
 
   /** Decode + feature-extract images in batched partition passes.
+    * Payloads [[decodeImage]] cannot parse (corrupt files, formats
+    * without a registered reader) are skipped, never fabricated.
     * `repartitionTo` caps rows per task so a partition of large blobs
     * fits in executor memory (the knob you size from payload stats —
     * at 100 TB of media this matters more than anything else here). */
@@ -671,48 +639,42 @@ object Multimodal {
       it.grouped(BatchSize).flatMap { batch =>
         // batch boundary = the amortization point for a real decoder
         // (model session init, JNI handle, GPU transfer, ...)
-        batch.iterator.map { m =>
-          val (w, h, emb) = decodeImage(m.content, dim)
-            .getOrElse(decodeImageStub(m.content, dim))
-          ImageFeatures(m.media_id, w, h, emb)
+        batch.iterator.flatMap { m =>
+          decodeImage(m.content, dim).map { case (w, h, emb) =>
+            ImageFeatures(m.media_id, w, h, emb) }
         }
       }
     }
   }
 
   /** Decode + feature-extract audio in batched partition passes: real
-    * JDK decode ([[decodeAudio]]) with the deterministic stub as the
-    * fallback for undecodable payloads — the same real-first shape as
+    * JDK decode ([[decodeAudio]]); undecodable payloads (corrupt files,
+    * compressed codecs without a registered reader) are skipped, as in
     * [[imageFeatures]]. */
   def audioFeatures(ds: Dataset[MediaRow], coeffs: Int = 13,
       repartitionTo: Option[Int] = None): Dataset[AudioFeatures] = {
     import ds.sparkSession.implicits._
     val base = repartitionTo.map(ds.repartition(_)).getOrElse(ds)
-    base.mapPartitions(_.grouped(BatchSize).flatMap(_.iterator.map { m =>
-      val (sr, dur, mfcc) = decodeAudio(m.content, coeffs)
-        .getOrElse(decodeAudioStub(m.content, coeffs))
-      AudioFeatures(m.media_id, sr, dur, mfcc)
+    base.mapPartitions(_.grouped(BatchSize).flatMap(_.iterator.flatMap { m =>
+      decodeAudio(m.content, coeffs).map { case (sr, dur, mfcc) =>
+        AudioFeatures(m.media_id, sr, dur, mfcc) }
     }))
   }
 
   /** Sample every `stride`-th frame as a compact dedup hash: REAL for
     * MJPEG-in-AVI payloads (frame hash = xxhash-style hash of the
     * DECODED pixel data, so re-encoded byte-identical frames collide
-    * exactly); the deterministic stub applies to payloads the JDK
-    * cannot parse. [[videoFrameFeatures]] is the full-feature variant. */
+    * exactly); non-AVI payloads and undecodable frames emit nothing.
+    * [[videoFrameFeatures]] is the full-feature variant. */
   def sampleFrames(ds: Dataset[MediaRow], frames: Int, stride: Int): Dataset[VideoFrameSample] = {
     import ds.sparkSession.implicits._
     ds.flatMap { m =>
-      aviFrameChunks(m.content) match {
-        case Some(chunks) =>
-          (0 until math.min(frames, chunks.length) by stride).flatMap { i =>
-            val (off, len) = chunks(i)
-            decodedPixelHash(m.content, off, len)
-              .map(h => VideoFrameSample(m.media_id, i, h))
-          }
-        case None =>
-          (0 until frames by stride).map(i =>
-            VideoFrameSample(m.media_id, i, frameHashStub(m.content, i)))
+      aviFrameChunks(m.content).toSeq.flatMap { chunks =>
+        (0 until math.min(frames, chunks.length) by stride).flatMap { i =>
+          val (off, len) = chunks(i)
+          decodedPixelHash(m.content, off, len)
+            .map(h => VideoFrameSample(m.media_id, i, h))
+        }
       }
     }
   }

@@ -22,7 +22,10 @@ import graft.functions.VecOps
   *    `planes` (fewer planes = bigger buckets = higher recall).
   *  - [[ivfTopK]] is the IVF variant: k-means-lite centroids chosen as
   *    a deterministic sample, corpus assigned to nearest centroid
-  *    (broadcast centroids), queries probe `nprobe` nearest lists.
+  *    (broadcast centroids), queries probe `nprobe` nearest lists. It
+  *    is [[buildIvfIndex]] followed by [[ivfTopKIndexed]], the one
+  *    search over an [[IvfIndex]] — whose lists hold either vectors or
+  *    residual PQ codes ([[buildIvfPqIndex]]).
   */
 object Similarity {
 
@@ -151,16 +154,9 @@ object Similarity {
     * one corpus scan + one bounded shuffle per iteration. */
   def ivfTopK(queries: DataFrame, corpus: DataFrame,
       qidCol: String, idCol: String, vecCol: String, k: Int,
-      nlist: Int = 16, nprobe: Int = 4, refineIters: Int = 0): DataFrame = {
-    val centroids = ivfCentroids(corpus, idCol, vecCol, nlist, refineIters)
-    val c = nearestLists(
-      corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("__cv")),
-      "neighbor_id", "__cv", centroids, 1)
-    val q = nearestLists(
-      queries.select(col(qidCol).as("query_id"), col(vecCol).as("__qv")),
-      "query_id", "__qv", centroids, nprobe)
-    probeLists(c, q, k)
-  }
+      nlist: Int = 16, nprobe: Int = 4, refineIters: Int = 0): DataFrame =
+    ivfTopKIndexed(queries, buildIvfIndex(corpus, idCol, vecCol, nlist, refineIters),
+      qidCol, vecCol, k, nprobe)
 
   /** Rank the broadcast centroids per row and keep the `n` nearest
     * lists — the ONE place the assignment/probe tie-break order
@@ -250,29 +246,24 @@ object Similarity {
     centroids
   }
 
-  /** Inverted-list probe shared by the inline and indexed paths.
-    * `c`: (list_id, neighbor_id, __cv); `q`: (list_id, query_id, __qv)
-    * with one row per probed list. */
-  private def probeLists(c: DataFrame, q: DataFrame, k: Int): DataFrame = {
-    val joined = c.join(broadcast(q), Seq("list_id"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-    rankTopK(joined
-      .select(col("query_id"), col("neighbor_id"),
-        cosine(col("__qv"), col("__cv")).as("sim"))
-      .distinct(),
-      k)
-  }
-
-  /** A persisted IVF index: broadcastable centroids + the corpus
-    * partitioned into inverted lists. Build ONCE over the corpus, save,
-    * query many times — re-clustering 100 TB of embeddings per query
-    * batch is the scale anti-pattern the inline [[ivfTopK]] commits.
-    * On disk the lists are `partitionBy(list_id)` parquet, so a probe
-    * of `nprobe` lists reads ONLY those directories: the probe joins
-    * the (broadcast) query-to-list frame against the partition column
-    * and Spark's dynamic partition pruning skips every unprobed list
-    * at scan time. */
-  final case class IvfIndex(centroids: DataFrame, lists: DataFrame)
+  /** An IVF index: broadcastable centroids + the corpus partitioned
+    * into inverted lists. Build ONCE over the corpus, save, query many
+    * times — re-clustering 100 TB of embeddings per query batch is the
+    * scale anti-pattern the inline [[ivfTopK]] commits. What a list row
+    * stores is the index's one encoding choice: with `pq` empty,
+    * `lists` holds (list_id, neighbor_id, vec) — the original vectors,
+    * probed with exact cosines; with `pq` set ([[buildIvfPqIndex]]), it
+    * holds (list_id, neighbor_id, pq_code) — residual PQ codes, probed
+    * with ADC. Everything after the build (save, load, append, compact,
+    * search) is one implementation over both encodings. On disk the
+    * lists are `partitionBy(list_id)` parquet (`lists.parquet`, or
+    * `codes.parquet` beside `codebooks.parquet`), so a probe of `nprobe`
+    * lists reads ONLY those directories: the probe joins the
+    * (broadcast) query-to-list frame against the partition column and
+    * Spark's dynamic partition pruning skips every unprobed list at
+    * scan time. */
+  final case class IvfIndex(centroids: DataFrame, lists: DataFrame,
+      pq: Option[PqModel] = None)
 
   /** Cluster the corpus into `nlist` inverted lists (same centroid
     * selection as [[ivfTopK]]: hash-sampled seeds, optional Lloyd
@@ -285,13 +276,28 @@ object Similarity {
     IvfIndex(centroids, assignLists(corpus, idCol, vecCol, centroids))
   }
 
-  /** Persist an index: centroids as one small parquet, lists
-    * partitioned by list_id (the physical layout that makes probe-time
-    * partition pruning possible). */
+  /** The list directory of an index: `codes.parquet` when its lists
+    * hold PQ codes, `lists.parquet` when they hold vectors. */
+  private def listsDir(pq: Boolean): String =
+    if (pq) "codes.parquet" else "lists.parquet"
+
+  /** Persist an index: centroids (and, for PQ codes, the codebooks) as
+    * small parquets, lists partitioned by list_id (the physical layout
+    * that makes probe-time partition pruning possible). */
   def saveIvfIndex(index: IvfIndex, path: String): Unit = {
     index.centroids
       .select(col("list_id"), col("__centroid").as("centroid"))
       .write.mode("overwrite").parquet(s"$path/centroids.parquet")
+    index.pq.foreach { pq =>
+      val spark = index.lists.sparkSession
+      import spark.implicits._
+      (for {
+        j <- 0 until pq.m
+        i <- pq.codebooks(j).indices
+      } yield (j, i, pq.codebooks(j)(i).toSeq))
+        .toDF("j", "i", "centroid")
+        .coalesce(1).write.mode("overwrite").parquet(s"$path/codebooks.parquet")
+    }
     // cluster by list BEFORE the partitioned write — the same
     // file-count arithmetic appendIvfIndex documents (every write
     // task otherwise holds open files for every list it touches:
@@ -300,12 +306,32 @@ object Similarity {
     // probe-time pruned read and the bit-identical-to-inline value
     // contract only see rows, never file boundaries.
     index.lists.repartition(col("list_id")).write.mode("overwrite")
-      .partitionBy("list_id").parquet(s"$path/lists.parquet")
+      .partitionBy("list_id").parquet(s"$path/${listsDir(index.pq.isDefined)}")
   }
 
+  /** Load a persisted index; the layout on disk says which encoding it
+    * holds (`codes.parquet` = PQ codes). The probe goes through the
+    * Hadoop FileSystem of the path's scheme — `java.nio.file` only
+    * speaks the local filesystem and would misread every `hdfs://`
+    * index as holding vectors. The codebooks (m·codebookSize rows)
+    * collect to the driver — they are literals in every query plan
+    * anyway. */
   def loadIvfIndex(spark: org.apache.spark.sql.SparkSession, path: String): IvfIndex = {
     val centroids = spark.read.parquet(s"$path/centroids.parquet")
       .select(col("list_id"), col("centroid").as("__centroid"))
+    val codes = new org.apache.hadoop.fs.Path(path, listsDir(pq = true))
+    val pq =
+      if (!codes.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(codes)) None
+      else {
+        val cb = spark.read.parquet(s"$path/codebooks.parquet")
+          .select("j", "i", "centroid").collect()
+          .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2).toArray))
+        require(cb.nonEmpty, s"empty codebooks at $path/codebooks.parquet")
+        val m = cb.map(_._1).max + 1
+        val codebooks = Array.tabulate(m)(j =>
+          cb.filter(_._1 == j).sortBy(_._2).map(_._3))
+        Some(PqModel(m, codebooks.head.head.length, codebooks))
+      }
     // pin the partition column's type to the centroids' list_id type
     // instead of letting directory-name inference guess it: with
     // string ids, inference would parse "list_id=01" and "list_id=1"
@@ -313,7 +339,7 @@ object Similarity {
     // bit-identical-to-inline contract). A user-supplied schema keeps
     // the raw directory value at the saved type — and list_id stays
     // the partition column, so probe-time pruning is unaffected.
-    val listsPath = s"$path/lists.parquet"
+    val listsPath = s"$path/${listsDir(pq.isDefined)}"
     // schema via the stat-keyed cache: repeat opens of an unchanged
     // index skip the distributed footer-read job (an append changes
     // the stats, which correctly invalidates the entry)
@@ -322,49 +348,62 @@ object Similarity {
     val pinned = org.apache.spark.sql.types.StructType(
       dataFields :+ org.apache.spark.sql.types.StructField(
         "list_id", centroids.schema("list_id").dataType))
-    IvfIndex(centroids, spark.read.schema(pinned).parquet(listsPath))
+    // list_id first (the scan appends the partition column last), so a
+    // loaded index's probe plan keeps its established column order
+    IvfIndex(centroids, spark.read.schema(pinned).parquet(listsPath)
+      .select(col("list_id") +: dataFields.map(f => col(f.name)).toIndexedSeq: _*), pq)
   }
 
   /** Append a new vector batch to an existing [[IvfIndex]] WITHOUT
     * re-clustering: the batch is assigned to the index's FIXED
     * centroids (the same scan-side TopCentroids ranking, same
-    * tie-break, as the original build), so the appended index is
-    * bit-identical to a full rebuild of base+batch at those centroids
-    * — recurring corpus drops pay one batch-sized assignment scan
-    * instead of re-clustering the whole history (the store pattern
-    * incremental dedup uses, applied to ANN). Centroids drift from the
-    * data as appends accumulate (recall decays, correctness doesn't —
-    * probes still rank the true centroids); rebuild with
-    * [[buildIvfIndex]] when list sizes skew. The batch's `vecCol` must
-    * carry the same element type as the index's vectors. */
+    * tie-break, as the original build) and, for a PQ index, encoded
+    * with its FIXED codebooks, so the appended index is bit-identical
+    * to a full rebuild of base+batch at that model — recurring corpus
+    * drops pay one batch-sized scan instead of re-clustering the whole
+    * history (the store pattern incremental dedup uses, applied to
+    * ANN). Centroids and codebooks drift from the data as appends
+    * accumulate (recall decays, correctness doesn't — probes still
+    * rank the true centroids); rebuild when list sizes skew. The
+    * batch's `vecCol` must carry the same element type as the index's
+    * vectors. */
   def appendToIvfIndex(index: IvfIndex, batch: DataFrame, idCol: String,
       vecCol: String): IvfIndex =
-    IvfIndex(index.centroids,
-      index.lists.unionByName(assignLists(batch, idCol, vecCol, index.centroids)))
+    index.copy(lists = index.lists.unionByName(
+      encodeBatch(batch, idCol, vecCol, index.centroids, index.pq)))
 
-  /** Append a batch to a PERSISTED index in place: assign against the
-    * saved centroids and `append`-write the new rows under the same
-    * `partitionBy(list_id)` layout — probe-time partition pruning and
-    * the pinned-type reload both keep working; only the probed lists'
-    * new files are read. Returns the reloaded index. NOT concurrency-
-    * safe: one writer per index path (same contract as the dedup
-    * signature stores). Each append adds one file set per touched list
-    * partition — after many small drops, compact (rewrite via
-    * [[saveIvfIndex]]) or rebuild; the read path stays correct
+  /** Append a batch to a PERSISTED index in place: encode it against
+    * the saved centroids (and codebooks) and `append`-write the new
+    * rows under the same `partitionBy(list_id)` layout — probe-time
+    * partition pruning and the pinned-type reload both keep working;
+    * only the probed lists' new files are read. Returns the reloaded
+    * index. NOT concurrency-safe: one writer per index path (same
+    * contract as the dedup signature stores). Each append adds one
+    * file set per touched list partition — after many small drops,
+    * [[compactIndex]] or rebuild; the read path stays correct
     * regardless, file COUNT is the only cost. */
   def appendIvfIndex(spark: org.apache.spark.sql.SparkSession, path: String,
       batch: DataFrame, idCol: String, vecCol: String): IvfIndex = {
     val idx = loadIvfIndex(spark, path)
-    // cluster the assigned batch by list BEFORE the partitioned write:
+    // cluster the encoded batch by list BEFORE the partitioned write:
     // without it every write task holds open files for every list it
     // touches (tasks x nlist small files per append — measured 2x the
     // whole append cost in commit overhead at 100K x 64 lists); one
     // batch-sized exchange buys one file per touched list per append
-    assignLists(batch, idCol, vecCol, idx.centroids)
+    encodeBatch(batch, idCol, vecCol, idx.centroids, idx.pq)
       .repartition(col("list_id"))
-      .write.mode("append").partitionBy("list_id").parquet(s"$path/lists.parquet")
+      .write.mode("append").partitionBy("list_id")
+      .parquet(s"$path/${listsDir(idx.pq.isDefined)}")
     loadIvfIndex(spark, path)
   }
+
+  /** The one batch encoder behind both appends: each row assigned to
+    * its nearest fixed centroid, then — when `pq` is set — reduced to
+    * its residual PQ code. Rows come out in the index's list shape. */
+  private def encodeBatch(batch: DataFrame, idCol: String, vecCol: String,
+      centroids: DataFrame, pq: Option[PqModel]): DataFrame =
+    pq.fold(assignLists(batch, idCol, vecCol, centroids))(model =>
+      residualCodes(residualFrame(batch, idCol, vecCol, centroids), model))
 
   /** The shared build/append assignment: one inverted-list row per
     * input vector, nearest (cosine desc, then list_id) fixed centroid. */
@@ -373,19 +412,78 @@ object Similarity {
     nearestLists(
       corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("__cv")),
       "neighbor_id", "__cv", centroids, 1)
-      .select(col("list_id"), col("neighbor_id"), col("__cv").as("vec"))
+      .withColumnRenamed("__cv", "vec")
 
-  /** Approximate top-k against a prebuilt [[IvfIndex]] — bit-identical
-    * to [[ivfTopK]] at the same parameters, without touching the
+  /** Approximate top-k against an [[IvfIndex]] without touching the
     * corpus: queries rank the broadcast centroids, probe `nprobe`
-    * lists, and (for a loaded index) scan only those list partitions. */
+    * lists, and (for a loaded index) scan only those list partitions.
+    * A vector index scores exact cosines — bit-identical to
+    * [[ivfTopK]] at the same parameters; a PQ index scores ADC inner
+    * products. A query never matches its own id. Returns (query_id,
+    * neighbor_id, sim, rank). */
   def ivfTopKIndexed(queries: DataFrame, index: IvfIndex,
-      qidCol: String, vecCol: String, k: Int, nprobe: Int = 4): DataFrame = {
-    val q = nearestLists(
-      queries.select(col(qidCol).as("query_id"), col(vecCol).as("__qv")),
-      "query_id", "__qv", index.centroids, nprobe)
-    probeLists(index.lists.select(col("list_id"), col("neighbor_id"),
-      col("vec").as("__cv")), q, k)
+      qidCol: String, vecCol: String, k: Int, nprobe: Int = 4): DataFrame =
+    ivfSearch(queries, index, qidCol, vecCol, k, nprobe, lutSplitBytes = 16L * 1024)
+
+  /** [[ivfTopKIndexed]]'s body. `lutSplitBytes` places the PQ lookup
+    * table (see below); it is a parameter only so tests can force
+    * either plan shape. */
+  private[graft] def ivfSearch(queries: DataFrame, index: IvfIndex,
+      qidCol: String, vecCol: String, k: Int, nprobe: Int,
+      lutSplitBytes: Long): DataFrame = {
+    val qbase = queries
+      .select(col(qidCol).as("query_id"), col(vecCol).as("__qv"))
+    index.pq match {
+      case None =>
+        val q = nearestLists(qbase, "query_id", "__qv", index.centroids, nprobe)
+        rankTopK(index.lists.withColumnRenamed("vec", "__cv")
+          .join(broadcast(q), Seq("list_id"))
+          .filter(col("query_id") =!= col("neighbor_id"))
+          .select(col("query_id"), col("neighbor_id"),
+            cosine(col("__qv"), col("__cv")).as("sim"))
+          .distinct(),
+          k)
+      case Some(model) =>
+        // ADC: ONE m·codebookSize lookup table per query row plus one
+        // dot(q, c_list) constant per probed list; the probed lists'
+        // codes score as m `element_at`s each, sim ≈ dot(q, x).
+        val qv = asDouble(col("__qv"))
+        // Where does the per-query LUT (m·codebookSize doubles) ride?
+        // Inlined in the probe frame it is duplicated nprobe times per
+        // query — at production shapes (m=16, K=256, nprobe=32: ~1 MB
+        // per query) that walks large query batches straight into the
+        // broadcast/driver limits. In its OWN one-row-per-query
+        // broadcast the duplication is gone, but every scanned
+        // candidate row pays a SECOND broadcast hash join (measured
+        // ~1.4x on the 1M-row bench search, where the whole duplicated
+        // LUT is 4 KB/query). All three inputs to the trade are
+        // plan-time constants, so pick per plan: inline while the
+        // duplicated table stays small, split past `lutSplitBytes`
+        // (16 KB) per query.
+        val inlineLut =
+          nprobe.toLong * model.m * model.codebookSize * 8L <= lutSplitBytes
+        val lutOf = pqLut(model, qv)
+        val probed0 = nearestLists(
+            if (inlineLut) qbase.withColumn("__lut", lutOf) else qbase,
+            "query_id", "__qv", index.centroids, nprobe)
+          .join(broadcast(index.centroids), Seq("list_id"))
+          .withColumn("__qc", VecOps.vecDot(qv, col("__centroid")))
+        val probed =
+          if (inlineLut)
+            probed0.select(col("list_id"), col("query_id"), col("__lut"), col("__qc"))
+          else probed0.select(col("list_id"), col("query_id"), col("__qc"))
+        val candidates0 = index.lists.join(broadcast(probed), Seq("list_id"))
+        val candidates =
+          if (inlineLut) candidates0
+          else candidates0.join(
+            broadcast(qbase.select(col("query_id"), lutOf.as("__lut"))),
+            Seq("query_id"))
+        candidates
+          .filter(col("query_id") =!= col("neighbor_id"))
+          .select(col("query_id"), col("neighbor_id"),
+            (col("__qc") + pqAdc(model)).as("sim"))
+          .transform(rankTopK(_, k))
+    }
   }
 
   /** Symmetric int8 quantization of an embedding column: per-vector
@@ -486,16 +584,6 @@ object Similarity {
       threshold: Double, dim: Int): DataFrame =
     nearDupPairsImpl(df, idCol, vecCol, threshold, dim, planes = 0, tables = 0,
       seed = 0L, allPairs = true)
-
-  /** @deprecated The default here silently became approximate (LSH)
-    * in 0.2 after shipping as exact in 0.1 — callers must now say
-    * which semantics they want. Kept only as a migration shim. */
-  @deprecated("call cosineNearDupPairsLsh (approximate, scale default) or " +
-    "cosineNearDupPairsExact (complete O(n^2) pair set) explicitly", "0.2.0")
-  def cosineNearDupPairs(df: DataFrame, idCol: String, vecCol: String,
-      threshold: Double, dim: Int, planes: Int = 8, tables: Int = 4,
-      seed: Long = 42L, allPairs: Boolean = false): DataFrame =
-    nearDupPairsImpl(df, idCol, vecCol, threshold, dim, planes, tables, seed, allPairs)
 
   /** Shared candidate-generation + exact re-score. Casts and norms are
     * hoisted per ROW; the per-PAIR cost is one native vec_dot + a
@@ -666,7 +754,8 @@ object Similarity {
   /** Per-query ADC lookup table: inner products of each query
     * subvector against every codebook entry, flattened j-major — the
     * ONE definition of the scoring table shared by [[pqTopK]] and
-    * [[ivfPqTopK]], whose bit-identical DuckDB oracles both replay it.
+    * the PQ probe of [[ivfTopKIndexed]], whose bit-identical DuckDB
+    * oracles both replay it.
     * `qv` must be array<double>. */
   private def pqLut(model: PqModel, qv: Column): Column =
     array((0 until model.m).flatMap { j =>
@@ -715,10 +804,7 @@ object Similarity {
   def pqTopK(queries: DataFrame, codes: DataFrame, qidCol: String,
       vecCol: String, idCol: String, k: Int, model: PqModel,
       excludeSelf: Boolean = true): DataFrame = {
-    val lut = pqLut(model, asDouble(col("__qv")))
-    val q = queries.select(col(qidCol).as("query_id"), col(vecCol).as("__qv"))
-    val qframe = q.withColumn("__lut", lut).drop("__qv")
-    val codesSel = codes.select(col(idCol).as("neighbor_id"), col("pq_code"))
+    val (qframe, codesSel) = adcFrames(queries, codes, qidCol, vecCol, idCol, model)
     // Fused ADC scan (guide §3 + codegen): the broadcast-nested-loop
     // join materializes Q joined rows per corpus code (~200 ns/pair of
     // row machinery at the bench shape) just to feed the ranking
@@ -728,28 +814,40 @@ object Similarity {
     // PqAdcTopK aggregate over the codes scan: Q bounded heaps, a
     // few array loads per pair, no joined-row allocation. The
     // fallback (generic id types, null/duplicate query ids, null
-    // LUTs) is the unfused plan, value-identical and OpsSpec-pinned.
-    fusedAdcTopK(qframe, codesSel, k, model, excludeSelf).getOrElse {
-      val adc = pqAdc(model)
-      codesSel
-        .join(broadcast(qframe),
-          if (excludeSelf) col("query_id") =!= col("neighbor_id") else lit(true))
-        .select(col("query_id"), col("neighbor_id"), adc.as("sim"))
-        .transform(rankTopK(_, k))
-    }
+    // LUTs) is [[pqTopKUnfused]], value-identical and OpsSpec-pinned.
+    fusedAdcTopK(qframe, codesSel, k, model, excludeSelf).getOrElse(
+      pqTopKUnfused(queries, codes, qidCol, vecCol, idCol, k, model, excludeSelf))
   }
+
+  /** [[pqTopK]] as a broadcast join of the per-query LUT frame against
+    * the codes plus [[rankTopK]]: the fallback where the fused kernel
+    * does not apply, and the reference the fused scan is tested
+    * against. */
+  private[graft] def pqTopKUnfused(queries: DataFrame, codes: DataFrame,
+      qidCol: String, vecCol: String, idCol: String, k: Int, model: PqModel,
+      excludeSelf: Boolean): DataFrame = {
+    val (qframe, codesSel) = adcFrames(queries, codes, qidCol, vecCol, idCol, model)
+    codesSel
+      .join(broadcast(qframe),
+        if (excludeSelf) col("query_id") =!= col("neighbor_id") else lit(true))
+      .select(col("query_id"), col("neighbor_id"), pqAdc(model).as("sim"))
+      .transform(rankTopK(_, k))
+  }
+
+  /** [[pqTopK]]'s two inputs: (query_id, __lut) per query and
+    * (neighbor_id, pq_code) per corpus row. */
+  private def adcFrames(queries: DataFrame, codes: DataFrame, qidCol: String,
+      vecCol: String, idCol: String, model: PqModel): (DataFrame, DataFrame) =
+    (queries.select(col(qidCol).as("query_id"), col(vecCol).as("__qv"))
+      .withColumn("__lut", pqLut(model, asDouble(col("__qv")))).drop("__qv"),
+      codes.select(col(idCol).as("neighbor_id"), col("pq_code")))
 
   /** The [[graft.functions.PqAdcTopK]] dispatch shared by [[pqTopK]]:
     * Some(result) when the fused kernel applies, None to take the
     * unfused join. `qframe`: (query_id, __lut[, __qc]). */
-  /** Test hook: OpsSpec pins fused == unfused by flipping this off for
-    * the reference run. Always on in production paths. */
-  private[graft] var adcFusionEnabled = true
-
   private def fusedAdcTopK(qframe: DataFrame, codesSel: DataFrame, k: Int,
       model: PqModel, excludeSelf: Boolean): Option[DataFrame] = {
     import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, LongType}
-    if (!adcFusionEnabled) return None
     val addQc = qframe.columns.contains("__qc")
     val shapeOk = qframe.schema("query_id").dataType == LongType &&
       codesSel.schema("neighbor_id").dataType == LongType &&
@@ -807,19 +905,21 @@ object Similarity {
 
   // ---- IVF-PQ: residual product quantization inside inverted lists --
 
-  /** An IVF-PQ index — the layout billion-vector ANN actually ships
-    * (Jégou et al. 2011 §IV; FAISS `IVFPQ`): the corpus is clustered
-    * into `nlist` inverted lists (the SAME deterministic centroid
-    * machinery as [[buildIvfIndex]]), every vector is reduced to its
-    * RESIDUAL against its list centroid, and the residuals are
-    * product-quantized ([[PqModel]], deterministic md5-ordered donor
-    * rows). The search path then holds: a broadcastable centroid
-    * frame, an m·codebookSize codebook, and a codes frame of
-    * (list_id, id, m small ints) — the raw vectors are GONE.
+  /** Build an [[IvfIndex]] whose lists hold residual PQ codes — the
+    * layout billion-vector ANN actually ships (Jégou et al. 2011 §IV;
+    * FAISS `IVFPQ`): the corpus is clustered into `nlist` inverted
+    * lists ([[buildIvfIndex]]'s centroid selection and assignment:
+    * hash-sampled seeds, optional Lloyd refinement, cosine-desc/list_id
+    * tie-break), every vector is reduced to its RESIDUAL against its
+    * list centroid, and the residuals are product-quantized with
+    * [[trainPq]]'s md5-ordered donor pick over the residual frame. The
+    * search path then holds a broadcastable centroid frame, an
+    * m·codebookSize codebook, and (list_id, id, m small ints) lists —
+    * the raw vectors are GONE.
     *
-    * Why this is the 100 TB design and neither parent alone is:
-    * [[IvfIndex]] prunes the scan to `nprobe` lists but still reads
-    * d floats per stored vector; [[pqTopK]] reads 4·m-byte codes but
+    * Why this is the 100 TB design and neither parent alone is: a
+    * vector index prunes the scan to `nprobe` lists but still reads d
+    * floats per stored vector; [[pqTopK]] reads 4·m-byte codes but
     * scans the WHOLE corpus per query batch. IVF-PQ does both — at
     * d=1024 float32 and m=8 the probed bytes drop ~500× vs IVF and
     * the probed row count drops nlist/nprobe× vs flat PQ. Scores are
@@ -827,20 +927,13 @@ object Similarity {
     * (the residual decomposition dot(q,x) = dot(q,c) + dot(q,r) with
     * r quantized) — L2-[[normalize]] embeddings upstream if cosine
     * ranking is wanted, and [[ivfPqTopKRefined]] for exact-cosine
-    * reranking of the shortlist. */
-  final case class IvfPqIndex(centroids: DataFrame, pq: PqModel,
-      codes: DataFrame)
-
-  /** Build an [[IvfPqIndex]]: centroid selection and list assignment
-    * are [[buildIvfIndex]]'s (hash-sampled seeds, optional Lloyd
-    * refinement, cosine-desc/list_id tie-break), the PQ codebooks are
-    * [[trainPq]]'s md5-ordered donor pick over the RESIDUAL frame.
-    * Cost: the centroid pick, then two scan-side passes over the
-    * corpus (one collects the bounded donor set, one encodes) — no
-    * shuffle beyond the bounded centroid TakeOrdered. */
+    * reranking of the shortlist. Cost: the centroid pick, then two
+    * scan-side passes over the corpus (one collects the bounded donor
+    * set, one encodes) — no shuffle beyond the bounded centroid
+    * TakeOrdered. */
   def buildIvfPqIndex(corpus: DataFrame, idCol: String, vecCol: String,
       nlist: Int = 16, m: Int = 8, codebookSize: Int = 16,
-      refineIters: Int = 0, pqRefineIters: Int = 0): IvfPqIndex = {
+      refineIters: Int = 0, pqRefineIters: Int = 0): IvfIndex = {
     val centroids = ivfCentroids(corpus, idCol, vecCol, nlist, refineIters)
     // lazy-checkpoint the residual frame when refinement multiplies
     // its consumers: the donor TakeOrdered, every refinePq iteration
@@ -852,9 +945,7 @@ object Similarity {
       trainPq(resid, "neighbor_id", "__resid", m, codebookSize,
         saltDonors = "pq"),
       pqRefineIters)
-    IvfPqIndex(centroids, pq,
-      pqEncode(resid, "__resid", pq)
-        .select(col("list_id"), col("neighbor_id"), col("pq_code")))
+    IvfIndex(centroids, residualCodes(resid, pq), Some(pq))
   }
 
   /** (list_id, neighbor_id, __resid): each corpus vector assigned to
@@ -870,170 +961,37 @@ object Similarity {
         zip_with(asDouble(col("vec")), col("__centroid"),
           (a, b) => a - b).as("__resid"))
 
-  /** Persist an [[IvfPqIndex]]: centroids + codebooks as two tiny
-    * parquets, codes `partitionBy(list_id)` — the layout that lets a
-    * probe of `nprobe` lists dynamic-partition-prune every other list
-    * directory at scan time, exactly like [[saveIvfIndex]], except
-    * the pruned scan now reads 4·m-byte codes instead of vectors. */
-  def saveIvfPqIndex(index: IvfPqIndex, path: String): Unit = {
-    index.centroids
-      .select(col("list_id"), col("__centroid").as("centroid"))
-      .write.mode("overwrite").parquet(s"$path/centroids.parquet")
-    val spark = index.codes.sparkSession
-    import spark.implicits._
-    (for {
-      j <- 0 until index.pq.m
-      i <- index.pq.codebooks(j).indices
-    } yield (j, i, index.pq.codebooks(j)(i).toSeq))
-      .toDF("j", "i", "centroid")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/codebooks.parquet")
-    // cluster by list first — same tasks × nlist file-count rationale
-    // as saveIvfIndex / appendIvfIndex
-    index.codes.repartition(col("list_id")).write.mode("overwrite")
-      .partitionBy("list_id").parquet(s"$path/codes.parquet")
-  }
-
-  /** Load a persisted [[IvfPqIndex]]. The codes' partition-column type
-    * is pinned to the centroids' list_id type (same rationale as
-    * [[loadIvfIndex]]: directory-name inference would merge string ids
-    * like "01"/"1"); the codebooks (m·codebookSize rows) collect to
-    * the driver — they are literals in every query plan anyway. */
-  def loadIvfPqIndex(spark: org.apache.spark.sql.SparkSession,
-      path: String): IvfPqIndex = {
-    val centroids = spark.read.parquet(s"$path/centroids.parquet")
-      .select(col("list_id"), col("centroid").as("__centroid"))
-    val cb = spark.read.parquet(s"$path/codebooks.parquet")
-      .select("j", "i", "centroid").collect()
-      .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2).toArray))
-    require(cb.nonEmpty, s"empty codebooks at $path/codebooks.parquet")
-    val m = cb.map(_._1).max + 1
-    val codebooks = Array.tabulate(m)(j =>
-      cb.filter(_._1 == j).sortBy(_._2).map(_._3))
-    val codesPath = s"$path/codes.parquet"
-    val dataFields = graft.sources.SchemaCache.parquet(spark, codesPath)
-      .schema.fields.filter(_.name != "list_id")
-    val pinned = org.apache.spark.sql.types.StructType(
-      dataFields :+ org.apache.spark.sql.types.StructField(
-        "list_id", centroids.schema("list_id").dataType))
-    IvfPqIndex(centroids, PqModel(m, codebooks.head.head.length, codebooks),
-      spark.read.schema(pinned).parquet(codesPath))
-  }
-
-  /** ADC search over an [[IvfPqIndex]]: queries rank the broadcast
-    * centroids ([[nearestLists]] — same tie-break as the build),
-    * compute ONE m·codebookSize lookup table per query row plus one
-    * dot(q, c_list) constant per probed list, and the probed lists'
-    * codes score as m `element_at`s each. The codes side never
-    * shuffles and (for a loaded index) only the probed list
-    * partitions are read. Returns (query_id, neighbor_id, sim, rank)
-    * with sim ≈ dot(q, x). */
-  def ivfPqTopK(queries: DataFrame, index: IvfPqIndex, qidCol: String,
-      vecCol: String, k: Int, nprobe: Int = 4,
-      excludeSelf: Boolean = true,
-      lutSplitBytes: Long = 16L * 1024): DataFrame = {
-    val model = index.pq
-    val qv = asDouble(col("__qv"))
-    val qbase = queries
-      .select(col(qidCol).as("query_id"), col(vecCol).as("__qv"))
-    // Where does the per-query LUT (m·codebookSize doubles) ride?
-    // Inlined in the probe frame it is duplicated nprobe times per
-    // query — at production shapes (m=16, K=256, nprobe=32: ~1 MB per
-    // query) that walks large query batches straight into the
-    // broadcast/driver limits. In its OWN one-row-per-query broadcast
-    // the duplication is gone, but every scanned candidate row pays a
-    // SECOND broadcast hash join (measured ~1.4x on the 1M-row bench
-    // search, where the whole duplicated LUT is 4 KB/query). All three
-    // inputs to the trade are plan-time constants, so pick per plan:
-    // inline while the duplicated table stays small, split past 16 KB
-    // per query. `lutSplitBytes` is exposed for tests to force either
-    // shape.
-    val inlineLut =
-      nprobe.toLong * model.m * model.codebookSize * 8L <= lutSplitBytes
-    val lutOf = pqLut(model, qv)
-    val probed0 = nearestLists(
-        if (inlineLut) qbase.withColumn("__lut", lutOf) else qbase,
-        "query_id", "__qv", index.centroids, nprobe)
-      .join(broadcast(index.centroids), Seq("list_id"))
-      .withColumn("__qc", VecOps.vecDot(qv, col("__centroid")))
-    val probed =
-      if (inlineLut)
-        probed0.select(col("list_id"), col("query_id"), col("__lut"), col("__qc"))
-      else probed0.select(col("list_id"), col("query_id"), col("__qc"))
-    val adc = pqAdc(model)
-    val candidates0 = index.codes.join(broadcast(probed), Seq("list_id"))
-    val candidates =
-      if (inlineLut) candidates0
-      else candidates0.join(
-        broadcast(qbase.select(col("query_id"), lutOf.as("__lut"))),
-        Seq("query_id"))
-    candidates
-      .filter(if (excludeSelf) col("query_id") =!= col("neighbor_id")
-              else lit(true))
-      .select(col("query_id"), col("neighbor_id"),
-        (col("__qc") + adc).as("sim"))
-      .transform(rankTopK(_, k))
-  }
+  /** A [[residualFrame]] encoded as PQ list rows:
+    * (list_id, neighbor_id, pq_code). */
+  private def residualCodes(resid: DataFrame, model: PqModel): DataFrame =
+    pqEncode(resid, "__resid", model)
+      .select(col("list_id"), col("neighbor_id"), col("pq_code"))
 
   /** IVF-PQ search with exact re-ranking: ADC over the probed lists
     * proposes `candidates` ids per query, then ONLY those rows' true
     * vectors are fetched (a shortlist-sized join — never the corpus)
     * and re-scored with the exact cosine, the same recall-restoring
-    * shape as [[pqTopKRefined]]. */
+    * shape as [[pqTopKRefined]]. The index must hold PQ codes: a
+    * vector index already ranks exact cosines. */
   def ivfPqTopKRefined(queries: DataFrame, corpus: DataFrame,
-      index: IvfPqIndex, qidCol: String, idCol: String, vecCol: String,
+      index: IvfIndex, qidCol: String, idCol: String, vecCol: String,
       k: Int, nprobe: Int = 4, candidates: Int = 0): DataFrame = {
+    require(index.pq.isDefined,
+      "ivfPqTopKRefined reranks an ADC shortlist, but this index holds vectors " +
+        "and its probe already scores exact cosines — use ivfTopKIndexed")
     val cand = math.max(k, if (candidates <= 0) 4 * k else candidates)
     val qFrame = queries.select(col(qidCol).as("__qid_raw"),
       col(vecCol).as("__qv_raw"))
-    val shortlist = ivfPqTopK(qFrame, index, "__qid_raw", "__qv_raw",
+    val shortlist = ivfTopKIndexed(qFrame, index, "__qid_raw", "__qv_raw",
         cand, nprobe)
       .select(col("query_id"), col("neighbor_id"))
     exactRerank(shortlist, corpus, qFrame, idCol, vecCol, k)
-  }
-
-  /** Append a vector batch to a PERSISTED IVF-PQ index in place: the
-    * batch is assigned to the SAVED centroids and residual-encoded
-    * with the SAVED codebooks (no re-clustering, no codebook refit),
-    * then append-written under the same partitionBy(list_id) layout —
-    * bit-identical to a full re-encode of base+batch at those fixed
-    * centroids/codebooks, for one batch-sized scan. The same
-    * recurring-drop contract as [[appendIvfIndex]]: centroids and
-    * codebooks drift from the data as appends accumulate (recall
-    * decays, correctness doesn't); rebuild when list sizes skew. NOT
-    * concurrency-safe: one writer per index path. */
-  def appendIvfPqIndex(spark: org.apache.spark.sql.SparkSession,
-      path: String, batch: DataFrame, idCol: String,
-      vecCol: String): IvfPqIndex = {
-    val idx = loadIvfPqIndex(spark, path)
-    // cluster by list before the partitioned write — same file-count
-    // rationale as appendIvfIndex (one file per touched list per
-    // append, not tasks x nlist)
-    pqEncode(residualFrame(batch, idCol, vecCol, idx.centroids),
-        "__resid", idx.pq)
-      .select(col("list_id"), col("neighbor_id"), col("pq_code"))
-      .repartition(col("list_id"))
-      .write.mode("append").partitionBy("list_id")
-      .parquet(s"$path/codes.parquet")
-    loadIvfPqIndex(spark, path)
   }
 
   /** Schemes whose rename is a COPY (or absent), not an atomic move —
     * the stores where a directory swap can be observed half-done. */
   private val NoAtomicRenameSchemes =
     Set("s3", "s3a", "s3n", "gs", "oss", "cos", "swift", "wasb", "wasbs")
-
-  /** Layout probe shared by the compact/describe/append auto-detection:
-    * an IVF-PQ index holds its data as `codes.parquet`, a plain IVF
-    * index as `lists.parquet`. Routed through the Hadoop FileSystem of
-    * the path's scheme so `hdfs://` (and any configured remote store)
-    * answers correctly — `java.nio.file` only ever speaks the local
-    * filesystem and would silently answer false for every remote index,
-    * misrouting an IVF-PQ index to the IVF loader. */
-  def indexIsPq(spark: org.apache.spark.sql.SparkSession,
-      path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path, "codes.parquet")
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-  }
 
   /** Operational metadata persisted BESIDE the index (`meta.json`) —
     * currently the autotuned `default_nprobe` the CLI's
@@ -1116,8 +1074,8 @@ object Similarity {
     * set per touched list partition, so a long-appended index pays its
     * probe cost in file-open overhead; compaction rewrites the data
     * frame clustered by list (ONE file per list again) — rows, probe
-    * results and the pinned-type reload are all unchanged. Works for
-    * both layouts (IVF `lists.parquet` / IVF-PQ `codes.parquet`). The
+    * results and the pinned-type reload are all unchanged. The data is
+    * read through [[loadIvfIndex]], so both encodings compact alike. The
     * rewrite goes through a sibling temp dir and a directory swap:
     * Spark cannot overwrite a path it is lazily reading, and a crash
     * mid-compaction must leave either the old or the new layout, not
@@ -1144,12 +1102,11 @@ object Similarity {
             s"$scheme:// has no atomic rename — a crash mid-swap could " +
             "leave a half-copied index.",
           "rewrite the index to a NEW path instead: load it, then " +
-            "saveIvfIndex/saveIvfPqIndex to a fresh directory and point " +
-            "readers there")
+            "saveIvfIndex to a fresh directory and point readers there")
     }
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val codes = new org.apache.hadoop.fs.Path(root, "codes.parquet")
-    val lists = new org.apache.hadoop.fs.Path(root, "lists.parquet")
+    val codes = new org.apache.hadoop.fs.Path(root, listsDir(pq = true))
+    val lists = new org.apache.hadoop.fs.Path(root, listsDir(pq = false))
     val old = new org.apache.hadoop.fs.Path(root, ".compact_old")
     val tmp = new org.apache.hadoop.fs.Path(root, ".compact_tmp")
     def renameOrDie(from: org.apache.hadoop.fs.Path,
@@ -1172,12 +1129,9 @@ object Similarity {
       } else fs.delete(old, true) // swap completed, cleanup died
     }
     if (fs.exists(tmp)) fs.delete(tmp, true) // stale half-written rewrite
-    val isPq = fs.exists(codes)
-    val dataDir = if (isPq) codes else lists
-    val frame =
-      if (isPq) loadIvfPqIndex(spark, path).codes
-      else loadIvfIndex(spark, path).lists
-    frame.repartition(col("list_id"))
+    val index = loadIvfIndex(spark, path)
+    val dataDir = new org.apache.hadoop.fs.Path(root, listsDir(index.pq.isDefined))
+    index.lists.repartition(col("list_id"))
       .write.mode("overwrite").partitionBy("list_id").parquet(tmp.toString)
     // swap: the old dir moves aside first so a crash between the two
     // renames leaves a recoverable .compact_old, never a missing index

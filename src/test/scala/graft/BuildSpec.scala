@@ -571,6 +571,25 @@ class BuildSpec extends SparkFunSuite {
     assert(r4.features.head.matched >= 0) // not served from the old cache
   }
 
+  test("store: a build-cache hit renders no negative duration in HTML") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_cache_html")
+    labelsDf.write.parquet(s"$dir/labels.parquet")
+    users.write.parquet(s"$dir/users.parquet")
+    val store = new graft.store.Store(s"$dir/.graft").init()
+    val lbl = Labels.parquet(s"$dir/labels.parquet", Seq("user_id"), "label_time", Seq("churned"))
+    val feat = Feature("user_country",
+      Source.parquet("users", s"$dir/users.parquet", Seq("user_id"), "updated_at"),
+      ColumnsMode(Map("country" -> "country")))
+    val opts = BuildOptions(output = Some(s"$dir/out.parquet"), store = Some(store))
+    val first = Build(spark, lbl, Seq(feat), opts)
+    assert(first.toHtml.contains(" columns in "), first.toHtml)
+    val hit = Build(spark, lbl, Seq(feat), opts)
+    assert(hit.durationMs < 0, "second build must be served from the build cache")
+    val html = hit.toHtml
+    assert(!html.contains("in -"), s"negative duration rendered: $html")
+    assert(html.contains(s"${hit.rows} rows, ${hit.columns.size} columns</p>"), html)
+  }
+
   test("store: a feature-cache entry in the bare-name layout is not served") {
     // stores filled before ColumnsMode projections were namespaced hold
     // (source keys, feature_time, bare output names) under the key of the

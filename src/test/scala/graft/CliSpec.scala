@@ -1175,7 +1175,7 @@ class CliSpec extends SparkFunSuite {
         "--refine", "20", "--corpus", emb)) == 0)
     }
     // the appended index holds base+batch codes; every query gets k rows
-    assert(graft.ops.Similarity.loadIvfPqIndex(spark, pqIdx).codes.count() ==
+    assert(graft.ops.Similarity.loadIvfIndex(spark, pqIdx).lists.count() ==
       spark.read.parquet(emb).count())
     val perQuery = spark.read.parquet(pqRes).groupBy("query_id").count()
       .collect().map(_.getLong(1)).toSet
@@ -1280,8 +1280,8 @@ class CliSpec extends SparkFunSuite {
     }
     assert(outCap.toString.contains("rebuilt=ivfpq nlist=8 m=4 codebook=16"),
       s"PQ shape must inherit from the prior index:\n$outCap")
-    assert(graft.ops.Similarity.loadIvfPqIndex(spark, s"$dir/pq8")
-      .codes.count() == spark.read.parquet(emb).count())
+    assert(graft.ops.Similarity.loadIvfIndex(spark, s"$dir/pq8")
+      .lists.count() == spark.read.parquet(emb).count())
   }
 
   test("index --search --recall-sample: printed recall equals the library computation") {

@@ -801,7 +801,7 @@ class ExtensionsSpec extends SparkFunSuite {
     val Some((ww, wh, wemb)) = Multimodal.decodeImage(bos.toByteArray, dim = 4)
     assert(ww == 8 && wh == 8)
     wemb.foreach(v => assert(math.abs(v - 1f) < 1e-3f))
-    // non-image bytes are not decodable -> None (imageFeatures falls back)
+    // non-image bytes are not decodable -> None (imageFeatures skips them)
     assert(Multimodal.decodeImage(Array.tabulate(64)(_.toByte)).isEmpty)
   }
 
@@ -815,13 +815,10 @@ class ExtensionsSpec extends SparkFunSuite {
       assert(f.width == 8 + i % 9, s"media $i width")
       assert(f.height == 8 + i / 3 % 7, s"media $i height")
     }
-    // odd ids are WAVs — not images, so the deterministic image-stub
-    // fallback applies to their bytes
-    (1 until 20 by 2).foreach { i =>
-      val (sw, sh, semb) = Multimodal.decodeImageStub(Multimodal.syntheticWav(i), 16)
-      val f = feats(i.toLong)
-      assert(f.width == sw && f.height == sh && f.embedding.toSeq == semb.toSeq)
-    }
+    // odd ids are WAVs — not images, so they are skipped: no row is
+    // fabricated for bytes the decoder cannot read
+    assert(feats.keySet == (0 until 20 by 2).map(_.toLong).toSet,
+      s"undecodable rows must be absent, got ${feats.keys.toSeq.sorted}")
   }
 
   test("multimodal plumbing: schema, determinism, batch independence") {
@@ -830,7 +827,7 @@ class ExtensionsSpec extends SparkFunSuite {
     assert(feats.schema.fieldNames.toSeq ==
       Seq("media_id", "width", "height", "embedding"))
     val rows = feats.collect()
-    assert(rows.length == 200)
+    assert(rows.length == 100) // the 100 PNGs; the WAVs are skipped
     assert(rows.forall(_.embedding.length == 8))
     // repartitioning must not change results (batch-shape independence)
     val repart = Multimodal.imageFeatures(media, dim = 8, repartitionTo = Some(7))
@@ -885,7 +882,7 @@ class ExtensionsSpec extends SparkFunSuite {
     assert(dist(toneMfcc(440), toneMfcc(880)) > 1.0,
       "octave-apart tones must separate in MFCC space")
     assert(dist(toneMfcc(440), toneMfcc(440)) == 0.0)
-    // non-audio bytes are not decodable -> None (audioFeatures falls back)
+    // non-audio bytes are not decodable -> None (audioFeatures skips them)
     assert(Multimodal.decodeAudio(Array.tabulate(64)(_.toByte)).isEmpty)
   }
 
@@ -1335,19 +1332,16 @@ class ExtensionsSpec extends SparkFunSuite {
     val media = Multimodal.syntheticMedia(spark, 10)
     val audio = Multimodal.audioFeatures(media).collect()
     assert(audio.forall(_.mfcc.length == 13))
-    // odd ids really decode: the stub's 44100 constant must NOT appear
+    // odd ids really decode: the 8 kHz header of syntheticWav
     audio.filter(_.media_id % 2 == 1).foreach { a =>
       assert(a.sampleRate == 8000, s"media ${a.media_id} should hit the real WAV path")
       assert(a.durationMs == math.round((800 + a.media_id % 1600) * 1000.0 / 8000.0))
     }
-    // even ids are PNGs: not audio, deterministic stub fallback applies
-    audio.filter(_.media_id % 2 == 0).foreach { a =>
-      val (sr, dur, mfcc) = Multimodal.decodeAudioStub(Multimodal.syntheticPng(a.media_id))
-      assert(a.sampleRate == sr && a.durationMs == dur && a.mfcc.toSeq == mfcc.toSeq)
-    }
-    val frames = Multimodal.sampleFrames(media, frames = 30, stride = 10).collect()
-    assert(frames.length == 10 * 3)
-    assert(frames.map(f => (f.media_id, f.frameIndex)).distinct.length == 30)
+    // even ids are PNGs: not audio, so they are skipped, never fabricated
+    assert(audio.map(_.media_id).sorted.toSeq == (1L until 10L by 2).toSeq,
+      s"undecodable rows must be absent, got ${audio.map(_.media_id).sorted.toSeq}")
+    // no payload here is an AVI container: no frames are sampled
+    assert(Multimodal.sampleFrames(media, frames = 30, stride = 10).collect().isEmpty)
   }
 
   // ---- Streaming ----------------------------------------------------

@@ -1250,24 +1250,25 @@ class OpsSpec extends SparkFunSuite {
       df.select(col("query_id"), col("neighbor_id"),
         round(col("sim"), 9).as("sim"), col("rank"))
         .collect().map(_.toString).sorted.toSeq
-    val mem = rows(Similarity.ivfPqTopK(q, idx, "vec_id", "embedding",
+    val mem = rows(Similarity.ivfTopKIndexed(q, idx, "vec_id", "embedding",
       k = 5, nprobe = 3))
     assert(mem.nonEmpty)
     // save -> load -> probe through the partitioned code layout:
     // bit-identical (codebooks and centroids are exact doubles through
     // parquet; codes are ints)
     val dir = java.nio.file.Files.createTempDirectory("graft_ivfpq").toString
-    Similarity.saveIvfPqIndex(idx, dir)
-    val loaded = Similarity.loadIvfPqIndex(spark, dir)
-    assert(loaded.pq.m == 4 && loaded.pq.codebookSize == 16 && loaded.pq.dsub == 16)
-    assert(rows(Similarity.ivfPqTopK(q, loaded, "vec_id", "embedding",
+    Similarity.saveIvfIndex(idx, dir)
+    val loaded = Similarity.loadIvfIndex(spark, dir)
+    val pq = loaded.pq.get
+    assert(pq.m == 4 && pq.codebookSize == 16 && pq.dsub == 16)
+    assert(rows(Similarity.ivfTopKIndexed(q, loaded, "vec_id", "embedding",
       k = 5, nprobe = 3)) == mem)
     // the on-disk codes are partitioned by list and carry NO vectors —
     // the probed scan reads 4 small ints per stored vector
     val listDirs = new java.io.File(s"$dir/codes.parquet").listFiles()
       .filter(_.getName.startsWith("list_id="))
     assert(listDirs.nonEmpty)
-    assert(loaded.codes.columns.sorted.toSeq == Seq("list_id", "neighbor_id", "pq_code"))
+    assert(loaded.lists.columns.sorted.toSeq == Seq("list_id", "neighbor_id", "pq_code"))
     // probing ALL lists with a full-corpus candidate budget, then
     // exact-refining, reproduces brute-force ranking exactly: the ADC
     // stage only winnows, the rerank restores exact cosines
@@ -1283,40 +1284,51 @@ class OpsSpec extends SparkFunSuite {
       "full-probe full-candidate ivf-pq refine must reproduce brute-force ranking")
   }
 
+  test("ivf-pq refine refuses an index whose lists hold vectors") {
+    import graft.ops.Similarity
+    val q = embeddings.filter(col("vec_id") % 50 === 0)
+    val e = intercept[IllegalArgumentException] {
+      Similarity.ivfPqTopKRefined(q, embeddings,
+        Similarity.buildIvfIndex(embeddings, "vec_id", "embedding", nlist = 4),
+        "vec_id", "vec_id", "embedding", k = 5)
+    }
+    assert(e.getMessage.contains("holds vectors"), e.getMessage)
+  }
+
   test("ivf-pq append: probe over appended index == full re-encode at fixed model") {
     import graft.ops.Similarity
     val base = embeddings.filter(col("vec_id") % 3 > 0)
     val batch = embeddings.filter(col("vec_id") % 3 === 0)
     val dir = java.nio.file.Files.createTempDirectory("graft_ivfpq_app").toString
-    Similarity.saveIvfPqIndex(Similarity.buildIvfPqIndex(
+    Similarity.saveIvfIndex(Similarity.buildIvfPqIndex(
       base, "vec_id", "embedding", nlist = 8, m = 4, codebookSize = 16), dir)
-    val appended = Similarity.appendIvfPqIndex(
+    val appended = Similarity.appendIvfIndex(
       spark, dir, batch, "vec_id", "embedding")
-    assert(appended.codes.count() == embeddings.count())
+    assert(appended.lists.count() == embeddings.count())
     // the REAL append contract: the on-disk codes after the append are
     // row-identical to an INDEPENDENT re-encode of base+batch at the
     // saved centroids + codebooks (no disk roundtrip involved)
     val reEncoded = Similarity.pqEncode(
         Similarity.residualFrame(embeddings, "vec_id", "embedding",
           appended.centroids),
-        "__resid", appended.pq)
+        "__resid", appended.pq.get)
       .select(col("list_id"), col("neighbor_id"), col("pq_code"))
     def codeRows(df: org.apache.spark.sql.DataFrame): Seq[String] =
       df.collect().map(r => s"${r.get(0)}|${r.get(1)}|${r.getSeq[Int](2)}")
         .sorted.toSeq
-    assert(codeRows(appended.codes.select("list_id", "neighbor_id", "pq_code")) ==
+    assert(codeRows(appended.lists.select("list_id", "neighbor_id", "pq_code")) ==
       codeRows(reEncoded),
       "appended codes must equal a fixed-model re-encode of base+batch")
     // and the probe over the appended index returns k rows per query
     val q = embeddings.filter(col("vec_id") % 50 === 0)
-    val viaAppend = Similarity.ivfPqTopK(q, appended,
+    val viaAppend = Similarity.ivfTopKIndexed(q, appended,
       "vec_id", "embedding", k = 5, nprobe = 3)
     assert(viaAppend.groupBy("query_id").count()
       .collect().map(_.getLong(1)).toSet == Set(5L))
     // LUT placement (inline vs split broadcast) is a plan choice only:
     // both shapes must score identically
     def adcRows(lutSplit: Long): Seq[String] =
-      Similarity.ivfPqTopK(q, appended, "vec_id", "embedding",
+      Similarity.ivfSearch(q, appended, "vec_id", "embedding",
           k = 5, nprobe = 3, lutSplitBytes = lutSplit)
         .select(col("query_id"), col("neighbor_id"),
           round(col("sim"), 9).as("sim"), col("rank"))
@@ -2057,7 +2069,7 @@ class OpsSpec extends SparkFunSuite {
     val base = embeddings.filter(col("vec_id") % 3 > 0)
     Similarity.saveIvfIndex(
       Similarity.buildIvfIndex(base, "vec_id", "embedding", nlist = 4), dir)
-    assert(!Similarity.indexIsPq(spark, dir), "plain IVF layout detected as PQ")
+    assert(Similarity.loadIvfIndex(spark, dir).pq.isEmpty, "plain IVF layout detected as PQ")
     Similarity.appendIvfIndex(spark, dir,
       embeddings.filter(col("vec_id") % 3 === 0), "vec_id", "embedding")
     val before = rows(Similarity.ivfTopKIndexed(q,
@@ -2091,22 +2103,23 @@ class OpsSpec extends SparkFunSuite {
     // is the tell) — a wrong-name restore would misroute the loader
     val pqLocal = java.nio.file.Files.createTempDirectory("graft_fs_pq")
     val pqDir = "file:" + pqLocal.toString
-    Similarity.saveIvfPqIndex(Similarity.buildIvfPqIndex(
+    Similarity.saveIvfIndex(Similarity.buildIvfPqIndex(
       embeddings, "vec_id", "embedding", nlist = 4, m = 4,
       codebookSize = 16), pqDir)
-    assert(Similarity.indexIsPq(spark, pqDir))
+    assert(Similarity.loadIvfIndex(spark, pqDir).pq.isDefined)
     val pqFs = new org.apache.hadoop.fs.Path(pqDir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val pqBefore = rows(Similarity.ivfPqTopK(q,
-      Similarity.loadIvfPqIndex(spark, pqDir), "vec_id", "embedding",
+    val pqBefore = rows(Similarity.ivfTopKIndexed(q,
+      Similarity.loadIvfIndex(spark, pqDir), "vec_id", "embedding",
       k = 3, nprobe = 2))
     assert(pqFs.rename(new org.apache.hadoop.fs.Path(pqDir, "codes.parquet"),
       new org.apache.hadoop.fs.Path(pqDir, ".compact_old")))
-    assert(!Similarity.indexIsPq(spark, pqDir), "wreckage must not detect as PQ")
+    val codesDir = new org.apache.hadoop.fs.Path(pqDir, "codes.parquet")
+    assert(!pqFs.exists(codesDir), "wreckage must not detect as PQ")
     Similarity.compactIndex(spark, pqDir)
-    assert(Similarity.indexIsPq(spark, pqDir), "recovery must restore codes.parquet")
-    assert(rows(Similarity.ivfPqTopK(q,
-      Similarity.loadIvfPqIndex(spark, pqDir), "vec_id", "embedding",
+    assert(pqFs.exists(codesDir), "recovery must restore codes.parquet")
+    assert(rows(Similarity.ivfTopKIndexed(q,
+      Similarity.loadIvfIndex(spark, pqDir), "vec_id", "embedding",
       k = 3, nprobe = 2)) == pqBefore)
     // rename-less object-store schemes fail FAST with the
     // rewrite-to-a-new-path advice — before touching the store
@@ -2958,15 +2971,14 @@ class OpsSpec extends SparkFunSuite {
     val codes = Similarity.pqEncode(docs, "embedding", model)
     val queries = docs.filter($"vec_id" % 40 === 0)
     for (excludeSelf <- Seq(true, false); k <- Seq(3, 11)) {
-      def run(): Seq[(Long, Long, Double, Int)] =
-        Similarity.pqTopK(queries, codes, "vec_id", "embedding", "vec_id",
-            k, model, excludeSelf)
-          .collect()
+      def collect(df: org.apache.spark.sql.DataFrame): Seq[(Long, Long, Double, Int)] =
+        df.collect()
           .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3)))
           .sortBy(t => (t._1, t._4)).toSeq
-      val fused = run()
-      Similarity.adcFusionEnabled = false
-      val unfused = try run() finally Similarity.adcFusionEnabled = true
+      val fused = collect(Similarity.pqTopK(queries, codes, "vec_id", "embedding",
+        "vec_id", k, model, excludeSelf))
+      val unfused = collect(Similarity.pqTopKUnfused(queries, codes, "vec_id",
+        "embedding", "vec_id", k, model, excludeSelf))
       assert(fused == unfused, s"excludeSelf=$excludeSelf k=$k")
       assert(fused.nonEmpty)
     }

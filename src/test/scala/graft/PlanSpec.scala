@@ -630,10 +630,10 @@ class PlanSpec extends SparkFunSuite {
     val idx = graft.ops.Similarity.buildIvfPqIndex(e, "vec_id", "embedding",
       nlist = 8, m = 4, codebookSize = 16)
     val dir = java.nio.file.Files.createTempDirectory("graft_ivfpq_dpp").toString
-    graft.ops.Similarity.saveIvfPqIndex(idx, dir)
-    val loaded = graft.ops.Similarity.loadIvfPqIndex(spark, dir)
+    graft.ops.Similarity.saveIvfIndex(idx, dir)
+    val loaded = graft.ops.Similarity.loadIvfIndex(spark, dir)
     val q = e.filter(col("vec_id") % 100 === 0)
-    val df = graft.ops.Similarity.ivfPqTopK(q, loaded, "vec_id", "embedding",
+    val df = graft.ops.Similarity.ivfTopKIndexed(q, loaded, "vec_id", "embedding",
       k = 3, nprobe = 2)
     // like the plain IVF index: the broadcast probe frame joins the
     // partition column, so unprobed list directories are skipped by a
@@ -660,9 +660,9 @@ class PlanSpec extends SparkFunSuite {
     assert(plan.contains("__lut"), s"inline LUT expected at this shape:\n$plan")
     // forcing the split (threshold 0): the probe frame must NOT carry
     // the LUT — it rides a separate query-keyed broadcast
-    val split = planOf(graft.ops.Similarity.ivfPqTopK(q, loaded,
+    val split = planOf(graft.ops.Similarity.ivfSearch(q, loaded,
       "vec_id", "embedding", k = 3, nprobe = 2, lutSplitBytes = 0L))
-    val fs = formatted(graft.ops.Similarity.ivfPqTopK(q, loaded,
+    val fs = formatted(graft.ops.Similarity.ivfSearch(q, loaded,
       "vec_id", "embedding", k = 3, nprobe = 2, lutSplitBytes = 0L))
     val probeBcasts = fs.split("\n\n").filter(b =>
       b.contains("Output") && b.contains("__qc") && b.contains("list_id"))

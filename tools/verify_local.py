@@ -9,9 +9,13 @@ cell-by-cell (exact; floats compared bit-for-bit after float64 cast,
 mirroring the driver's sorted-column value hash). Also reports dtype
 mismatches (the r10 HUGEINT->float lesson).
 
-Usage: python3 tools/verify_local.py <sfDir> <verifyOutDir>
+Usage: python3 tools/verify_local.py <sfDir> <verifyOutDir> [name[,name...]]
+
+The optional third argument checks only the named rows (the same
+comma-separated list graft.Verify takes); an unknown name exits 2.
 """
 import json
+import os
 import sys
 
 import duckdb
@@ -21,7 +25,7 @@ TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
 
 
-def main(sf_dir: str, out_dir: str) -> int:
+def main(sf_dir: str, out_dir: str, only=None) -> int:
     con = duckdb.connect()
     for t in TABLES:
         con.execute(
@@ -29,7 +33,18 @@ def main(sf_dir: str, out_dir: str) -> int:
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
     failures = []
     no_oracle = []
-    for name in sorted(oracle) if len(sys.argv) < 4 else [sys.argv[3]]:
+    names = sorted(oracle)
+    if only is not None:
+        # a rows-only query has a result dir but no oracle entry
+        dumped = {d for d in os.listdir(out_dir)
+                  if os.path.isdir(os.path.join(out_dir, d))}
+        unknown = [n for n in only if n not in oracle and n not in dumped]
+        if unknown or not only:
+            print(f"unknown name(s) {unknown} (known: {', '.join(names)})",
+                  file=sys.stderr)
+            return 2
+        names = only
+    for name in names:
         sql = oracle.get(name)
         try:
             spark_df = pd.read_parquet(f"{out_dir}/{name}")
@@ -87,10 +102,12 @@ def main(sf_dir: str, out_dir: str) -> int:
         for name, msg in failures:
             print(f"  FAIL {name}: {msg}")
         return 1
-    print(f"\nall {len(oracle) - len(no_oracle)} oracle queries match "
+    print(f"\nall {len(names) - len(no_oracle)} oracle queries match "
           f"({len(no_oracle)} rows-only)")
     return 0
 
 
 if __name__ == "__main__":
-    sys.exit(main(sys.argv[1], sys.argv[2]))
+    sys.exit(main(sys.argv[1], sys.argv[2],
+                  [n.strip() for n in sys.argv[3].split(",") if n.strip()]
+                  if len(sys.argv) > 3 else None))
