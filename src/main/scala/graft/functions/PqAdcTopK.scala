@@ -30,12 +30,6 @@ import org.apache.spark.sql.types._
   * have carried. This kernel replays only
   *  - the ADC sum `lut[j*codebookSize + code_j]` summed left-to-right
   *    in j order (IEEE addition order preserved),
-  *  - the optional `+ qc` prefix term (IVF-PQ's dot(q, c_list), 0-ary
-  *    here) — addition order `(qc + adc)` replicated as qc + running
-  *    left fold, which is associativity-identical to the expression's
-  *    `qc + (((l0+l1)+l2)+l3)` ONLY because the expression also adds
-  *    qc LAST: `(col("__qc") + adc)` parses as qc + (folded adc), so
-  *    the kernel computes the fold first and adds qc in front,
   *  - the `query_id =!= neighbor_id` exclude-self filter (null-safe:
   *    a null neighbor_id never equals and IS dropped by the filter's
   *    null semantics when excludeSelf, kept when not),
@@ -53,16 +47,15 @@ import org.apache.spark.sql.types._
   */
 object PqAdcTopK {
 
-  /** One collected query: id + its flattened m·codebookSize LUT and
-    * the qc prefix term (0.0 and addQc=false for flat PQ). */
-  final case class Query(id: Long, lut: Array[Double], qc: Double)
+  /** One collected query: id + its flattened m·codebookSize LUT. */
+  final case class Query(id: Long, lut: Array[Double])
 
   def of(id: Column, code: Column, queries: Seq[Query], k: Int, m: Int,
-      codebookSize: Int, excludeSelf: Boolean, addQc: Boolean): Column =
+      codebookSize: Int, excludeSelf: Boolean): Column =
     ColumnBridge.column(PqAdcTopKAgg(
       ColumnBridge.expression(id), ColumnBridge.expression(code),
-      queries.map(_.id), queries.map(_.lut.toSeq), queries.map(_.qc),
-      k, m, codebookSize, excludeSelf, addQc).toAggregateExpression())
+      queries.map(_.id), queries.map(_.lut.toSeq),
+      k, m, codebookSize, excludeSelf).toAggregateExpression())
 }
 
 /** Buffer: one [[TopKPairsBuffer]] per collected query. */
@@ -73,26 +66,22 @@ case class PqAdcTopKAgg(
     right: Expression, // pq_code: array<int>
     queryIds: Seq[Long],
     luts: Seq[Seq[Double]], // value-equal fields keep canonicalization
-    qcs: Seq[Double],
     k: Int,
     m: Int,
     codebookSize: Int,
     excludeSelf: Boolean,
-    addQc: Boolean,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
   extends TypedImperativeAggregate[PqTopKState]
   with BinaryLike[Expression] {
 
-  require(luts.length == queryIds.length && qcs.length == queryIds.length,
-    "queryIds/luts/qcs must align")
+  require(luts.length == queryIds.length, "queryIds/luts must align")
   require(luts.forall(_.length == m * codebookSize),
     s"each LUT must be m*codebookSize = ${m * codebookSize} long")
 
   @transient private lazy val qIds: Array[Long] = queryIds.toArray
   @transient private lazy val qLuts: Array[Array[Double]] =
     luts.map(_.toArray).toArray
-  @transient private lazy val qQcs: Array[Double] = qcs.toArray
 
   override def checkInputDataTypes(): TypeCheckResult =
     if (left.dataType == LongType &&
@@ -133,8 +122,8 @@ case class PqAdcTopKAgg(
         if (arr.isNullAt(j)) simNull = true
         else {
           val c = arr.getInt(j)
-          // mirror ANSI element_at: an index outside the LUT is an
-          // error in the unfused plan, so fail loudly, never diverge
+          // the unfused plan's range check (Similarity.pqAdc) raises
+          // this same message: fail loudly, never diverge
           if (c < 0 || c >= codebookSize) throw new IllegalArgumentException(
             s"pq_code[$j] = $c outside codebook [0, $codebookSize)")
           codes(j) = c
@@ -156,7 +145,6 @@ case class PqAdcTopKAgg(
           var s = 0.0
           var j = 0
           while (j < m) { s += lut(j * codebookSize + codes(j)); j += 1 }
-          if (addQc) s = qQcs(q) + s
           state.heaps(q).insert(s, id, (if (idNull) 2 else 0).toByte)
         }
       }

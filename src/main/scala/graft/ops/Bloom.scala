@@ -36,9 +36,11 @@ import graft.functions.BloomProbeExpr
   * every task binary ([[graft.functions.BloomProbeExpr]]).
   *
   * Sizing: `optimalNumOfBits(n, fpp)` ≈ n·ln(1/fpp)/ln²2 — 100 M keys
-  * at the 0.03 default is ~90 MB, 1 B keys ~900 MB; size for your
-  * store and executor headroom (raise `fpp` to shrink — false
-  * positives only cost exact-check work, never correctness).
+  * at the 0.03 default is ~90 MB, 1 B keys ~900 MB. The Dedup
+  * operators build at that default; for another rate, [[build]] the
+  * store's filter yourself (raise `fpp` to shrink — false positives
+  * only cost exact-check work, never correctness) and pass it to
+  * [[Dedup.incrementalDedupBloom]].
   */
 object Bloom {
 

@@ -175,11 +175,12 @@ object Curation {
 
   /** Benchmark-decontamination stage ([[Dedup.decontaminate]]): drop
     * every surviving document sharing an `n`-gram with `eval`. The
-    * eval shingle set is broadcast (`broadcastEval = false` for an
-    * oversized eval corpus → shuffled join); the training side is
+    * eval shingle set is broadcast, or with `bloom` (an eval corpus
+    * too big to broadcast) probed scan-side as a Bloom filter
+    * ([[Dedup.decontaminateBloom]]); either way the training side is
     * scanned once and never shuffled. */
   final case class DecontaminateConfig(eval: DataFrame, n: Int = 8,
-      broadcastEval: Boolean = true, bloom: Boolean = false)
+      bloom: Boolean = false)
 
   /** SemDeDup stage ([[Similarity.semDedup]]): semantic near-dup
     * removal over `vecCol` (an embedding array column that must be
@@ -540,9 +541,9 @@ object Curation {
       // never the rows (train shingles filter scan-side, only suspects
       // join), so a resume may switch it freely
       h.decontaminate.map(dc => Stage("contaminated", "decontaminate",
-        s"${dc.n}:${dc.broadcastEval}", in =>
+        s"${dc.n}", in =>
           if (dc.bloom) Dedup.decontaminateBloom(in, dc.eval, idCol, textCol, dc.n)
-          else Dedup.decontaminate(in, dc.eval, idCol, textCol, dc.n, dc.broadcastEval))),
+          else Dedup.decontaminate(in, dc.eval, idCol, textCol, dc.n))),
       Some(Stage("near_dup", "near-dup dedup",
         s"$nearDup:$nearDupThreshold:$shingleSize:$hasherPin:${nearDupKeepCol.mkString}", { in =>
           val pairs = nearDup match {

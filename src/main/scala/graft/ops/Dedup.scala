@@ -64,8 +64,9 @@ object Dedup {
 
   /** Incremental exact dedup for a recurring corpus refresh: drop new
     * documents whose fingerprint already exists in `store` (the
-    * fingerprint set of everything ingested in previous batches) and
-    * keep one winner (min id) per fingerprint WITHIN the new batch.
+    * [[fingerprintStore]] `fingerprint` column of everything ingested
+    * in previous batches) and keep one winner (min id) per fingerprint
+    * WITHIN the new batch.
     * Returns the surviving rows of `df` with their original columns.
     *
     * Plan shape: batch winners are one map-side-combined shuffle;
@@ -76,13 +77,12 @@ object Dedup {
     * refresh exchange-free on the store side). The final semi-join
     * carries ids only, never document payloads. */
   def incrementalDedup(df: DataFrame, store: DataFrame,
-      textCol: String = "text", idCol: String = "doc_id",
-      storeFpCol: String = "fingerprint"): DataFrame = {
+      textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
     val winners = df
       .groupBy(TextAnalysis.fingerprint(col(textCol)).as("__fp"))
       .agg(min(col(idCol)).as(idCol))
     val fresh = winners
-      .join(store.select(col(storeFpCol).as("__fp")), Seq("__fp"), "left_anti")
+      .join(store.select(col("fingerprint").as("__fp")), Seq("__fp"), "left_anti")
     df.join(fresh.select(idCol), Seq(idCol), "left_semi")
   }
 
@@ -110,18 +110,18 @@ object Dedup {
     * omitted, it is built here from `store` (one extra scan +
     * count — still cheaper than shuffling the store whenever the
     * batch is much smaller than history, which is what "incremental"
-    * means). Null-fingerprint winners (null text) take the fresh path,
-    * exactly like the anti-join's null-never-matches semantics. */
+    * means), at [[Bloom.build]]'s default false-positive rate.
+    * Null-fingerprint winners (null text) take the fresh path, exactly
+    * like the anti-join's null-never-matches semantics. */
   def incrementalDedupBloom(df: DataFrame, store: DataFrame,
       textCol: String = "text", idCol: String = "doc_id",
-      storeFpCol: String = "fingerprint",
-      bloom: Option[Array[Byte]] = None, fpp: Double = 0.03): DataFrame = {
+      bloom: Option[Array[Byte]] = None): DataFrame = {
     val winners = cacheOnce(df
       .groupBy(TextAnalysis.fingerprint(col(textCol)).as("__fp"))
       .agg(min(col(idCol)).as(idCol)))
     val bytes = bloom.getOrElse {
       val n = math.max(1L, store.count())
-      Bloom.build(store, col(storeFpCol), n, fpp)
+      Bloom.build(store, col("fingerprint"), n)
     }
     // broadcast, never a literal: the filter is store-sized (MBs to
     // hundreds of MBs) and must ship once per executor, not once per task
@@ -131,7 +131,7 @@ object Dedup {
       .select("__fp")
     // which suspects ARE in the store: history scanned once, suspects
     // broadcast — no exchange on the store side regardless of its size
-    val hits = store.select(col(storeFpCol).as("__fp"))
+    val hits = store.select(col("fingerprint").as("__fp"))
       .join(broadcast(suspects), Seq("__fp"), "left_semi").distinct()
     val fresh = winners.join(broadcast(hits), Seq("__fp"), "left_anti")
     df.join(fresh.select(idCol), Seq(idCol), "left_semi")
@@ -165,10 +165,12 @@ object Dedup {
       .join(bSigs.select(col(idCol).as("__ba"), col("sig").as("__siga")), "__ba")
       .join(sSigs.select(col(idCol).as("__sb"), col("sig").as("__sigb")), "__sb")
       .groupBy(col("__ba").as(idCol))
-      .agg(max(
-        size(filter(zip_with(col("__siga"), col("__sigb"), (x, y) => x === y), p => p))
-          .cast("double") / k).as("best_est"))
+      .agg(max(sigAgreement(col("__siga"), col("__sigb"), k)).as("best_est"))
   }
+
+  /** Fraction of the k positions where two MinHash signatures agree: the Jaccard estimate. */
+  private def sigAgreement(a: Column, b: Column, k: Int): Column =
+    size(filter(zip_with(a, b, (x, y) => x === y), p => p)).cast("double") / k
 
   /** Incremental NEAR-dup dedup, the fuzzy sibling of
     * [[incrementalDedup]]: drop batch documents whose estimated
@@ -176,7 +178,7 @@ object Dedup {
     * (via [[nearDupStoreHits]]), then near-dedup the survivors against
     * each other with the standard LSH pair + connected-components
     * path. The store is a persisted [[signatures]] frame
-    * ([[saveSignatureStore]] / [[loadSignatureStore]]); append the
+    * ([[saveStore]] / [[loadStore]] with `sigCol = "sig"`); append the
     * survivors' signatures after each refresh. Returns surviving batch
     * rows with their original columns. */
   def incrementalNearDedup(batch: DataFrame, storeSigs: DataFrame,
@@ -198,24 +200,34 @@ object Dedup {
     dedupByPairs(fresh, idCol, pairs)
   }
 
-  /** Persist a [[signatures]] frame as the near-dup store. The sig
-    * column is normalized to array<string> like the other stores; the
-    * id column keeps ITS OWN type — casting it (say, to long) would
-    * silently null out string ids (UUIDs, URL hashes) and turn every
-    * later store join into a no-op. */
-  def saveSignatureStore(sigs: DataFrame, idCol: String, path: String): Unit =
-    sigs.select(col(idCol),
-        col("sig").cast("array<string>").as("sig"))
-      .write.mode("overwrite").parquet(path)
+  /** Persist a near-dup store: a [[signatures]] frame (array `sigCol`,
+    * stored as array<string>) or a 64-bit fingerprint frame (integral
+    * `sigCol`, stored as long). The id column keeps ITS OWN type — a
+    * cast (say, to long) would null out string ids (UUIDs, URL hashes)
+    * and turn every later store join into a no-op. */
+  def saveStore(sigs: DataFrame, idCol: String, sigCol: String, path: String): Unit =
+    storeColumns(sigs, idCol, sigCol).write.mode("overwrite").parquet(path)
 
-  /** Load a persisted signature store, validating the contract. */
-  def loadSignatureStore(spark: org.apache.spark.sql.SparkSession,
-      idCol: String, path: String): DataFrame = {
+  /** Load a persisted store, validating the contract. */
+  def loadStore(spark: org.apache.spark.sql.SparkSession,
+      idCol: String, sigCol: String, path: String): DataFrame = {
     val df = spark.read.parquet(path)
-    require(Set(idCol, "sig").subsetOf(df.columns.toSet),
-      s"signature store at $path must have ($idCol, sig) columns, " +
+    require(Set(idCol, sigCol).subsetOf(df.columns.toSet),
+      s"store at $path must have ($idCol, $sigCol) columns, " +
         s"found: ${df.columns.mkString(", ")}")
-    df.select(col(idCol), col("sig").cast("array<string>").as("sig"))
+    storeColumns(df, idCol, sigCol)
+  }
+
+  /** The store's (id, sig) projection; the sig cast follows its type. */
+  private def storeColumns(df: DataFrame, idCol: String, sigCol: String): DataFrame = {
+    import org.apache.spark.sql.types._
+    val stored = df.schema(sigCol).dataType match {
+      case _: ArrayType                                => "array<string>"
+      case ByteType | ShortType | IntegerType | LongType => "long"
+      case t => throw new IllegalArgumentException(
+        s"store column $sigCol must be an array or an integral type, got ${t.sql}")
+    }
+    df.select(col(idCol), col(sigCol).cast(stored).as(sigCol))
   }
 
   /** Sentence segmentation for [[spanDedup]]: maximal runs ending in
@@ -249,41 +261,60 @@ object Dedup {
   def spanDedup(df: DataFrame, idCol: String = "doc_id",
       textCol: String = "text", span: Int = 3): DataFrame = {
     require(span >= 1, s"spanDedup wants span >= 1, got $span")
-    val sents = col("__sents")
-    val withSents = df.withColumn("__sents", spanSentences(col(textCol)))
-    val spanHashes = withSents.select(col(idCol),
-      posexplode(
-        when(size(sents) >= span,
-          transform(sequence(lit(0), size(sents) - span),
-            i => md5(lower(regexp_replace(
-              array_join(slice(sents, i + 1, lit(span)), " "),
-              "\\s+", " ")))))
-        .otherwise(array().cast("array<string>")))
-        .as(Seq("__start", "__h")))
-    // count-first, same rationale as [[exactSubstrDedup]]: the
-    // corpus-wide aggregation stays a hash-aggregable long count; the
-    // SortAggregate-only min(struct) winner choice runs over just the
-    // duplicated span occurrences
-    val dupHashes = spanHashes.groupBy("__h")
+    removeRepeatedRuns(df.withColumn("__sents", spanSentences(col(textCol))),
+      idCol, textCol, "__sents",
+      md5Runs(col("__sents"), span, regexp_replace(_, "\\s+", " ")), span, " ")
+  }
+
+  /** Per start position, md5 of the lowercased, `norm`-ed space join of
+    * the next `n` units; empty when there are fewer than `n`. */
+  private def md5Runs(units: Column, n: Int, norm: Column => Column): Column =
+    when(size(units) >= n,
+      transform(sequence(lit(0), size(units) - n),
+        i => md5(lower(norm(array_join(slice(units, i + 1, lit(n)), " "))))))
+      .otherwise(array().cast("array<string>"))
+
+  /** The repeated-run remover of [[spanDedup]] and [[exactSubstrDedup]]:
+    * a run of `runLen` `units` whose hash (`runHashes`, one per start)
+    * occurs more than once survives at its min (id, start) occurrence
+    * only; documents are rejoined with `sep`. Count first: a
+    * min(struct) buffer only SortAggregates, so the corpus-wide pass
+    * is a hash-aggregable long count that shrinks to the duplicated
+    * hashes, and the winner min runs over ONLY those occurrences
+    * (cached: they feed the winner agg and the removal probe). */
+  private def removeRepeatedRuns(withUnits: DataFrame, idCol: String,
+      textCol: String, units: String, runHashes: Column, runLen: Int,
+      sep: String): DataFrame = {
+    val runs = withUnits.select(col(idCol),
+      posexplode(runHashes).as(Seq("__start", "__h")))
+    val dupHashes = runs.groupBy("__h")
       .agg(count(lit(1)).as("__n"))
       .filter(col("__n") > 1)
       .select("__h")
-    val dupSpans = cacheOnce(spanHashes.join(dupHashes, "__h"))
-    val winners = dupSpans.groupBy("__h")
+    val dupRuns = cacheOnce(runs.join(dupHashes, "__h"))
+    val winners = dupRuns.groupBy("__h")
       .agg(min(struct(col(idCol), col("__start"))).as("__w"))
-    val removed = dupSpans.join(winners, "__h")
+    val removed = dupRuns.join(winners, "__h")
       .filter(struct(col(idCol), col("__start")) =!= col("__w"))
       .select(col(idCol),
-        explode(sequence(col("__start"), col("__start") + (span - 1)))
+        explode(sequence(col("__start"), col("__start") + (runLen - 1)))
           .as("__ridx"))
       .groupBy(idCol).agg(collect_set("__ridx").as("__removed"))
-    withSents.join(removed, Seq(idCol), "left")
-      .withColumn(textCol, array_join(
-        filter(sents, (s, i) => !array_contains(
-          coalesce(col("__removed"), array().cast("array<int>")), i)),
-        " "))
-      .drop("__sents", "__removed")
+    dropPositions(withUnits, removed, idCol, textCol, units, sep)
   }
+
+  /** Rejoin each document's `units` with `sep`, leaving out the
+    * positions in `removed`'s (id, __removed) row; documents without
+    * a row keep every unit. Only the removed positions shuffle, never
+    * document payloads. */
+  private def dropPositions(withUnits: DataFrame, removed: DataFrame,
+      idCol: String, textCol: String, units: String, sep: String): DataFrame =
+    withUnits.join(removed, Seq(idCol), "left")
+      .withColumn(textCol, array_join(
+        filter(col(units), (u, i) => !array_contains(
+          coalesce(col("__removed"), array().cast("array<int>")), i)),
+        sep))
+      .drop(units, "__removed")
 
   // ---- corpus-level boilerplate line removal -------------------------
 
@@ -344,12 +375,7 @@ object Dedup {
       .select("line_fp")
     val removed = positioned.join(boiler, "line_fp")
       .groupBy(idCol).agg(collect_set("__pos").as("__removed"))
-    withLines.join(removed, Seq(idCol), "left")
-      .withColumn(textCol, array_join(
-        filter(lines, (l, i) => !array_contains(
-          coalesce(col("__removed"), array().cast("array<int>")), i)),
-        "\n"))
-      .drop("__lines", "__removed")
+    dropPositions(withLines, removed, idCol, textCol, "__lines", "\n")
   }
 
   /** WITHIN-document duplicate-line removal (the per-document leg of
@@ -382,11 +408,8 @@ object Dedup {
     * sentence terminators, so duplicated code, tables, chat logs and
     * other punctuation-free passages are caught.
     *
-    * Scale shape mirrors [[spanDedup]]: only (id, start, window-hash)
-    * rows shuffle — the wide text column never does; hashes seen once
-    * are dropped BEFORE the probe join, so the join's build side holds
-    * only actually-duplicated windows; removed-index sets ride a
-    * second narrow aggregation keyed on id. The paper's suffix array
+    * Scale shape is [[spanDedup]]'s (the two share one remover): only
+    * (id, start, window-hash) rows shuffle. The paper's suffix array
     * is a single-machine construction; the stride-1 sliding-window
     * hash join is its shuffle-native equivalent for runs >= k (what
     * the paper removes), at O(tokens) shuffled rows.
@@ -409,40 +432,9 @@ object Dedup {
     val withToks = df.withColumn("__toks",
       graft.functions.WsTokens.of(col(textCol)))
     val windowHash =
-      if (portableHash)
-        when(size(toks) >= k,
-          transform(sequence(lit(0), size(toks) - k),
-            i => md5(lower(array_join(slice(toks, i + 1, lit(k)), " ")))))
-          .otherwise(array().cast("array<string>"))
+      if (portableHash) md5Runs(toks, k, identity)
       else graft.functions.WindowHash.of(toks, k)
-    val winHashes = withToks.select(col(idCol),
-      posexplode(windowHash).as(Seq("__start", "__h")))
-    // count-first: Spark can only SortAggregate a min(struct(...)) —
-    // struct buffers aren't hash-aggregable — which at corpus scale
-    // means SORTING every window occurrence. The count aggregation is
-    // a pure long buffer (HashAggregate, map-side combined), shrinks
-    // to just the duplicated hashes, and the order-sensitive
-    // winner min runs over ONLY those occurrences (cached: the same
-    // small frame feeds the winner agg and the removal probe).
-    val dupHashes = winHashes.groupBy("__h")
-      .agg(count(lit(1)).as("__n"))
-      .filter(col("__n") > 1)
-      .select("__h")
-    val dupWins = cacheOnce(winHashes.join(dupHashes, "__h"))
-    val winners = dupWins.groupBy("__h")
-      .agg(min(struct(col(idCol), col("__start"))).as("__w"))
-    val removed = dupWins.join(winners, "__h")
-      .filter(struct(col(idCol), col("__start")) =!= col("__w"))
-      .select(col(idCol),
-        explode(sequence(col("__start"), col("__start") + (k - 1)))
-          .as("__ridx"))
-      .groupBy(idCol).agg(collect_set("__ridx").as("__removed"))
-    withToks.join(removed, Seq(idCol), "left")
-      .withColumn(textCol, array_join(
-        filter(toks, (t, i) => !array_contains(
-          coalesce(col("__removed"), array().cast("array<int>")), i)),
-        " "))
-      .drop("__toks", "__removed")
+    removeRepeatedRuns(withToks, idCol, textCol, "__toks", windowHash, k, " ")
   }
 
   /** Portable per-shingle hash: lexicographic min over
@@ -471,26 +463,6 @@ object Dedup {
     if (hasher eq md5Hash) graft.functions.MinHashSig.md5SigOf(sh, k)
     else if (hasher eq xxHash) graft.functions.MinHashSig.xxSigOf(sh, k)
     else array((0 until k).map(seed => array_min(transform(sh, s => hasher(s, seed)))): _*)
-
-  /** Convenience single-column form — only for ad-hoc use on narrow
-    * data; the df-level operators project shingles first. */
-  def minhashSignature(text: Column, k: Int = 16, n: Int = 3,
-      hasher: (Column, Int) => Column = md5Hash): Column =
-    minhashSignatureFromShingles(shingles(text, n), k, hasher)
-
-  /** LSH band buckets: split the k-length signature into `bands` bands
-    * of k/bands rows; one output row per (doc, band) with the band's
-    * bucket hash.
-    *
-    * The signature is materialized as a projected column FIRST and the
-    * band hashes reference that column — inlining the signature
-    * expression once per band would multiply an already-wide expression
-    * tree by `bands` and blow up Catalyst/codegen time.
-    */
-  def lshBuckets(df: DataFrame, idCol: String, textCol: String,
-      k: Int = 16, bands: Int = 4, n: Int = 3,
-      hasher: (Column, Int) => Column = md5Hash): DataFrame =
-    lshBucketsFromSigs(signatures(df, idCol, textCol, k, n, hasher), idCol, k, bands)
 
   /** (id, sig) signature frame — compute ONCE and share between
     * bucketing and estimation; the signature is the expensive part
@@ -536,6 +508,10 @@ object Dedup {
     cands.minBy { case (k, b) => (cost(k, b), k, b) }
   }
 
+  /** LSH band buckets of a [[signatures]] frame: split the k-length
+    * `sig` into `bands` bands of k/bands rows; one output row per
+    * (doc, band) with the band's bucket hash. A frame, not a signature
+    * expression: inlined, that expression would be cloned per band. */
   def lshBucketsFromSigs(sigs: DataFrame, idCol: String, k: Int, bands: Int): DataFrame = {
     require(k % bands == 0, "k must divide into equal bands")
     val rows = k / bands
@@ -627,10 +603,8 @@ object Dedup {
     * (band, band-bits); the Hamming check is `bit_count(a^b)`, pure
     * codegen.
     *
-    * BEHAVIOR CHANGE (0.3): maxHamming >= bands is now rejected at
-    * call time instead of silently returning incomplete recall —
-    * callers who want a lossy sweep must widen bands or lower
-    * maxHamming explicitly. */
+    * maxHamming >= bands is rejected rather than silently returning
+    * incomplete recall. */
   def simhashPairs(df: DataFrame, idCol: String, textCol: String,
       maxHamming: Int = 3, bands: Int = 4, maxBucket: Int = 100000): DataFrame =
     hammingPairs64(
@@ -650,26 +624,44 @@ object Dedup {
     * so recall-completeness holds only while no bucket exceeds the
     * cap. Returns (a, b, hamming). */
   def hammingPairs64(sigs: DataFrame, idCol: String, sigCol: String,
-      maxHamming: Int = 3, bands: Int = 4, maxBucket: Int = 100000): DataFrame = {
-    require(64 % bands == 0, "bands must divide 64")
-    require(maxHamming < bands,
-      s"pigeonhole completeness needs maxHamming < bands (got $maxHamming >= $bands)")
-    val width = 64 / bands
+      maxHamming: Int = 3, bands: Int = 4, maxBucket: Int = 100000): DataFrame =
+    bandedHammingPairs(sigs, idCol, sigCol, "__sig", 64, maxHamming, bands,
+      maxBucket, identity)
+
+  /** The pigeonhole banding core of the 64-bit family: per row of
+    * `sigs`, one (idAs, sigAs, band, bits) row for each of `bands`
+    * bit fields of `sigCol`'s low `totalBits` bits, with every (band,
+    * bits) bucket holding more than `maxBucket` rows dropped whole. */
+  private def bandBits(sigs: DataFrame, idCol: String, sigCol: String,
+      idAs: String, sigAs: String, totalBits: Int, bands: Int,
+      maxBucket: Int): DataFrame = {
+    require(totalBits % bands == 0, s"bands must divide $totalBits")
+    val width = totalBits / bands
     val mask = if (width == 64) -1L else (1L << width) - 1
-    val banded = sigs.select(col(idCol).as("__id"), col(sigCol).as("__sig"),
-      explode(array((0 until bands).map(b =>
-        struct(lit(b).as("band"),
-          shiftrightunsigned(col(sigCol), b * width).bitwiseAND(lit(mask)).as("bits"))): _*))
-        .as("bb"))
-      .select(col("__id"), col("__sig"), col("bb.band").as("band"), col("bb.bits").as("bits"))
-    val bounded = banded
+    sigs.select(col(idCol).as(idAs), col(sigCol).as(sigAs),
+        explode(array((0 until bands).map(b =>
+          struct(lit(b).as("band"),
+            shiftrightunsigned(col(sigCol), b * width).bitwiseAND(lit(mask))
+              .as("bits"))): _*)).as("bb"))
+      .select(col(idAs), col(sigAs), col("bb.band").as("band"), col("bb.bits").as("bits"))
       .withColumn("__n", count(lit(1)).over(Window.partitionBy("band", "bits")))
       .filter(col("__n") <= maxBucket).drop("__n")
-    val a = bounded.select(col("band"), col("bits"), col("__id").as("a"), col("__sig").as("__sa"))
-    val b = bounded.select(col("band"), col("bits"), col("__id").as("b"), col("__sig").as("__sb"))
+  }
+
+  /** (a, b, hamming) pairs of [[bandBits]] rows sharing a bucket, kept
+    * at `hamming(popcount) <= maxHamming`: [[hammingPairs64]] and
+    * [[simhashPairsPortable]]. */
+  private def bandedHammingPairs(sigs: DataFrame, idCol: String, sigCol: String,
+      sigAs: String, totalBits: Int, maxHamming: Int, bands: Int,
+      maxBucket: Int, hamming: Column => Column): DataFrame = {
+    require(maxHamming < bands,
+      s"pigeonhole completeness needs maxHamming < bands (got $maxHamming >= $bands)")
+    val bounded = bandBits(sigs, idCol, sigCol, "__id", sigAs, totalBits, bands, maxBucket)
+    val a = bounded.select(col("band"), col("bits"), col("__id").as("a"), col(sigAs).as("__sa"))
+    val b = bounded.select(col("band"), col("bits"), col("__id").as("b"), col(sigAs).as("__sb"))
     a.join(b, Seq("band", "bits")).filter(col("a") < col("b"))
       .select(col("a"), col("b"),
-        bit_count(col("__sa").bitwiseXOR(col("__sb"))).as("hamming"))
+        hamming(bit_count(col("__sa").bitwiseXOR(col("__sb")))).as("hamming"))
       .filter(col("hamming") <= maxHamming)
       .distinct()
   }
@@ -679,42 +671,22 @@ object Dedup {
     * of [[incrementalHammingDedup]], mirroring [[nearDupStoreHits]]
     * for hash keys. Pigeonhole banding on BOTH sides: only same-band
     * (batch, store) rows are compared, the store is hash-sized (one
-    * 8-byte key per historical row), and for `maxHamming < bands`
-    * every qualifying pair collides on at least one band, so the
-    * filtered hits equal the brute-force hit set — UNLESS `maxBucket`
-    * cuts: a (band, bits) bucket holding more than `maxBucket` rows on
-    * EITHER side is dropped whole (the degenerate-fingerprint guard —
-    * e.g. solid-color images all hashing to dHash 0), and pairs whose
-    * only collision was that bucket are silently missed, so
-    * [[incrementalHammingDedup]] retains their batch rows. That is the
-    * same deliberate recall-for-boundedness trade every banded
-    * generator here makes; raise `maxBucket` (or pre-filter the
-    * degenerate sigs) when exactness over pathological inputs matters.
-    * Returns (idCol, best_hamming); batch rows with no band collision
-    * are absent. */
+    * 8-byte key per historical row), and for `maxHamming < bands` the
+    * filtered hits equal the brute-force hit set — unless `maxBucket`
+    * drops a bucket on EITHER side (e.g. solid-color images all
+    * hashing to dHash 0), at the recall cost [[hammingPairs64]]
+    * describes: [[incrementalHammingDedup]] retains batch rows whose
+    * only collision was that bucket. Returns (idCol, best_hamming);
+    * batch rows with no band collision are absent. */
   def hammingStoreHits(batchSigs: DataFrame, storeSigs: DataFrame,
       idCol: String, sigCol: String, bands: Int = 4,
-      maxBucket: Int = 100000): DataFrame = {
-    require(64 % bands == 0, "bands must divide 64")
-    val width = 64 / bands
-    val mask = if (width == 64) -1L else (1L << width) - 1
-    def banded(df: DataFrame, id: String, sig: String) = {
-      val b = df.select(col(idCol).as(id), col(sigCol).as(sig),
-        explode(array((0 until bands).map(k =>
-          struct(lit(k).as("band"),
-            shiftrightunsigned(col(sigCol), k * width).bitwiseAND(lit(mask))
-              .as("bits"))): _*)).as("bb"))
-        .select(col(id), col(sig),
-          col("bb.band").as("band"), col("bb.bits").as("bits"))
-      b.withColumn("__n", count(lit(1)).over(Window.partitionBy("band", "bits")))
-        .filter(col("__n") <= maxBucket).drop("__n")
-    }
-    banded(batchSigs, "__ba", "__siga")
-      .join(banded(storeSigs, "__sb", "__sigb"), Seq("band", "bits"))
+      maxBucket: Int = 100000): DataFrame =
+    bandBits(batchSigs, idCol, sigCol, "__ba", "__siga", 64, bands, maxBucket)
+      .join(bandBits(storeSigs, idCol, sigCol, "__sb", "__sigb", 64, bands, maxBucket),
+        Seq("band", "bits"))
       .groupBy(col("__ba").as(idCol))
       .agg(min(bit_count(col("__siga").bitwiseXOR(col("__sigb"))))
         .as("best_hamming"))
-  }
 
   /** Incremental 64-bit-fingerprint near-dup dedup — the Hamming
     * sibling of [[incrementalNearDedup]], for recurring corpus drops
@@ -725,14 +697,12 @@ object Dedup {
     * ([[hammingPairs64]] + min-id components). Rows with a NULL sig
     * (undecodable media) pass through untouched, like the curation
     * stage. The store is a persisted (id, sig) frame
-    * ([[saveHashStore]] / [[loadHashStore]]); append the survivors'
+    * ([[saveStore]] / [[loadStore]]); append the survivors'
     * hashes after each refresh. Returns surviving batch rows with
     * their original columns. */
   def incrementalHammingDedup(batch: DataFrame, storeSigs: DataFrame,
       idCol: String, sigCol: String, maxHamming: Int = 2, bands: Int = 4,
       maxBucket: Int = 100000): DataFrame = {
-    require(maxHamming < bands,
-      s"pigeonhole completeness needs maxHamming < bands (got $maxHamming >= $bands)")
     val withSig = batch.filter(col(sigCol).isNotNull)
     val hits = hammingStoreHits(withSig.select(col(idCol), col(sigCol)),
         storeSigs, idCol, sigCol, bands, maxBucket)
@@ -743,24 +713,6 @@ object Dedup {
       idCol, sigCol, maxHamming, bands, maxBucket)
     dedupByPairs(fresh, idCol, pairs)
       .unionByName(batch.filter(col(sigCol).isNull))
-  }
-
-  /** Persist a 64-bit fingerprint store for [[incrementalHammingDedup]].
-    * The sig column is normalized to long; the id column keeps its own
-    * type (the [[saveSignatureStore]] contract). */
-  def saveHashStore(sigs: DataFrame, idCol: String, sigCol: String,
-      path: String): Unit =
-    sigs.select(col(idCol), col(sigCol).cast("long").as(sigCol))
-      .write.mode("overwrite").parquet(path)
-
-  /** Load a persisted fingerprint store, validating the contract. */
-  def loadHashStore(spark: org.apache.spark.sql.SparkSession,
-      idCol: String, sigCol: String, path: String): DataFrame = {
-    val df = spark.read.parquet(path)
-    require(Set(idCol, sigCol).subsetOf(df.columns.toSet),
-      s"hash store at $path must have ($idCol, $sigCol) columns, " +
-        s"found: ${df.columns.mkString(", ")}")
-    df.select(col(idCol), col(sigCol).cast("long").as(sigCol))
   }
 
   /** Portable SimHash near-dup pairs: 60-bit fingerprints whose token
@@ -776,48 +728,28 @@ object Dedup {
     * ([[graft.functions.SimHashMd5Expr]]) — the earlier formulation
     * (60 per-bit `aggregate()` higher-order functions over a projected
     * hash array) stayed interpreted and re-walked the array 60 times,
-    * measured 5-10x slower at sf0.1.
-    */
+    * measured 5-10x slower at sf0.1. maxHamming >= bands is rejected,
+    * as in [[simhashPairs]]. */
   def simhashPairsPortable(df: DataFrame, idCol: String, textCol: String,
-      maxHamming: Int = 3, bands: Int = 4, maxBucket: Int = 100000): DataFrame = {
-    val totalBits = 60
-    require(totalBits % bands == 0, "bands must divide 60")
-    val width = totalBits / bands
-    val mask = (1L << width) - 1
-    val sigs = df.select(col(idCol).as("__id"),
-      graft.functions.SimHash.simhash60md5(split(trim(col(textCol)), "\\s+")).as("sig"))
-    val banded = sigs.select(col("__id"), col("sig"),
-      explode(array((0 until bands).map(b =>
-        struct(lit(b).as("band"),
-          shiftrightunsigned(col("sig"), b * width).bitwiseAND(lit(mask)).as("bits"))): _*))
-        .as("bb"))
-      .select(col("__id"), col("sig"), col("bb.band").as("band"), col("bb.bits").as("bits"))
-    val bounded = banded
-      .withColumn("__n", count(lit(1)).over(Window.partitionBy("band", "bits")))
-      .filter(col("__n") <= maxBucket).drop("__n")
-    val a = bounded.select(col("band"), col("bits"), col("__id").as("a"), col("sig").as("__sa"))
-    val b = bounded.select(col("band"), col("bits"), col("__id").as("b"), col("sig").as("__sb"))
-    a.join(b, Seq("band", "bits")).filter(col("a") < col("b"))
-      .select(col("a"), col("b"),
-        bit_count(col("__sa").bitwiseXOR(col("__sb"))).cast("long").as("hamming"))
-      .filter(col("hamming") <= maxHamming)
-      .distinct()
-  }
+      maxHamming: Int = 3, bands: Int = 4, maxBucket: Int = 100000): DataFrame =
+    bandedHammingPairs(
+      df.select(col(idCol).as("__id"),
+        graft.functions.SimHash.simhash60md5(split(trim(col(textCol)), "\\s+")).as("sig")),
+      "__id", "sig", "sig", 60, maxHamming, bands, maxBucket, _.cast("long"))
 
   /** Benchmark decontamination: training documents sharing at least
     * one word n-gram with the eval corpus. The eval side is tiny
     * relative to 100 TB of training data — its distinct shingle set is
-    * broadcast by default, so the training corpus is SCANNED ONCE with
-    * a broadcast semi-join and never shuffled; set
-    * `broadcastEval = false` for an oversized eval set to fall back to
-    * a shuffled join. Returns the distinct contaminated id column. */
+    * broadcast, so the training corpus is SCANNED ONCE with a broadcast
+    * semi-join and never shuffled; an eval set too big to broadcast
+    * takes [[contaminatedIdsBloom]]. Returns the distinct contaminated
+    * id column. */
   def contaminatedIds(train: DataFrame, evalDf: DataFrame, idCol: String,
-      textCol: String, n: Int = 8, broadcastEval: Boolean = true): DataFrame = {
+      textCol: String, n: Int = 8): DataFrame = {
     val trainSh = train.select(col(idCol),
       explode(shingles(col(textCol), n)).as("__s"))
     val evalSh = evalDf.select(explode(shingles(col(textCol), n)).as("__s")).distinct()
-    val evalSide = if (broadcastEval) broadcast(evalSh) else evalSh
-    trainSh.join(evalSide, Seq("__s"), "left_semi")
+    trainSh.join(broadcast(evalSh), Seq("__s"), "left_semi")
       .select(col(idCol)).distinct()
   }
 
@@ -825,15 +757,16 @@ object Dedup {
     * corpus — the standard guard against benchmark leakage into a
     * training set. */
   def decontaminate(train: DataFrame, evalDf: DataFrame, idCol: String,
-      textCol: String, n: Int = 8, broadcastEval: Boolean = true): DataFrame =
-    train.join(contaminatedIds(train, evalDf, idCol, textCol, n, broadcastEval),
+      textCol: String, n: Int = 8): DataFrame =
+    train.join(contaminatedIds(train, evalDf, idCol, textCol, n),
       Seq(idCol), "left_anti")
 
-  /** [[contaminatedIds]] for an eval set too big to broadcast — the
-    * case the plain path's `broadcastEval = false` escape handles by
-    * SHUFFLING every exploded training shingle (rows × n-grams-per-doc
-    * exchange: the single most expensive plan a 100 TB decontamination
-    * can pick). Here a [[Bloom]] filter of the eval shingle set rides
+  /** [[contaminatedIds]] for an eval set too big to broadcast — where
+    * a plain join would SHUFFLE every exploded training shingle (rows
+    * × n-grams-per-doc exchange: the single most expensive plan a
+    * 100 TB decontamination can pick). Here a [[Bloom]] filter (at
+    * [[Bloom.build]]'s default false-positive rate) of the eval shingle
+    * set rides
     * the training scan instead: no false negatives means every
     * `mightContain = false` shingle is proven clean and never leaves
     * its partition, so only suspect shingles (true contamination + an
@@ -843,13 +776,13 @@ object Dedup {
     * suspects. `expectedShingles` skips the sizing count when the
     * caller knows the eval set's distinct shingle count. */
   def contaminatedIdsBloom(train: DataFrame, evalDf: DataFrame, idCol: String,
-      textCol: String, n: Int = 8, expectedShingles: Option[Long] = None,
-      fpp: Double = 0.03): DataFrame = {
+      textCol: String, n: Int = 8,
+      expectedShingles: Option[Long] = None): DataFrame = {
     val evalSh = cacheOnce(
       evalDf.select(explode(shingles(col(textCol), n)).as("__s")).distinct())
     val items = math.max(1L, expectedShingles.getOrElse(evalSh.count()))
     val bc = Bloom.broadcastFilter(train.sparkSession,
-      Bloom.build(evalSh, col("__s"), items, fpp))
+      Bloom.build(evalSh, col("__s"), items))
     val trainSh = train.select(col(idCol),
         explode(shingles(col(textCol), n)).as("__s"))
       .filter(coalesce(Bloom.mightContain(bc, col("__s")), lit(false)))
@@ -861,10 +794,10 @@ object Dedup {
     * for eval sets past broadcast size, training corpus still scanned
     * exactly once. */
   def decontaminateBloom(train: DataFrame, evalDf: DataFrame, idCol: String,
-      textCol: String, n: Int = 8, expectedShingles: Option[Long] = None,
-      fpp: Double = 0.03): DataFrame =
+      textCol: String, n: Int = 8,
+      expectedShingles: Option[Long] = None): DataFrame =
     train.join(
-      contaminatedIdsBloom(train, evalDf, idCol, textCol, n, expectedShingles, fpp),
+      contaminatedIdsBloom(train, evalDf, idCol, textCol, n, expectedShingles),
       Seq(idCol), "left_anti")
 
   /** Graded contamination instead of the boolean: per training
@@ -875,13 +808,12 @@ object Dedup {
     * shape: eval shingles broadcast, train scanned once, one
     * map-side-combined aggregation; shingle-less documents score 0. */
   def contaminationScores(train: DataFrame, evalDf: DataFrame, idCol: String,
-      textCol: String, n: Int = 8, broadcastEval: Boolean = true): DataFrame = {
+      textCol: String, n: Int = 8): DataFrame = {
     val trainSh = train.select(col(idCol),
       explode_outer(shingles(col(textCol), n)).as("__s"))
     val evalSh = evalDf.select(explode(shingles(col(textCol), n)).as("__s")).distinct()
       .withColumn("__hit", lit(1))
-    val evalSide = if (broadcastEval) broadcast(evalSh) else evalSh
-    trainSh.join(evalSide, Seq("__s"), "left")
+    trainSh.join(broadcast(evalSh), Seq("__s"), "left")
       .groupBy(col(idCol))
       .agg(
         sum(when(col("__hit").isNotNull, 1L).otherwise(0L)).as("contaminated_ngrams"),
@@ -1032,8 +964,7 @@ object Dedup {
       .join(sigs.select(col("__id").as("a"), col("sig").as("siga")), "a")
       .join(sigs.select(col("__id").as("b"), col("sig").as("sigb")), "b")
       .select(col("a"), col("b"),
-        (size(filter(zip_with(col("siga"), col("sigb"), (x, y) => x === y), b => b))
-          .cast("double") / k).as("est_jaccard"))
+        sigAgreement(col("siga"), col("sigb"), k).as("est_jaccard"))
       .filter(col("est_jaccard") >= threshold)
   }
 }

@@ -765,12 +765,21 @@ object Similarity {
 
   /** The m-term ADC sum of a row's `pq_code` against its `__lut`,
     * left-associated in j order — the float-addition order the
-    * oracles replay. Shared by both PQ search paths. */
-  private def pqAdc(model: PqModel): Column =
+    * oracles replay. Shared by both PQ search paths. A code outside
+    * [0, codebookSize) fails the query, as in the fused kernel: as an
+    * offset it would silently read the next subspace's table. */
+  private def pqAdc(model: PqModel): Column = {
+    val cb = model.codebookSize
     (0 until model.m)
-      .map(j => element_at(col("__lut"),
-        lit(j * model.codebookSize + 1) + element_at(col("pq_code"), j + 1)))
+      .map { j =>
+        val c = element_at(col("pq_code"), j + 1)
+        element_at(col("__lut"),
+          when(c < 0 || c >= cb, raise_error(concat(lit(s"pq_code[$j] = "),
+            c.cast("string"), lit(s" outside codebook [0, $cb)"))))
+            .otherwise(lit(j * cb + 1) + c))
+      }
       .reduce(_ + _)
+  }
 
   /** Exact-cosine re-rank of a (query_id, neighbor_id) shortlist:
     * fetch ONLY the shortlist rows' true vectors (a candidate-sized
@@ -842,13 +851,12 @@ object Similarity {
       .withColumn("__lut", pqLut(model, asDouble(col("__qv")))).drop("__qv"),
       codes.select(col(idCol).as("neighbor_id"), col("pq_code")))
 
-  /** The [[graft.functions.PqAdcTopK]] dispatch shared by [[pqTopK]]:
+  /** The [[graft.functions.PqAdcTopK]] dispatch of [[pqTopK]]:
     * Some(result) when the fused kernel applies, None to take the
-    * unfused join. `qframe`: (query_id, __lut[, __qc]). */
+    * unfused join. `qframe`: (query_id, __lut). */
   private def fusedAdcTopK(qframe: DataFrame, codesSel: DataFrame, k: Int,
       model: PqModel, excludeSelf: Boolean): Option[DataFrame] = {
     import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, LongType}
-    val addQc = qframe.columns.contains("__qc")
     val shapeOk = qframe.schema("query_id").dataType == LongType &&
       codesSel.schema("neighbor_id").dataType == LongType &&
       (codesSel.schema("pq_code").dataType match {
@@ -858,23 +866,19 @@ object Similarity {
     if (!shapeOk) return None
     val rows = qframe.collect()
     val qs = scala.collection.mutable.ArrayBuffer.empty[graft.functions.PqAdcTopK.Query]
-    val lutIdx = rows.headOption.map(_.fieldIndex("__lut")).getOrElse(1)
-    val qcIdx = if (addQc) rows.headOption.map(_.fieldIndex("__qc")).getOrElse(2) else -1
     rows.foreach { r =>
       if (r.isNullAt(0)) return None // null query_id: window groups it
-      val lutAny = if (r.isNullAt(lutIdx)) null else r.getSeq[Any](lutIdx)
+      val lutAny = if (r.isNullAt(1)) null else r.getSeq[Any](1)
       if (lutAny == null || lutAny.exists(_ == null)) return None // null LUT: sims go null
-      if (addQc && r.isNullAt(qcIdx)) return None
       qs += graft.functions.PqAdcTopK.Query(r.getLong(0),
-        lutAny.map(_.asInstanceOf[Double]).toArray,
-        if (addQc) r.getDouble(qcIdx) else 0.0)
+        lutAny.map(_.asInstanceOf[Double]).toArray)
     }
     // duplicate query ids rank TOGETHER under the window form — only
     // the per-distinct-query kernel shape is equivalence-safe
     if (qs.map(_.id).distinct.length != qs.length) return None
     Some(codesSel
       .agg(graft.functions.PqAdcTopK.of(col("neighbor_id"), col("pq_code"),
-        qs.toSeq, k, model.m, model.codebookSize, excludeSelf, addQc).as("__topk"))
+        qs.toSeq, k, model.m, model.codebookSize, excludeSelf).as("__topk"))
       .select(explode(col("__topk")).as("__e"))
       .select(col("__e").getField("query_id").as("query_id"),
         col("__e").getField("neighbor_id").as("neighbor_id"),

@@ -144,6 +144,19 @@ class ExtensionsSpec extends SparkFunSuite {
     }
   }
 
+  test("simhashPairsPortable rejects maxHamming >= bands, like simhashPairs") {
+    val docs = Seq((1L, "a b c d")).toDF("doc_id", "text")
+    val ops = Seq[(String, () => Any)](
+      "simhashPairs" ->
+        (() => Dedup.simhashPairs(docs, "doc_id", "text", maxHamming = 4, bands = 4)),
+      "simhashPairsPortable" ->
+        (() => Dedup.simhashPairsPortable(docs, "doc_id", "text", maxHamming = 4, bands = 4)))
+    for ((name, op) <- ops) {
+      val e = intercept[IllegalArgumentException](op())
+      assert(e.getMessage.contains("maxHamming < bands"), s"$name: ${e.getMessage}")
+    }
+  }
+
   test("custom expressions callable from SQL after registration") {
     graft.functions.GraftFunctions.register(spark)
     Seq((Seq("a", "b", "c"), Array(1.0, 2.0), Array(3.0, 4.0)))
@@ -1176,8 +1189,8 @@ class ExtensionsSpec extends SparkFunSuite {
     assert(kept == Set(11L, 13L), s"got $kept")
     // persisted store round trip
     val dir = java.nio.file.Files.createTempDirectory("graft_hashstore").toString
-    Dedup.saveHashStore(store, "media_id", "dhash", dir)
-    val loaded = Dedup.loadHashStore(spark, "media_id", "dhash", dir)
+    Dedup.saveStore(store, "media_id", "dhash", dir)
+    val loaded = Dedup.loadStore(spark, "media_id", "dhash", dir)
     assert(loaded.collect().map(r => (r.getLong(0), r.getLong(1))).toSet ==
       Set((1L, 100L), (2L, 0x0f0f0f0fL)))
   }

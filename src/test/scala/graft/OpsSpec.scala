@@ -1627,8 +1627,8 @@ class OpsSpec extends SparkFunSuite {
       .toDF("doc_id", "text")
     val store = Dedup.signatures(prior, "doc_id", "text", k = 16, n = 3)
     val dir = java.nio.file.Files.createTempDirectory("graft_sigstore_str").toString
-    Dedup.saveSignatureStore(store, "doc_id", dir)
-    val loaded = Dedup.loadSignatureStore(spark, "doc_id", dir)
+    Dedup.saveStore(store, "doc_id", "sig", dir)
+    val loaded = Dedup.loadStore(spark, "doc_id", "sig", dir)
     assert(loaded.select("doc_id").collect().map(_.getString(0)).toSeq == Seq("u-alpha"))
     val batch = Seq(
       ("b-copy", "the quick brown fox jumps over the lazy dog today"),
@@ -1670,10 +1670,42 @@ class OpsSpec extends SparkFunSuite {
       == Seq(2L, 4L), "store hit 1 dropped; intra-batch dup keeps min id 2")
     // store round-trips through parquet and scores identically
     val dir = java.nio.file.Files.createTempDirectory("graft_sigstore").toString
-    Dedup.saveSignatureStore(store, "doc_id", dir)
-    val loaded = Dedup.loadSignatureStore(spark, "doc_id", dir)
+    Dedup.saveStore(store, "doc_id", "sig", dir)
+    val loaded = Dedup.loadStore(spark, "doc_id", "sig", dir)
     val out2 = Dedup.incrementalNearDedup(batch, loaded, threshold = 0.5)
     assert(out2.select("doc_id").collect().map(_.getLong(0)).sorted.toSeq == Seq(2L, 4L))
+  }
+
+  test("store contract round-trips an xxHash signature store") {
+    import graft.ops.Dedup
+    val priorText = "the quick brown fox jumps over the lazy dog today"
+    def sigs(df: org.apache.spark.sql.DataFrame) =
+      Dedup.signatures(df, "doc_id", "text", k = 16, n = 3, hasher = Dedup.xxHash)
+    val store = sigs(Seq((100L, priorText),
+      (101L, "a wholly separate prior document about parquet row groups")).toDF("doc_id", "text"))
+    val batch = Seq(
+      (1L, priorText),
+      (2L, "the quick brown fox jumps over the lazy dog yesterday"),
+      (3L, "completely different content about spark partitions and shuffles here"),
+      (4L, "completely different content about spark partitions and shuffles here")
+    ).toDF("doc_id", "text")
+    val dir = java.nio.file.Files.createTempDirectory("graft_xxstore").toString
+    Dedup.saveStore(store, "doc_id", "sig", dir)
+    val loaded = Dedup.loadStore(spark, "doc_id", "sig", dir)
+    assert(sigs(batch).schema("sig").dataType.sql == "ARRAY<BIGINT>")
+    assert(loaded.schema("sig").dataType.sql == "ARRAY<STRING>")
+    def hits(s: org.apache.spark.sql.DataFrame) = Dedup.nearDupStoreHits(sigs(batch), s)
+      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    def survivors(s: org.apache.spark.sql.DataFrame) =
+      Dedup.incrementalNearDedup(batch, s, threshold = 0.5, hasher = Dedup.xxHash)
+        .select("doc_id").as[Long].collect().sorted.toSeq
+    assert(hits(store)(1L) == 1.0)
+    assert(hits(loaded) == hits(store))
+    assert(survivors(loaded) == survivors(store))
+    assert(!survivors(store).contains(1L))
+    val e = intercept[IllegalArgumentException](Dedup.saveStore(
+      Seq((1L, "x")).toDF("doc_id", "sig"), "doc_id", "sig", dir))
+    assert(e.getMessage.contains("array or an integral"), e.getMessage)
   }
 
   test("bigram LM: hand-computed smoothing, unk mapping, save/load roundtrip") {
@@ -2981,6 +3013,44 @@ class OpsSpec extends SparkFunSuite {
         "embedding", "vec_id", k, model, excludeSelf))
       assert(fused == unfused, s"excludeSelf=$excludeSelf k=$k")
       assert(fused.nonEmpty)
+    }
+  }
+
+  test("PQ ADC fails loudly on malformed codes: fused, unfused and IVF-PQ") {
+    // m = 2, K = 4: as a bare LUT offset, code 7 would read subspace
+    // 1's table and -1 subspace 0's last entry; a short code has no
+    // entry for subspace 1. Every path must throw, naming the code.
+    val docs = (0L until 8L)
+      .map(i => (i, Seq(i.toFloat, 1f, (i % 3).toFloat, 2f)))
+      .toDF("vec_id", "embedding")
+    val model = Similarity.trainPq(docs, "vec_id", "embedding", m = 2, codebookSize = 4)
+    val ivf = Similarity.buildIvfPqIndex(docs, "vec_id", "embedding",
+      nlist = 2, m = 2, codebookSize = 4)
+    val queries = docs.filter($"vec_id" === 0L)
+    def messages(t: Throwable): String =
+      Iterator.iterate(t)(_.getCause).takeWhile(_ != null).map(_.getMessage).mkString(" | ")
+    for ((what, code) <- Seq("too large" -> Seq(7, 1), "negative" -> Seq(-1, 1),
+        "short" -> Seq(1))) {
+      val codes = Seq((100L, code), (101L, Seq(0, 0))).toDF("vec_id", "pq_code")
+      val lists = ivf.lists.withColumn("pq_code",
+        when($"neighbor_id" === 3L, typedLit(code)).otherwise($"pq_code"))
+      val paths = Seq[(String, () => Any)](
+        "fused" -> (() => Similarity.pqTopK(queries, codes, "vec_id", "embedding",
+          "vec_id", 2, model).collect()),
+        "unfused" -> (() => Similarity.pqTopKUnfused(queries, codes, "vec_id",
+          "embedding", "vec_id", 2, model, excludeSelf = true).collect()),
+        "ivf-pq" -> (() => Similarity.ivfTopKIndexed(queries, ivf.copy(lists = lists),
+          "vec_id", "embedding", k = 2, nprobe = 2).collect()))
+      for ((path, run) <- paths) {
+        val msg = messages(intercept[Exception](run()))
+        // a short code trips ANSI element_at on the expression paths
+        val expected = (what, path) match {
+          case ("short", "fused") => "pq_code has 1 elements, expected >= 2"
+          case ("short", _)       => "INVALID_ARRAY_INDEX_IN_ELEMENT_AT"
+          case _                  => s"pq_code[0] = ${code.head} outside codebook [0, 4)"
+        }
+        assert(msg.contains(expected), s"$what code on the $path path: $msg")
+      }
     }
   }
 
