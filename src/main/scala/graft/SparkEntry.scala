@@ -1034,7 +1034,8 @@ object SparkEntry {
     // every image's dhash plus its keep/drop verdict.
     "q_image_neardup" -> ((s, dir) => {
       val media = graft.ops.Multimodal.syntheticGridMedia(s, 400)
-      val hashes = graft.ops.Multimodal.imageDHashes(media)
+      val hashes = graft.ops.Multimodal.mediaHashes(media,
+        graft.ops.Multimodal.MediaHash.Image)
       val pairs = graft.ops.Dedup.hammingPairs64(hashes, "media_id", "dhash",
         maxHamming = 2, bands = 4)
       val kept = graft.ops.Dedup.dedupByPairs(hashes, "media_id", pairs)
@@ -1055,7 +1056,8 @@ object SparkEntry {
     // walk, banding, popcount and components in pure SQL.
     "q_video_neardup" -> ((s, dir) => {
       val media = graft.ops.Multimodal.syntheticGridVideos(s, 200)
-      val sigs = graft.ops.Multimodal.videoKeyframeDHashes(media)
+      val sigs = graft.ops.Multimodal.mediaHashes(media,
+        graft.ops.Multimodal.MediaHash.VideoKeyframe)
       val pairs = graft.ops.Dedup.hammingPairs64(sigs, "media_id", "vhash",
         maxHamming = 2, bands = 4)
       val kept = graft.ops.Dedup.dedupByPairs(sigs, "media_id", pairs)
@@ -1074,7 +1076,8 @@ object SparkEntry {
     // cut/trim-robust video identity key.
     "q_video_minframe" -> ((s, dir) => {
       val media = graft.ops.Multimodal.syntheticGridVideos(s, 200)
-      graft.ops.Multimodal.videoMinFrameDHashes(media)
+      graft.ops.Multimodal.mediaHashes(media,
+        graft.ops.Multimodal.MediaHash.VideoMinFrame)
         .select(col("media_id"), col("vhash"))
         .orderBy("media_id")
     }),
@@ -1088,7 +1091,8 @@ object SparkEntry {
     // decoded fingerprints (the audio sibling of q_image_neardup).
     "q_audio_neardup" -> ((s, dir) => {
       val media = graft.ops.Multimodal.syntheticGridAudio(s, 400)
-      val sigs = graft.ops.Multimodal.audioFingerprints(media)
+      val sigs = graft.ops.Multimodal.mediaHashes(media,
+        graft.ops.Multimodal.MediaHash.Audio)
       val pairs = graft.ops.Dedup.hammingPairs64(sigs, "media_id", "afp",
         maxHamming = 2, bands = 4)
       val kept = graft.ops.Dedup.dedupByPairs(sigs, "media_id", pairs)
@@ -1105,7 +1109,8 @@ object SparkEntry {
     // boundary pair: id 201 copies id 200 (in the store).
     "q_image_neardup_incremental" -> ((s, dir) => {
       val media = graft.ops.Multimodal.syntheticGridMedia(s, 400)
-      val hashes = graft.ops.Multimodal.imageDHashes(media)
+      val hashes = graft.ops.Multimodal.mediaHashes(media,
+        graft.ops.Multimodal.MediaHash.Image)
       val store = hashes.filter(col("media_id") <= 200)
       val batch = hashes.filter(col("media_id") > 200)
       val kept = graft.ops.Dedup.incrementalHammingDedup(

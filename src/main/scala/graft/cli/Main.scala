@@ -866,12 +866,11 @@ object Main {
     }
     val corpus = {
       val raw = readCorpus(spark, input, f.get("input-format"))
-      f.get("image-col").map(c =>
-          raw.withColumn("__media_hash64", graft.ops.Multimodal.dHashCol(col(c))))
-        .orElse(f.get("audio-col").map(c => raw.withColumn("__media_hash64",
-          graft.ops.Multimodal.audioFingerprintCol(col(c)))))
-        .orElse(f.get("video-col").map(c => raw.withColumn("__media_hash64",
-          graft.ops.Multimodal.videoKeyframeDHashCol(col(c)))))
+      import graft.ops.Multimodal.{MediaHash, mediaHashCol}
+      Seq("image-col" -> MediaHash.Image, "audio-col" -> MediaHash.Audio,
+          "video-col" -> MediaHash.VideoKeyframe)
+        .collectFirst { case (flag, kind) if f.contains(flag) =>
+          raw.withColumn("__media_hash64", mediaHashCol(col(f(flag)), kind)) }
         .getOrElse(raw)
     }
     // default domain-cap ranking: document length in characters,

@@ -118,7 +118,7 @@ object Curation {
 
   /** Image near-dup stage for multimodal corpora: `hashCol` holds a
     * precomputed 64-bit perceptual hash per document (e.g.
-    * [[Multimodal.imageDHashes]] joined onto the docs frame, or any
+    * [[Multimodal.mediaHashes]] joined onto the docs frame, or any
     * other 64-bit locality key); documents whose hashes sit within
     * `maxHamming` bits form components that keep only the minimum-id
     * member ([[Dedup.hammingPairs64]] pigeonhole banding +

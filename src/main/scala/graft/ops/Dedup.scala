@@ -613,7 +613,7 @@ object Dedup {
       "__id", "sig", maxHamming, bands, maxBucket)
 
   /** Near-dup pairs among PRECOMPUTED 64-bit fingerprints — text
-    * simhash, image dHash ([[Multimodal.imageDHashes]]), any 64-bit
+    * simhash, image dHash ([[Multimodal.mediaHashes]]), any 64-bit
     * locality key. Pigeonhole banding: a pair within `maxHamming <
     * bands` differs in at most maxHamming bands, so it MUST agree on
     * at least one — candidate generation is recall-complete, then the
@@ -690,7 +690,7 @@ object Dedup {
 
   /** Incremental 64-bit-fingerprint near-dup dedup — the Hamming
     * sibling of [[incrementalNearDedup]], for recurring corpus drops
-    * keyed on image dHashes ([[Multimodal.imageDHashes]]), audio
+    * keyed on image dHashes ([[Multimodal.mediaHashes]]), audio
     * fingerprints, SimHash, or any 64-bit locality key: drop batch
     * rows whose `sigCol` sits within `maxHamming` bits of ANY stored
     * hash, then near-dedup the survivors against each other

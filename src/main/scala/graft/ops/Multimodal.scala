@@ -1,15 +1,15 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Multimodal column plumbing: image/audio/video as opaque `binary`
-  * columns with typed metadata, decoded/feature-extracted in batched
-  * partition passes.
+  * columns with typed metadata, decoded/feature-extracted in one
+  * partition pass.
   *
-  * The Spark-side machinery — schema, partition sizing, batched
-  * iteration shape (the Scala analog of `mapInPandas` batches), typed
-  * Datasets — is real and tested. IMAGE decode is REAL (JDK
+  * The Spark-side machinery — schema, partition sizing, the streaming
+  * decode pass (the Scala analog of `mapInPandas`), typed Datasets —
+  * is real and tested. IMAGE decode is REAL (JDK
   * `javax.imageio`: PNG/JPEG/BMP/GIF, zero external deps) — dimensions
   * plus a downsampled-luminance grid embedding. AUDIO decode is REAL
   * (JDK `javax.sound.sampled`: WAV/AIFF/AU PCM containers, µ-law/a-law
@@ -18,8 +18,9 @@ import org.apache.spark.sql.functions._
   * extraction is REAL for MJPEG-in-AVI (a hand-rolled RIFF container
   * parse + per-frame `javax.imageio` JPEG decode — the one mainstream
   * video format expressible in the pure JDK). Payloads in codecs the
-  * JDK cannot decode are skipped, never fabricated: swapping in ffmpeg
-  * bindings changes only the decode functions, not the pipeline.
+  * JDK cannot decode, and null payloads, are skipped, never
+  * fabricated: swapping in ffmpeg bindings changes only the decode
+  * functions, not the pipeline.
   */
 object Multimodal {
 
@@ -51,9 +52,32 @@ object Multimodal {
       frameIndex: Int,
       frameHash: Long)
 
-  /** Rows decoded per batch inside a partition — bounds peak memory
-    * exactly like `mapInPandas` batch size does. */
-  val BatchSize = 64
+  /** The one decode pass behind every media operator: repartition when
+    * `repartitionTo` asks (it caps rows per task so a partition of
+    * large blobs fits in executor memory — the knob you size from
+    * payload stats), then stream each payload through `f` in a single
+    * `mapPartitions`: no shuffle, one payload live at a time. */
+  private def decodePass[T: Encoder](ds: Dataset[MediaRow],
+      repartitionTo: Option[Int] = None)(f: MediaRow => IterableOnce[T]): Dataset[T] =
+    repartitionTo.map(ds.repartition(_)).getOrElse(ds).mapPartitions(_.flatMap(f))
+
+  /** Sets bit (row·8 + col) of a 64-bit hash for every cell of an 8×8
+    * grid where `rises(row, col)` — the sign-of-delta packer behind
+    * [[dHash64]], [[audioFingerprint64]] and the grid generators'
+    * replays. */
+  private def deltaBits(rises: (Int, Int) => Boolean): Long = {
+    var h = 0L
+    var r = 0
+    while (r < 8) {
+      var c = 0
+      while (c < 8) {
+        if (rises(r, c)) h |= 1L << (r * 8 + c)
+        c += 1
+      }
+      r += 1
+    }
+    h
+  }
 
   // ==== IMAGE DECODE (real, JDK javax.imageio) ======================
 
@@ -62,28 +86,42 @@ object Multimodal {
     * The embedding is a g×g mean-luminance grid (g = ceil(sqrt(dim)),
     * first `dim` cells, ITU-R BT.601 luma, normalized to [0,1]) — the
     * cheap classical stand-in for a model embedding; a real deployment
-    * swaps the grid for a model forward pass at the same batch
-    * boundary. Returns None when the bytes are not a decodable image.
+    * swaps the grid for a model forward pass in the same decode pass.
+    * Returns None when the bytes are not a decodable image.
     */
   def decodeImage(content: Array[Byte], dim: Int = 16): Option[(Int, Int, Array[Float])] =
-    decodeImage(content, 0, content.length, dim)
+    if (content == null) None else decodeImage(content, 0, content.length, dim)
 
   /** Slice variant — decodes `content(off until off+len)` without
     * copying (frame payloads inside a video container). */
   private[graft] def decodeImage(content: Array[Byte], off: Int, len: Int,
-      dim: Int): Option[(Int, Int, Array[Float])] = {
-    val img =
-      try javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(content, off, len))
-      catch { case _: Exception => null }
-    if (img == null || img.getWidth <= 0 || img.getHeight <= 0) None
-    else {
+      dim: Int): Option[(Int, Int, Array[Float])] =
+    readImage(content, off, len).map { img =>
       val g = math.ceil(math.sqrt(dim.toDouble)).toInt
       val grid = lumaGrid(img, g, g)
       val emb = Array.tabulate(dim) { j =>
         if (j < g * g) (grid(j) / 255.0).toFloat else 0f
       }
-      Some((img.getWidth, img.getHeight, emb))
+      (img.getWidth, img.getHeight, emb)
     }
+
+  /** Read `content(off until off+len)` with the JVM's registered
+    * ImageReaders, without copying — the one ImageIO entry point of
+    * every image and video-frame decoder. None when the bytes are not
+    * a decodable image. */
+  private def readImage(content: Array[Byte], off: Int, len: Int)
+      : Option[java.awt.image.BufferedImage] =
+    (try Option(javax.imageio.ImageIO.read(
+      new java.io.ByteArrayInputStream(content, off, len)))
+    catch { case _: Exception => None })
+      .filter(img => img.getWidth > 0 && img.getHeight > 0)
+
+  /** Encode an image with ImageIO's default writer for `format` — the
+    * shared tail of [[resizeImage]] and the synthetic generators. */
+  private def encode(img: java.awt.image.RenderedImage, format: String): Array[Byte] = {
+    val bos = new java.io.ByteArrayOutputStream()
+    javax.imageio.ImageIO.write(img, format, bos)
+    bos.toByteArray
   }
 
   /** Area-averaged BT.601 luma grid (gw×gh cells, values 0..255) of a
@@ -127,62 +165,16 @@ object Multimodal {
     * grid averages away everything but the coarse gradient structure.
     * Pair it with [[Dedup.hammingPairs64]] for corpus-scale image
     * dedup. None when the bytes are not a decodable image. */
-  def dHash64(content: Array[Byte]): Option[Long] = {
-    val img =
-      try javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(content))
-      catch { case _: Exception => null }
-    if (img == null || img.getWidth <= 0 || img.getHeight <= 0) None
-    else {
-      val gw = 9
-      val gh = 8
-      val g = lumaGrid(img, gw, gh)
-      var hash = 0L
-      var yy = 0
-      while (yy < gh) {
-        var xx = 0
-        while (xx < gw - 1) {
-          if (g(yy * gw + xx + 1) > g(yy * gw + xx)) hash |= 1L << (yy * 8 + xx)
-          xx += 1
-        }
-        yy += 1
-      }
-      Some(hash)
+  def dHash64(content: Array[Byte]): Option[Long] =
+    if (content == null) None else dHash64(content, 0, content.length)
+
+  /** Slice variant — hashes a frame payload inside a video container
+    * without copying it out. */
+  private def dHash64(content: Array[Byte], off: Int, len: Int): Option[Long] =
+    readImage(content, off, len).map { img =>
+      val g = lumaGrid(img, 9, 8)
+      deltaBits((y, x) => g(y * 9 + x + 1) > g(y * 9 + x))
     }
-  }
-
-  /** Shared batched 64-bit fingerprint pass: (media_id, hash) for
-    * every payload `extract` can decode; undecodable payloads emit
-    * nothing — a fabricated hash would pollute the near-dup graph
-    * downstream. The mapPartitions/grouped shape bounds peak decode
-    * memory at [[BatchSize]] payloads exactly like the feature
-    * extractors. */
-  private def fingerprints64(ds: Dataset[MediaRow], outCol: String,
-      repartitionTo: Option[Int])(extract: Array[Byte] => Option[Long])
-      : DataFrame = {
-    import ds.sparkSession.implicits._
-    val base = repartitionTo.map(ds.repartition(_)).getOrElse(ds)
-    base.mapPartitions(_.grouped(BatchSize).flatMap(_.iterator.flatMap(m =>
-      extract(m.content).map(h => (m.media_id, h)))))
-      .toDF("media_id", outCol)
-  }
-
-  /** A 64-bit extractor as a nullable-long column over a binary column
-    * — the untyped-DataFrame bridge behind [[dHashCol]] /
-    * [[audioFingerprintCol]]. A Scala UDF, not a codegen expression:
-    * the decoders cannot be generated code, and the decode itself
-    * dwarfs the UDF bridge cost. */
-  private def fingerprintCol(bytes: Column)(
-      extract: Array[Byte] => Option[Long]): Column = {
-    val f = udf((b: Array[Byte]) => if (b == null) None else extract(b))
-    f(bytes)
-  }
-
-  /** Perceptual hashes for a media frame's decodable images, in the
-    * same batched partition pass as the other extractors: (media_id,
-    * dhash). */
-  def imageDHashes(ds: Dataset[MediaRow],
-      repartitionTo: Option[Int] = None): DataFrame =
-    fingerprints64(ds, "dhash", repartitionTo)(dHash64)
 
   /** Deterministic area-average resize of an image payload to
     * `outW`×`outH`, re-encoded as PNG (lossless, so chained transforms
@@ -199,11 +191,7 @@ object Multimodal {
     // any model input resolution)
     require(outW.toLong * outH <= (1L << 26),
       s"target $outW x $outH exceeds the 2^26-pixel resize bound")
-    val img =
-      try javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(content))
-      catch { case _: Exception => null }
-    if (img == null || img.getWidth <= 0 || img.getHeight <= 0) None
-    else {
+    Option(content).flatMap(c => readImage(c, 0, c.length)).map { img =>
       val w = img.getWidth
       val h = img.getHeight
       val n = outW * outH
@@ -250,14 +238,12 @@ object Multimodal {
         out.setRGB(i % outW, i / outW, r << 16 | g << 8 | b)
         i += 1
       }
-      val bos = new java.io.ByteArrayOutputStream()
-      javax.imageio.ImageIO.write(out, "png", bos)
-      Some(bos.toByteArray)
+      encode(out, "png")
     }
   }
 
   /** Resize every decodable image in a media frame to `w`×`h` in the
-    * standard batched partition pass — the preprocessing step a
+    * standard decode pass — the preprocessing step a
     * vision-model training pipeline runs before feature extraction.
     * Non-image payloads (audio, video, corrupt bytes) pass through
     * UNCHANGED: a resize stage must not drop or fabricate media. */
@@ -270,12 +256,9 @@ object Multimodal {
     require(w.toLong * h <= (1L << 26),
       s"target $w x $h exceeds the 2^26-pixel resize bound")
     import ds.sparkSession.implicits._
-    val base = repartitionTo.map(ds.repartition(_)).getOrElse(ds)
-    base.mapPartitions(_.grouped(BatchSize).flatMap(_.iterator.map { m =>
-      resizeImage(m.content, w, h) match {
-        case Some(resized) => m.copy(mime = "image/png", content = resized)
-        case None          => m
-      }
+    decodePass(ds, repartitionTo)(m => Some(resizeImage(m.content, w, h) match {
+      case Some(resized) => m.copy(mime = "image/png", content = resized)
+      case None          => m
     }))
   }
 
@@ -309,8 +292,8 @@ object Multimodal {
     * [[NMelFilters]] triangular mel filters, log energies, DCT-II,
     * first `coeffs` coefficients — the cheap classical stand-in for a
     * model embedding; a real deployment swaps the filterbank for a
-    * model forward pass at the same batch boundary. Returns None when
-    * the bytes are not decodable audio.
+    * model forward pass in the same decode pass. Returns None when the
+    * bytes are not decodable audio.
     */
   def decodeAudio(content: Array[Byte], coeffs: Int = 13): Option[(Int, Long, Array[Float])] =
     decodePcmMono(content).map { case (sr, durationMs, mono, n) =>
@@ -348,7 +331,7 @@ object Multimodal {
           val frameBytes = 2 * ch
           // size the sample buffer from the container's frame count (PCM
           // transcoding preserves it) — a fixed 64Ki doubles would waste
-          // 512KB of garbage per 100ms clip in the batched partition pass
+          // 512KB of garbage per 100ms clip in the decode pass
           val cap = {
             val fl = ais.getFrameLength
             if (fl >= 0 && fl < MaxAnalysisSamples) fl.toInt else MaxAnalysisSamples
@@ -429,8 +412,6 @@ object Multimodal {
       frames += 1
       start += HopSize
     }
-    def mel(f: Double) = 2595.0 * math.log10(1.0 + f / 700.0)
-    def imel(m: Double) = 700.0 * (math.pow(10.0, m / 2595.0) - 1.0)
     val melMax = mel(sampleRate / 2.0)
     // filter m spans bin(m)..bin(m+2), triangular peak at bin(m+1)
     val binOf = Array.tabulate(nBands + 2)(i =>
@@ -451,6 +432,11 @@ object Multimodal {
     }
   }
 
+  /** Hz to mel and back (the HTK formula) — the scale of
+    * [[melBandEnergies]]' filters and of [[syntheticGridWav]]'s tones. */
+  private def mel(f: Double) = 2595.0 * math.log10(1.0 + f / 700.0)
+  private def imel(m: Double) = 700.0 * (math.pow(10.0, m / 2595.0) - 1.0)
+
   /** 64-bit temporal-spectral audio fingerprint (the audio sibling of
     * [[dHash64]]): the clip's first [[MaxAnalysisSamples]] mono
     * samples split into 9 equal time segments, 8 triangular mel-band
@@ -463,34 +449,15 @@ object Multimodal {
     * None when the bytes are not decodable audio. */
   def audioFingerprint64(content: Array[Byte]): Option[Long] =
     decodePcmMono(content).map { case (sr, _, mono, n) =>
-      val segs = 9
-      val bands = 8
       // empty segments (clips shorter than 9 samples, or empty audio)
       // fall through to the zero-padded single frame -> floor energies
-      val e = Array.tabulate(segs) { t =>
-        val from = (t.toLong * n / segs).toInt
-        val until = ((t + 1).toLong * n / segs).toInt
-        melBandEnergies(mono, from, math.max(until, from), sr, bands)
+      val e = Array.tabulate(9) { t =>
+        val from = (t.toLong * n / 9).toInt
+        val until = ((t + 1).toLong * n / 9).toInt
+        melBandEnergies(mono, from, math.max(until, from), sr, 8)
       }
-      var h = 0L
-      var t = 0
-      while (t < segs - 1) {
-        var m = 0
-        while (m < bands) {
-          if (e(t + 1)(m) > e(t)(m)) h |= 1L << (t * bands + m)
-          m += 1
-        }
-        t += 1
-      }
-      h
+      deltaBits((t, m) => e(t + 1)(m) > e(t)(m))
     }
-
-  /** 64-bit audio fingerprints for a media frame's decodable audio
-    * payloads, in the same batched partition pass as the other
-    * extractors: (media_id, afp). Non-audio payloads emit nothing. */
-  def audioFingerprints(ds: Dataset[MediaRow],
-      repartitionTo: Option[Int] = None): DataFrame =
-    fingerprints64(ds, "afp", repartitionTo)(audioFingerprint64)
 
   /** In-place iterative radix-2 FFT (lengths must be a power of two —
     * only ever called with [[FftSize]]). */
@@ -562,7 +529,7 @@ object Multimodal {
     * them. None when the bytes are not an AVI. For MJPEG files each
     * slice is a standalone JPEG that [[decodeImage]] can decode. */
   private[graft] def aviFrameChunks(content: Array[Byte]): Option[Vector[(Int, Int)]] = {
-    if (content.length < 12 || fourcc(content, 0) != "RIFF" ||
+    if (content == null || content.length < 12 || fourcc(content, 0) != "RIFF" ||
       fourcc(content, 8) != "AVI ") return None
     val frames = Vector.newBuilder[(Int, Int)]
     def isFrameId(id: String): Boolean =
@@ -599,8 +566,21 @@ object Multimodal {
     Some(frames.result())
   }
 
-  /** Decode + feature-extract every `stride`-th video frame in batched
-    * partition passes: REAL for MJPEG-in-AVI payloads (RIFF parse +
+  /** (frame index, offset, length) of every `stride`-th frame chunk
+    * among the first `limit` of an AVI payload — the frame sampling of
+    * [[videoFrameFeatures]], [[sampleFrames]] and the min-frame hash.
+    * Empty when the bytes are not an AVI. */
+  private def frameSlices(content: Array[Byte], stride: Int,
+      limit: Int = Int.MaxValue): IndexedSeq[(Int, Int, Int)] =
+    aviFrameChunks(content).toIndexedSeq.flatMap { chunks =>
+      (0 until math.min(limit, chunks.length) by stride).map { i =>
+        val (off, len) = chunks(i)
+        (i, off, len)
+      }
+    }
+
+  /** Decode + feature-extract every `stride`-th video frame in the
+    * decode pass: REAL for MJPEG-in-AVI payloads (RIFF parse +
     * ImageIO JPEG decode per sampled frame — undecodable or missing
     * frames are skipped, never fabricated); non-AVI payloads emit
     * nothing. Frame features are the same luminance-grid embedding as
@@ -610,84 +590,64 @@ object Multimodal {
   def videoFrameFeatures(ds: Dataset[MediaRow], stride: Int = 1,
       maxFrames: Int = Int.MaxValue, dim: Int = 16,
       repartitionTo: Option[Int] = None): Dataset[VideoFrameFeatures] = {
+    require(stride >= 1, s"frame stride must be >= 1 (got $stride)")
     import ds.sparkSession.implicits._
-    val base = repartitionTo.map(ds.repartition(_)).getOrElse(ds)
-    base.mapPartitions(_.grouped(BatchSize).flatMap(_.iterator.flatMap { m =>
-      aviFrameChunks(m.content).toSeq.flatMap { chunks =>
-        (0 until chunks.length by math.max(1, stride)).take(maxFrames).flatMap { i =>
-          val (off, len) = chunks(i)
-          decodeImage(m.content, off, len, dim).map { case (w, h, emb) =>
-            VideoFrameFeatures(m.media_id, i, w, h, emb) }
-        }
-      }
-    }))
+    decodePass(ds, repartitionTo)(m =>
+      frameSlices(m.content, stride).take(maxFrames).flatMap { case (i, off, len) =>
+        decodeImage(m.content, off, len, dim).map { case (w, h, emb) =>
+          VideoFrameFeatures(m.media_id, i, w, h, emb) }
+      })
   }
 
   // ==== pipeline operators ==========================================
 
-  /** Decode + feature-extract images in batched partition passes.
-    * Payloads [[decodeImage]] cannot parse (corrupt files, formats
-    * without a registered reader) are skipped, never fabricated.
-    * `repartitionTo` caps rows per task so a partition of large blobs
-    * fits in executor memory (the knob you size from payload stats —
-    * at 100 TB of media this matters more than anything else here). */
+  /** Decode + feature-extract images in the decode pass. Payloads
+    * [[decodeImage]] cannot parse (corrupt files, formats without a
+    * registered reader) are skipped, never fabricated. `repartitionTo`
+    * caps rows per task so a partition of large blobs fits in executor
+    * memory (at 100 TB of media this matters more than anything else
+    * here). */
   def imageFeatures(ds: Dataset[MediaRow], dim: Int = 16,
       repartitionTo: Option[Int] = None): Dataset[ImageFeatures] = {
     import ds.sparkSession.implicits._
-    val base = repartitionTo.map(ds.repartition(_)).getOrElse(ds)
-    base.mapPartitions { it =>
-      it.grouped(BatchSize).flatMap { batch =>
-        // batch boundary = the amortization point for a real decoder
-        // (model session init, JNI handle, GPU transfer, ...)
-        batch.iterator.flatMap { m =>
-          decodeImage(m.content, dim).map { case (w, h, emb) =>
-            ImageFeatures(m.media_id, w, h, emb) }
-        }
-      }
-    }
+    decodePass(ds, repartitionTo)(m =>
+      decodeImage(m.content, dim).map { case (w, h, emb) =>
+        ImageFeatures(m.media_id, w, h, emb) })
   }
 
-  /** Decode + feature-extract audio in batched partition passes: real
-    * JDK decode ([[decodeAudio]]); undecodable payloads (corrupt files,
+  /** Decode + feature-extract audio in the decode pass: real JDK
+    * decode ([[decodeAudio]]); undecodable payloads (corrupt files,
     * compressed codecs without a registered reader) are skipped, as in
     * [[imageFeatures]]. */
   def audioFeatures(ds: Dataset[MediaRow], coeffs: Int = 13,
       repartitionTo: Option[Int] = None): Dataset[AudioFeatures] = {
     import ds.sparkSession.implicits._
-    val base = repartitionTo.map(ds.repartition(_)).getOrElse(ds)
-    base.mapPartitions(_.grouped(BatchSize).flatMap(_.iterator.flatMap { m =>
+    decodePass(ds, repartitionTo)(m =>
       decodeAudio(m.content, coeffs).map { case (sr, dur, mfcc) =>
-        AudioFeatures(m.media_id, sr, dur, mfcc) }
-    }))
+        AudioFeatures(m.media_id, sr, dur, mfcc) })
   }
 
-  /** Sample every `stride`-th frame as a compact dedup hash: REAL for
-    * MJPEG-in-AVI payloads (frame hash = xxhash-style hash of the
-    * DECODED pixel data, so re-encoded byte-identical frames collide
-    * exactly); non-AVI payloads and undecodable frames emit nothing.
-    * [[videoFrameFeatures]] is the full-feature variant. */
+  /** Sample every `stride`-th frame among the first `frames` as a
+    * compact dedup hash: REAL for MJPEG-in-AVI payloads (frame hash =
+    * FNV-style hash of the DECODED pixel data, so re-encoded
+    * byte-identical frames collide exactly); non-AVI payloads and
+    * undecodable frames emit nothing. [[videoFrameFeatures]] is the
+    * full-feature variant. */
   def sampleFrames(ds: Dataset[MediaRow], frames: Int, stride: Int): Dataset[VideoFrameSample] = {
+    require(stride >= 1, s"frame stride must be >= 1 (got $stride)")
     import ds.sparkSession.implicits._
-    ds.flatMap { m =>
-      aviFrameChunks(m.content).toSeq.flatMap { chunks =>
-        (0 until math.min(frames, chunks.length) by stride).flatMap { i =>
-          val (off, len) = chunks(i)
-          decodedPixelHash(m.content, off, len)
-            .map(h => VideoFrameSample(m.media_id, i, h))
-        }
-      }
-    }
+    decodePass(ds)(m =>
+      frameSlices(m.content, stride, frames).flatMap { case (i, off, len) =>
+        decodedPixelHash(m.content, off, len)
+          .map(h => VideoFrameSample(m.media_id, i, h))
+      })
   }
 
   /** FNV-style hash over a frame's decoded ARGB pixels (row-major) —
     * a content hash of what the codec produced, not of the container
     * bytes. None when the bytes are not a decodable image. */
-  private def decodedPixelHash(imageBytes: Array[Byte], off: Int, len: Int): Option[Long] = {
-    val img =
-      try javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(imageBytes, off, len))
-      catch { case _: Exception => null }
-    if (img == null) None
-    else {
+  private def decodedPixelHash(imageBytes: Array[Byte], off: Int, len: Int): Option[Long] =
+    readImage(imageBytes, off, len).map { img =>
       val w = img.getWidth
       // bulk row reads, like lumaGrid: per-pixel getRGB pays a
       // ColorModel conversion call per pixel
@@ -703,9 +663,8 @@ object Multimodal {
         }
         y += 1
       }
-      Some(h)
+      h
     }
-  }
 
   /** Read a directory of binary media files with Spark's binaryFile
     * source (path/modificationTime/length/content schema), mapped into
@@ -736,6 +695,81 @@ object Multimodal {
       col("content")).as[MediaRow]
   }
 
+  // ==== 64-bit MEDIA HASHES (near-dup keys) =========================
+
+  /** The media kinds with a 64-bit perceptual hash: each names its
+    * per-payload extractor and its output column. One table behind
+    * [[mediaHashes]] (the decode pass), [[mediaHashCol]] (the UDF
+    * bridge) and [[dedupMedia]]; every hash pairs with
+    * [[Dedup.hammingPairs64]] for corpus-scale near-dup dedup. */
+  sealed abstract class MediaHash(val column: String,
+      extract: Array[Byte] => Option[Long]) extends Product with Serializable {
+    /** The payload's hash; None when it is null or does not decode — a
+      * fabricated hash would pollute the near-dup graph downstream. */
+    def apply(content: Array[Byte]): Option[Long] = extract(content)
+  }
+
+  object MediaHash {
+    /** [[dHash64]] of an image payload. */
+    case object Image extends MediaHash("dhash", dHash64(_))
+    /** [[audioFingerprint64]] of an audio payload. */
+    case object Audio extends MediaHash("afp", audioFingerprint64)
+    /** [[keyframeDHash64]] of an MJPEG AVI: the cheap video identity
+      * key — re-encodes, container rewrites and quality changes of one
+      * clip agree on it. */
+    case object VideoKeyframe extends MediaHash("vhash", keyframeDHash64)
+    /** The signed-long MINIMUM of every frame's [[dHash64]]: the
+      * cut/trim-robust video key — invariant to frame REORDERING and
+      * surviving the loss of any frame that is not the argmin, where
+      * the keyframe hash dies with any edit of frame 0. A video's
+      * frames live in one payload, so the min folds inside the decode
+      * pass: no aggregation shuffle. */
+    case object VideoMinFrame extends MediaHash("vhash", c =>
+      frameSlices(c, 1).flatMap { case (_, off, len) => dHash64(c, off, len) }.minOption)
+
+    val all: Seq[MediaHash] = Seq(Image, Audio, VideoKeyframe, VideoMinFrame)
+  }
+
+  /** Keyframe dHash of a raw AVI payload (RIFF parse -> first frame
+    * chunk -> JPEG decode -> [[dHash64]]); None when not an AVI or the
+    * keyframe is undecodable. */
+  def keyframeDHash64(content: Array[Byte]): Option[Long] =
+    frameSlices(content, 1, 1).headOption.flatMap { case (_, off, len) =>
+      dHash64(content, off, len) }
+
+  /** (media_id, `kind.column`) for every payload `kind` can hash, in
+    * the decode pass; undecodable payloads emit nothing. */
+  def mediaHashes(ds: Dataset[MediaRow], kind: MediaHash): DataFrame = {
+    import ds.sparkSession.implicits._
+    decodePass(ds)(m => kind(m.content).map(h => (m.media_id, h)))
+      .toDF("media_id", kind.column)
+  }
+
+  /** `kind`'s hash as a nullable-long column over a binary column — the
+    * untyped-DataFrame bridge into [[graft.ops.Curation.ImageDupConfig]]
+    * (which accepts ANY 64-bit locality hash column; `curate
+    * --image-col/--audio-col/--video-col`). Undecodable/null payloads
+    * yield null and pass the dedup stage untouched. A Scala UDF, not a
+    * codegen expression: the decoders cannot be generated code, and
+    * the decode itself dwarfs the UDF bridge cost. For typed media
+    * frames prefer the [[mediaHashes]] pass. */
+  def mediaHashCol(bytes: Column, kind: MediaHash): Column =
+    udf((b: Array[Byte]) => kind(b)).apply(bytes)
+
+  /** Near-dup dedup of a media frame: [[mediaHashes]] →
+    * [[Dedup.hammingPairs64]] pigeonhole banding (recall-complete for
+    * `maxHamming` below its 4 bands, never all-pairs) →
+    * [[Dedup.dedupByPairs]]. Keeps the minimum media_id of each
+    * near-duplicate component (re-encodes, recompressions, rescales or
+    * gain changes of one item) plus every unpaired row; payloads
+    * `kind` cannot hash never pair and pass through. */
+  def dedupMedia(ds: Dataset[MediaRow], kind: MediaHash,
+      maxHamming: Int = 2): DataFrame =
+    Dedup.dedupByPairs(ds.toDF(), "media_id",
+      Dedup.hammingPairs64(mediaHashes(ds, kind), "media_id", kind.column, maxHamming))
+
+  // ==== SYNTHETIC MEDIA (deterministic, real-decodable) ==============
+
   /** Deterministic tiny PNG: (8 + (seed%9)) × (8 + (seed/3%7)) pixels,
     * gradient + seed-hashed pattern. Real, ImageIO-decodable bytes. */
   def syntheticPng(seed: Long): Array[Byte] = {
@@ -753,9 +787,7 @@ object Multimodal {
       }
       y += 1
     }
-    val bos = new java.io.ByteArrayOutputStream()
-    javax.imageio.ImageIO.write(img, "png", bos)
-    bos.toByteArray
+    encode(img, "png")
   }
 
   /** Deterministic tiny WAV: 16-bit PCM mono at 8 kHz, a pure sine at
@@ -764,18 +796,25 @@ object Multimodal {
   def syntheticWav(seed: Long): Array[Byte] = {
     val sr = 8000
     val freq = 200 + (math.abs(seed) % 1800).toInt
-    val frames = 800 + (math.abs(seed) % 1600).toInt
-    val pcmBytes = new Array[Byte](frames * 2)
+    wav16(sr, 800 + (math.abs(seed) % 1600).toInt)(i =>
+      (math.sin(2 * math.Pi * freq * i / sr) * 12000).toInt)
+  }
+
+  /** A 16-bit signed little-endian mono PCM WAV of `n` samples at `sr`
+    * Hz, sample i = `sample(i)` — the shared encode tail of the
+    * synthetic WAV generators. */
+  private def wav16(sr: Int, n: Int)(sample: Int => Int): Array[Byte] = {
+    val pcmBytes = new Array[Byte](n * 2)
     var i = 0
-    while (i < frames) {
-      val v = (math.sin(2 * math.Pi * freq * i / sr) * 12000).toInt
+    while (i < n) {
+      val v = sample(i)
       pcmBytes(2 * i) = (v & 0xff).toByte
       pcmBytes(2 * i + 1) = ((v >> 8) & 0xff).toByte
       i += 1
     }
     val fmt = new javax.sound.sampled.AudioFormat(sr.toFloat, 16, 1, true, false)
     val ais = new javax.sound.sampled.AudioInputStream(
-      new java.io.ByteArrayInputStream(pcmBytes), fmt, frames.toLong)
+      new java.io.ByteArrayInputStream(pcmBytes), fmt, n.toLong)
     val bos = new java.io.ByteArrayOutputStream()
     javax.sound.sampled.AudioSystem.write(
       ais, javax.sound.sampled.AudioFileFormat.Type.WAVE, bos)
@@ -806,9 +845,7 @@ object Multimodal {
         }
         y += 1
       }
-      val bos = new java.io.ByteArrayOutputStream()
-      javax.imageio.ImageIO.write(img, "jpg", bos)
-      bos.toByteArray
+      encode(img, "jpg")
     }
     assembleMjpegAvi(jpegs, w, h)
   }
@@ -842,6 +879,28 @@ object Multimodal {
     cc("RIFF") ++ le(body.length) ++ body
   }
 
+  /** Eight reflecting walks of nine levels each — the level schedules
+    * behind the grid generators: walk r starts at `start`; step s goes
+    * up when bit 0 of md5Top60(key(r, s)) is set (XOR the perturbation
+    * at s = 7 for the walks in `flipped`), forced up at 0 and down at
+    * `top`. Flipping the LAST step never cascades through a
+    * reflection, so a perturbed twin differs in at most |flipped|
+    * moves. */
+  private def reflectingWalks(start: Int, top: Int, flipped: Set[Int])(
+      key: (Int, Int) => String): Array[Array[Int]] =
+    Array.tabulate(8) { r =>
+      val l = new Array[Int](9)
+      l(0) = start
+      var s = 0
+      while (s < 8) {
+        val d = (md5Top60(key(r, s)) % 2 == 1) ^ (s == 7 && flipped(r))
+        val up = l(s) == 0 || (d && l(s) < top)
+        l(s + 1) = l(s) + (if (up) 1 else -1)
+        s += 1
+      }
+      l
+    }
+
   /** Deterministic WAV whose [[audioFingerprint64]] BITS are a pure
     * md5-integer function of the seed — the audio analog of
     * [[syntheticGridPng]], built so the whole near-dup pipeline
@@ -868,25 +927,19 @@ object Multimodal {
     * boundary-forced), planting Hamming<=2 near-dup pairs. */
   def syntheticGridWav(seed: Long, perturb: Boolean = false): Array[Byte] = {
     val sr = 8000
-    val segs = 9
     val bands = 8
     val segLen = 2 * FftSize
-    val n = segs * segLen
     // peak bins of melBandEnergies' triangular filters (same formula,
     // nBands = 8): peakBin(m) = binOf(m + 1)
-    def mel(f: Double) = 2595.0 * math.log10(1.0 + f / 700.0)
-    def imel(m: Double) = 700.0 * (math.pow(10.0, m / 2595.0) - 1.0)
     val melMax = mel(sr / 2.0)
     val peakBin = Array.tabulate(bands)(m =>
       math.min(FftSize / 2,
         math.round(imel(melMax * (m + 1) / (bands + 1)) * FftSize / sr).toInt))
-    val levels = gridWavLevels(seed, perturb, segs, bands)
+    val levels = gridWavLevels(seed, perturb)
     // ~4 dB energy (sqrt(2.5) amplitude) per level; worst-case sum of
     // 8 bands at the top level stays inside 16-bit PCM
     val amp = Array.tabulate(4)(l => 900.0 * math.pow(2.5, l * 0.5))
-    val pcmBytes = new Array[Byte](n * 2)
-    var i = 0
-    while (i < n) {
+    wav16(sr, 9 * segLen) { i =>
       val t = i / segLen
       var s = 0.0
       var m = 0
@@ -895,57 +948,25 @@ object Multimodal {
         s += amp(levels(m)(t)) * math.sin(2 * math.Pi * peakBin(m) * i / FftSize)
         m += 1
       }
-      val v = math.max(-32767, math.min(32767, math.round(s))).toInt
-      pcmBytes(2 * i) = (v & 0xff).toByte
-      pcmBytes(2 * i + 1) = ((v >> 8) & 0xff).toByte
-      i += 1
+      math.max(-32767, math.min(32767, math.round(s))).toInt
     }
-    val fmt = new javax.sound.sampled.AudioFormat(sr.toFloat, 16, 1, true, false)
-    val ais = new javax.sound.sampled.AudioInputStream(
-      new java.io.ByteArrayInputStream(pcmBytes), fmt, n.toLong)
-    val bos = new java.io.ByteArrayOutputStream()
-    javax.sound.sampled.AudioSystem.write(
-      ais, javax.sound.sampled.AudioFileFormat.Type.WAVE, bos)
-    bos.toByteArray
   }
 
   /** The reflecting-walk level schedule behind [[syntheticGridWav]]:
     * levels(m)(t) in {0..3}, l(0) = 1, direction bit
     * md5("afp:seed:t:m") % 2 (XOR the perturbation at t = 7 for bands
     * 2 and 5), forced up at 0 / down at 3. */
-  private def gridWavLevels(seed: Long, perturb: Boolean, segs: Int,
-      bands: Int): Array[Array[Int]] =
-    Array.tabulate(bands) { m =>
-      val l = new Array[Int](segs)
-      l(0) = 1
-      var t = 0
-      while (t < segs - 1) {
-        val d = (md5Top60(s"afp:$seed:$t:$m") % 2 == 1) ^
-          (perturb && t == segs - 2 && (m == 2 || m == 5))
-        val up = l(t) == 0 || (d && l(t) < 3)
-        l(t + 1) = l(t) + (if (up) 1 else -1)
-        t += 1
-      }
-      l
-    }
+  private def gridWavLevels(seed: Long, perturb: Boolean): Array[Array[Int]] =
+    reflectingWalks(1, 3, if (perturb) Set(2, 5) else Set.empty)((m, t) =>
+      s"afp:$seed:$t:$m")
 
   /** The fingerprint [[syntheticGridWav]] is CONSTRUCTED to decode to
     * — the pure md5-walk replay (what the SQL oracle computes). Spec
     * contract: audioFingerprint64(syntheticGridWav(s, p)) ==
     * gridWavFingerprint(s, p) for every seed. */
   def gridWavFingerprint(seed: Long, perturb: Boolean = false): Long = {
-    val levels = gridWavLevels(seed, perturb, 9, 8)
-    var h = 0L
-    var t = 0
-    while (t < 8) {
-      var m = 0
-      while (m < 8) {
-        if (levels(m)(t + 1) > levels(m)(t)) h |= 1L << (t * 8 + m)
-        m += 1
-      }
-      t += 1
-    }
-    h
+    val levels = gridWavLevels(seed, perturb)
+    deltaBits((t, m) => levels(m)(t + 1) > levels(m)(t))
   }
 
   /** Synthesize the grid-WAV media frame for the audio near-dup oracle
@@ -965,6 +986,32 @@ object Multimodal {
   def syntheticVideos(spark: SparkSession, n: Int): Dataset[MediaRow] = {
     import spark.implicits._
     spark.range(n.toLong).map(i => MediaRow(i, "video/avi", syntheticMjpegAvi(i)))
+  }
+
+  /** A 90×80 RGB image laid out as 9×8 constant-gray 10×10 cells, cell
+    * (cx, cy) valued `gray(cx, cy)` — one cell per [[dHash64]] grid
+    * cell, so the area-averaged luma recovers every cell value. The
+    * pixel layout of [[syntheticGridPng]] and [[syntheticGridMjpegAvi]]. */
+  private def grayGrid(gray: (Int, Int) => Int): java.awt.image.BufferedImage = {
+    val img = new java.awt.image.BufferedImage(
+      90, 80, java.awt.image.BufferedImage.TYPE_INT_RGB)
+    var cy = 0
+    while (cy < 8) {
+      var cx = 0
+      while (cx < 9) {
+        val v = gray(cx, cy)
+        val rgb = (v << 16) | (v << 8) | v
+        var y = cy * 10
+        while (y < cy * 10 + 10) {
+          var x = cx * 10
+          while (x < cx * 10 + 10) { img.setRGB(x, y, rgb); x += 1 }
+          y += 1
+        }
+        cx += 1
+      }
+      cy += 1
+    }
+    img
   }
 
   /** Deterministic MJPEG AVI whose KEYFRAME dHash bits are a pure
@@ -991,31 +1038,8 @@ object Multimodal {
   def syntheticGridMjpegAvi(seed: Long, perturb: Boolean = false,
       quality: Float = 0.85f): Array[Byte] = {
     val jpegs = Array.tabulate(3) { f =>
-      // frame 0 is the keyframe walk; frames 1..2 carry their OWN
-      // walks (namespace "vidf:seed:f") so per-frame hashes are three
-      // DISTINCT md5-replayable values — the min-frame-hash signature
-      // oracle takes a real min, not a min over copies
-      val levels =
-        if (f == 0) gridVideoLevels(seed, perturb)
-        else gridVideoLevels(seed, perturb = false, ns = s"vidf:$seed:$f")
-      val img = new java.awt.image.BufferedImage(
-        90, 80, java.awt.image.BufferedImage.TYPE_INT_RGB)
-      var cy = 0
-      while (cy < 8) {
-        var cx = 0
-        while (cx < 9) {
-          val v = 20 + 24 * levels(cy)(cx)
-          val rgb = (v << 16) | (v << 8) | v
-          var y = cy * 10
-          while (y < cy * 10 + 10) {
-            var x = cx * 10
-            while (x < cx * 10 + 10) { img.setRGB(x, y, rgb); x += 1 }
-            y += 1
-          }
-          cx += 1
-        }
-        cy += 1
-      }
+      val levels = gridVideoLevels(seed, perturb, f)
+      val img = grayGrid((cx, cy) => 20 + 24 * levels(cy)(cx))
       val writer = javax.imageio.ImageIO.getImageWritersByFormatName("jpg").next()
       val params = writer.getDefaultWriteParam
       params.setCompressionMode(javax.imageio.ImageWriteParam.MODE_EXPLICIT)
@@ -1031,48 +1055,30 @@ object Multimodal {
     assembleMjpegAvi(jpegs, 90, 80)
   }
 
-  /** The reflecting-walk brightness-level schedule behind
-    * [[syntheticGridMjpegAvi]]'s keyframe: levels(y)(x) in {0..8},
-    * level(y)(0) = 4, direction bit md5("vid:seed:y:x") % 2 (XOR the
-    * perturbation at x = 7 for rows 3 and 6), forced up at 0 / down
-    * at 8. */
+  /** The reflecting-walk brightness-level schedule behind frame `frame`
+    * of [[syntheticGridMjpegAvi]]: levels(y)(x) in {0..8}, level(y)(0)
+    * = 4, forced up at 0 / down at 8. The keyframe (frame 0) walks
+    * direction bits md5("vid:seed:y:x") % 2 (XOR the perturbation at
+    * x = 7 for rows 3 and 6); frames 1..2 carry their OWN walks
+    * (namespace "vidf:seed:f", never perturbed) so per-frame hashes are
+    * three DISTINCT md5-replayable values — the min-frame-hash oracle
+    * takes a real min, not a min over copies. */
   private def gridVideoLevels(seed: Long, perturb: Boolean,
-      ns: String = null): Array[Array[Int]] =
-    Array.tabulate(8) { y =>
-      val prefix = if (ns == null) s"vid:$seed" else ns
-      val k = new Array[Int](9)
-      k(0) = 4
-      var x = 0
-      while (x < 8) {
-        val d = (md5Top60(s"$prefix:$y:$x") % 2 == 1) ^
-          (perturb && x == 7 && (y == 3 || y == 6))
-        val up = k(x) == 0 || (d && k(x) < 8)
-        k(x + 1) = k(x) + (if (up) 1 else -1)
-        x += 1
-      }
-      k
-    }
+      frame: Int): Array[Array[Int]] =
+    if (frame == 0)
+      reflectingWalks(4, 8, if (perturb) Set(3, 6) else Set.empty)((y, x) =>
+        s"vid:$seed:$y:$x")
+    else reflectingWalks(4, 8, Set.empty)((y, x) => s"vidf:$seed:$frame:$y:$x")
 
-  /** The keyframe dHash [[syntheticGridMjpegAvi]] is CONSTRUCTED to
-    * decode to — the pure md5-walk replay (what the SQL oracle
-    * computes). Spec contract: videoKeyframeDHashes over the grid AVIs
-    * equals gridVideoDHash(seed, perturb) at every quality used. */
+  /** The dHash of frame `frame` (the keyframe by default) that
+    * [[syntheticGridMjpegAvi]] is CONSTRUCTED to decode to — the pure
+    * md5-walk replay (what the SQL oracle computes). Spec contract:
+    * the VideoKeyframe [[mediaHashes]] over the grid AVIs equals
+    * gridVideoDHash(seed, perturb) at every quality used. */
   def gridVideoDHash(seed: Long, perturb: Boolean = false,
       frame: Int = 0): Long = {
-    val levels =
-      if (frame == 0) gridVideoLevels(seed, perturb)
-      else gridVideoLevels(seed, perturb = false, ns = s"vidf:$seed:$frame")
-    var h = 0L
-    var y = 0
-    while (y < 8) {
-      var x = 0
-      while (x < 8) {
-        if (levels(y)(x + 1) > levels(y)(x)) h |= 1L << (y * 8 + x)
-        x += 1
-      }
-      y += 1
-    }
-    h
+    val levels = gridVideoLevels(seed, perturb, frame)
+    deltaBits((y, x) => levels(y)(x + 1) > levels(y)(x))
   }
 
   /** Synthesize the grid-AVI media frame for the video near-dup oracle
@@ -1089,103 +1095,6 @@ object Multimodal {
     }
   }
 
-  /** 64-bit dHash of each video's KEYFRAME (first frame chunk) in a
-    * batched partition pass: RIFF parse ([[aviFrameChunks]]) → real
-    * JPEG decode → [[dHash64]]. Returns (media_id, vhash); non-AVI or
-    * frameless payloads emit nothing. The keyframe hash is the cheap
-    * video identity key — re-encodes, container rewrites and
-    * quality changes of one clip agree on it; for cut/trim robustness
-    * compose per-frame [[dHash64]] over [[videoFrameFeatures]]'
-    * sampled frames instead (min-hash of the frame-hash set). */
-  def videoKeyframeDHashes(ds: Dataset[MediaRow],
-      repartitionTo: Option[Int] = None): DataFrame = {
-    import ds.sparkSession.implicits._
-    val base = repartitionTo.map(ds.repartition(_)).getOrElse(ds)
-    base.mapPartitions(_.grouped(BatchSize).flatMap(_.iterator.flatMap { m =>
-      keyframeDHash64(m.content).map(h => (m.media_id, h))
-    })).toDF("media_id", "vhash")
-  }
-
-  /** Keyframe dHash of a raw AVI payload (RIFF parse -> first frame
-    * chunk -> JPEG decode -> [[dHash64]]); None when not an AVI or the
-    * keyframe is undecodable. */
-  def keyframeDHash64(content: Array[Byte]): Option[Long] =
-    aviFrameChunks(content).flatMap(_.headOption).flatMap {
-      case (off, len) =>
-        dHash64(java.util.Arrays.copyOfRange(content, off, off + len))
-    }
-
-  /** [[keyframeDHash64]] as a nullable-long column over a binary video
-    * column — the untyped-DataFrame convenience mirroring [[dHashCol]]
-    * / [[audioFingerprintCol]]; wire it into
-    * [[graft.ops.Curation.ImageDupConfig]] (which accepts ANY 64-bit
-    * locality hash column) for video-level dedup of a multimodal
-    * corpus (`curate --video-col`). Undecodable/null payloads yield
-    * null and pass the dedup stage untouched. */
-  def videoKeyframeDHashCol(bytes: Column): Column =
-    fingerprintCol(bytes)(keyframeDHash64)
-
-  /** Per-frame dHashes of every `stride`-th frame: (media_id,
-    * frame_index, fhash) in the same batched partition pass as
-    * [[videoFrameFeatures]]; undecodable frames emit nothing. */
-  def videoFrameDHashes(ds: Dataset[MediaRow], stride: Int = 1,
-      repartitionTo: Option[Int] = None): DataFrame = {
-    import ds.sparkSession.implicits._
-    val base = repartitionTo.map(ds.repartition(_)).getOrElse(ds)
-    base.mapPartitions(_.grouped(BatchSize).flatMap(_.iterator.flatMap { m =>
-      aviFrameChunks(m.content).toSeq.flatMap { chunks =>
-        (0 until chunks.length by math.max(1, stride)).flatMap { i =>
-          val (off, len) = chunks(i)
-          dHash64(java.util.Arrays.copyOfRange(m.content, off, off + len))
-            .map(h => (m.media_id, i, h))
-        }
-      }
-    })).toDF("media_id", "frame_index", "fhash")
-  }
-
-  /** Min-frame-hash video signature: (media_id, vhash) where vhash =
-    * the (signed-long) MINIMUM of the sampled frames' dHashes — the
-    * cut/trim-robust alternative to [[videoKeyframeDHashes]]: the min
-    * is invariant to frame REORDERING and survives dropping any frame
-    * that is not the argmin, where the keyframe hash dies with any
-    * edit of frame 0. Computed inside the decode pass (a video's
-    * frames live in one payload), so there is NO aggregation shuffle
-    * — one scan, one row out per decodable video. Feed it to
-    * [[Dedup.hammingPairs64]] like any 64-bit signature. */
-  def videoMinFrameDHashes(ds: Dataset[MediaRow], stride: Int = 1,
-      repartitionTo: Option[Int] = None): DataFrame = {
-    import ds.sparkSession.implicits._
-    val base = repartitionTo.map(ds.repartition(_)).getOrElse(ds)
-    base.mapPartitions(_.grouped(BatchSize).flatMap(_.iterator.flatMap { m =>
-      aviFrameChunks(m.content).flatMap { chunks =>
-        val hs = (0 until chunks.length by math.max(1, stride)).flatMap { i =>
-          val (off, len) = chunks(i)
-          dHash64(java.util.Arrays.copyOfRange(m.content, off, off + len))
-        }
-        if (hs.isEmpty) None else Some((m.media_id, hs.min))
-      }
-    })).toDF("media_id", "vhash")
-  }
-
-  /** Video near-dup candidate pairs over a media frame: keyframe
-    * dHash → [[Dedup.hammingPairs64]] pigeonhole banding
-    * (recall-complete for `maxHamming < bands`, never all-pairs).
-    * Returns (a, b, hamming) over media ids. */
-  def videoNearDupPairs(ds: Dataset[MediaRow], maxHamming: Int = 2,
-      bands: Int = 4, maxBucket: Int = 100000): DataFrame =
-    Dedup.hammingPairs64(videoKeyframeDHashes(ds), "media_id", "vhash",
-      maxHamming, bands, maxBucket)
-
-  /** Video near-dup dedup: keep the minimum media_id of each
-    * near-duplicate component (re-encodes and quality changes of one
-    * clip) plus every unpaired video — the video leg of multimodal
-    * corpus curation, same shape as [[dedupImagesByDHash]] /
-    * [[dedupAudioByFingerprint]]. */
-  def dedupVideosByKeyframe(ds: Dataset[MediaRow], maxHamming: Int = 2,
-      bands: Int = 4, maxBucket: Int = 100000): DataFrame =
-    Dedup.dedupByPairs(ds.toDF(), "media_id",
-      videoNearDupPairs(ds, maxHamming, bands, maxBucket))
-
   /** Synthesize a deterministic media frame for tests/benches. Even
     * ids carry REAL tiny PNGs (exercise the ImageIO path); odd ids
     * carry REAL tiny WAVs (exercise the javax.sound path). */
@@ -1196,66 +1105,6 @@ object Multimodal {
       else MediaRow(i, "audio/wav", syntheticWav(i))
     }
   }
-
-  // ---- image near-dup dedup (dHash + pigeonhole banding) --------------
-
-  /** dHash near-dup candidate pairs over a media frame: batched REAL
-    * decode → 64-bit [[dHash64]] → [[Dedup.hammingPairs64]] pigeonhole
-    * banding (recall-complete for `maxHamming < bands`, never
-    * all-pairs). Returns (a, b, hamming) over media ids. Undecodable
-    * payloads (audio, corrupt bytes) emit no hash and never pair. */
-  def imageNearDupPairs(ds: Dataset[MediaRow], maxHamming: Int = 2,
-      bands: Int = 4, maxBucket: Int = 100000): DataFrame =
-    Dedup.hammingPairs64(imageDHashes(ds), "media_id", "dhash",
-      maxHamming, bands, maxBucket)
-
-  /** [[dHash64]] as a nullable-long column over a binary image column
-    * — the untyped-DataFrame convenience for wiring a raw image column
-    * straight into [[graft.ops.Curation.ImageDupConfig]]
-    * (`df.withColumn("img_hash", Multimodal.dHashCol(col("image")))`).
-    * Scala UDF, not a codegen expression: ImageIO decoding cannot be
-    * generated code, and the decode itself dwarfs the UDF bridge cost.
-    * Undecodable/null payloads yield null (imageless rows pass the
-    * dedup stage untouched). For typed media frames prefer the batched
-    * [[imageDHashes]] partition pass. */
-  def dHashCol(bytes: Column): Column = fingerprintCol(bytes)(dHash64)
-
-  /** Image near-dup dedup: keep the minimum media_id of each
-    * near-duplicate component (re-encodes, mild recompression and
-    * rescales of one image hash within `maxHamming` bits) plus every
-    * unpaired frame — [[imageNearDupPairs]] + [[Dedup.dedupByPairs]],
-    * the image-level first step of multimodal corpus curation. */
-  def dedupImagesByDHash(ds: Dataset[MediaRow], maxHamming: Int = 2,
-      bands: Int = 4, maxBucket: Int = 100000): DataFrame =
-    Dedup.dedupByPairs(ds.toDF(), "media_id",
-      imageNearDupPairs(ds, maxHamming, bands, maxBucket))
-
-  /** [[audioFingerprint64]] as a nullable-long column over a binary
-    * audio column — the untyped-DataFrame convenience mirroring
-    * [[dHashCol]]; wire it into [[graft.ops.Curation.ImageDupConfig]]
-    * (which accepts ANY 64-bit locality hash column) for audio-level
-    * dedup of a multimodal corpus. Undecodable/null payloads yield
-    * null and pass the dedup stage untouched. */
-  def audioFingerprintCol(bytes: Column): Column =
-    fingerprintCol(bytes)(audioFingerprint64)
-
-  /** Audio near-dup candidate pairs over a media frame: batched REAL
-    * decode → [[audioFingerprint64]] → [[Dedup.hammingPairs64]]
-    * pigeonhole banding (recall-complete for `maxHamming < bands`,
-    * never all-pairs). Returns (a, b, hamming) over media ids. */
-  def audioNearDupPairs(ds: Dataset[MediaRow], maxHamming: Int = 3,
-      bands: Int = 4, maxBucket: Int = 100000): DataFrame =
-    Dedup.hammingPairs64(audioFingerprints(ds), "media_id", "afp",
-      maxHamming, bands, maxBucket)
-
-  /** Audio near-dup dedup: keep the minimum media_id of each
-    * near-duplicate component (re-encodes and gain-changed copies of
-    * one clip) plus every unpaired frame — the audio leg of multimodal
-    * corpus curation, same shape as [[dedupImagesByDHash]]. */
-  def dedupAudioByFingerprint(ds: Dataset[MediaRow], maxHamming: Int = 3,
-      bands: Int = 4, maxBucket: Int = 100000): DataFrame =
-    Dedup.dedupByPairs(ds.toDF(), "media_id",
-      audioNearDupPairs(ds, maxHamming, bands, maxBucket))
 
   /** Top 60 bits of md5 of `s` (the portable-oracle hash discipline —
     * `('0x'||substr(md5(s),1,15))::BIGINT` in DuckDB). */
@@ -1279,30 +1128,11 @@ object Multimodal {
     * decodes. `perturb` bumps cell (4,3) by +128 (mod 256): at most
     * the two comparisons touching that cell flip, so the perturbed
     * twin sits within Hamming distance 2 of the original. */
-  def syntheticGridPng(seed: Long, perturb: Boolean = false): Array[Byte] = {
-    val img = new java.awt.image.BufferedImage(
-      90, 80, java.awt.image.BufferedImage.TYPE_INT_RGB)
-    var cy = 0
-    while (cy < 8) {
-      var cx = 0
-      while (cx < 9) {
-        val base = (md5Top60(s"img:$seed:$cx:$cy") % 256L).toInt
-        val v = if (perturb && cx == 4 && cy == 3) (base + 128) % 256 else base
-        val rgb = (v << 16) | (v << 8) | v
-        var y = cy * 10
-        while (y < cy * 10 + 10) {
-          var x = cx * 10
-          while (x < cx * 10 + 10) { img.setRGB(x, y, rgb); x += 1 }
-          y += 1
-        }
-        cx += 1
-      }
-      cy += 1
-    }
-    val bos = new java.io.ByteArrayOutputStream()
-    javax.imageio.ImageIO.write(img, "png", bos)
-    bos.toByteArray
-  }
+  def syntheticGridPng(seed: Long, perturb: Boolean = false): Array[Byte] =
+    encode(grayGrid { (cx, cy) =>
+      val base = (md5Top60(s"img:$seed:$cx:$cy") % 256L).toInt
+      if (perturb && cx == 4 && cy == 3) (base + 128) % 256 else base
+    }, "png")
 
   /** Near-identical-image corpus for the oracle row and tests:
     * id % 5 == 1 duplicates id-1 — byte-identical when id % 10 == 1,

@@ -1140,14 +1140,14 @@ class ExtensionsSpec extends SparkFunSuite {
     // non-images produce no hash
     assert(Multimodal.dHash64(Array.tabulate(64)(_.toByte)).isEmpty)
 
-    // corpus-scale pipeline: imageDHashes |> hammingPairs64 finds the
+    // corpus-scale pipeline: mediaHashes |> hammingPairs64 finds the
     // planted re-encoded pair and nothing else
     val media = spark.createDataset(Seq(
       Multimodal.MediaRow(0L, "image/png", enc(render(1, 1), "png")),
       Multimodal.MediaRow(1L, "image/jpeg", enc(render(1, 1), "jpg")),
       Multimodal.MediaRow(2L, "image/png", enc(render(7, 1), "png")),
       Multimodal.MediaRow(3L, "audio/wav", Multimodal.syntheticWav(3))))
-    val hashes = Multimodal.imageDHashes(media)
+    val hashes = Multimodal.mediaHashes(media, Multimodal.MediaHash.Image)
     assert(hashes.count() == 3) // the WAV emits nothing
     val pairs = graft.ops.Dedup.hammingPairs64(hashes, "media_id", "dhash",
       maxHamming = 3, bands = 4)
@@ -1159,11 +1159,13 @@ class ExtensionsSpec extends SparkFunSuite {
     // syntheticGridMedia plants id%10==1 as byte-identical copies of
     // id-1 and id%10==6 as hamming<=2 perturbed twins of id-1
     val media = Multimodal.syntheticGridMedia(spark, 100)
-    val kept = Multimodal.dedupImagesByDHash(media)
+    val kept = Multimodal.dedupMedia(media, Multimodal.MediaHash.Image)
       .select("media_id").as[Long].collect().toSet
     assert(kept == (0L until 100L).filterNot(_ % 5 == 1).toSet,
       s"every planted twin (ids %5==1) must collapse into its base: $kept")
-    val pairs = Multimodal.imageNearDupPairs(media)
+    val pairs = graft.ops.Dedup.hammingPairs64(
+        Multimodal.mediaHashes(media, Multimodal.MediaHash.Image), "media_id", "dhash",
+        maxHamming = 2)
       .select(col("a"), col("b"), col("hamming").cast("long"))
       .as[(Long, Long, Long)].collect()
       .map(p => (p._1, p._2) -> p._3).toMap
@@ -1239,7 +1241,7 @@ class ExtensionsSpec extends SparkFunSuite {
       Multimodal.MediaRow(1L, "audio/wav", wav(300, 1200, 0.45)),
       Multimodal.MediaRow(2L, "audio/wav", wav(500, 700, 0.9)),
       Multimodal.MediaRow(3L, "image/png", Multimodal.syntheticPng(3))))
-    val kept = Multimodal.dedupAudioByFingerprint(media)
+    val kept = Multimodal.dedupMedia(media, Multimodal.MediaHash.Audio, maxHamming = 3)
       .select("media_id").as[Long].collect().toSet
     assert(kept == Set(0L, 2L, 3L), s"got $kept")
   }
@@ -1263,7 +1265,7 @@ class ExtensionsSpec extends SparkFunSuite {
     }
     // planted twins (i%5==1 repeats i-1's seed) collapse to min-id
     val media = Multimodal.syntheticGridAudio(spark, 50)
-    val kept = Multimodal.dedupAudioByFingerprint(media, maxHamming = 2)
+    val kept = Multimodal.dedupMedia(media, Multimodal.MediaHash.Audio, maxHamming = 2)
       .select("media_id").as[Long].collect().toSet
     assert((0 until 50).count(i => i % 5 == 1 && !kept(i.toLong)) == 10,
       s"every planted twin must drop; kept=$kept")
@@ -1275,8 +1277,9 @@ class ExtensionsSpec extends SparkFunSuite {
     // encoder qualities the generator uses (re-encode invariance)
     for (i <- 0 until 30; p <- Seq(false, true); q <- Seq(0.7f, 0.85f)) {
       val avi = Multimodal.syntheticGridMjpegAvi(i, p, q)
-      val row = Multimodal.videoKeyframeDHashes(
-        spark.createDataset(Seq(Multimodal.MediaRow(0L, "video/avi", avi))))
+      val row = Multimodal.mediaHashes(
+        spark.createDataset(Seq(Multimodal.MediaRow(0L, "video/avi", avi))),
+        Multimodal.MediaHash.VideoKeyframe)
         .select("vhash").as[Long].collect()
       assert(row.length == 1 && row.head == Multimodal.gridVideoDHash(i, p),
         s"seed=$i perturb=$p quality=$q: ${row.toSeq} != ${Multimodal.gridVideoDHash(i, p)}")
@@ -1291,8 +1294,9 @@ class ExtensionsSpec extends SparkFunSuite {
     // frames' independent walk hashes, computed inside the decode pass
     for (i <- Seq(0, 7, 13)) {
       val avi = Multimodal.syntheticGridMjpegAvi(i)
-      val got = Multimodal.videoMinFrameDHashes(
-        spark.createDataset(Seq(Multimodal.MediaRow(0L, "video/avi", avi))))
+      val got = Multimodal.mediaHashes(
+        spark.createDataset(Seq(Multimodal.MediaRow(0L, "video/avi", avi))),
+        Multimodal.MediaHash.VideoMinFrame)
         .select("vhash").as[Long].collect()
       val want = (0 until 3).map(f => Multimodal.gridVideoDHash(i, frame = f)).min
       assert(got.toSeq == Seq(want), s"seed=$i: ${got.toSeq} != $want")
@@ -1303,11 +1307,57 @@ class ExtensionsSpec extends SparkFunSuite {
     val media = Multimodal.syntheticGridVideos(spark, 50)
       .union(spark.createDataset(Seq(
         Multimodal.MediaRow(999L, "image/png", Multimodal.syntheticPng(1)))))
-    val kept = Multimodal.dedupVideosByKeyframe(media)
+    val kept = Multimodal.dedupMedia(media, Multimodal.MediaHash.VideoKeyframe)
       .select("media_id").as[Long].collect().toSet
     assert((0 until 50).count(i => i % 5 == 1 && !kept(i.toLong)) == 10,
       s"every re-encoded twin must drop; kept=$kept")
     assert(kept(999L), "hashless non-video rows must survive untouched")
+  }
+
+  test("media hashes: the UDF column and the decode pass agree per kind") {
+    // the curate CLI hashes through mediaHashCol, the oracle rows
+    // through mediaHashes: one mixed frame must get the same hashes
+    // from both, and undecodable or null payloads none from either
+    val media = spark.createDataset(Seq(
+      Multimodal.MediaRow(0L, "image/png", Multimodal.syntheticGridPng(3)),
+      Multimodal.MediaRow(1L, "audio/wav", Multimodal.syntheticGridWav(3)),
+      Multimodal.MediaRow(2L, "video/avi", Multimodal.syntheticGridMjpegAvi(3)),
+      Multimodal.MediaRow(3L, "application/octet-stream",
+        Array.tabulate(200)(i => (i * 37).toByte)),
+      Multimodal.MediaRow(4L, "image/png", null)))
+    import Multimodal.MediaHash._
+    val decodable = Map(Image -> Set(0L), Audio -> Set(1L),
+      VideoKeyframe -> Set(2L), VideoMinFrame -> Set(2L))
+    assert(decodable.keySet == Multimodal.MediaHash.all.toSet)
+    Multimodal.MediaHash.all.foreach { kind =>
+      val viaCol = media.toDF()
+        .select(col("media_id"), Multimodal.mediaHashCol(col("content"), kind))
+        .collect().map(r => r.getLong(0) -> Option(r.get(1)).map(_.asInstanceOf[Long]))
+        .toMap
+      val viaPass = Multimodal.mediaHashes(media, kind)
+        .select(col("media_id"), col(kind.column)).as[(Long, Long)].collect().toMap
+      assert(viaPass.keySet == decodable(kind), s"$kind pass rows: $viaPass")
+      assert(viaCol.keySet == (0L to 4L).toSet)
+      assert(viaPass == viaCol.collect { case (id, Some(h)) => id -> h },
+        s"$kind: pass $viaPass vs column $viaCol")
+    }
+  }
+
+  test("frame stride below 1 is rejected at call time, before any action") {
+    // any action over this frame fails inside a task, so only a
+    // call-time check can surface as the IllegalArgumentException
+    val poisoned = spark.range(3).map { i =>
+      if (i >= 0L) throw new IllegalStateException("no action may run")
+      Multimodal.MediaRow(i, "video/avi", Array.emptyByteArray)
+    }
+    for (stride <- Seq(0, -1)) {
+      val s = intercept[IllegalArgumentException](
+        Multimodal.sampleFrames(poisoned, frames = 10, stride = stride))
+      assert(s.getMessage.contains("stride"))
+      val v = intercept[IllegalArgumentException](
+        Multimodal.videoFrameFeatures(poisoned, stride = stride))
+      assert(v.getMessage.contains("stride"))
+    }
   }
 
   test("binaryFile ingestion end-to-end: files on disk -> typed features") {

@@ -696,8 +696,9 @@ class PlanSpec extends SparkFunSuite {
     // the per-video min over frame hashes folds inside the decode
     // iterator — an aggregation shuffle of (media_id, fhash) pairs
     // would re-exchange one row per FRAME at corpus scale
-    val plan = planOf(graft.ops.Multimodal.videoMinFrameDHashes(
-      graft.ops.Multimodal.syntheticGridVideos(spark, 10)))
+    val plan = planOf(graft.ops.Multimodal.mediaHashes(
+      graft.ops.Multimodal.syntheticGridVideos(spark, 10),
+      graft.ops.Multimodal.MediaHash.VideoMinFrame))
     assert(!plan.contains("Exchange"),
       s"min-frame signature should not shuffle:\n$plan")
   }
@@ -715,6 +716,10 @@ class PlanSpec extends SparkFunSuite {
     val vid = planOf(graft.ops.Multimodal.videoFrameFeatures(
       graft.ops.Multimodal.syntheticVideos(spark, 10)).toDF())
     assert(!vid.contains("Exchange"), s"video decode should not shuffle:\n$vid")
+    graft.ops.Multimodal.MediaHash.all.foreach { kind =>
+      val hashes = planOf(graft.ops.Multimodal.mediaHashes(media, kind))
+      assert(!hashes.contains("Exchange"), s"$kind hashing should not shuffle:\n$hashes")
+    }
     val sized = planOf(graft.ops.Multimodal.imageFeatures(
       media, repartitionTo = Some(7)).toDF())
     assert(sized.contains("Exchange"), "repartitionTo must actually repartition")

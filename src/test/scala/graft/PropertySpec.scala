@@ -176,13 +176,25 @@ class PropertySpec extends AnyFunSuite {
       Gen.choose(0, 512).flatMap(n => Gen.listOfN(n, Gen.choose(-128, 127)))
         .map(t => ("RIFF    AVI LIST".getBytes.toList.map(_.toInt) ::: t))
     ).map(_.map(_.toByte).toArray)
+    // every 64-bit media hash (the slice-based frame dHash included)
+    // and the resizer must answer None/Some, never throw
+    def hashesAndResize(bytes: Array[Byte]): Boolean = {
+      graft.ops.Multimodal.MediaHash.all.foreach(kind => kind(bytes))
+      graft.ops.Multimodal.resizeImage(bytes, 4, 4)
+      true
+    }
     check(Prop.forAllNoShrink(genBytes) { bytes =>
       val inBounds = graft.ops.Multimodal.aviFrameChunks(bytes).forall(_.forall {
         case (off, len) => off >= 0 && len > 0 && off + len <= bytes.length })
       graft.ops.Multimodal.decodeImage(bytes)
       graft.ops.Multimodal.decodeAudio(bytes)
-      inBounds
+      inBounds && hashesAndResize(bytes)
     }, 300)
+    // a null payload (a missing binary cell) is undecodable, not a crash
+    assert(hashesAndResize(null))
+    assert(graft.ops.Multimodal.decodeImage(null).isEmpty &&
+      graft.ops.Multimodal.decodeAudio(null).isEmpty &&
+      graft.ops.Multimodal.aviFrameChunks(null).isEmpty)
     // attacker-controlled LIST nesting must not overflow the stack:
     // 100k nested 12-byte LIST headers would drive a recursive walk
     // 100k frames deep (StackOverflowError is not an Exception — no
@@ -211,12 +223,14 @@ class PropertySpec extends AnyFunSuite {
     check(Prop.forAllNoShrink(Gen.choose(0, avi.length)) { cut =>
       val t = avi.take(cut)
       graft.ops.Multimodal.aviFrameChunks(t).forall(_.forall {
-        case (off, len) => off >= 0 && len > 0 && off + len <= t.length })
+        case (off, len) => off >= 0 && len > 0 && off + len <= t.length }) &&
+        hashesAndResize(t)
     }, 200)
     check(Prop.forAllNoShrink(Gen.choose(0, math.max(wav.length, png.length))) { cut =>
       graft.ops.Multimodal.decodeAudio(wav.take(math.min(cut, wav.length)))
       graft.ops.Multimodal.decodeImage(png.take(math.min(cut, png.length)))
-      true
+      hashesAndResize(wav.take(math.min(cut, wav.length))) &&
+        hashesAndResize(png.take(math.min(cut, png.length)))
     }, 200)
   }
 
