@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.functions._
 
 /** End-to-end corpus curation: the composition a 100 TB training-data
@@ -17,12 +17,13 @@ import org.apache.spark.sql.functions._
   * Stage order is deliberate: the cheap scan-side filters (C4, Gopher,
   * repetition, quality, language, blocklist) run FIRST and shrink the
   * corpus before any shuffle; the whole scan-side ledger is ONE kernel
-  * call per row (the first-failing-stage hygiene verdict) grouped into
-  * a map-side-combined <=7-row aggregate, so it costs a single corpus
-  * read. The shuffle stages follow cheapest-first: URL dedup, exact
-  * dedup and the boilerplate/span text rewrites are one-to-two
-  * map-side-combined aggregations each, LM scoring is one token-keyed
-  * join, decontamination is a broadcast anti-join, and the
+  * call per row (the first-failing-stage hygiene verdict) counted by
+  * observed metrics on the job that checkpoints the survivors, so it
+  * costs a single corpus read. The shuffle stages follow
+  * cheapest-first: URL dedup, exact dedup and the boilerplate/span
+  * text rewrites are one-to-two map-side-combined aggregations each,
+  * LM scoring is one token-keyed join, decontamination is a broadcast
+  * anti-join, and the
   * pair-generating stages — lexical near-dup, then semantic
   * SemDeDup — run last over the smallest surviving frame.
   */
@@ -59,11 +60,11 @@ object Curation {
     * in a long-lived session (LRU-evicted under pressure, but
     * CacheManager metadata and spill space grow until cleared).
     *
-    * STAGE outputs are not in `cached`: they are lazy localCheckpoints
-    * (see `stageCp` in [[curate]]), whose blocks the ContextCleaner
+    * STAGE outputs are not in `cached`: they are eager localCheckpoints
+    * (see `stageOut` in [[curate]]), whose blocks the ContextCleaner
     * reclaims once the result (and `df`) become unreachable — the same
-    * lifecycle [[Dedup.connectedComponents]] uses for its per-round
-    * frames. They are deliberately NOT unpersisted here: a checkpoint
+    * lifecycle [[Dedup.connectedComponents]] uses for its component
+    * frame. They are deliberately NOT unpersisted here: a checkpoint
     * truncates lineage, so dropping its blocks while `df` is still
     * referenced would make the next action FAIL rather than recompute. */
   final case class CurationResult(df: DataFrame, stats: CurationStats,
@@ -413,9 +414,9 @@ object Curation {
     // projections but NOT across filter conjuncts or aggregate update
     // expressions, and expression trees are trees (every signal holds
     // its own c4Text copy) — measured 2.1 ms/doc at 1M docs. The
-    // verdict kernel cleans + tokenizes once and short-circuits, and
-    // grouping BY the verdict evaluates it once per row with a
-    // map-side-combined <=7-group aggregate.
+    // verdict kernel cleans + tokenizes once and short-circuits; it is
+    // computed once per row as a column that both the ledger metrics
+    // and the pass filter read.
     val verdictRaw = QualityFilters.hygieneVerdict(t,
       hygiene.c4.map(c => (c.minSentences, c.minWordsPerLine)),
       hygiene.gopher, hygiene.repetition, minQuality, languages)
@@ -437,10 +438,16 @@ object Curation {
     // CurationResult.release() owns the full cache set, not just the
     // frames this function registered directly.
     graft.util.Caching.tracking(tracked += _) {
+    val sc = docs.sparkSession.sparkContext
+    def staged[A](name: String)(body: => A): A = {
+      sc.setJobDescription(s"graft curate: $name")
+      try body finally sc.setJobDescription(null)
+    }
     // Stage-boundary lineage truncation. Every stage output is
-    // materialized anyway (its ledger count); a lazy localCheckpoint
-    // makes that materialization ALSO cut the logical plan to a flat
-    // LogicalRDD. Without the cut, each stage's plan embeds its
+    // materialized anyway (its ledger count); an eager localCheckpoint
+    // materializes it and cuts the logical plan to a flat LogicalRDD in
+    // ONE job, and the ledger count rides that job as an observed
+    // metric. Without the cut, each stage's plan embeds its
     // input's plan at every reference (the reassembly/dedup stages
     // reference their input 2-4 times: probe side + winner side +
     // rejoin), and although execution dedupes through the block store,
@@ -451,12 +458,13 @@ object Curation {
     // full-hygiene spec hung >19 min in generateTreeString). Storage
     // cost is the same MEMORY_AND_DISK footprint the per-stage cache
     // paid; blocks are reclaimed by the ContextCleaner once the
-    // result is dropped (the connectedComponents lifecycle).
-    def stageCp(df: DataFrame): DataFrame = df.localCheckpoint(false)
-    val sc = docs.sparkSession.sparkContext
-    def staged[A](name: String)(body: => A): A = {
-      sc.setJobDescription(s"graft curate: $name")
-      try body finally sc.setJobDescription(null)
+    // result is dropped (the connectedComponents lifecycle). Should a
+    // plan report no metrics, the checkpoint is counted directly (an
+    // in-memory scan) rather than trusted to a missing value.
+    def stageCp(desc: String, df: DataFrame): (DataFrame, Long) = {
+      val obs = Observation()
+      val cp = staged(desc)(df.observe(obs, count(lit(1)).as("n")).localCheckpoint(true))
+      (cp, obs.get.get("n").fold(staged(desc)(cp.count()))(_.asInstanceOf[Long]))
     }
     // text rewrites can leave a document blank; `drop` removes those
     def dropBlank(drop: Boolean)(df: DataFrame): DataFrame =
@@ -596,23 +604,23 @@ object Curation {
       st
     }
     // One stage boundary: under resume, a completed stage's frame is
-    // READ BACK (the thunk is never forced — no refit, no reshuffles);
-    // an incomplete stage computes, persists atomically and reads
-    // back, so the surviving lineage is a flat parquet scan either
-    // way. Without resume, the lazy localCheckpoint cuts the lineage
-    // unless `cut` is off. The returned count doubles as the ledger
-    // row (parquet counts are metadata-cheap on the resumed path).
+    // READ BACK (the thunk is never forced — no refit, no reshuffles;
+    // parquet counts are metadata-cheap). Otherwise the observed
+    // checkpoint computes the frame and its ledger count in one job;
+    // under resume the checkpoint is then persisted atomically and
+    // read back, so the surviving lineage is a flat parquet scan. An
+    // uncut stage (`cut` off, no resume) is counted and returned as is.
     def stageOut(key: String, desc: String, cut: Boolean)(compute: => DataFrame): (DataFrame, Long) =
       store match {
         case Some(st) if st.isDone(key) =>
           val df = st.read(docs.sparkSession, key)
           (df, staged(s"$desc (resumed)")(df.count()))
-        case Some(st) =>
-          val df = staged(desc)(st.write(key, compute))
+        case None if !cut =>
+          val df = compute
           (df, staged(desc)(df.count()))
-        case None =>
-          val df = if (cut) stageCp(compute) else compute
-          (df, staged(desc)(df.count()))
+        case _ =>
+          val (cp, n) = stageCp(desc, compute)
+          (store.fold(cp)(st => staged(desc)(st.write(key, cp))), n)
       }
 
     // survivors through stage i = rows passing every enabled stage <= i
@@ -627,23 +635,26 @@ object Curation {
           "language" -> graft.functions.Hygiene.LanguageStage)
 
     // ---- the scan prologue resumes as a unit: its per-rule ledger
-    // comes from the verdict AGGREGATE over the raw input (a full
-    // corpus read), so the counts ride a side JSON next to the
-    // persisted frame — resuming must skip the aggregate too, not just
-    // the filter
-    val (scanKept, input, scanCounts): (DataFrame, Long, Seq[(String, Long)]) =
+    // counts the RAW input, so they ride a side JSON next to the
+    // persisted frame — resuming must skip the corpus read too, not
+    // just the filter. The counts are observed metrics of the job
+    // that checkpoints the survivors: the input count and every rule's
+    // survivors (verdict == 0, or a first failure at a later rule)
+    // before the pass filter; the blocklist survivors are that
+    // checkpoint's own count.
+    val (scanKept, input, scanLedger): (DataFrame, Long, Vector[(String, Long)]) =
       store match {
         case Some(st) if st.isDone("scan") =>
           val df = st.read(docs.sparkSession, "scan")
           val side = st.readSide("scan")
-          (df, side("__input"), stageIdx.map { case (n, _) => n -> side(n) })
+          (df, side("__input"), stageIdx.map { case (n, _) => n -> side(n) }.toVector ++
+            hygiene.blocklist.map(_ => "blocklist" -> staged("blocklist (resumed)")(df.count())))
         case _ =>
-          val vCounts = staged("scan ledger")(corpus.groupBy(verdict.as("__verdict"))
-            .agg(count(lit(1)).as("__n"))
-            .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap)
-          val inputN = vCounts.values.sum
-          val counts = stageIdx.map { case (name, idx) =>
-            name -> vCounts.collect { case (v, n) if v == 0 || v > idx => n }.sum }
+          val v = col("__verdict")
+          val ruleCounts = count(lit(1)).as("__input") +: stageIdx.map { case (name, idx) =>
+            count(when(v === graft.functions.Hygiene.PassVerdict || v > idx, 1)).as(name) }
+          val withVerdict = corpus.withColumn("__verdict", verdict)
+          val scanObs = Observation()
           // The blocklist filter (when enabled) fuses into the SAME
           // whole-stage-codegen scan as the verdict filter — no extra
           // corpus read — and evaluates the CLEANED text like every
@@ -651,16 +662,21 @@ object Curation {
           // the same codegen span as the verdict filter and C4 rewrite
           // — one corpus read, cleanText evaluated once per document as
           // the kernel's child.
-          val scanFiltered =
-            corpus.filter(verdict === graft.functions.Hygiene.PassVerdict)
-              .withColumn(textCol,
-                if (hygiene.lineDedup) graft.functions.LineDedup.of(cleanText)
-                else cleanText)
+          val scanFiltered = withVerdict.observe(scanObs, ruleCounts.head, ruleCounts.tail: _*)
+            .filter(v === graft.functions.Hygiene.PassVerdict).drop("__verdict")
+            .withColumn(textCol,
+              if (hygiene.lineDedup) graft.functions.LineDedup.of(cleanText) else cleanText)
           val frame = hygiene.blocklist match {
             case Some(words) =>
               scanFiltered.filter(QualityFilters.blocklistKeep(col(textCol), words))
             case None => scanFiltered
           }
+          // the rule counts sit between the scan and the pass filter of
+          // the checkpointed plan: no optimizer rule prunes them away
+          val (cp, kept) = stageCp("scan", frame)
+          val m = scanObs.get
+          val counts = stageIdx.map { case (n, _) => n -> m(n).asInstanceOf[Long] }
+          val inputN = m("__input").asInstanceOf[Long]
           val df = store match {
             case Some(st) =>
               // side JSON FIRST: a crash between the two writes then
@@ -669,13 +685,11 @@ object Curation {
               // The reverse order would leave a committed frame whose
               // resume fails hard on the missing side file.
               st.writeSide("scan", counts :+ ("__input" -> inputN))
-              staged("scan filter")(st.write("scan", frame))
-            case None => stageCp(frame)
+              staged("scan")(st.write("scan", cp))
+            case None => cp
           }
-          (df, inputN, counts)
+          (df, inputN, counts.toVector ++ hygiene.blocklist.map(_ => "blocklist" -> kept))
       }
-    val scanLedger = scanCounts.toVector ++
-      hygiene.blocklist.map(_ => "blocklist" -> staged("blocklist")(scanKept.count()))
 
     // ---- the fold: each table entry runs through stageOut and leaves
     // its (key, survivors) ledger row. Without a resume store, a

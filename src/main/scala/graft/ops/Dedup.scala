@@ -1,8 +1,9 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StructField, StructType}
 
 /** Deduplication operators for web-scale corpora: exact (hash-groupBy),
   * MinHash+LSH banding, n-gram Jaccard, and embedding-cosine near-dup
@@ -825,92 +826,72 @@ object Dedup {
   }
 
   /** Connected components over near-duplicate pairs — the step that
-    * turns pairwise similarity into dedup decisions. Iterative
-    * min-label propagation: every node's component label converges to
-    * the smallest id reachable from it. Each iteration is one
-    * edge-join + one aggregation (both shuffle on node id, AQE-sized);
-    * iterations needed = graph diameter, which for near-dup clusters
-    * is tiny (dup groups are dense). `maxIter` bounds runaway chains.
-    * Returns (id, component) for every node appearing in `pairs`.
+    * turns pairwise similarity into dedup decisions. Returns (id, comp)
+    * for every node appearing in `pairs`, where comp is the smallest id
+    * of the node's component under the id type's SQL ordering (the
+    * `least`/`min` order). Exact for any graph diameter.
+    *
+    * Two-phase union-find, REPOSE-style (local work, one global merge):
+    * each partition unions its own pairs and emits one (node, local
+    * root) star edge per node it saw; one exchange gathers the star
+    * edges into a single task, whose union-find emits (id, comp). The
+    * whole thing is one shuffle — no per-round joins, aggregates or
+    * convergence counts. Memory bound: the final task holds one
+    * union-find entry per distinct id that appears in a pair (a
+    * partition's task, one per distinct id of its own pairs); near-dup
+    * pair sets are a small fraction of the corpus. Ids must be atomic
+    * and not binary (they are hash keys); pairs with a null end are
+    * skipped. The result is a lazy localCheckpoint: the first
+    * action computes it once and later actions reuse its blocks
+    * (reclaimed by the ContextCleaner once unreferenced), outside the
+    * CacheManager whose uncache invalidates dependent entries.
     */
-  def connectedComponents(pairs: DataFrame, maxIter: Int = 10): DataFrame = {
-    // cache a DEFENSIVE projection of the pair frame BEFORE the
-    // symmetric union: both union branches read it, so without this the
-    // (expensive) pair-producing plan executes twice just to build the
-    // edge list. Projecting first means the caller's own frame is never
-    // mutated into a cached state behind their back.
-    val p = pairs.select(col("a"), col("b")).cache()
-    val edges = p.select(col("a").as("x"), col("b").as("y"))
-      .union(p.select(col("b").as("x"), col("a").as("y")))
-      .cache()
-    // Initialization FUSED with round 1: comp(x) = min(x, min neighbor)
-    // directly from one groupBy over the symmetric edges (every node
-    // appears as x). Seeding comp = id and looping would spend one
-    // whole extra distinct-shuffle pass to reach this same state — and
-    // near-dup graphs are star/clique-shaped, so this fused pass IS
-    // most of the convergence.
-    //
-    // Rounds are materialized as LOCAL CHECKPOINTS, not cache() entries.
-    // A cached round lives in the CacheManager keyed by its logical
-    // plan, and unpersisting ANY plan it depends on — the previous
-    // round, p, edges — makes the manager REBUILD the dependent entry,
-    // discarding its materialized data (Spark's non-cascading uncache
-    // recompiles dependents). The earlier cache()-based loop therefore
-    // re-executed the ENTIRE iteration chain on every post-loop action
-    // (measured ~60s per downstream count at 300k docs, vs ~1s
-    // checkpointed). RDD-backed checkpoints sit outside the
-    // CacheManager — nothing invalidates them — lineage is truncated
-    // every round instead of every 3rd, and dropped rounds are
-    // reclaimed by the ContextCleaner once unreferenced.
-    var labels = edges.groupBy(col("x"))
-      .agg(min(col("y")).as("__m"))
-      .select(col("x").as("id"), least(col("x"), col("__m")).as("comp"))
-      .localCheckpoint(false)
-    var changed = 1L
-    var iter = 0
-    while (changed > 0 && iter < maxIter) {
-      // candidate label per node: min over own label and neighbors'
-      val viaNeighbors = edges
-        .join(labels.withColumnRenamed("id", "y").withColumnRenamed("comp", "ncomp"), "y")
-        .groupBy(col("x").as("id"))
-        .agg(min(col("ncomp")).as("mincomp"))
-      // keep the old label alongside the new one: the convergence check
-      // below is a scan of this checkpointed frame, not a second join
-      // job. (A pointer-jumping variant — comp := comp(comp) per round —
-      // was measured SLOWER here: near-dup components are clique-shaped
-      // and converge in ~2 rounds, so the extra per-round join never
-      // pays for the iterations it would save on long chains.)
-      val next = labels.join(viaNeighbors, Seq("id"), "left")
-        .select(col("id"), col("comp").as("__old"),
-          least(col("comp"), coalesce(col("mincomp"), col("comp"))).as("comp"))
-      val nextMat = next.localCheckpoint(false)
-      changed = nextMat.filter(col("comp") =!= col("__old")).count()
-      labels = nextMat.select("id", "comp")
-      iter += 1
+  def connectedComponents(pairs: DataFrame): DataFrame = {
+    val idType = pairs.schema("a").dataType
+    val edges = org.apache.spark.sql.Encoders.row(StructType(Seq(
+      StructField("id", idType, nullable = false), StructField("comp", idType, nullable = false))))
+    // union-find whose roots are component minima: a union links the
+    // larger root under the smaller, and `find` halves paths as it walks
+    def unionFind(rows: Iterator[Row]): Iterator[Row] = {
+      val ord = org.apache.spark.sql.catalyst.types.PhysicalDataType.ordering(idType)
+        .on(org.apache.spark.sql.catalyst.CatalystTypeConverters.createToCatalystConverter(idType))
+      val parent = new java.util.HashMap[Any, Any]()
+      def find(x: Any): Any = {
+        var node = x
+        parent.putIfAbsent(node, node)
+        while (parent.get(node) != node) {
+          val grand = parent.get(parent.get(node))
+          parent.put(node, grand)
+          node = grand
+        }
+        node
+      }
+      rows.foreach { r =>
+        val (ra, rb) = (find(r.get(0)), find(r.get(1)))
+        if (ord.lt(rb, ra)) parent.put(ra, rb) else if (ra != rb) parent.put(rb, ra)
+      }
+      import scala.jdk.CollectionConverters._
+      parent.keySet.asScala.toVector.iterator.map(x => Row(x, find(x)))
     }
-    // release the internal scaffolding: the returned labels frame is
-    // an RDD-backed checkpoint that never needs p/edges again, and
-    // being outside the CacheManager it is IMMUNE to the dependent-
-    // entry invalidation these unpersists trigger. The in-loop count()
-    // materialized every round's checkpoint; if the loop never ran
-    // (maxIter <= 0) force-materialize the seed frame first, else the
-    // caller's first action would recompute the pair-producing plan
-    // twice through the symmetric union.
-    if (iter == 0) labels.count()
-    edges.unpersist()
-    p.unpersist()
-    labels
+    pairs.select(col("a"), col("b").cast(idType))
+      .filter(col("a").isNotNull && col("b").isNotNull)
+      .mapPartitions(unionFind _)(edges)
+      .repartition(1)
+      .mapPartitions(unionFind _)(edges)
+      .toDF()
+      .localCheckpoint(false)
   }
 
   /** Full near-dup dedup decision: given the corpus and a pair frame
     * (from any of the similarity operators), keep the minimum id of
-    * each duplicate component plus every untouched document. */
-  def dedupByPairs(df: DataFrame, idCol: String, pairs: DataFrame,
-      maxIter: Int = 10): DataFrame = {
-    val comps = connectedComponents(pairs, maxIter)
+    * each duplicate component plus every untouched document. The
+    * components fit one task by construction, so the loser ids are
+    * broadcast and the corpus never shuffles. */
+  def dedupByPairs(df: DataFrame, idCol: String, pairs: DataFrame): DataFrame = {
+    val comps = connectedComponents(pairs)
     val losers = comps.filter(col("id") =!= col("comp"))
       .select(col("id").as(idCol))
-    df.join(losers, Seq(idCol), "left_anti")
+    df.join(broadcast(losers), Seq(idCol), "left_anti")
   }
 
   /** [[dedupByPairs]] with an explicit representative choice: per
@@ -923,18 +904,17 @@ object Dedup {
     * component-keyed window over the (small) component membership;
     * untouched documents never shuffle. */
   def dedupByPairsBest(df: DataFrame, idCol: String, pairs: DataFrame,
-      score: Column, ascending: Boolean = false,
-      maxIter: Int = 10): DataFrame = {
-    val comps = connectedComponents(pairs, maxIter)
+      score: Column, ascending: Boolean = false): DataFrame = {
+    val comps = connectedComponents(pairs)
     val members = df.select(col(idCol), score.as("__score"))
-      .join(comps.withColumnRenamed("id", idCol), Seq(idCol))
+      .join(broadcast(comps.withColumnRenamed("id", idCol)), Seq(idCol))
     val ord = if (ascending) col("__score").asc else col("__score").desc
     val w = Window.partitionBy(col("comp")).orderBy(ord, col(idCol).asc)
     val losers = members
       .withColumn("__r", row_number().over(w))
       .filter(col("__r") > 1)
       .select(col(idCol))
-    df.join(losers, Seq(idCol), "left_anti")
+    df.join(broadcast(losers), Seq(idCol), "left_anti")
   }
 
   /** MinHash-estimated Jaccard for candidate pairs (signature

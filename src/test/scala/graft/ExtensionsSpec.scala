@@ -178,8 +178,9 @@ class ExtensionsSpec extends SparkFunSuite {
       Option(err.getCause).exists(_.getMessage.contains("integer literal")))
   }
 
-  test("curation full-hygiene pipeline: one planted failure per stage") {
-    import graft.ops.{Curation, QualityFilters}
+  /** One planted failure per scan rule and per URL, exact and near-dup
+    * stage; docs 1 and 10 survive. */
+  private lazy val (hygieneDocs, hygieneGood) = {
     val good1 = Seq(
       "the quick brown fox jumps over the lazy sleeping dog.",
       "a gentle rain of morning light settles over the valley.",
@@ -239,14 +240,28 @@ class ExtensionsSpec extends SparkFunSuite {
         good1.replace("watch the boats", "watch the ships")), // near dup
       (10L, "https://example.com/harbor", good3)
     ).toDF("doc_id", "url", "text")
+    (docs, Seq(good1, good2, good3, qualFail))
+  }
 
-    val r = Curation.curate(docs, minQuality = 0.6, languages = Seq("en"),
+  /** The `llm_curate` stage set: every scan rule, URL, exact and
+    * MinHash near-dup. */
+  private def hygieneCurate(docs: org.apache.spark.sql.DataFrame,
+      resume: Option[String] = None): graft.ops.Curation.CurationResult = {
+    import graft.ops.{Curation, QualityFilters}
+    Curation.curate(docs, minQuality = 0.6, languages = Seq("en"),
       nearDupThreshold = 0.5, nearDup = Curation.NearDup.MinhashLsh,
       hygiene = Curation.HygieneConfig(
         c4 = Some(Curation.C4Config()),
         gopher = Some(QualityFilters.GopherConfig()),
         repetition = Some(QualityFilters.RepetitionConfig()),
-        urlCol = Some("url")))
+        urlCol = Some("url")),
+      resume = resume)
+  }
+
+  test("curation full-hygiene pipeline: one planted failure per stage") {
+    import graft.ops.Curation
+    val Seq(good1, good2, good3, qualFail) = hygieneGood
+    val r = hygieneCurate(hygieneDocs)
     assert(r.stats.input == 10)
     assert(r.stats.stages.map(_._1) == Vector("c4", "gopher", "repetition",
       "quality", "language", "url_dup", "exact_dup", "near_dup"))
@@ -274,6 +289,67 @@ class ExtensionsSpec extends SparkFunSuite {
     assert(r2.stats.dropped("url_dup") == 0L,
       "null/empty URLs must not dedup against each other")
     assert(r2.df.count() == 4)
+  }
+
+  test("curation ledger rides the stage checkpoints: no ledger job, one corpus scan per call") {
+    import org.apache.spark.scheduler._
+    import org.apache.spark.sql.graft.ListenerBridge
+    val dir = java.nio.file.Files.createTempDirectory("graft_ledger_jobs").toString
+    hygieneDocs.write.mode("overwrite").parquet(s"$dir/docs.parquet")
+    val docs = spark.read.parquet(s"$dir/docs.parquet")
+    val descs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val scans = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        descs.add(String.valueOf(j.properties.getProperty("spark.job.description")))
+      // the corpus is the only file source: a stage reading it holds a FileScanRDD
+      override def onStageCompleted(s: SparkListenerStageCompleted): Unit =
+        if (s.stageInfo.rddInfos.exists(_.name == "FileScanRDD")) scans.incrementAndGet()
+    }
+    ListenerBridge.drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    val r = try {
+      val r = hygieneCurate(docs)
+      ListenerBridge.drain(spark.sparkContext)
+      r
+    } finally spark.sparkContext.removeSparkListener(listener)
+    import scala.jdk.CollectionConverters._
+    assert(!descs.asScala.exists(_.contains("graft curate: scan ledger")), descs)
+    assert(descs.asScala.exists(_.contains("graft curate: scan")), descs)
+    assert(scans.get == 1, s"the corpus was scanned ${scans.get} times")
+    assert(r.stats.output == 2 && r.stats.dropped.values.forall(_ == 1L), r.stats)
+    r.release()
+  }
+
+  test("curation: stages that see no rows ledger zeros; resume gives the same ledger and survivors") {
+    import graft.ops.Curation
+    def run(docs: org.apache.spark.sql.DataFrame) = Curation.curate(docs,
+      minQuality = 0.3, nearDupThreshold = 0.99,
+      hygiene = Curation.HygieneConfig(urlCol = Some("url")))
+    val stages = Vector("quality", "language", "url_dup", "exact_dup", "near_dup")
+    // the scan drops every document: every stage after it sees no rows
+    val junk = (1 to 5).map(i => (i.toLong, s"https://example.com/$i", "!!! ??? ### $$$"))
+      .toDF("doc_id", "url", "text")
+    val dropped = run(junk)
+    assert(dropped.stats == Curation.CurationStats(5, stages.map(_ -> 0L)))
+    assert(dropped.df.count() == 0)
+    // an empty corpus, which the optimizer can prove empty
+    val empty = spark.emptyDataset[(Long, String, String)].toDF("doc_id", "url", "text")
+    val none = run(empty)
+    assert(none.stats == Curation.CurationStats(0, stages.map(_ -> 0L)))
+    assert(none.df.count() == 0)
+
+    // resume parity on the full-hygiene corpus
+    val plain = hygieneCurate(hygieneDocs)
+    val dir = java.nio.file.Files.createTempDirectory("graft_resume_parity").toString
+    val resumed = hygieneCurate(hygieneDocs, resume = Some(dir))
+    assert(resumed.stats == plain.stats)
+    def ids(r: Curation.CurationResult) = r.df.select("doc_id").as[Long].collect().sorted.toSeq
+    assert(ids(resumed) == ids(plain) && ids(plain) == Seq(1L, 10L))
+    // and read back whole from the store
+    val again = hygieneCurate(hygieneDocs, resume = Some(dir))
+    assert(again.stats == plain.stats && ids(again) == ids(plain))
+    Seq(dropped, none, plain, resumed, again).foreach(_.release())
   }
 
   test("curation resume: completed stages are read back, config drift refused") {

@@ -1939,6 +1939,18 @@ class OpsSpec extends SparkFunSuite {
     got.foreach { case (id, comp) => assert(comp == find(id), s"node $id") }
   }
 
+  test("connected components are exact past ten rounds: a 40-node chain is one component") {
+    // a min-label loop needs one round per hop; capped at 10 rounds it
+    // left comp(40) = 29 and kept 29 of the 40 documents
+    val pairs = (1L until 40L).map(i => (i, i + 1)).toDF("a", "b")
+    val comps = Dedup.connectedComponents(pairs).as[(Long, Long)].collect().toMap
+    assert(comps.keySet == (1L to 40L).toSet)
+    assert(comps.values.toSet == Set(1L), s"comp(40) = ${comps(40L)}")
+    val d = (1L to 40L).map(i => (i, s"doc $i", i.toDouble)).toDF("doc_id", "text", "q")
+    assert(Dedup.dedupByPairsBest(d, "doc_id", pairs, col("q"))
+      .select("doc_id").as[Long].collect().toSeq == Seq(40L))
+  }
+
   test("dedupByPairs keeps one doc per duplicate component") {
     val d = Seq((1L, "x"), (2L, "x"), (3L, "x"), (7L, "y"), (9L, "z"))
       .toDF("doc_id", "text")

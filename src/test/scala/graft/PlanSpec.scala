@@ -259,11 +259,23 @@ class PlanSpec extends SparkFunSuite {
     assert(filtered.sliding("hygiene_verdict".length)
       .count(_ == "hygiene_verdict") <= 2,
       s"verdict kernel duplicated:\n$filtered")
-    // the curate ledger shape: groupBy(verdict).count partially
-    // aggregates map-side (the exchange carries <= 7 rows per task)
-    val ledger = planOf(docs.groupBy(verdict.as("__v")).count())
-    assert(ledger.sliding("HashAggregate".length).count(_ == "HashAggregate") >= 2,
-      s"verdict ledger missing partial aggregation:\n$ledger")
+    // the curate scan: ONE verdict per row, its ledger counts observed
+    // (CollectMetrics) under the pass filter, and no shuffle before the
+    // survivors are checkpointed
+    val (_, queries) = queriesOf(graft.ops.Curation.curate(docs, minQuality = 0.3,
+      hygiene = graft.ops.Curation.HygieneConfig(c4 = Some(graft.ops.Curation.C4Config()),
+        gopher = Some(QualityFilters.GopherConfig()),
+        repetition = Some(QualityFilters.RepetitionConfig()))))
+    val scans = queries.map(_.executedPlan.toString).filter(_.contains("hygiene_verdict"))
+    assert(scans.size == 1, s"the corpus scan ran ${scans.size} times:\n${scans.mkString("\n")}")
+    val scan = scans.head
+    assert(scan.sliding("hygiene_verdict".length).count(_ == "hygiene_verdict") == 1,
+      s"verdict kernel duplicated in the curate scan:\n$scan")
+    assert(!scan.contains("Exchange"), s"curate scan should not shuffle:\n$scan")
+    val lines = scan.linesIterator.toVector
+    val passFilter = lines.indexWhere(l => l.contains("Filter") && l.contains("__verdict"))
+    assert(passFilter >= 0 && lines.drop(passFilter + 1).exists(_.contains("CollectMetrics")),
+      s"ledger metrics not observed under the pass filter:\n$scan")
   }
 
   test("minhash signature kernel: one expression, no HOF, codegen survives") {

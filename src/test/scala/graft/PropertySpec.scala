@@ -10,6 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.engine.{Audit, Build, BuildOptions}
 import graft.model._
 import graft.operators.AsOfJoin
+import graft.ops.Dedup
 
 /** Property tests of THE invariant (reference `tests/test_property.py`):
   * for arbitrary feature/label timestamps, any embargo 0-168h, both
@@ -629,6 +630,70 @@ class PropertySpec extends AnyFunSuite {
       val got = (0 until 9).map(r.getDouble)
       val want = naive(text.toLowerCase)
       Prop(got == want) :| s"'${text.take(80)}': $got vs $want"
+    }, 300)
+  }
+
+  test("connected components equal a local union-find on arbitrary graphs") {
+    import spark.implicits._
+    // disjoint chains, stars and cliques under scrambled ids, plus
+    // duplicate, reversed and self pairs, spread over 1-8 partitions
+    val shape = for {
+      kind <- Gen.oneOf(0, 1, 2)
+      n <- Gen.choose(1, Seq(80, 20, 8)(kind))
+    } yield (kind, n)
+    val genCase = for {
+      shapes <- Gen.choose(0, 4).flatMap(Gen.listOfN(_, shape))
+      extra <- Gen.listOf(Gen.zip(Gen.choose(0, 2), Gen.choose(0, 200)))
+      parts <- Gen.choose(1, 8)
+      seed <- Gen.choose(0L, Long.MaxValue)
+      strings <- Gen.oneOf(false, true)
+    } yield (shapes, extra, parts, seed, strings)
+    check(Prop.forAllNoShrink(genCase) { case (shapes, extra, parts, seed, strings) =>
+      val (nodes, base) = shapes.foldLeft((0, Vector.empty[(Int, Int)])) {
+        case ((off, acc), (kind, n)) =>
+          val e = kind match {
+            case 0 => (0 until n - 1).map(i => (off + i, off + i + 1))
+            case 1 => (1 until n).map(i => (off, off + i))
+            case _ => for (i <- 0 until n; j <- i + 1 until n) yield (off + i, off + j)
+          }
+          (off + n, acc ++ e)
+      }
+      // duplicate, reversed or self pair (a self pair may name a fresh node)
+      val noise = extra.flatMap { case (k, i) =>
+        if (k == 2) Seq((i, i))
+        else if (base.isEmpty) Nil
+        else { val (a, b) = base(i % base.size); Seq(if (k == 0) (a, b) else (b, a)) }
+      }
+      val rnd = new scala.util.Random(seed)
+      val perm = rnd.shuffle((0 to math.max(nodes, 201)).toVector)
+      val pairs = rnd.shuffle(base ++ noise).map { case (a, b) => (perm(a), perm(b)) }
+      // string ids order as text ("n10" < "n9"), long ids as numbers
+      val key: Int => Any = if (strings) i => s"n$i" else i => i.toLong
+      val ord: Ordering[Any] =
+        if (strings) Ordering.String.on(_.toString) else Ordering.Long.on(_.asInstanceOf[Long])
+      val parent = scala.collection.mutable.Map[Any, Any]()
+      def find(x: Any): Any = {
+        val p = parent.getOrElseUpdate(x, x)
+        if (p == x) x else { val r = find(p); parent(x) = r; r }
+      }
+      pairs.foreach { case (a, b) =>
+        val (ra, rb) = (find(key(a)), find(key(b)))
+        if (ra != rb) { if (ord.lt(ra, rb)) parent(rb) = ra else parent(ra) = rb }
+      }
+      val want = parent.keys.toVector.map(x => x -> find(x)).toMap
+      val rdd = spark.sparkContext.parallelize(pairs, parts)
+      val df = if (strings) rdd.map { case (a, b) => (s"n$a", s"n$b") }.toDF("a", "b")
+        else rdd.map { case (a, b) => (a.toLong, b.toLong) }.toDF("a", "b")
+      val got = Dedup.connectedComponents(df).collect().map(r => r.get(0) -> r.get(1)).toMap
+      // untouched documents sit past every paired id
+      val untouched = (1000 to 1003).map(key)
+      val docIds = want.keys.toSeq ++ untouched
+      val docs = if (strings) docIds.map(_.asInstanceOf[String]).toDF("doc_id")
+        else docIds.map(_.asInstanceOf[Long]).toDF("doc_id")
+      val kept = Dedup.dedupByPairs(docs, "doc_id", df).collect().map(_.get(0)).toSet
+      val keepWant = want.values.toSet ++ untouched
+      Prop(got == want && kept == keepWant) :|
+        s"components $got != $want or kept $kept != $keepWant"
     }, 300)
   }
 }
