@@ -322,8 +322,13 @@ object Curation {
     }
     def read(spark: org.apache.spark.sql.SparkSession, stage: String): DataFrame =
       spark.read.parquet(path(stage))
-    def write(stage: String, df: DataFrame): DataFrame = {
-      df.write.mode("overwrite").parquet(path(stage))
+    /** Persist `df` and read it back. The `_SUCCESS` marker is written
+      * here, after the frame and `beforeCommit` (the scan's side file). */
+    def write(stage: String, df: DataFrame, beforeCommit: => Unit): DataFrame = {
+      df.write.mode("overwrite")
+        .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false").parquet(path(stage))
+      beforeCommit
+      Files.createFile(Paths.get(path(stage), "_SUCCESS"))
       df.sparkSession.read.parquet(path(stage))
     }
     def readSide(stage: String): Map[String, Long] =
@@ -442,29 +447,6 @@ object Curation {
     def staged[A](name: String)(body: => A): A = {
       sc.setJobDescription(s"graft curate: $name")
       try body finally sc.setJobDescription(null)
-    }
-    // Stage-boundary lineage truncation. Every stage output is
-    // materialized anyway (its ledger count); an eager localCheckpoint
-    // materializes it and cuts the logical plan to a flat LogicalRDD in
-    // ONE job, and the ledger count rides that job as an observed
-    // metric. Without the cut, each stage's plan embeds its
-    // input's plan at every reference (the reassembly/dedup stages
-    // reference their input 2-4 times: probe side + winner side +
-    // rejoin), and although execution dedupes through the block store,
-    // the plan DAG prints as a TREE — explain strings, AQE
-    // plan-change events and UI SparkPlanInfo all expand it, so a
-    // composed 9-stage pipeline spent MINUTES of driver CPU and tens
-    // of GB rendering exponentially nested plans (observed: the
-    // full-hygiene spec hung >19 min in generateTreeString). Storage
-    // cost is the same MEMORY_AND_DISK footprint the per-stage cache
-    // paid; blocks are reclaimed by the ContextCleaner once the
-    // result is dropped (the connectedComponents lifecycle). Should a
-    // plan report no metrics, the checkpoint is counted directly (an
-    // in-memory scan) rather than trusted to a missing value.
-    def stageCp(desc: String, df: DataFrame): (DataFrame, Long) = {
-      val obs = Observation()
-      val cp = staged(desc)(df.observe(obs, count(lit(1)).as("n")).localCheckpoint(true))
-      (cp, obs.get.get("n").fold(staged(desc)(cp.count()))(_.asInstanceOf[Long]))
     }
     // text rewrites can leave a document blank; `drop` removes those
     def dropBlank(drop: Boolean)(df: DataFrame): DataFrame =
@@ -603,13 +585,30 @@ object Curation {
       st.validatePrefix("scan" +: table.map(_.key))
       st
     }
+    // Stage-boundary lineage truncation: every stage output is
+    // materialized anyway (its ledger count), so ONE job materializes
+    // it and observes that count at the plan's root (the scan's rule
+    // counts sit under its filters only; no join or adaptive rule can
+    // skip either). Without a store that job is an eager
+    // localCheckpoint, cutting the plan to a flat LogicalRDD: a stage
+    // references its input 2-4 times, and uncut, the plan DAG prints
+    // as a tree in explain strings, AQE plan-change events and UI
+    // SparkPlanInfo (a 9-stage pipeline once hung >19 min in
+    // generateTreeString); the ContextCleaner reclaims its blocks once
+    // the result is dropped. Under resume the job is the parquet write
+    // (lost partitions recompute from lineage) and the read-back frame
+    // the cut; `side` runs between the write and its commit marker.
+    def materialize(key: String, desc: String, df: DataFrame, side: => Unit = ()): (DataFrame, Long) = {
+      val obs = Observation()
+      val observed = df.observe(obs, count(lit(1)).as("n"))
+      val out = staged(desc)(store.fold(observed.localCheckpoint(true))(_.write(key, observed, side)))
+      (out, obs.get("n").asInstanceOf[Long])
+    }
     // One stage boundary: under resume, a completed stage's frame is
     // READ BACK (the thunk is never forced — no refit, no reshuffles;
-    // parquet counts are metadata-cheap). Otherwise the observed
-    // checkpoint computes the frame and its ledger count in one job;
-    // under resume the checkpoint is then persisted atomically and
-    // read back, so the surviving lineage is a flat parquet scan. An
-    // uncut stage (`cut` off, no resume) is counted and returned as is.
+    // parquet counts are metadata-cheap). Otherwise `materialize`
+    // computes the frame and its ledger count in one job. An uncut
+    // stage (`cut` off, no resume) is counted and returned as is.
     def stageOut(key: String, desc: String, cut: Boolean)(compute: => DataFrame): (DataFrame, Long) =
       store match {
         case Some(st) if st.isDone(key) =>
@@ -618,9 +617,7 @@ object Curation {
         case None if !cut =>
           val df = compute
           (df, staged(desc)(df.count()))
-        case _ =>
-          val (cp, n) = stageCp(desc, compute)
-          (store.fold(cp)(st => staged(desc)(st.write(key, cp))), n)
+        case _ => materialize(key, desc, compute)
       }
 
     // survivors through stage i = rows passing every enabled stage <= i
@@ -638,10 +635,10 @@ object Curation {
     // counts the RAW input, so they ride a side JSON next to the
     // persisted frame — resuming must skip the corpus read too, not
     // just the filter. The counts are observed metrics of the job
-    // that checkpoints the survivors: the input count and every rule's
-    // survivors (verdict == 0, or a first failure at a later rule)
-    // before the pass filter; the blocklist survivors are that
-    // checkpoint's own count.
+    // that materializes the survivors: the input count and every
+    // rule's survivors (verdict == 0, or a first failure at a later
+    // rule) before the pass filter; the blocklist survivors are that
+    // job's own count.
     val (scanKept, input, scanLedger): (DataFrame, Long, Vector[(String, Long)]) =
       store match {
         case Some(st) if st.isDone("scan") =>
@@ -672,22 +669,17 @@ object Curation {
             case None => scanFiltered
           }
           // the rule counts sit between the scan and the pass filter of
-          // the checkpointed plan: no optimizer rule prunes them away
-          val (cp, kept) = stageCp("scan", frame)
-          val m = scanObs.get
-          val counts = stageIdx.map { case (n, _) => n -> m(n).asInstanceOf[Long] }
-          val inputN = m("__input").asInstanceOf[Long]
-          val df = store match {
-            case Some(st) =>
-              // side JSON FIRST: a crash between the two writes then
-              // leaves counts without a _SUCCESS-committed frame — the
-              // next run recomputes the stage and overwrites both.
-              // The reverse order would leave a committed frame whose
-              // resume fails hard on the missing side file.
-              st.writeSide("scan", counts :+ ("__input" -> inputN))
-              staged("scan")(st.write("scan", cp))
-            case None => cp
-          }
+          // the materialized plan: no optimizer rule prunes them away.
+          // Side JSON before the commit marker: a crash between the two
+          // leaves counts without a committed frame — the next run
+          // recomputes the stage and overwrites both. The reverse order
+          // would leave a committed frame whose resume fails hard on the
+          // missing side file.
+          lazy val m = scanObs.get
+          lazy val counts = stageIdx.map { case (n, _) => n -> m(n).asInstanceOf[Long] }
+          lazy val inputN = m("__input").asInstanceOf[Long]
+          val (df, kept) = materialize("scan", "scan", frame,
+            store.foreach(_.writeSide("scan", counts :+ ("__input" -> inputN))))
           (df, inputN, counts.toVector ++ hygiene.blocklist.map(_ => "blocklist" -> kept))
       }
 

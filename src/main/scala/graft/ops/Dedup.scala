@@ -836,17 +836,19 @@ object Dedup {
     * root) star edge per node it saw; one exchange gathers the star
     * edges into a single task, whose union-find emits (id, comp). The
     * whole thing is one shuffle — no per-round joins, aggregates or
-    * convergence counts. Memory bound: the final task holds one
-    * union-find entry per distinct id that appears in a pair (a
-    * partition's task, one per distinct id of its own pairs); near-dup
-    * pair sets are a small fraction of the corpus. Ids must be atomic
+    * convergence counts. Memory bound: that final task holds one
+    * boxed hash-map entry per distinct id that appears in a pair —
+    * measured 89 bytes per long id, 134 per 6-digit string id —
+    * so 10M paired long ids need about 0.9 GB of its heap. Ids must be atomic
     * and not binary (they are hash keys); pairs with a null end are
     * skipped. The result is a lazy localCheckpoint: the first
     * action computes it once and later actions reuse its blocks
     * (reclaimed by the ContextCleaner once unreferenced), outside the
     * CacheManager whose uncache invalidates dependent entries.
     */
-  def connectedComponents(pairs: DataFrame): DataFrame = {
+  def connectedComponents(pairs: DataFrame): DataFrame = componentsPlan(pairs).localCheckpoint(false)
+
+  private def componentsPlan(pairs: DataFrame): DataFrame = {
     val idType = pairs.schema("a").dataType
     val edges = org.apache.spark.sql.Encoders.row(StructType(Seq(
       StructField("id", idType, nullable = false), StructField("comp", idType, nullable = false))))
@@ -879,19 +881,30 @@ object Dedup {
       .repartition(1)
       .mapPartitions(unionFind _)(edges)
       .toDF()
-      .localCheckpoint(false)
+  }
+
+  /** The components, checkpointed by one eager job that also counts
+    * them, and the hint for their join side: broadcast when the
+    * measured rows fit Spark's broadcast threshold (the planner's own
+    * estimate of this plan is far above any threshold), else none. */
+  private def sizedComponents(pairs: DataFrame): (DataFrame, DataFrame => DataFrame) = {
+    val obs = org.apache.spark.sql.Observation()
+    val comps = componentsPlan(pairs).observe(obs, count(lit(1)).as("n")).localCheckpoint(true)
+    val bytes = obs.get("n").asInstanceOf[Long] * org.apache.spark.sql.catalyst.plans.logical
+      .statsEstimation.EstimationUtils.getSizePerRow(comps.queryExecution.analyzed.output)
+    val fits = bytes <= org.apache.spark.sql.internal.SQLConf.get.autoBroadcastJoinThreshold
+    (comps, if (fits) broadcast(_) else identity)
   }
 
   /** Full near-dup dedup decision: given the corpus and a pair frame
     * (from any of the similarity operators), keep the minimum id of
     * each duplicate component plus every untouched document. The
-    * components fit one task by construction, so the loser ids are
-    * broadcast and the corpus never shuffles. */
+    * corpus never shuffles while the components fit a broadcast. */
   def dedupByPairs(df: DataFrame, idCol: String, pairs: DataFrame): DataFrame = {
-    val comps = connectedComponents(pairs)
+    val (comps, hint) = sizedComponents(pairs)
     val losers = comps.filter(col("id") =!= col("comp"))
       .select(col("id").as(idCol))
-    df.join(broadcast(losers), Seq(idCol), "left_anti")
+    df.join(hint(losers), Seq(idCol), "left_anti")
   }
 
   /** [[dedupByPairs]] with an explicit representative choice: per
@@ -902,19 +915,20 @@ object Dedup {
     * (pass e.g. [[TextAnalysis.qualityScore]]) or — SemDeDup's choice
     * — the member farthest from its cluster centroid. One extra
     * component-keyed window over the (small) component membership;
-    * untouched documents never shuffle. */
+    * untouched documents never shuffle while the components fit a
+    * broadcast. */
   def dedupByPairsBest(df: DataFrame, idCol: String, pairs: DataFrame,
       score: Column, ascending: Boolean = false): DataFrame = {
-    val comps = connectedComponents(pairs)
+    val (comps, hint) = sizedComponents(pairs)
     val members = df.select(col(idCol), score.as("__score"))
-      .join(broadcast(comps.withColumnRenamed("id", idCol)), Seq(idCol))
+      .join(hint(comps.withColumnRenamed("id", idCol)), Seq(idCol))
     val ord = if (ascending) col("__score").asc else col("__score").desc
     val w = Window.partitionBy(col("comp")).orderBy(ord, col(idCol).asc)
     val losers = members
       .withColumn("__r", row_number().over(w))
       .filter(col("__r") > 1)
       .select(col(idCol))
-    df.join(broadcast(losers), Seq(idCol), "left_anti")
+    df.join(hint(losers), Seq(idCol), "left_anti")
   }
 
   /** MinHash-estimated Jaccard for candidate pairs (signature

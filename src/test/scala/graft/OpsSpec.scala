@@ -1918,12 +1918,14 @@ class OpsSpec extends SparkFunSuite {
   }
 
   test("connected components match a local union-find") {
-    val pairs = Seq(
+    val pairs = (Seq(
       (1L, 2L), (2L, 3L), // chain -> comp 1
       (10L, 11L), // pair -> comp 10
       (20L, 21L), (21L, 22L), (20L, 22L), // triangle -> comp 20
       (30L, 35L), (35L, 31L), (31L, 36L), (36L, 32L) // longer chain -> comp 30
-    ).toDF("a", "b")
+      // a 40-node chain -> comp 100: a min-label loop needs one round
+      // per hop, and capped at 10 rounds it left comp(139) = 128
+    ) ++ (100L until 139L).map(i => (i, i + 1))).toDF("a", "b")
     val got = Dedup.connectedComponents(pairs)
       .as[(Long, Long)].collect().toMap
     // local union-find ground truth
@@ -1936,19 +1938,38 @@ class OpsSpec extends SparkFunSuite {
       val (ra, rb) = (find(a), find(b))
       if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
     }
+    assert(got.keySet == pairs.as[(Long, Long)].collect().flatMap(p => Seq(p._1, p._2)).toSet)
     got.foreach { case (id, comp) => assert(comp == find(id), s"node $id") }
+    assert(got(139L) == 100L)
   }
 
-  test("connected components are exact past ten rounds: a 40-node chain is one component") {
-    // a min-label loop needs one round per hop; capped at 10 rounds it
-    // left comp(40) = 29 and kept 29 of the 40 documents
+  test("dedupByPairsBest keeps one document of a 40-node chain") {
+    // capped at 10 min-label rounds, 29 of the 40 documents survived
     val pairs = (1L until 40L).map(i => (i, i + 1)).toDF("a", "b")
-    val comps = Dedup.connectedComponents(pairs).as[(Long, Long)].collect().toMap
-    assert(comps.keySet == (1L to 40L).toSet)
-    assert(comps.values.toSet == Set(1L), s"comp(40) = ${comps(40L)}")
     val d = (1L to 40L).map(i => (i, s"doc $i", i.toDouble)).toDF("doc_id", "text", "q")
     assert(Dedup.dedupByPairsBest(d, "doc_id", pairs, col("q"))
       .select("doc_id").as[Long].collect().toSeq == Seq(40L))
+  }
+
+  test("dedup joins broadcast the components only when their measured size fits") {
+    val d = (1L to 40L).map(i => (i, s"doc $i", i.toDouble)).toDF("doc_id", "text", "q")
+    val pairs = (1L until 40L by 2).map(i => (i, i + 1)).toDF("a", "b")
+    val odds = (1L to 40L by 2).toSeq
+    // (kept ids, whether the executed plan broadcast anything)
+    def run(best: Boolean): (Seq[Long], Boolean) = {
+      val out = if (best) Dedup.dedupByPairsBest(d, "doc_id", pairs, -col("q"))
+        else Dedup.dedupByPairs(d, "doc_id", pairs)
+      val kept = out.select("doc_id").as[Long].collect().sorted.toSeq
+      (kept, out.queryExecution.executedPlan.toString.contains("Broadcast"))
+    }
+    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    try {
+      // 20 pairs = 40 component rows: far below the default threshold
+      assert(run(best = false) == (odds, true) && run(best = true) == (odds, true))
+      // a threshold below the measured size: no broadcast, same answer
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "1")
+      assert(run(best = false) == (odds, false) && run(best = true) == (odds, false))
+    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
   }
 
   test("dedupByPairs keeps one doc per duplicate component") {
